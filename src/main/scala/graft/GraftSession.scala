@@ -27,7 +27,9 @@ import org.apache.spark.sql.SparkSession
   *  - 128 MiB file split size keeps scan tasks balanced;
   *  - UTC session time zone (cross-engine timestamp determinism);
   *  - nanos-as-long parquet handling for TIMESTAMP(NANOS) inputs;
-  *  - the graft SQL extension (native sketch expressions).
+  *  - the graft SQL extension (native sketch expressions);
+  *  - a codegen cache sized to the engine's working set
+  *    ([[CodegenCacheEntries]]), so a warm session compiles nothing.
   */
 object GraftSession {
 
@@ -46,6 +48,29 @@ object GraftSession {
     * 100k-partition start on a 32-core laptop is pure scheduling
     * overhead, and a real cluster raises the FLOOR (cores) instead. */
   def maxInitialPartitions(floor: Int): Long = math.max(16L * floor, 4096L)
+
+  /** Capacity of Spark's codegen cache (`spark.sql.codegen.cache.maxEntries`,
+    * Spark's default 100). The cache is LRU: a pass that needs more
+    * distinct classes than it holds evicts each class before its next
+    * use, so every repeat recompiled everything (~20 ms a class) although
+    * the generated code is identical from run to run. Working sets,
+    * measured as distinct classes compiled cold:
+    *  - one `ann_eval_twolevel` run at sf0.001–sf0.01: 154–163;
+    *  - the benchmark's curation pass (`ann_ivf_pq`, `paraphrase_dedup`): 142;
+    *  - a tpch pass at sf0.1 (`q1_agg`, `sql_q2`…`sql_q22`): ~338;
+    *  - the eight-operator curation set at sf0.1: ~526;
+    *  - every registered query except `io_*`, at sf0.001: 3096, and 3201
+    *    after a second pass (at 2000 entries that second pass still
+    *    recompiled 2808 classes).
+    * At the default, a warm curation pass recompiled 136 classes and a
+    * warm `ann_eval_twolevel` run 151–156; here both compile 0. An entry
+    * retains ~30 KiB of heap (29.5–31.1 KiB, measured by invalidating
+    * caches of 129, 2000 and 3201 entries) and ~8–10 KiB of metaspace,
+    * so a full cache holds ~160 MB; a session only fills it by running
+    * that many distinct plans. The cache is JVM-wide, and Spark reads
+    * its size once, at the JVM's first codegen: the first session built
+    * in a JVM sets it for every later session in that JVM. */
+  val CodegenCacheEntries: Int = 4096
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     builder(master, shufflePartitions, None)
@@ -85,6 +110,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .config("spark.ui.enabled", "false")
   }
 

@@ -1883,8 +1883,11 @@ object SimilaritySearch {
     * calls each paid its own dimOf first(), seed collect and per-round
     * moment collect, serializing the cluster on tiny jobs).
     *
-    * Fusion is numerically EXACT, not approximate, because the m
-    * trainings share everything but the slice bounds:
+    * Fusion reproduces the m separate ladders — pinned by AnnSpec and
+    * the oracle, not structural: `vecSumAgg` merges partial buffers with
+    * order-sensitive double adds, and the fused plan shuffles on
+    * (space, cid) instead of cid. The m trainings share everything but
+    * the slice bounds:
     *  - seeds: [[hashCentroids]] orders by md5(id) — vector-independent
     *    — so all m subspaces seed from the SAME ks rows; one collect of
     *    the full normalized vectors, sliced driver-side, reproduces
@@ -1894,7 +1897,8 @@ object SimilaritySearch {
     *    Exploding m (space, cid, slice) structs per row and grouping by
     *    (space, cid) feeds every (space, cid) group the identical value
     *    multiset in the identical per-partition row order, so the
-    *    rounded means land on the same 6-dp grid (AnnSpec pins the
+    *    rounded means land on the same 6-dp grid as long as the partial
+    *    buffers merge in the same order (AnnSpec pins the
     *    codebook equality against the unfused ladder; the oracle replay
     *    pins it cross-engine).
     * Driver round trips per Lloyd round: 1 instead of m; seed collects:

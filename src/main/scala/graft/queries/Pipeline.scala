@@ -913,16 +913,17 @@ object Pipeline extends QueryModule {
       // md5-keyed word shuffle — once per reference: the LSH pair
       // source scans its input ~4x (two bucket tables on both sides of
       // the self-join + the i/j rerank joins) and the fp frame twice
-      // (i- and j-side textual_dup joins). Materialize the two SLIM
-      // projections once: embeddings (~80 MB at 30x) for the pair
-      // source, fingerprints (32 B/row) for the verdict joins — the
-      // heavy text column never leaves the derivation scan (guide
-      // §2.3/§8). localCheckpoint, not persist (cross-invocation cache
-      // leak).
-      val corpusEmb = corpus.select(col("vec_id"), col("embedding"))
+      // (i- and j-side textual_dup joins). Materialize ONE slim frame
+      // (id, embedding ~80 MB at 30x, fingerprint 32 B/row), so the
+      // subtree runs once, and derive the pair source's and the verdict
+      // joins' projections from it — the heavy text column never leaves
+      // the derivation scan (guide §2.3/§8). localCheckpoint, not
+      // persist (cross-invocation cache leak).
+      val slim = corpus.select(col("vec_id"), col("embedding"),
+          md5(col("text")).as("fp"))
         .localCheckpoint(true)
-      val fps = corpus.select(col("vec_id"), md5(col("text")).as("fp"))
-        .localCheckpoint(true)
+      val corpusEmb = slim.select(col("vec_id"), col("embedding"))
+      val fps = slim.select(col("vec_id"), col("fp"))
       SimilaritySearch.nearDupPairsAuto(
           corpusEmb,
           "vec_id", "embedding", threshold = 0.99)

@@ -15,6 +15,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
@@ -32,17 +33,23 @@ object TestSpark {
     // (poll the status tracker until no executor reports a running
     // task), then stop the context cleanly — Spark's later hook finds
     // it already stopped and no status update can race the stop.
+    // The whole hook shares one 45 s deadline, well inside Hadoop's 60 s
+    // hook timeout: the stream stops may use up to 30 s of it, and the
+    // drain gets whatever they leave (at least 15 s).
     org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
       new Runnable {
         override def run(): Unit = try {
           val sc = s.sparkContext
           if (!sc.isStopped) {
+            val start = System.nanoTime()
+            val deadline = start + 45L * 1000 * 1000 * 1000
+            val streamsDeadline = start + 30L * 1000 * 1000 * 1000
+            def msLeft(until: Long): Long = math.max(1L, (until - System.nanoTime()) / 1000000)
             s.streams.active.foreach { q =>
-              try { q.stop(); q.awaitTermination(10000) }
+              try { q.stop(); q.awaitTermination(msLeft(streamsDeadline)) }
               catch { case _: Throwable => () }
             }
             sc.cancelAllJobs()
-            val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
             def busy(): Boolean =
               sc.statusTracker.getActiveJobIds().nonEmpty ||
                 sc.statusTracker.getExecutorInfos.exists(_.numRunningTasks() > 0)
