@@ -224,13 +224,21 @@ object Bench {
     // the probe TRACE over run position and normalize each query by the
     // probe context it actually ran in: sum(median_q * ref / probe(q)).
     // Endpoint normalizations are emitted too so either bound is
-    // quotable on its own.
+    // quotable on its own. Each intra-run trace sample is ONE probe run,
+    // so the trace is 3-point median filtered before interpolation: one
+    // spiky sample no longer skews the ~10 queries on either side of it.
+    // The endpoints are already median-of-3 (timedMedian), so they stay
+    // as measured and serve as the filter's outer neighbours.
     val traceIdx: Seq[(Double, Double)] = {
       val nameToIdx = results.zipWithIndex
         .map { case ((n, _, _, _, _, _), i) => (n, i.toDouble) }.toMap
-      ((-0.5, cpuFirst) +:
+      val raw = (-0.5, cpuFirst) +:
         probeTrace.toSeq.map { case (n, v) => (nameToIdx(n), v) } :+
-        (results.size - 0.5, cpuLast)).map { case (i, v) => (i, v) }
+        (results.size - 0.5, cpuLast)
+      raw.indices.map { i =>
+        if (i == 0 || i == raw.size - 1) raw(i)
+        else (raw(i)._1, Seq(raw(i - 1)._2, raw(i)._2, raw(i + 1)._2).sorted.apply(1))
+      }
     }
     def probeAt(i: Double): Double = {
       val hiIdx = traceIdx.indexWhere(_._1 >= i)

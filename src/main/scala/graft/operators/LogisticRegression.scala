@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
   * feature frame (per-partition partial sums of the k+1 gradient
   * components — the same map-side-combine shuffle as any avg); only the
   * (k+1)-double gradient crosses the driver boundary per round, exactly
-  * the [[SimilaritySearch.lloydCentroids]] model-crossing contract. At
+  * the [[SimilaritySearch.lloyd]] ladder's model-crossing contract. At
   * 100 TB the caller persists the feature frame once (it is scanned
   * `iters` + 1 times); the frames here are projections of one scan.
   *
-  * Engine-portable by construction (the lloydCentroids discipline):
+  * Engine-portable by construction (the Lloyd ladder's discipline):
   * gradients are rounded to 6 dp THROUGH SPARK'S OWN round before the
   * weight update, re-anchoring both engines every round so sum-order
   * and exp() ulp differences cannot accumulate; the update itself is a

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graft.{Codebook, GramianFunctions, NativeExpressions}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -113,11 +114,8 @@ object SimilaritySearch {
     // pair self-join, and the leaf assignment is the expensive subtree.
     // withTwoLevelCells: the checkpoint derives from the TRAINING'S OWN
     // cached cell assignment instead of re-running the coarse scan.
-    withTwoLevelCells(emb, idCol, vecCol, coarseK, subK) { (cb, cells) =>
-      pairsWithAssignment(emb, idCol, vecCol,
-        bestLeaf(cells, cb.leaves)
-          .select(col("_vid").as(idCol), col("_leaf").as("cluster_id"))
-          .localCheckpoint(true),
+    withTwoLevelCells(emb, idCol, vecCol, coarseK, subK) { (_, assigned) =>
+      pairsWithAssignment(emb, idCol, vecCol, assigned.localCheckpoint(true),
         threshold)
     }
   }
@@ -244,9 +242,7 @@ object SimilaritySearch {
       .join(corpus.select(col(idCol).as("_cid"), col(vecCol).as("_cv")), "_cid")
       .select(col("_pid").as("probe_id"), col("_cid").as("id"),
         round(cosine(col("_cv"), col("_pv")), 6).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("id"))))
-      .filter(col("rk") <= k)
+      .transform(topN("probe_id", "cos", "id", k, "rk"))
   }
 
   /** IVF (inverted-file) batch ANN — the other classic scale path next
@@ -254,7 +250,7 @@ object SimilaritySearch {
     * design: Faiss IVFFlat). The coarse quantizer is a k-means
     * codebook: `nlist` hash-ordered seed vectors (smallest md5(id))
     * refined by [[LloydIters]] deterministic Lloyd rounds
-    * ([[lloydCentroids]]) — every step 6-dp rounded with id tiebreaks,
+    * ([[lloyd]]) — every step 6-dp rounded with id tiebreaks,
     * so the whole index is reproducible across engines and the DuckDB
     * oracle rebuilds the identical iterations bit-for-bit.
     * Spherical assignment: every vector joins its argmax-
@@ -277,15 +273,13 @@ object SimilaritySearch {
                     k: Int, nlist: Int = 16, nprobe: Int = 4,
                     centroids: Option[DataFrame] = None): DataFrame = {
     require(nprobe <= nlist, "topKCosineIvf: nprobe must be <= nlist")
-    val d = dimOf(corpus, vecCol)
-    guardFlatExplicit(corpus, nlist, "topKCosineIvf",
-      fatAssignBytesPerRow(d))
+    guardFlatExplicit(corpus, vecCol, nlist, "topKCosineIvf")
     // training is deterministic, so a caller that also TUNES (the
     // ann_eval_tuned shape: autoNprobe + the tuned search) trains once
     // and passes the codebook to both — the round-15 ann_eval_twolevel
     // discipline at the flat tier
     val cents = centroids.getOrElse(
-      lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters, d))
+      lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters))
     val assigned = bestLists(corpus, cents, idCol, vecCol, 1)
       .select(col("_mid").as("_cid"), col("_mv").as("_cv"), col("_list"))
     val probeLists = bestLists(probes, cents, probeIdCol, vecCol, nprobe)
@@ -294,9 +288,7 @@ object SimilaritySearch {
       .filter(col("_pid") =!= col("_cid"))
       .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
         round(cosine(col("_cv"), col("_pv")), 6).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
   }
 
   /** The flat IVF codebook on its own — the train-once face of
@@ -325,8 +317,8 @@ object SimilaritySearch {
     * terminates with the target met or the full scan reached.
     *
     * Cost shape: centroids train once, the corpus assigns once (the
-    * assigned frame and the exact arm are persisted and reused by
-    * every ladder evaluation); each evaluation re-ranks only the
+    * assigned frame is persisted and the exact top-k collected, both
+    * reused by every ladder evaluation); each evaluation re-ranks only the
     * candidate lists of a SAMPLE-sized probe set — production tunes on
     * a held-out probe sample, never the query stream. */
   def autoNprobe(probes: DataFrame, probeIdCol: String,
@@ -340,9 +332,9 @@ object SimilaritySearch {
   }
 
   /** [[autoNprobe]] plus per-probe hit counts AT the tuned nprobe —
-    * the flat-tier twin of [[autoNprobeTwoLevelStats]]: one extra
-    * sample-sized job over the tuner's persisted assigned/exact frames
-    * replaces the eval query's full re-derivation of both arms (a
+    * the flat-tier twin of [[autoNprobeTwoLevelStats]]: the walk's own
+    * collected top-k at that nprobe (no extra job) replaces the eval
+    * query's full re-derivation of both arms (a
     * second corpus-sized exact scan + a second IVF search per eval
     * run). Zero-filled, one row per probe; empty when `collectStats`
     * is false. */
@@ -354,64 +346,63 @@ object SimilaritySearch {
       centroids: Option[DataFrame] = None,
       collectStats: Boolean = true): (Int, Double, Seq[(Long, Long)]) = {
     import org.apache.spark.storage.StorageLevel
-    val d = dimOf(corpus, vecCol)
-    guardFlatExplicit(corpus, nlist, "autoNprobe",
-      fatAssignBytesPerRow(d))
+    guardFlatExplicit(corpus, vecCol, nlist, "autoNprobe")
     val cents = centroids.getOrElse(
-      lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters, d))
+      lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters))
     val assigned = bestLists(corpus, cents, idCol, vecCol, 1)
       .select(col("_mid").as("_cid"), col("_mv").as("_cv"), col("_list"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val pb = probes.select(col(probeIdCol).as("_pid0"), col(vecCol).as("_pv0"))
+    val pids = pb.select(col("_pid0")).collect().map(_.getLong(0)).toSeq.sorted
+    require(pids.nonEmpty, "autoNprobe: empty probe set")
     // exact arm: brute-force top-k per probe (the ann_eval exact arm —
     // one corpus scan against broadcast probes, never shuffled)
-    val we = Window.partitionBy(col("_pid")).orderBy(col("_ecos").desc, col("_cid"))
-    val exact = corpus.select(col(idCol).as("_cid"), col(vecCol).as("_ev"))
+    val exact = pairSet(corpus.select(col(idCol).as("_cid"), col(vecCol).as("_ev"))
       .crossJoin(broadcast(pb))
       .filter(col("_cid") =!= col("_pid0"))
       .select(col("_pid0").as("_pid"), col("_cid"),
         round(cosine(col("_ev"), col("_pv0")), 6).as("_ecos"))
-      .withColumn("_erk", row_number().over(we))
-      .filter(col("_erk") <= k)
-      .select(col("_pid"), col("_cid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nProbes = pb.count()
-    require(nProbes > 0, "autoNprobe: empty probe set")
+      .transform(topN("_pid", "_ecos", "_cid", k, "_erk"))
+      .select(col("_pid"), col("_cid")))
     def ivfAt(p: Int): DataFrame = {
       val probeLists = bestLists(pb, cents, "_pid0", "_pv0", p)
         .select(col("_mid").as("_pid"), col("_mv").as("_pv"), col("_list"))
-      val wi = Window.partitionBy(col("_pid")).orderBy(col("_icos").desc, col("_cid"))
       assigned.join(broadcast(probeLists), "_list")
         .filter(col("_pid") =!= col("_cid"))
         .select(col("_pid"), col("_cid"),
           round(cosine(col("_cv"), col("_pv")), 6).as("_icos"))
-        .withColumn("_irk", row_number().over(wi))
-        .filter(col("_irk") <= k)
+        .transform(topN("_pid", "_icos", "_cid", k, "_irk"))
         .select(col("_pid"), col("_cid"))
     }
-    def recallAt(p: Int): Double =
-      exact.join(ivfAt(p), Seq("_pid", "_cid"), "left_semi").count()
-        .toDouble / (k * nProbes)
+    val memo = scala.collection.mutable.Map.empty[Int, Map[Long, Long]]
+    def hitsAt(p: Int) = memo.getOrElseUpdate(p, probeHits(exact, ivfAt(p)))
     val ladder = (Iterator.iterate(1)(_ * 2).takeWhile(_ < nlist).toVector :+ nlist)
+    def rec(i: Int): Double = hitsAt(ladder(i)).values.sum.toDouble / (k * pids.size.toLong)
     // leftmost ladder value whose recall reaches the target
-    val memo = scala.collection.mutable.Map.empty[Int, Double]
-    def rec(i: Int): Double = memo.getOrElseUpdate(ladder(i), recallAt(ladder(i)))
     var (lo, hi) = (0, ladder.size - 1)
     while (lo < hi) {
       val mid = (lo + hi) / 2
       if (rec(mid) >= targetRecall) hi = mid else lo = mid + 1
     }
     val res = (ladder(lo), rec(lo))
-    val stats = if (!collectStats) Seq.empty[(Long, Long)] else {
-      val hits = exact.join(ivfAt(res._1), Seq("_pid", "_cid"), "left_semi")
-        .groupBy(col("_pid")).count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      pb.select(col("_pid0")).collect().map(_.getLong(0)).toSeq.sorted
-        .map(pid => (pid, hits.getOrElse(pid, 0L)))
-    }
-    assigned.unpersist(); exact.unpersist()
+    val stats = if (!collectStats) Seq.empty[(Long, Long)] else
+      pids.map(pid => (pid, hitsAt(res._1).getOrElse(pid, 0L)))
+    assigned.unpersist()
     (res._1, res._2, stats)
   }
+
+  /** The (_pid, _cid) pairs of a probes × k frame, on the driver. */
+  private def pairSet(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Per-probe count of the `exact` top-k pairs an approximate
+    * (_pid, _cid) top-k frame recovers. Both sides are probes × k rows,
+    * so the tuners match them on the driver: a ladder step is one
+    * chained job, with no join of two shuffled sides whose completion
+    * order would reorder AQE's stages (and so its generated classes)
+    * from run to run. */
+  private def probeHits(exact: Set[(Long, Long)], approx: DataFrame): Map[Long, Long] =
+    pairSet(approx).filter(exact.contains).groupBy(_._1).map { case (p, hs) => p -> hs.size.toLong }
 
   /** The (nprobeCells, nprobeLeaves) doubling ladder the two-level
     * autotuner walks: leaves double 1, 2, ..., coarseK·subK; the cell
@@ -472,8 +463,8 @@ object SimilaritySearch {
   }
 
   /** [[autoNprobeTwoLevel]] plus the per-probe hit counts AT the tuned
-    * step, computed from the SAME persisted frames the walk ranked (one
-    * sample-sized job) and collected before the unpersists. The
+    * step, taken from the top-k the walk collected there (no extra
+    * job). The
     * recall-eval queries build their probe-level report from this
     * instead of re-deriving BOTH arms — the pre-r16 ann_eval_twolevel
     * plan recomputed the probes × corpus exact arm and the tuned search
@@ -493,12 +484,9 @@ object SimilaritySearch {
       : ((Int, Int), Double, Seq[(Long, Long)]) = {
     import org.apache.spark.storage.StorageLevel
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val corpusD = corpus.select(col(idCol).as("_cid"),
-      expr(s"transform($vecCol, x -> cast(x as double))").as("_cv"))
-    val probeD = probes.select(col(probeIdCol).as("_pid"),
-      expr(s"transform($vecCol, x -> cast(x as double))").as("_pv"))
-    val nProbes = probeD.count()
+    val probeD = probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
+    val pids = probeD.select(col("_pid")).collect().map(_.getLong(0)).toSeq.sorted
+    val nProbes = pids.size.toLong
     require(nProbes > 0, "autoNprobeTwoLevel: empty probe set")
     // The one-pass ladder's ground truth is a probes × corpus cosine
     // frame persisted to MEMORY_AND_DISK — inherent to exact-recall
@@ -516,50 +504,33 @@ object SimilaritySearch {
     require(cb.coarse.size <= coarseK && cb.leaves.size <= coarseK * subK,
       "autoNprobeTwoLevel: codebook shape exceeds (coarseK, subK)")
     val ladder = twoLevelLadder(coarseK, subK)
-    // probe×leaf frame: EVERY leaf scored per probe, tagged with its
-    // parent cell's rank — sample-sized (nProbes × coarseK·subK), so
+    // probe×leaf frame: sample-sized (nProbes × coarseK·subK), so
     // ranking it once per ladder step costs nothing corpus-shaped
-    val wc = Window.partitionBy(col("_pid")).orderBy(col("_ccos").desc, col("_ccell"))
-    val probeLeafAll = probeD.crossJoin(broadcast(cb.coarse.toDF("_ccell", "_ccv")))
-      .select(col("_pid"), col("_pv"), col("_ccell"),
-        round(cosine(col("_pv"), col("_ccv")), 6).as("_ccos"))
-      .withColumn("_crk", row_number().over(wc))
-      .select(col("_pid"), col("_pv"), col("_ccell").as("_cell"), col("_crk"))
-      .join(broadcast(cb.leaves.toDF("_cell", "_leaf", "_lv")), Seq("_cell"))
-      .select(col("_pid"), col("_crk"), col("_leaf"),
-        round(cosine(col("_pv"), col("_lv")), 6).as("_lcos"))
+    val probeLeafAll = probeLeafScores(probeD, cb).drop("_pv")
       .persist(StorageLevel.MEMORY_AND_DISK)
     // the ONE corpus-side pass: every (probe, corpus row) cosine —
     // exactly the exact arm's frame — tagged with the row's leaf
-    val scored = corpusD
-      .join(assignLeaves(corpus, idCol, vecCol, cb)
-        .select(col("_vid").as("_cid"), col("_leaf")), Seq("_cid"))
+    val scored = assignLeaves(corpus, idCol, vecCol, cb)
+      .select(col("_vid").as("_cid"), col("_vv").as("_cv"), col("_leaf"))
       .crossJoin(broadcast(probeD))
       .filter(col("_cid") =!= col("_pid"))
       .select(col("_pid"), col("_cid"), col("_leaf"),
         round(cosine(col("_cv"), col("_pv")), 6).as("_icos"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val we = Window.partitionBy(col("_pid")).orderBy(col("_icos").desc, col("_cid"))
-    val exact = scored
-      .withColumn("_erk", row_number().over(we)).filter(col("_erk") <= k)
-      .select(col("_pid"), col("_cid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val wl = Window.partitionBy(col("_pid")).orderBy(col("_lcos").desc, col("_leaf"))
-    val wi = Window.partitionBy(col("_pid")).orderBy(col("_icos").desc, col("_cid"))
-    // the step's approximate top-k, from the persisted frames: leaf
-    // pick ranked by leaf cosine WITHIN the step's cell prefix (the
-    // walk's exact rule) — sample-sized, broadcast
-    def ivfAt(cells: Int, leaves: Int): DataFrame = {
-      val stepLeaves = probeLeafAll.filter(col("_crk") <= cells)
-        .withColumn("_lrk", row_number().over(wl)).filter(col("_lrk") <= leaves)
-        .select(col("_pid"), col("_leaf"))
-      scored.join(broadcast(stepLeaves), Seq("_pid", "_leaf"))
-        .withColumn("_irk", row_number().over(wi)).filter(col("_irk") <= k)
+    val exact = pairSet(scored.transform(topN("_pid", "_icos", "_cid", k, "_erk"))
+      .select(col("_pid"), col("_cid")))
+    // the step's approximate top-k, from the persisted frames — the
+    // leaf pick is sample-sized, broadcast
+    def ivfAt(cells: Int, leaves: Int): DataFrame =
+      scored.join(broadcast(pickLeaves(probeLeafAll, cells, leaves)
+          .select(col("_pid"), col("_leaf"))), Seq("_pid", "_leaf"))
+        .transform(topN("_pid", "_icos", "_cid", k, "_irk"))
         .select(col("_pid"), col("_cid"))
-    }
+    val memo = scala.collection.mutable.Map.empty[(Int, Int), Map[Long, Long]]
+    def hitsAt(step: (Int, Int)) =
+      memo.getOrElseUpdate(step, probeHits(exact, ivfAt(step._1, step._2)))
     def recallAt(cells: Int, leaves: Int): Double =
-      exact.join(ivfAt(cells, leaves), Seq("_pid", "_cid"), "left_semi")
-        .count().toDouble / (k * nProbes)
+      hitsAt((cells, leaves)).values.sum.toDouble / (k * nProbes)
     var res: Option[((Int, Int), Double)] = None
     for ((cells, leaves) <- ladder if res.isEmpty) {
       val ts = System.nanoTime()
@@ -572,17 +543,44 @@ object SimilaritySearch {
       val (c, l) = ladder.last
       ((c, l), recallAt(c, l))
     }
-    val stats = if (!collectStats) Seq.empty[(Long, Long)] else {
-      val ((bc, bl), _) = out
-      val hits = exact.join(ivfAt(bc, bl), Seq("_pid", "_cid"), "left_semi")
-        .groupBy(col("_pid")).count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      probeD.select(col("_pid")).collect().map(_.getLong(0)).toSeq.sorted
-        .map(pid => (pid, hits.getOrElse(pid, 0L)))
-    }
-    probeLeafAll.unpersist(); scored.unpersist(); exact.unpersist()
+    val stats = if (!collectStats) Seq.empty[(Long, Long)] else
+      pids.map(pid => (pid, hitsAt(out._1).getOrElse(pid, 0L)))
+    probeLeafAll.unpersist(); scored.unpersist()
     (out._1, out._2, stats)
   }
+
+  /** Probe-side routing at the two-level tier: every (probe, leaf)
+    * pair's 6-dp cosine `_lcos`, tagged with the probe's rank `_crk` of
+    * the leaf's parent cell by (cosine desc, cell id). Probes ×
+    * coarseK·subK rows: (_pid, _pv, _crk, _leaf, _lcos). */
+  private def probeLeafScores(probeD: DataFrame, cb: TwoLevelCodebook): DataFrame = {
+    val spark = probeD.sparkSession
+    import spark.implicits._
+    probeD.crossJoin(broadcast(cb.coarse.toDF("_ccell", "_ccv")))
+      .select(col("_pid"), col("_pv"), col("_ccell"),
+        round(cosine(col("_pv"), col("_ccv")), 6).as("_ccos"))
+      .withColumn("_crk", row_number().over(
+        Window.partitionBy(col("_pid")).orderBy(col("_ccos").desc, col("_ccell"))))
+      .select(col("_pid"), col("_pv"), col("_ccell").as("_cell"), col("_crk"))
+      .join(broadcast(cb.leaves.toDF("_cell", "_leaf", "_lv")), Seq("_cell"))
+      .select(col("_pid"), col("_pv"), col("_crk"), col("_leaf"),
+        round(cosine(col("_pv"), col("_lv")), 6).as("_lcos"))
+  }
+
+  /** A probe searching (cells, leaves) visits, within its `cells` best
+    * cells, its `leaves` best leaves by (cosine desc, leaf id). */
+  private def pickLeaves(scores: DataFrame, cells: Int, leaves: Int): DataFrame =
+    scores.filter(col("_crk") <= cells)
+      .transform(topN("_pid", "_lcos", "_leaf", leaves, "_lrk"))
+
+  /** Each `part` group's `n` best rows by (`score` desc, `id`), ranked
+    * 1..n in column `rank` — the rounded-score, id-tiebreak top-n every
+    * ANN path ranks with (WindowGroupLimit prunes before the sort). */
+  private def topN(part: String, score: String, id: String, n: Int,
+                   rank: String)(df: DataFrame): DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(col(part)).orderBy(col(score).desc, col(id))))
+      .filter(col(rank) <= n)
 
   /** Deterministic probe sample for the recall autotuners: the `n`
     * corpus rows with the smallest md5(id) — the
@@ -603,18 +601,20 @@ object SimilaritySearch {
     * labeled with its nearest k-means centroid (hash-seeded codebook
     * refined by [[LloydIters]] Lloyd rounds) — flat clustering for
     * corpus structure analysis (per-cluster profiles, mixture
-    * balancing, shard assignment). Centroids broadcast; the corpus is
-    * scanned once per round and never shuffled.
+    * balancing, shard assignment). The codebook rides in the scan as
+    * data; the corpus is scanned once per round and never shuffled.
     * Returns (idCol, cluster_id, cent_cos). */
   def assignClusters(corpus: DataFrame, idCol: String, vecCol: String,
-                     nlist: Int = 16): DataFrame = {
-    guardFlatExplicit(corpus, nlist, "assignClusters")
-    val cents = lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    withBestCent(corpus.select(col(idCol).as("_mid"), col(vecCol).as("_mv")),
-        "_mid", "_mv", cents)
-      .select(col("_mid").as(idCol), (-col("_best")("negid")).as("cluster_id"),
-        col("_best")("c").as("cent_cos"))
+                     nlist: Int = 16): DataFrame =
+    flatAssign(corpus, idCol, vecCol, trainFlat(corpus, idCol, vecCol, nlist))
+
+  /** (idCol, cluster_id, cent_cos): every vector labeled with its
+    * nearest flat centroid — one projection over the codebook as data
+    * ([[nearest]]), the corpus never joined or shuffled. */
+  private def flatAssign(df: DataFrame, idCol: String, vecCol: String,
+                         cents: Seq[(Long, Seq[Double])]): DataFrame = {
+    val best = nearest(col(vecCol), Codebook.flat(cents))
+    df.select(col(idCol), best("id").as("cluster_id"), best("score").as("cent_cos"))
   }
 
   /** Sentinel `nlist`: derive the knob from a corpus count
@@ -640,11 +640,7 @@ object SimilaritySearch {
 
   /** The data-driven nlist: ≈ max(16, N / [[TargetClusterSize]]),
     * snapped UP to a power of two. Powers of two keep the knob coarse
-    * and predictable across nearby corpus sizes, and every snapped
-    * value lands on a measured [[withBestCent]] regime: ≤ 32 runs the
-    * JIT-hot literal fold, > 32 the exploded broadcast-join
-    * formulation (the dispatch that closed the nlist=64 JIT dead
-    * zone — see [[ArgmaxFoldMaxCentroids]]). */
+    * and predictable across nearby corpus sizes. */
   def deriveNlist(n: Long,
                   targetClusterSize: Long = TargetClusterSize): Int = {
     require(targetClusterSize > 0, "deriveNlist: targetClusterSize must be > 0")
@@ -654,26 +650,23 @@ object SimilaritySearch {
     p.toInt
   }
 
-  /** Row-mass ceiling for the FLAT exploded assignment: the wide-
-    * codebook formulation materializes N·nlist candidate rows through
-    * a (sort-based — struct buffer) aggregate, and that row mass, not
-    * the cosine flops, is what kills it: MEASURED at 1M×4096 the agg
-    * wanted multi-hundred-GB of sort scratch and ENOSPC-killed the
-    * JVM, while 2e8 rows (the 100× fixture at nlist=256) ran clean at
-    * 19.8 s (SCALING.md rounds 12–13). 1e9 sits an order of magnitude
-    * under the measured death with the measured-good regime well
-    * inside it. */
+  /** Ceiling on the flat tier's N·nlist (vector, centroid) pairs for
+    * [[deriveTwoLevel]]. Set when the wide flat assignment materialized
+    * one row per pair (measured dead at 1M×4096 through its sort
+    * scratch, clean at 2e8 pairs — SCALING.md rounds 12–13); the native
+    * nearest-centroid scan materializes none, but the bound still caps
+    * per-vector assignment work at the point where two levels cost ~85×
+    * less, and keeping it keeps every derived shape where it was. */
   val FlatAssignRowBudget: Long = 1000000000L
 
-  /** Bytes one SLIM exploded-assignment candidate row costs through
-    * [[withBestCent]]'s sort aggregate: an (id, {cos, negid}) tuple —
-    * ~24 B of sort payload. Calibrated against the round-13
-    * measurements: the slim 2e8-row assignment (100× fixture, nlist
-    * 256) ran clean at ~5 GB predicted, while 1M×4096 = 4.1e9 rows
-    * predict ~92 GiB — correctly over any realistic local scratch
-    * budget (the pre-slim FAT form of that arm measured ~2 TB and
-    * ENOSPC-died, SCALING.md round 13). */
-  val FlatAssignBytesPerSlimRow: Long = 24L
+  /** Codebook size up to which the flat tier needs no size check:
+    * [[deriveTwoLevel]] keeps every corpus whose derived nlist is at
+    * most this flat whatever [[FlatAssignRowBudget]] says, and
+    * [[guardFlatExplicit]] skips its corpus count (the registered
+    * queries' nlist=16 pays no extra scan). 32 was the largest codebook
+    * the old literal-fold assignment ran; it stays the threshold so no
+    * derived shape or refusal moves. */
+  private[graft] val SmallFlatNlist: Int = 32
 
   /** Bytes one FAT candidate row costs through [[bestLists]]'s window
     * sort, where the d-dim double vector rides the rank: ~8·d payload
@@ -681,37 +674,44 @@ object SimilaritySearch {
     * ~2 TB / 4.1e9-row death calibrates). */
   def fatAssignBytesPerRow(d: Int): Long = 48L + 8L * d
 
-  /** Loud fail-fast for the EXPLICIT-nlist flat assignment paths — the
-    * Dedup.refuseForScratch pattern applied to the ANN family: the
-    * exploded nearest-centroid formulation materializes N·nlist
-    * candidate rows through a sort aggregate (or bestLists' window
-    * sort), and when that mass cannot fit the scratch volume the JVM
-    * dies at ENOSPC mid-sort. The AUTO front door is already guarded
-    * by [[deriveTwoLevel]]/[[FlatAssignRowBudget]]; this guard covers
-    * a caller who PINS nlist past the fold regime on a corpus the
-    * flat plan cannot carry — measured: assignClusters(4096) at 1M
-    * vectors (TwoLevelScale's dead arm). Budget = half of free
+  /** Loud fail-fast for the EXPLICIT-nlist IVF paths — the
+    * Dedup.refuseForScratch pattern applied to the ANN family:
+    * [[bestLists]] materializes N·nlist fat candidate rows through its
+    * window sort, and when that mass cannot fit the scratch volume the
+    * JVM dies at ENOSPC mid-sort (the same death measured for the old
+    * exploded flat assignment at 1M×4096, TwoLevelScale's dead arm).
+    * Only counts past [[SmallFlatNlist]], so the registered small-nlist
+    * queries never pay the count or dimension scans. */
+  private def guardFlatExplicit(corpus: DataFrame, vecCol: String, nlist: Int,
+                                tag: String): Unit =
+    if (nlist > SmallFlatNlist) {
+      val n = corpus.count()
+      val bytesPerRow = fatAssignBytesPerRow(dimOf(corpus, vecCol))
+      refuseOverScratch(corpus.sparkSession, n.toDouble * nlist, bytesPerRow) {
+        (mass, predicted, budget) =>
+          f"[graft-ann] $tag REFUSED: explicit nlist=$nlist on $n vectors " +
+            f"materializes ~$mass%.3g candidate rows (~$predicted GiB at " +
+            s"$bytesPerRow B/row) against a ~$budget GiB " +
+            "scratch budget (half of free spark.local.dir). Running anyway " +
+            "would ENOSPC-die mid-sort and can take the executor JVM with " +
+            "it. Use the hierarchical tier — assignClustersTwoLevel / " +
+            "semanticDedupTwoLevel with coarseK·subK >= nlist leaves " +
+            "(assignment mass N·(coarseK+subK), flat at every measured " +
+            "decade) — or the AutoNlist front door, which dispatches " +
+            "itself past this cliff."
+      }
+    }
+
+  /** Throws `msg(rows, predicted GiB, budget GiB)` when `rows` ×
+    * `bytesPerRow` exceeds the scratch budget: half of free
     * spark.local.dir, shared with the dedup family's guard (and its
     * test override). */
-  private[graft] def refuseForAssignScratch(
-      spark: org.apache.spark.sql.SparkSession,
-      n: Long, nCents: Int, bytesPerRow: Long, tag: String): Unit = {
-    val mass = n.toDouble * nCents
+  private def refuseOverScratch(spark: org.apache.spark.sql.SparkSession,
+      rows: Double, bytesPerRow: Long)(msg: (Double, Long, Long) => String): Unit = {
     val budget = Dedup.usableScratchBytes(spark) * Dedup.MaxScratchFraction
-    if (mass > 0 && mass * bytesPerRow > budget) {
-      val predicted = (mass * bytesPerRow / (1L << 30)).toLong
-      throw new IllegalStateException(
-        f"[graft-ann] $tag REFUSED: explicit nlist=$nCents on $n vectors " +
-          f"materializes ~$mass%.3g candidate rows (~$predicted GiB at " +
-          s"$bytesPerRow B/row) against a ~${(budget / (1L << 30)).toLong} GiB " +
-          "scratch budget (half of free spark.local.dir). Running anyway " +
-          "would ENOSPC-die mid-sort and can take the executor JVM with " +
-          "it. Use the hierarchical tier — assignClustersTwoLevel / " +
-          "semanticDedupTwoLevel with coarseK·subK >= nlist leaves " +
-          "(assignment mass N·(coarseK+subK), flat at every measured " +
-          "decade) — or the AutoNlist front door, which dispatches " +
-          "itself past this cliff.")
-    }
+    if (rows > 0 && rows * bytesPerRow > budget)
+      throw new IllegalStateException(msg(rows,
+        (rows * bytesPerRow / (1L << 30)).toLong, (budget / (1L << 30)).toLong))
   }
 
   /** Bytes one row of [[autoNprobeTwoLevel]]'s persisted scored frame
@@ -723,7 +723,7 @@ object SimilaritySearch {
   val TwoLevelScoredBytesPerRow: Long = 64L
 
   /** Loud fail-fast for [[autoNprobeTwoLevel]]'s probes × corpus
-    * ground-truth persist — the [[refuseForAssignScratch]] contract
+    * ground-truth persist — the [[guardFlatExplicit]] contract
     * with the remedy this surface actually has: fewer probes. At the
     * registered queries' 5 probes the frame is probe-bounded and
     * trivial; at [[sampleProbes]]' documented n=64 on a 10⁹-row corpus
@@ -731,42 +731,27 @@ object SimilaritySearch {
     * refused. */
   private[graft] def refuseForScoredScratch(
       spark: org.apache.spark.sql.SparkSession,
-      nProbes: Long, nCorpus: Long): Unit = {
-    val mass = nProbes.toDouble * nCorpus
-    val budget = Dedup.usableScratchBytes(spark) * Dedup.MaxScratchFraction
-    if (mass > 0 && mass * TwoLevelScoredBytesPerRow > budget) {
-      val predicted = (mass * TwoLevelScoredBytesPerRow / (1L << 30)).toLong
-      throw new IllegalStateException(
+      nProbes: Long, nCorpus: Long): Unit =
+    refuseOverScratch(spark, nProbes.toDouble * nCorpus, TwoLevelScoredBytesPerRow) {
+      (mass, predicted, budget) =>
         f"[graft-ann] autoNprobeTwoLevel REFUSED: $nProbes probes × " +
           f"$nCorpus corpus rows materialize a ~$mass%.3g-row exact-recall " +
           f"frame (~$predicted GiB at $TwoLevelScoredBytesPerRow B/row) " +
-          s"against a ~${(budget / (1L << 30)).toLong} GiB scratch budget " +
+          s"against a ~$budget GiB scratch budget " +
           "(half of free spark.local.dir). Running anyway would ENOSPC-die " +
           "mid-persist. Tune on FEWER probes — sampleProbes(n) with a " +
           "smaller n (recall estimates converge fast in the probe count) — " +
-          "or free scratch space.")
+          "or free scratch space."
     }
-  }
-
-  /** Count-and-guard front for the explicit-nlist entry points. Only
-    * counts when the codebook is past [[ArgmaxFoldMaxCentroids]] — the
-    * fold regime materializes no candidate rows at all, so the
-    * registered small-nlist queries never pay the extra count scan. */
-  private def guardFlatExplicit(corpus: DataFrame, nlist: Int, tag: String,
-      bytesPerRow: Long = FlatAssignBytesPerSlimRow): Unit =
-    if (nlist > ArgmaxFoldMaxCentroids)
-      refuseForAssignScratch(corpus.sparkSession, corpus.count(), nlist,
-        bytesPerRow, tag)
 
   /** The tier ABOVE the flat quantizer: dispatch to two-level and
     * return Some((coarseK, subK)) when EITHER (a) the corpus wants
     * more leaves than the flat codebook should carry (raw = N /
     * [[TargetClusterSize]] > [[MaxAutoNlist]], i.e. past ~4M vectors),
-    * or (b) the flat assignment's candidate row mass N·deriveNlist(N)
-    * exceeds [[FlatAssignRowBudget]] (past ~1M vectors at the default
-    * target — the flat plan would sort-spill toward ENOSPC long before
-    * the leaf count caps). coarseK·subK >= raw leaves at
-    * N·(coarseK + subK) assignment row mass instead of the flat N·raw
+    * or (b) the flat assignment's N·deriveNlist(N) (vector, centroid)
+    * pairs exceed [[FlatAssignRowBudget]] (past ~1M vectors at the
+    * default target). coarseK·subK >= raw leaves at
+    * N·(coarseK + subK) assignment work instead of the flat N·raw
     * (a flat 16384-leaf codebook costs 85x more per vector than
     * 128x128). coarseK is the largest power of two with coarseK² <=
     * raw, floored at 16 — best-effort for tiny raw: below raw = 256
@@ -774,20 +759,16 @@ object SimilaritySearch {
     * dispatch thresholds (a Some() here implies raw ≳ 1000) but would
     * merely over-split the top level, not break correctness, if the
     * budget constants were ever lowered. subK is the smallest power of
-    * two with coarseK·subK >= raw. Both land on measured
-    * [[withBestCent]] JIT regimes like [[deriveNlist]]'s snapping.
-    * Below both bounds: None (the flat path is the right plan — one
-    * codebook, no second pass). */
+    * two with coarseK·subK >= raw. Below both bounds: None (the flat
+    * path is the right plan — one codebook, no second pass). */
   def deriveTwoLevel(n: Long,
                      targetClusterSize: Long = TargetClusterSize): Option[(Int, Int)] = {
     require(targetClusterSize > 0, "deriveTwoLevel: targetClusterSize must be > 0")
     val raw = math.max(16L, (n + targetClusterSize - 1) / targetClusterSize)
     val flatNlist = deriveNlist(n, targetClusterSize)
     val flatRows = n * flatNlist
-    // the flat fold regime (nlist <= 32) never materializes candidate
-    // rows at all — the budget only governs the exploded formulation
     if (raw <= MaxAutoNlist &&
-        (flatNlist <= ArgmaxFoldMaxCentroids || flatRows <= FlatAssignRowBudget)) None
+        (flatNlist <= SmallFlatNlist || flatRows <= FlatAssignRowBudget)) None
     else Some(twoLevelShape(n, targetClusterSize))
   }
 
@@ -829,7 +810,7 @@ object SimilaritySearch {
     * duplicates does not depend on the knob. */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
                     nlist: Int = AutoNlist, threshold: Double = 0.99): DataFrame = {
-    if (nlist == AutoNlist) {
+    val eff = if (nlist != AutoNlist) nlist else {
       // one count pass drives BOTH tiers: flat below MaxAutoNlist,
       // two-level above it (deriveTwoLevel) — the knob ladder turns
       // itself all the way up.
@@ -844,28 +825,21 @@ object SimilaritySearch {
           val derived = deriveNlist(n)
           System.err.println(s"[graft-ann] semanticDedup: auto nlist=$derived " +
             s"for $n vectors (~${n / math.max(derived, 1)} per cluster)")
-          val cents = lloydCentroids(corpus, idCol, vecCol, derived, LloydIters)
-            .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-          return semanticDedupWithCents(corpus, idCol, vecCol, cents, threshold)
+          derived
       }
     }
-    guardFlatExplicit(corpus, nlist, "semanticDedup")
-    val cents = lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    semanticDedupWithCents(corpus, idCol, vecCol, cents, threshold)
+    semanticDedupWithCents(corpus, idCol, vecCol,
+      trainFlat(corpus, idCol, vecCol, eff), threshold)
   }
 
   /** [[semanticDedup]]'s core against a GIVEN (frozen or just-trained)
-    * codebook: assignment via [[withBestCent]], pairwise cosine within
+    * codebook: assignment via [[flatAssign]], pairwise cosine within
     * each cluster, drop the higher id at cos >= threshold. */
   private def semanticDedupWithCents(corpus: DataFrame, idCol: String,
       vecCol: String, cents: Seq[(Long, Seq[Double])],
       threshold: Double): DataFrame =
     dedupWithAssignment(corpus, idCol, vecCol,
-      withBestCent(
-          corpus.select(col(idCol).as("_mid"), col(vecCol).as("_mv")),
-          "_mid", "_mv", cents)
-        .select(col("_mid").as(idCol), (-col("_best")("negid")).as("cluster_id")),
+      flatAssign(corpus, idCol, vecCol, cents).select(col(idCol), col("cluster_id")),
       threshold)
 
   /** The cluster-bounded PAIR stage both tiers share: pairwise cosine
@@ -897,8 +871,7 @@ object SimilaritySearch {
     // The assignment is referenced THREE times below (both sides of the
     // pair self-join via `av`, plus the verdict join) — and for the
     // two-level tier each reference re-ran the whole leaf assignment
-    // (broadcast leaf join + max-struct aggregate + payload re-join:
-    // the r16 plan audit counted it three times in one
+    // (the r16 plan audit counted it three times in one
     // semantic_dedup_twolevel plan). Materialize the slim (id,
     // cluster_id) frame ONCE — N 16-byte rows, linear and far smaller
     // than the pair-stage shuffle that follows. localCheckpoint, not
@@ -925,19 +898,19 @@ object SimilaritySearch {
   case class TwoLevelCodebook(coarse: Seq[(Long, Seq[Double])],
                               leaves: Seq[(Long, Long, Seq[Double])]) {
     def leafCount: Int = leaves.size
+    @transient private[graft] lazy val coarseBook: Codebook = Codebook.flat(coarse)
+    @transient private[graft] lazy val leafBook: Codebook = Codebook(leaves)
   }
 
-  /** Train the two-level codebook: coarse k-means via
-    * [[lloydCentroids]] (the identical discipline — hash seeds, 6-dp
-    * re-anchoring, id tiebreaks), assign every vector to its coarse
-    * cell ONCE (persisted), then train subK sub-centroids INSIDE each
-    * cell — seeds are the subK smallest-md5 ids per cell
+  /** Train the two-level codebook: coarse k-means ([[trainFlat]] — hash
+    * seeds, 6-dp re-anchoring, id tiebreaks), assign every vector to
+    * its coarse cell ONCE (persisted), then train subK sub-centroids
+    * INSIDE each cell — seeds are the subK smallest-md5 ids per cell
     * (WindowGroupLimit prunes the seed scan in-shuffle, so only
-    * ~partitions·coarseK·subK rows ever cross the exchange), and each
-    * sub-Lloyd round is ONE broadcast-join scan keyed on the cell (a
-    * vector meets only its own cell's subK leaves) + one mergeable
-    * moment aggregate per leaf. Only the coarseK·subK × d model
-    * crosses the driver boundary between rounds.
+    * ~partitions·coarseK·subK rows ever cross the exchange), and the
+    * sub-rounds are the same [[lloyd]] ladder with the cell as each
+    * row's group (a vector meets only its own cell's leaves). Only the
+    * coarseK·subK × d model crosses the driver boundary between rounds.
     *
     * With coarseK = 1 this is EXACTLY the flat quantizer at nlist =
     * subK — one cell holds everything, the per-cell seed order is the
@@ -954,25 +927,21 @@ object SimilaritySearch {
   /** Loan-pattern face of [[trainTwoLevel]] (round 17): training
     * materializes the coarse cell assignment (`cells`, persisted for
     * the sub-Lloyd rounds) and every dedup/pair caller immediately
-    * needed that SAME assignment again — assignLeaves(corpus, cb)
-    * re-ran the full coarse argmax scan the training had just
-    * unpersisted. `f` runs while `cells` is still cached, so a caller
-    * that derives (and checkpoints) its leaf assignment inside `f`
-    * reads the cache instead of recomputing; the unpersist stays
-    * in-call (invocation-scoped — no cross-run cache leak). Plans that
-    * escape `f` lazily referencing `cells` stay CORRECT after the
-    * unpersist (the logical subtree just recomputes), so the contract
-    * change is purely a performance one. */
+    * needs the leaf assignment derived from it. `f` gets that
+    * assignment — (idCol, cluster_id), a projection of the cached cells
+    * — and runs while they are still cached, so a caller that
+    * checkpoints it inside `f` reads the cache instead of re-running
+    * the coarse scan; the unpersist stays in-call (invocation-scoped —
+    * no cross-run cache leak). Plans that escape `f` lazily stay
+    * CORRECT after the unpersist (the logical subtree just
+    * recomputes). */
   private[graft] def withTwoLevelCells[T](corpus: DataFrame, idCol: String,
       vecCol: String, coarseK: Int, subK: Int, iters: Int = LloydIters)(
       f: (TwoLevelCodebook, DataFrame) => T): T = {
     import org.apache.spark.storage.StorageLevel
     require(coarseK >= 1 && subK >= 1, "trainTwoLevel: coarseK and subK must be >= 1")
-    val d = dimOf(corpus, vecCol)
-    val coarse: Seq[(Long, Seq[Double])] =
-      lloydCentroids(corpus, idCol, vecCol, coarseK, iters, d)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    val cells = cellAssign(corpus, idCol, vecCol, coarse)
+    val coarse = trainFlat(corpus, idCol, vecCol, coarseK, iters)
+    val cells = cellAssign(corpus, idCol, vecCol, Codebook.flat(coarse))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // per-cell seeds: subK smallest md5(id) in each cell — the
@@ -980,68 +949,38 @@ object SimilaritySearch {
       // WindowGroupLimit before the exchange.
       val wSeed = Window.partitionBy(col("_cell"))
         .orderBy(md5(col("_vid").cast("string")), col("_vid"))
-      var leaves: Seq[(Long, Long, Seq[Double])] = cells
+      val seeds = cells
         .withColumn("_rk", row_number().over(wSeed))
         .filter(col("_rk") <= subK)
         .select(col("_cell"), col("_vid"), col("_vv"))
         .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toVector)).toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toVector: Seq[Double])).toSeq
         .sortBy(l => (l._1, l._2))
-      for (_ <- 1 to iters) {
-        // moments need the vectors back: join the slim assignment to
-        // the PERSISTED cell frame by id (a cache read, not a rescan)
-        val sums = bestLeaf(cells, leaves)
-          .select(col("_vid"), col("_leaf"))
-          .join(cells.select(col("_vid"), col("_vv")), Seq("_vid"))
-          .select(col("_leaf"), col("_vv"))
-          .groupBy(col("_leaf"))
-          .agg(org.apache.spark.sql.graft.GramianFunctions
-            .vecSumAgg(col("_vv"), d).as("_s"))
-          .select(col("_leaf"),
-            expr(s"transform(slice(_s, 2, $d), x -> round(x / _s[0], 6))").as("_nv"))
-          .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-        leaves = leaves.map { case (cell, lid, prev) =>
-          (cell, lid, sums.getOrElse(lid, prev))
-        }
-      }
-      f(TwoLevelCodebook(coarse, leaves), cells)
+      val cb = TwoLevelCodebook(coarse,
+        lloyd(cells, Seq(col("_cell") -> col("_vv")), seeds, l2 = false, iters))
+      f(cb, bestLeaf(cells, cb.leafBook)
+        .select(col("_vid").as(idCol), col("_leaf").as("cluster_id")))
     } finally { cells.unpersist(); () }
   }
 
   /** (idCol -> _vid, double vec -> _vv, coarse cell -> _cell): the
     * one-pass coarse assignment both training and search share. */
   private def cellAssign(corpus: DataFrame, idCol: String, vecCol: String,
-                         coarse: Seq[(Long, Seq[Double])]): DataFrame =
-    withBestCent(
-        corpus.select(col(idCol).as("_vid"),
-          expr(s"transform($vecCol, x -> cast(x as double))").as("_vv")),
-        "_vid", "_vv", coarse)
-      .select(col("_vid"), col("_vv"), (-col("_best")("negid")).as("_cell"))
+                         coarse: Codebook): DataFrame =
+    corpus.select(col(idCol).as("_vid"), asDoubles(vecCol).as("_vv"))
+      .withColumn("_cell", nearest(col("_vv"), coarse)("id"))
 
-  /** Per-vector best leaf WITHIN its coarse cell: broadcast the leaf
-    * table keyed by cell, join on the cell (each vector meets only its
-    * own cell's <= subK leaves — never the full codebook), then
-    * max(struct) per vector over SLIM (c, negid) rows — the vector
-    * payload never rides the aggregate (the withBestCent lesson: a
-    * d-dim payload in the max struct plans a sort aggregate over fat
-    * rows and spills terabytes at scale; callers that need the vector
-    * re-join it by id). Same contract as [[withBestCent]]: 6-dp
-    * rounded cosine, smallest leaf id wins ties. Returns
-    * (_vid, _leaf, _lcos). */
-  private def bestLeaf(cells: DataFrame,
-                       leaves: Seq[(Long, Long, Seq[Double])]): DataFrame = {
-    val spark = cells.sparkSession
-    import spark.implicits._
-    val leafDf = broadcast(leaves.toDF("_cell", "_lcid", "_lcv"))
-    cells.join(leafDf, "_cell")
-      .select(col("_vid"),
-        struct(round(cosine(col("_vv"), col("_lcv")), 6).as("c"),
-          (-col("_lcid")).as("negid")).as("_sb"))
-      .groupBy(col("_vid"))
-      .agg(max(col("_sb")).as("_sbb"))
-      .select(col("_vid"), (-col("_sbb")("negid")).as("_leaf"),
-        col("_sbb")("c").as("_lcos"))
-  }
+  /** Per-vector best leaf WITHIN its coarse cell — the cell is the
+    * row's group in the leaf codebook, so a vector only meets its own
+    * cell's <= subK leaves, in one projection (no join, no aggregate).
+    * A vector whose cell holds no leaf (a frozen codebook's empty
+    * cell) is dropped. Returns (_vid, _vv, _leaf, _lcos). */
+  private def bestLeaf(cells: DataFrame, leaves: Codebook): DataFrame =
+    cells.select(col("_vid"), col("_vv"),
+        nearest(col("_vv"), leaves, col("_cell")).as("_b"))
+      .filter(col("_b").isNotNull)
+      .select(col("_vid"), col("_vv"), col("_b.id").as("_leaf"),
+        col("_b.score").as("_lcos"))
 
   /** Flat-clustering face of the two-level quantizer (the
     * [[assignClusters]] contract at the hierarchical tier): every
@@ -1060,7 +999,7 @@ object SimilaritySearch {
   /** Assignment against a FROZEN two-level codebook (no retraining). */
   def assignLeaves(corpus: DataFrame, idCol: String, vecCol: String,
                    cb: TwoLevelCodebook): DataFrame =
-    bestLeaf(cellAssign(corpus, idCol, vecCol, cb.coarse), cb.leaves)
+    bestLeaf(cellAssign(corpus, idCol, vecCol, cb.coarseBook), cb.leafBook)
 
   /** IVF batch ANN at the hierarchical tier — the retrieval face of
     * the two-level quantizer ([[topKCosineIvf]]'s contract above the
@@ -1081,41 +1020,22 @@ object SimilaritySearch {
                             nprobeLeaves: Int = 4,
                             codebook: Option[TwoLevelCodebook] = None): DataFrame = {
     require(nprobeCells <= coarseK, "topKCosineIvfTwoLevel: nprobeCells <= coarseK")
-    val spark = corpus.sparkSession
-    import spark.implicits._
     // deterministic training: a caller that already trained (the
     // autotune + search pair) passes the codebook and skips the rerun
     val cb = codebook.getOrElse(
       trainTwoLevel(corpus, idCol, vecCol, coarseK, subK))
     val assigned = assignLeaves(corpus, idCol, vecCol, cb)
-      .select(col("_vid").as("_cid"), col("_leaf"))
-    val probeD = probes.select(col(probeIdCol).as("_pid"),
-      expr(s"transform($vecCol, x -> cast(x as double))").as("_pv"))
-    // probe -> top nprobeCells coarse cells
-    val wc = Window.partitionBy(col("_pid")).orderBy(col("_ccos").desc, col("_ccell"))
-    val probeCells = probeD.crossJoin(broadcast(cb.coarse.toDF("_ccell", "_ccv")))
-      .select(col("_pid"), col("_pv"), col("_ccell"),
-        round(cosine(col("_pv"), col("_ccv")), 6).as("_ccos"))
-      .withColumn("_crk", row_number().over(wc)).filter(col("_crk") <= nprobeCells)
-      .select(col("_pid"), col("_pv"), col("_ccell").as("_cell"))
-    // -> top nprobeLeaves leaves among those cells' leaves
-    val wl = Window.partitionBy(col("_pid")).orderBy(col("_lcos").desc, col("_leaf"))
-    val probeLeaves = probeCells
-      .join(broadcast(cb.leaves.toDF("_cell", "_leaf", "_lv")), Seq("_cell"))
-      .select(col("_pid"), col("_pv"), col("_leaf"),
-        round(cosine(col("_pv"), col("_lv")), 6).as("_lcos"))
-      .withColumn("_lrk", row_number().over(wl)).filter(col("_lrk") <= nprobeLeaves)
+      .select(col("_vid").as("_cid"), col("_vv").as("_cv"), col("_leaf"))
+    val probeD = probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
+    val probeLeaves = pickLeaves(probeLeafScores(probeD, cb), nprobeCells, nprobeLeaves)
       .select(col("_pid"), col("_pv"), col("_leaf"))
-    // candidates = those leaves' inverted lists; exact rerank
+    // candidates = those leaves' inverted lists (the assignment carries
+    // each vector, so no corpus re-join); exact rerank
     assigned.join(broadcast(probeLeaves), Seq("_leaf"))
       .filter(col("_pid") =!= col("_cid"))
-      .join(corpus.select(col(idCol).as("_cid"),
-        expr(s"transform($vecCol, x -> cast(x as double))").as("_cv")), Seq("_cid"))
       .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
         round(cosine(col("_cv"), col("_pv")), 6).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
   }
 
   /** [[semanticDedup]] at the hierarchical tier: cluster with the
@@ -1133,11 +1053,8 @@ object SimilaritySearch {
     // dedupWithAssignment checkpoints the assignment eagerly, so inside
     // the loan it reads the training's cached cells instead of re-running
     // the coarse assignment scan (round 17)
-    withTwoLevelCells(corpus, idCol, vecCol, coarseK, subK) { (cb, cells) =>
-      dedupWithAssignment(corpus, idCol, vecCol,
-        bestLeaf(cells, cb.leaves)
-          .select(col("_vid").as(idCol), col("_leaf").as("cluster_id")),
-        threshold)
+    withTwoLevelCells(corpus, idCol, vecCol, coarseK, subK) { (_, assigned) =>
+      dedupWithAssignment(corpus, idCol, vecCol, assigned, threshold)
     }
   }
 
@@ -1169,29 +1086,18 @@ object SimilaritySearch {
   def buildSemanticIndex(corpus: DataFrame, idCol: String, vecCol: String,
                          nlist: Int = AutoNlist, threshold: Double = 0.99): SemanticIndex = {
     val n = corpus.count()
-    if (nlist == AutoNlist) {
-      deriveTwoLevel(n) match {
-        case Some((c, s)) =>
-          System.err.println(s"[graft-ann] buildSemanticIndex: auto TWO-LEVEL " +
-            s"coarseK=$c subK=$s (${c * s} leaves) for $n vectors")
-          return buildSemanticIndexTwoLevel(corpus, idCol, vecCol, c, s, threshold, n)
-        case None => ()
-      }
+    val eff = if (nlist != AutoNlist) nlist else deriveTwoLevel(n) match {
+      case Some((c, s)) =>
+        System.err.println(s"[graft-ann] buildSemanticIndex: auto TWO-LEVEL " +
+          s"coarseK=$c subK=$s (${c * s} leaves) for $n vectors")
+        return buildSemanticIndexTwoLevel(corpus, idCol, vecCol, c, s, threshold, n)
+      case None =>
+        val derived = deriveNlist(n)
+        System.err.println(s"[graft-ann] buildSemanticIndex: auto nlist=$derived " +
+          s"for $n vectors (~${n / math.max(derived, 1)} per cluster)")
+        derived
     }
-    val eff = if (nlist != AutoNlist) nlist else {
-      val derived = deriveNlist(n)
-      System.err.println(s"[graft-ann] buildSemanticIndex: auto nlist=$derived " +
-        s"for $n vectors (~${n / math.max(derived, 1)} per cluster)")
-      derived
-    }
-    // guard the EXPLICIT pin only: the auto path is already bounded by
-    // deriveTwoLevel's FlatAssignRowBudget dispatch (and must keep
-    // dispatching itself, never throwing)
-    if (nlist != AutoNlist && nlist > ArgmaxFoldMaxCentroids)
-      refuseForAssignScratch(corpus.sparkSession, n, nlist,
-        FlatAssignBytesPerSlimRow, "buildSemanticIndex")
-    val cents = lloydCentroids(corpus, idCol, vecCol, eff, LloydIters)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    val cents = trainFlat(corpus, idCol, vecCol, eff)
     val kept = semanticDedupWithCents(corpus, idCol, vecCol, cents, threshold)
       .filter(!col("is_dropped"))
       .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
@@ -1212,11 +1118,8 @@ object SimilaritySearch {
                                  knownN: Long = -1L): SemanticIndex = {
     val n = if (knownN >= 0) knownN else corpus.count()
     val (cb, kept) = withTwoLevelCells(corpus, idCol, vecCol, coarseK, subK) {
-      (cb, cells) =>
-        (cb, dedupWithAssignment(corpus, idCol, vecCol,
-            bestLeaf(cells, cb.leaves)
-              .select(col("_vid").as(idCol), col("_leaf").as("cluster_id")),
-            threshold)
+      (cb, assigned) =>
+        (cb, dedupWithAssignment(corpus, idCol, vecCol, assigned, threshold)
           .filter(!col("is_dropped"))
           .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
           .select(col(idCol), col("cluster_id"), col(vecCol)))
@@ -1400,10 +1303,7 @@ object SimilaritySearch {
       assignLeaves(inc, idCol, vecCol, cb)
         .select(col("_vid").as(idCol), col("_leaf").as("cluster_id"))
     case None =>
-      withBestCent(
-          inc.select(col(idCol).as("_mid"), col(vecCol).as("_mv")),
-          "_mid", "_mv", index.cents)
-        .select(col("_mid").as(idCol), (-col("_best")("negid")).as("cluster_id"))
+      flatAssign(inc, idCol, vecCol, index.cents).select(col(idCol), col("cluster_id"))
   }
 
   /** Incremental semantic dedup against a FROZEN index: assign each
@@ -1495,118 +1395,81 @@ object SimilaritySearch {
     * fixture corpus) while keeping the oracle SQL unrolled and cheap. */
   val LloydIters: Int = 2
 
-  /** k-means refinement of the hash-seeded codebook: `iters` Lloyd
-    * rounds, each ONE broadcast-centroid corpus scan (assignment by
-    * 6-dp rounded cosine, cent_id tiebreak) + ONE mergeable
-    * (1+d)-double-per-cluster moment aggregate (vecSumAgg — the sum()
-    * shuffle shape; the corpus itself is never shuffled). Only the
-    * nlist x d model crosses the driver boundary between rounds.
+  /** One Lloyd ladder for every codebook: flat k-means, the m PQ
+    * subspace codebooks and the two-level leaves. `slots` gives each
+    * row's (group, vector) pairs: the whole vector in group 0 for flat
+    * k-means, subspace s's slice in group s for PQ, the whole vector in
+    * its coarse cell for the leaves. `seeds` are (group, id, vector)
+    * entries. Each round assigns every slot to its nearest centroid
+    * within its group ([[nearest]] — one projection over the codebook
+    * as data, the corpus never joined or shuffled) and recenters from
+    * ONE mergeable (1+d)-double moment aggregate keyed on (group, id)
+    * (vecSumAgg — the sum() shuffle shape), collected once: only the
+    * model crosses the driver boundary between rounds.
     *
-    * Engine-portable by construction: new centroid components are
-    * rounded to 6 dp each round THROUGH SPARK'S OWN round (so the
-    * DuckDB oracle's `round(sum(v[i])/count(*), 6)` lands on the same
-    * grid), which re-anchors both engines every round — iteration
-    * divergence cannot accumulate. Empty clusters keep their previous
-    * centroid; centroid ids stay the seed vector ids throughout. */
-  private[graft] def lloydCentroids(corpus: DataFrame, idCol: String,
-      vecCol: String, nlist: Int, iters: Int, dKnown: Int = -1): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // dKnown: callers that already ran dimOf (usually for a scratch
-    // guard) pass it through — the duplicate first() was one more
-    // sequential driver round trip per training (round 17, §2)
-    val d = if (dKnown > 0) dKnown else dimOf(corpus, vecCol)
-    var cents: Seq[(Long, Seq[Double])] =
-      hashCentroids(corpus, idCol, vecCol, nlist)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    val vecs = corpus.select(col(idCol).as("_vid"),
-      expr(s"transform($vecCol, x -> cast(x as double))").as("_vv"))
-    for (_ <- 1 to iters) {
-      // assignment + moments in ONE corpus scan: the argmax centroid is
-      // a per-row fold over the nlist literal centroids (argmaxCent) —
-      // no nlist x corpus crossJoin, no per-vector window shuffle; the
-      // only exchange is the partial-agg merge of nlist (1+d)-double
-      // moment buffers. slice is 1-based, [] is 0-based:
-      // _s = [n, s_0..s_{d-1}]
-      val sums = withBestCent(vecs, "_vid", "_vv", cents)
-        .select((-col("_best")("negid")).as("_cent_id"), col("_vv"))
-        .groupBy(col("_cent_id"))
-        .agg(org.apache.spark.sql.graft.GramianFunctions
-          .vecSumAgg(col("_vv"), d).as("_s"))
-        .select(col("_cent_id"),
-          expr(s"transform(slice(_s, 2, $d), x -> round(x / _s[0], 6))").as("_nv"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      cents = cents.map { case (cid, prev) => (cid, sums.getOrElse(cid, prev)) }
+    * Engine-portable by construction: new components are rounded to
+    * 6 dp each round THROUGH SPARK'S OWN round, so the DuckDB oracle's
+    * unrolled `round(sum(v[i])/count(*), 6)` lands on the same grid and
+    * both engines re-anchor every round. Empty centroids keep their
+    * previous vector; ids stay the seed ids. vecSumAgg merges partial
+    * buffers with order-sensitive double adds, so equality with other
+    * plans of the same rounds (the m separate PQ ladders, the flat
+    * quantizer at coarseK = 1) is pinned by AnnSpec and the oracle, not
+    * structural. */
+  private[graft] def lloyd(rows: DataFrame, slots: Seq[(Column, Column)],
+      seeds: Seq[(Long, Long, Seq[Double])], l2: Boolean,
+      iters: Int): Seq[(Long, Long, Seq[Double])] = {
+    val d = seeds.headOption.map(_._3.size).getOrElse(0)
+    var book = seeds
+    for (_ <- 1 to iters if book.nonEmpty) {
+      val cb = Codebook(book)
+      // slice is 1-based, [] is 0-based: _s = [n, s_0..s_{d-1}]
+      val sums = rows
+        .select(explode(array(slots.map { case (g, v) =>
+          struct(g.as("g"), nearest(v, cb, g, l2)("id").as("id"), v.as("v"))
+        }: _*)).as("_e"))
+        .groupBy(col("_e.g").as("_g"), col("_e.id").as("_id"))
+        .agg(GramianFunctions.vecSumAgg(col("_e.v"), d).as("_s"))
+        .select(col("_g"), col("_id"),
+          expr(s"transform(slice(_s, 2, $d), x -> round(x / _s[0], 6))"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getSeq[Double](2)).toMap
+      book = book.map { case (g, id, prev) => (g, id, sums.getOrElse((g, id), prev)) }
     }
-    cents.toDF("_cent_id", "_cent_vec")
+    book
   }
 
-  /** Per-row nearest centroid as a FOLD over literal centroids: the
-    * max of an array of (6-dp rounded cosine, -cent_id) structs —
-    * Spark's struct ordering is lexicographic, so the max is the
-    * highest cosine with ties going to the SMALLEST cent_id, exactly
-    * the `orderBy(_c desc, _cent_id)` + rk=1 contract of the window
-    * formulation it replaces. No crossJoin row blow-up, no per-row
-    * window shuffle — a pure codegen scan; callers extract `("c")`
-    * (the winning cosine) and `-("negid")` (the winning id). */
-  private def argmaxCent(vec: Column, cents: Seq[(Long, Seq[Double])]): Column =
-    array_max(array(cents.map { case (cid, v) =>
-      struct(round(cosine(vec, typedLit(v)), 6).as("c"), lit(-cid).as("negid"))
-    }: _*))
+  /** The flat spherical k-means codebook, (cent_id, vec) in seed order:
+    * [[hashCentroids]] seeds refined by `iters` cosine [[lloyd]]
+    * rounds. */
+  private def trainFlat(corpus: DataFrame, idCol: String, vecCol: String,
+      nlist: Int, iters: Int = LloydIters): Seq[(Long, Seq[Double])] = {
+    val seeds = hashCentroids(corpus, idCol, vecCol, nlist).collect()
+      .map(r => (0L, r.getLong(0), r.getSeq[Double](1))).toSeq
+    lloyd(corpus.select(asDoubles(vecCol).as("_vv")), Seq(lit(0L) -> col("_vv")),
+      seeds, l2 = false, iters).map(e => (e._2, e._3))
+  }
 
-  /** Codebook size above which [[argmaxCent]]'s literal fold is the
-    * WRONG plan: its generated bytecode grows with nlist, and past the
-    * JVM's JIT method limit the stage executes as interpreted bytecode
-    * — measured at the 100x fixture (200k vectors, SemDedupScale):
-    * nlist=64 assignment took 238 s via the fold, while nlist=256 ran
-    * in seconds only because Spark's codegen gave up entirely (64 KB
-    * method cap) and fell back to interpreted EXPRESSIONS. The dead
-    * zone between "too big to JIT" and "big enough that codegen
-    * refuses" is exactly the fold at medium nlist. */
-  private[graft] val ArgmaxFoldMaxCentroids: Int = 32
+  /** [[trainFlat]] as a (_cent_id, _cent_vec) frame — the broadcast
+    * side of [[bestLists]]. */
+  private[graft] def lloydCentroids(corpus: DataFrame, idCol: String,
+      vecCol: String, nlist: Int, iters: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    trainFlat(corpus, idCol, vecCol, nlist, iters).toDF("_cent_id", "_cent_vec")
+  }
 
-  /** Nearest-centroid assignment dispatched on codebook size: the
-    * literal fold below [[ArgmaxFoldMaxCentroids]], and above it the
-    * exploded formulation — one cosine per (vector, centroid) ROW
-    * against a broadcast centroid table (every expression stays small
-    * and JIT-hot), `max(struct)` per vector, then the vector payload
-    * re-joined BY ID. Same contract either way: 6-dp rounded cosine,
-    * smallest cent_id wins ties. Returns (vidCol, vvCol, _best{c,
-    * negid}).
-    *
-    * The payload re-join is load-bearing at scale: max over a struct
-    * CARRYING the d-dim vector plans a sort-based aggregate over
-    * N·nlist ~550-byte rows — measured DEAD at 1M×4096 (the sort
-    * wanted ~2 TB of scratch and ENOSPC-killed the JVM;
-    * SCALING.md round 13). Slim (c, negid) rows keep the same sort
-    * ~20× smaller, and the second corpus scan it buys is the cheap,
-    * pushed-down kind.
-    *
-    * PRECONDITION: `vidCol` must be UNIQUE and NON-NULL. The exploded
-    * arm re-joins the payload by id (an inner join), so a NULL id
-    * would be silently dropped and a duplicate id would emit one row
-    * per input row instead of one per id — a row-count change, not a
-    * loud failure. Every caller feeds a primary-key id (vec_id /
-    * seed-centroid id); a new caller with synthetic ids must
-    * guarantee the same. */
-  private def withBestCent(vecs: DataFrame, vidCol: String, vvCol: String,
-      cents: Seq[(Long, Seq[Double])]): DataFrame =
-    if (cents.size <= ArgmaxFoldMaxCentroids)
-      vecs.select(col(vidCol), col(vvCol),
-        argmaxCent(col(vvCol), cents).as("_best"))
-    else {
-      val spark = vecs.sparkSession
-      import spark.implicits._
-      val centDf = broadcast(cents.toDF("_ccid", "_ccv"))
-      val best = vecs.crossJoin(centDf)
-        .select(col(vidCol),
-          struct(round(cosine(col(vvCol), col("_ccv")), 6).as("c"),
-            (-col("_ccid")).as("negid")).as("_sb"))
-        .groupBy(col(vidCol))
-        .agg(max(col("_sb")).as("_best"))
-      vecs.join(best, Seq(vidCol))
-        .select(col(vidCol), col(vvCol), col("_best"))
-    }
+  /** struct(score, id) of `vec`'s nearest centroid within its `group`
+    * of `book` — [[NearestCentroidExpr]]: 6-dp rounded cosine argmax
+    * (or squared-L2 argmin when `l2`), smallest id on ties. The
+    * codebook rides as a reference object, so the generated code is
+    * the same for every codebook size and value. */
+  private def nearest(vec: Column, book: Codebook, group: Column = lit(0L),
+                      l2: Boolean = false): Column =
+    NativeExpressions.nearestCentroid(vec, group, book, l2)
+
+  /** An embedding column cast element-wise to double. */
+  private def asDoubles(vecCol: String): Column =
+    expr(s"transform($vecCol, x -> cast(x as double))")
 
   /** Deterministic coarse-quantizer codebook: the nlist vectors with
     * the smallest md5(id) — an unbiased sample, stable across runs and
@@ -1619,8 +1482,7 @@ object SimilaritySearch {
       // array<double> so every downstream cosine runs in the same
       // precision the DuckDB oracles use — a float-vs-double cosine
       // landing exactly on a 6-dp rounding boundary would diverge
-      .select(col(idCol).as("_cent_id"),
-        expr(s"transform($vecCol, x -> cast(x as double))").as("_cent_vec"))
+      .select(col(idCol).as("_cent_id"), asDoubles(vecCol).as("_cent_vec"))
 
   /** The production memory-bounded ANN shape: IVF candidate generation
     * scored against INT8-QUANTIZED vectors (what a 100 TB deployment
@@ -1640,13 +1502,10 @@ object SimilaritySearch {
                           coarseK: Int = 12): DataFrame = {
     require(nprobe <= nlist, "topKCosineIvfRerank: nprobe must be <= nlist")
     require(coarseK >= k, "topKCosineIvfRerank: coarseK must be >= k")
-    val d = dimOf(corpus, vecCol)
-    guardFlatExplicit(corpus, nlist, "topKCosineIvfRerank",
-      fatAssignBytesPerRow(d))
-    val cents = lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters, d)
+    guardFlatExplicit(corpus, vecCol, nlist, "topKCosineIvfRerank")
+    val cents = lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters)
     // int8 reconstruction qv*qscale as a double array: the coarse store
-    val recon = corpus.select(col(idCol).as("_mid"),
-        expr(s"transform($vecCol, x -> cast(x as double))").as("_fv"))
+    val recon = corpus.select(col(idCol).as("_mid"), asDoubles(vecCol).as("_fv"))
       .withColumn("_qscale",
         expr("""case when round(array_max(transform(_fv, x -> abs(x))) / 127.0, 9) = 0
                 then 1.0 else round(array_max(transform(_fv, x -> abs(x))) / 127.0, 9) end"""))
@@ -1656,27 +1515,22 @@ object SimilaritySearch {
         cents, "_mid", "_mv", 1)
       .select(col("_mid").as("_cid"), col("_mv").as("_cqv"), col("_list"))
     val probeLists = bestLists(probes.select(col(probeIdCol).as("_pid0"),
-        expr(s"transform($vecCol, x -> cast(x as double))").as("_pv0")),
+        asDoubles(vecCol).as("_pv0")),
         cents, "_pid0", "_pv0", nprobe)
       .select(col("_mid").as("_pid"), col("_mv").as("_pv"), col("_list"))
     val coarse = assigned.join(broadcast(probeLists), "_list")
       .filter(col("_pid") =!= col("_cid"))
       .select(col("_pid"), col("_cid"),
         round(cosine(col("_cqv"), col("_pv")), 6).as("_ccos"))
-      .withColumn("_crk", row_number().over(
-        Window.partitionBy(col("_pid")).orderBy(col("_ccos").desc, col("_cid"))))
-      .filter(col("_crk") <= coarseK)
+      .transform(topN("_pid", "_ccos", "_cid", coarseK, "_crk"))
     // exact re-rank: only coarseK x probes rows read full precision
     coarse
-      .join(corpus.select(col(idCol).as("_cid"),
-        expr(s"transform($vecCol, x -> cast(x as double))").as("_cfv")), "_cid")
+      .join(corpus.select(col(idCol).as("_cid"), asDoubles(vecCol).as("_cfv")), "_cid")
       .join(broadcast(probes.select(col(probeIdCol).as("_pid"),
-        expr(s"transform($vecCol, x -> cast(x as double))").as("_pfv"))), "_pid")
+        asDoubles(vecCol).as("_pfv"))), "_pid")
       .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
         round(cosine(col("_cfv"), col("_pfv")), 6).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
   }
 
   /** IVF-PQ batch ANN — the memory-COMPRESSED production path next to
@@ -1685,9 +1539,9 @@ object SimilaritySearch {
     * Search"). Vectors are unit-normalized (6-dp re-anchored, so
     * cos(q, x) becomes a plain dot product) and split into `m`
     * subspaces; each subspace trains a `ks`-entry codebook —
-    * hash-ordered seeds + `pqIters` L2 Lloyd rounds through the same
-    * mergeable moment aggregate as the coarse quantizer
-    * ([[lloydL2]]). A vector's PQ code is its m argmin sub-centroid
+    * hash-ordered seeds + `pqIters` L2 rounds of the same [[lloyd]]
+    * ladder as the coarse quantizer, all m subspaces in one ladder. A
+    * vector's PQ code is its m argmin sub-centroid
     * positions: m·log2(ks) bits ≈ 1.5 B/vector at the defaults vs
     * 256 B float32. Candidates come from the coarse IVF lists exactly
     * as in [[topKCosineIvf]]; they are scored by ASYMMETRIC DISTANCE
@@ -1738,17 +1592,33 @@ object SimilaritySearch {
                    pqIters: Int = 1): PqIndex = {
     val d = dimOf(corpus, vecCol)
     require(d % m == 0, s"buildPqIndex: dim $d must split into $m subspaces")
-    guardFlatExplicit(corpus, nlist, "buildPqIndex", fatAssignBytesPerRow(d))
+    guardFlatExplicit(corpus, vecCol, nlist, "buildPqIndex")
     val sub = d / m
-    val cents = lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters, d)
-    val corpusD = corpus.select(col(idCol).as("_id0"),
-      expr(s"transform($vecCol, x -> cast(x as double))").as("_v0"))
+    val cents = lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters)
     // unit-normalized, 6-dp re-anchored working vectors
-    val ncorp = corpusD
+    val ncorp = corpus.select(col(idCol).as("_id0"), asDoubles(vecCol).as("_v0"))
       .withColumn("_nrm", sqrt(dotd(col("_v0"), col("_v0"))))
       .select(col("_id0"), expr("transform(_v0, x -> round(x / _nrm, 6))").as("_nv"))
-    val cbs = lloydL2Multi(ncorp, "_id0", "_nv", m, sub, ks, pqIters)
+    val cbs = trainPq(ncorp, "_id0", "_nv", m, sub, ks, pqIters)
     PqIndex(cents, cbs, encode(corpus, idCol, vecCol, cents, cbs, sub), m, sub)
+  }
+
+  /** The m PQ subspace codebooks, each sorted by cent_id, in ONE
+    * squared-L2 [[lloyd]] ladder with subspace s as group s: one seed
+    * collect and one moment collect per round for all m. All m seed
+    * from the SAME ks rows — [[hashCentroids]]' md5 order is
+    * vector-independent — so one collect, sliced driver-side, seeds
+    * every subspace. */
+  private[graft] def trainPq(corpus: DataFrame, idCol: String, vecCol: String,
+      m: Int, sub: Int, ks: Int, iters: Int): Seq[Seq[(Long, Seq[Double])]] = {
+    val seedRows = hashCentroids(corpus, idCol, vecCol, ks).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toVector))
+    val book = lloyd(corpus.select(asDoubles(vecCol).as("_vv")),
+      (0 until m).map(s => lit(s.toLong) -> slice(col("_vv"), s * sub + 1, sub)),
+      (0 until m).flatMap(s => seedRows.map { case (cid, v) =>
+        (s.toLong, cid, v.slice(s * sub, (s + 1) * sub): Seq[Double]) }),
+      l2 = true, iters)
+    (0 until m).map(s => book.filter(_._1 == s).map(e => (e._2, e._3)).sortBy(_._1))
   }
 
   /** Encode vectors against FROZEN coarse centroids + codebooks (no
@@ -1764,15 +1634,21 @@ object SimilaritySearch {
   private def encode(df: DataFrame, idCol: String, vecCol: String,
                      cents: DataFrame, cbs: Seq[Seq[(Long, Seq[Double])]],
                      sub: Int): DataFrame = {
-    val dD = df.select(col(idCol).as("_id0"),
-      expr(s"transform($vecCol, x -> cast(x as double))").as("_v0"))
-    val assigned = bestLists(dD, cents, "_id0", "_v0", 1)
-      .select(col("_mid").as("_cid"), col("_mv").as("_cfv"), col("_list"))
+    // the coarse list is the in-scan nearest centroid: only codes follow
+    // the assignment here, the case [[bestLists]]' measurement favours
+    val coarse = Codebook.flat(cents.collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq)
+    val assigned = df.select(col(idCol).as("_cid"), asDoubles(vecCol).as("_cfv"))
+      .withColumn("_list", nearest(col("_cfv"), coarse)("id"))
       .withColumn("_nrm", sqrt(dotd(col("_cfv"), col("_cfv"))))
       .withColumn("_xnv", expr("transform(_cfv, x -> round(x / _nrm, 6))"))
+    // a code is the 1-based POSITION in the cent_id-sorted codebook, so
+    // position ids tie-break exactly as cent_ids do
+    val codes = Codebook(cbs.zipWithIndex.flatMap { case (cb, s) =>
+      cb.zipWithIndex.map { case ((_, v), i) => (s.toLong, i + 1L, v) } })
     assigned.select(
       Seq(col("_cid"), col("_list")) ++ cbs.indices.map(s =>
-        argminCodeL2(slice(col("_xnv"), s * sub + 1, sub), cbs(s)).as(s"_k$s")): _*)
+        nearest(slice(col("_xnv"), s * sub + 1, sub), codes, lit(s.toLong), l2 = true)("id")
+          .cast("int").as(s"_k$s")): _*)
   }
 
   /** Persist a [[PqIndex]]: three parquet tables (cents, codebooks as
@@ -1816,8 +1692,7 @@ object SimilaritySearch {
                     coarseK: Int = 12): DataFrame = {
     require(coarseK >= k, "searchPqIndex: coarseK must be >= k")
     val (m, sub) = (index.m, index.sub)
-    val probeD = probes.select(col(probeIdCol).as("_pid0"),
-      expr(s"transform($vecCol, x -> cast(x as double))").as("_pv0"))
+    val probeD = probes.select(col(probeIdCol).as("_pid0"), asDoubles(vecCol).as("_pv0"))
     val probeLists = bestLists(probeD, index.cents, "_pid0", "_pv0", nprobe)
       .select(col("_mid").as("_pid"), col("_mv").as("_pfv"), col("_list"))
       .withColumn("_pnrm", sqrt(dotd(col("_pfv"), col("_pfv"))))
@@ -1833,156 +1708,34 @@ object SimilaritySearch {
     val coarse = index.coded.join(broadcast(probeLists), "_list")
       .filter(col("_pid") =!= col("_cid"))
       .select(col("_pid"), col("_cid"), round(adc, 6).as("_adc"))
-      .withColumn("_crk", row_number().over(
-        Window.partitionBy(col("_pid")).orderBy(col("_adc").desc, col("_cid"))))
-      .filter(col("_crk") <= coarseK)
+      .transform(topN("_pid", "_adc", "_cid", coarseK, "_crk"))
     // exact re-rank: only coarseK x probes rows touch full precision
     coarse
-      .join(corpus.select(col(idCol).as("_cid"),
-        expr(s"transform($vecCol, x -> cast(x as double))").as("_cfv")), "_cid")
+      .join(corpus.select(col(idCol).as("_cid"), asDoubles(vecCol).as("_cfv")), "_cid")
       .join(broadcast(probeD), col("_pid") === col("_pid0"))
       .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
         round(cosine(col("_cfv"), col("_pv0")), 6).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+      .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
   }
-
-  /** L2 k-means codebook for one PQ subspace: hash-ordered seeds +
-    * `iters` Lloyd rounds — mean updates through the same mergeable
-    * vecSumAgg moment pass as [[lloydCentroids]], assignment by ARGMIN
-    * squared L2 distance (6-dp rounded, cent-id tiebreak; dist² is
-    * evaluated as x·x − 2·x·c + c·c so both engines run the identical
-    * IEEE expression). Returns the driver-side codebook SORTED by
-    * cent_id. */
-  private[graft] def lloydL2(corpus: DataFrame, idCol: String, vecCol: String,
-                             ks: Int, iters: Int): Seq[(Long, Seq[Double])] = {
-    val d = dimOf(corpus, vecCol)
-    var cents: Seq[(Long, Seq[Double])] =
-      hashCentroids(corpus, idCol, vecCol, ks)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    val vecs = corpus.select(col(idCol).as("_vid"),
-      expr(s"transform($vecCol, x -> cast(x as double))").as("_vv"))
-    for (_ <- 1 to iters) {
-      val sums = vecs
-        .select(argminCentL2(col("_vv"), cents)("cid").as("_cent_id"), col("_vv"))
-        .groupBy(col("_cent_id"))
-        .agg(org.apache.spark.sql.graft.GramianFunctions
-          .vecSumAgg(col("_vv"), d).as("_s"))
-        .select(col("_cent_id"),
-          expr(s"transform(slice(_s, 2, $d), x -> round(x / _s[0], 6))").as("_nv"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      cents = cents.map { case (cid, prev) => (cid, sums.getOrElse(cid, prev)) }
-    }
-    cents.sortBy(_._1)
-  }
-
-  /** All m PQ subspace codebooks in ONE training ladder (round 17;
-    * r16 VERDICT item 4 — ann_ivf_pq ran 34 sequential driver round
-    * trips, the §2 driver-bound anti-pattern: m separate [[lloydL2]]
-    * calls each paid its own dimOf first(), seed collect and per-round
-    * moment collect, serializing the cluster on tiny jobs).
-    *
-    * Fusion reproduces the m separate ladders — pinned by AnnSpec and
-    * the oracle, not structural: `vecSumAgg` merges partial buffers with
-    * order-sensitive double adds, and the fused plan shuffles on
-    * (space, cid) instead of cid. The m trainings share everything but
-    * the slice bounds:
-    *  - seeds: [[hashCentroids]] orders by md5(id) — vector-independent
-    *    — so all m subspaces seed from the SAME ks rows; one collect of
-    *    the full normalized vectors, sliced driver-side, reproduces
-    *    each per-subspace seed list element for element.
-    *  - rounds: each per-subspace round grouped the SAME corpus rows by
-    *    that subspace's argmin centroid and vecSumAgg-summed the slice.
-    *    Exploding m (space, cid, slice) structs per row and grouping by
-    *    (space, cid) feeds every (space, cid) group the identical value
-    *    multiset in the identical per-partition row order, so the
-    *    rounded means land on the same 6-dp grid as long as the partial
-    *    buffers merge in the same order (AnnSpec pins the
-    *    codebook equality against the unfused ladder; the oracle replay
-    *    pins it cross-engine).
-    * Driver round trips per Lloyd round: 1 instead of m; seed collects:
-    * 1 instead of m; dimOf scans: 0 (sub is passed). */
-  private[graft] def lloydL2Multi(corpus: DataFrame, idCol: String,
-      vecCol: String, m: Int, sub: Int, ks: Int,
-      iters: Int): Seq[Seq[(Long, Seq[Double])]] = {
-    val seedRows = hashCentroids(corpus, idCol, vecCol, ks)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toVector))
-    var cbs: Seq[Seq[(Long, Seq[Double])]] = (0 until m).map { s =>
-      seedRows.map { case (cid, v) =>
-        (cid, v.slice(s * sub, (s + 1) * sub)) }.toSeq
-    }
-    val vecs = corpus.select(col(idCol).as("_vid"),
-      expr(s"transform($vecCol, x -> cast(x as double))").as("_vv"))
-    for (_ <- 1 to iters) {
-      val subStructs = array((0 until m).map { s =>
-        struct(lit(s).as("sp"),
-          argminCentL2(slice(col("_vv"), s * sub + 1, sub), cbs(s))("cid").as("cid"),
-          slice(col("_vv"), s * sub + 1, sub).as("sv"))
-      }: _*)
-      val sums = vecs
-        .select(explode(subStructs).as("_e"))
-        .select(col("_e.sp").as("_sp"), col("_e.cid").as("_cent_id"),
-          col("_e.sv").as("_sv"))
-        .groupBy(col("_sp"), col("_cent_id"))
-        .agg(org.apache.spark.sql.graft.GramianFunctions
-          .vecSumAgg(col("_sv"), sub).as("_s"))
-        .select(col("_sp"), col("_cent_id"),
-          expr(s"transform(slice(_s, 2, $sub), x -> round(x / _s[0], 6))").as("_nv"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Double](2)).toMap
-      cbs = cbs.zipWithIndex.map { case (cb, s) =>
-        cb.map { case (cid, prev) => (cid, sums.getOrElse((s, cid), prev)) }
-      }
-    }
-    cbs.map(_.sortBy(_._1))
-  }
-
-  /** Squared L2 distance to a literal centroid, 6-dp rounded — the
-    * x·x − 2·x·c + c·c form both engines evaluate identically (c·c is
-    * a driver-side left-to-right fold, the same order DuckDB's
-    * list_dot_product runs). */
-  private def distL2(vec: Column, v: Seq[Double]): Column = {
-    val cv = typedLit(v)
-    round(dotd(vec, vec) - lit(2.0) * dotd(vec, cv) +
-      lit(v.foldLeft(0.0)((a, x) => a + x * x)), 6)
-  }
-
-  /** Nearest sub-centroid ID (Lloyd's internal keying). */
-  private def argminCentL2(vec: Column, cents: Seq[(Long, Seq[Double])]): Column =
-    array_min(array(cents.map { case (cid, v) =>
-      struct(distL2(vec, v).as("d"), lit(cid).as("cid"))
-    }: _*))
-
-  /** Nearest sub-centroid POSITION (1-based, over a cent_id-sorted
-    * codebook): the stored PQ code. Position tiebreak == cent_id
-    * tiebreak because the codebook is sorted. */
-  private def argminCodeL2(vec: Column, sorted: Seq[(Long, Seq[Double])]): Column =
-    array_min(array(sorted.zipWithIndex.map { case ((_, v), i) =>
-      struct(distL2(vec, v).as("d"), lit(i + 1).as("pos"))
-    }: _*))("pos")
 
   /** Each row of `df` with its `n` highest-cosine centroids (rounded
-    * cosines, id tiebreaks — deterministic). */
-  /** Kept as the crossJoin + WindowGroupLimit formulation on BOTH
-    * sides, by measurement: folding the corpus-side argmax into the
-    * scan (argmaxCent, as lloydCentroids/assignClusters do) fuses the
-    * assignment with the probe join and per-pair rerank cosines into
-    * one scan-bound stage and measured 2.3x SLOWER at sf0.1 and 30x
+    * cosines, id tiebreaks — deterministic). Kept as the crossJoin +
+    * WindowGroupLimit formulation on BOTH sides, by measurement:
+    * folding the corpus-side argmax into the scan fuses the assignment
+    * with the probe join and per-pair rerank cosines into one
+    * scan-bound stage and measured 2.3x SLOWER at sf0.1 and 30x
     * (ann_ivf_rerank 1.9s -> 4.5s) — the window's exchange is what
     * re-spreads the pair-cosine work across cores, and WindowGroupLimit
     * already prunes the 16x candidate rows before the final sort. The
-    * fold wins only when nothing heavy follows the assignment
+    * in-scan argmax wins only when nothing heavy follows the assignment
     * (embed_clusters: 3x faster at 30x). */
   private def bestLists(df: DataFrame, cents: DataFrame,
                         id: String, vec: String, n: Int): DataFrame = {
-    val w = Window.partitionBy(col("_mid")).orderBy(col("_mcos").desc, col("_cent_id"))
     df.select(col(id).as("_mid"), col(vec).as("_mv"))
       .crossJoin(broadcast(cents))
       .select(col("_mid"), col("_mv"), col("_cent_id"),
         round(cosine(col("_mv"), col("_cent_vec")), 6).as("_mcos"))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= n)
+      .transform(topN("_mid", "_mcos", "_cent_id", n, "_rk"))
       .select(col("_mid"), col("_mv"), col("_cent_id").as("_list"))
   }
 

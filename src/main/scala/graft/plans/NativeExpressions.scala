@@ -2,11 +2,13 @@ package org.apache.spark.sql.graft
 
 import graft.functions.TextFunctions
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, LongType, StringType, TypeCollection}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, LongType, StringType, StructField, StructType, TypeCollection}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the sketching hot path.
@@ -67,6 +69,11 @@ object NativeExpressions {
 
   def stripAccents(text: Column): Column =
     ExpressionUtils.column(StripAccentsExpr(ExpressionUtils.expression(text)))
+
+  /** struct(score, id) of `v`'s nearest centroid in `group` of `codebook`. */
+  def nearestCentroid(v: Column, group: Column, codebook: Codebook, l2: Boolean): Column =
+    ExpressionUtils.column(NearestCentroidExpr(
+      ExpressionUtils.expression(v), ExpressionUtils.expression(group), codebook, l2))
 
   def signLshBucket(v: Column, planes: Array[Array[Double]]): Column =
     ExpressionUtils.column(SignLshBucketExpr(
@@ -756,6 +763,153 @@ case class SignLshBucketExpr(child: Expression, planes: Array[Double], bits: Int
 
   override protected def withNewChildInternal(newChild: Expression): SignLshBucketExpr =
     copy(child = newChild)
+}
+
+/** A codebook as data for [[NearestCentroidExpr]]: `n` centroids of
+  * one dimension `dim`, row-major in one double[], their ids in a
+  * long[], and per-group offsets — group `groupKeys(g)` (ascending)
+  * owns entries `offsets(g)` until `offsets(g + 1)`. A flat codebook
+  * is one group (key 0); PQ has one group per subspace; the two-level
+  * tier one group per coarse cell. Centroid squared norms are
+  * precomputed in the strict left-to-right order the per-pair
+  * expressions sum them in, so every score is bit-equal to the per-pair
+  * `VecCosineExpr`/`VecDotExpr` formulation. Generated code holds the
+  * codebook as one reference object: no centroid count, value or id
+  * ever reaches the compiled source. */
+final class Codebook private (val dim: Int, vecs: Array[Double], ids: Array[Long],
+    groupKeys: Array[Long], offsets: Array[Int]) extends Serializable {
+
+  private val sq: Array[Double] = Array.tabulate(ids.length) { j =>
+    var acc = 0.0
+    var i = 0
+    while (i < dim) { val c = vecs(j * dim + i); acc += c * c; i += 1 }
+    acc
+  }
+  private val rootSq: Array[Double] = sq.map(java.lang.Math.sqrt)
+
+  /** (6-dp rounded score, id) of `v`'s nearest centroid in group `key`,
+    * or null when the group has no centroid. Cosine takes the argmax,
+    * squared L2 — `(x·x − 2·x·c) + c·c` — the argmin; equal scores go
+    * to the smallest id. A null, length-mismatched or null-element
+    * vector, or a zero cosine denominator, scores null: a null loses
+    * the argmax and wins the argmin, and NaN ranks above every number
+    * (Spark's ordering of struct(score, id)). */
+  def nearest(v: ArrayData, vFloat: Boolean, key: Long, l2: Boolean): InternalRow = {
+    val g = java.util.Arrays.binarySearch(groupKeys, key)
+    if (g < 0 || offsets(g) == offsets(g + 1)) return null
+    var x: Array[Double] = null
+    if (v != null && v.numElements() == dim) {
+      x = new Array[Double](dim)
+      var i = 0
+      while (x != null && i < dim) {
+        if (v.isNullAt(i)) x = null else x(i) = VecTypes.get(v, i, vFloat)
+        i += 1
+      }
+    }
+    var xx = 0.0
+    if (x != null) { var i = 0; while (i < dim) { xx += x(i) * x(i); i += 1 } }
+    val rootXx = java.lang.Math.sqrt(xx)
+    var best = -1
+    var bestNull = true
+    var bestScore = 0.0
+    var j = offsets(g)
+    while (j < offsets(g + 1)) {
+      var isNull = x == null
+      var s = 0.0
+      if (!isNull) {
+        var xc = 0.0
+        var i = 0
+        val off = j * dim
+        while (i < dim) { xc += x(i) * vecs(off + i); i += 1 }
+        if (l2) s = Codebook.round6((xx - 2.0 * xc) + sq(j))
+        else {
+          val denom = rootXx * rootSq(j)
+          if (denom == 0.0) isNull = true else s = Codebook.round6(xc / denom)
+        }
+      }
+      // null < every number; NaN > every number, NaN == NaN
+      val cmp =
+        if (isNull || bestNull) java.lang.Boolean.compare(!isNull, !bestNull)
+        else if (s == bestScore) 0
+        else java.lang.Double.compare(s, bestScore)
+      if (best < 0 || (if (l2) cmp < 0 else cmp > 0) || (cmp == 0 && ids(j) < ids(best))) {
+        best = j; bestNull = isNull; bestScore = s
+      }
+      j += 1
+    }
+    InternalRow(if (bestNull) null else bestScore, ids(best))
+  }
+}
+
+object Codebook {
+  /** From (group, id, vector) entries; order within a group is free
+    * (ties break on the id, not the position). */
+  def apply(entries: Seq[(Long, Long, Seq[Double])]): Codebook = {
+    val sorted = entries.sortBy(_._1).toIndexedSeq
+    val dim = sorted.headOption.map(_._3.size).getOrElse(0)
+    require(sorted.forall(_._3.size == dim), "Codebook: every centroid needs the same dimension")
+    val starts = sorted.indices.filter(j => j == 0 || sorted(j)._1 != sorted(j - 1)._1)
+    new Codebook(dim, sorted.flatMap(_._3).toArray, sorted.map(_._2).toArray,
+      starts.map(sorted(_)._1).toArray, (starts :+ sorted.size).toArray)
+  }
+
+  /** One group (key 0) of (id, vector) centroids. */
+  def flat(cents: Seq[(Long, Seq[Double])]): Codebook =
+    apply(cents.map { case (id, v) => (0L, id, v) })
+
+  /** Spark's `round(x, 6)` on doubles (HALF_UP on the shortest decimal
+    * form; NaN and infinities pass through). */
+  def round6(x: Double): Double =
+    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+}
+
+/** Nearest centroid of `vec` within its group (`group`, a long key;
+  * null yields null) of a [[Codebook]]: struct(score, id) under
+  * [[Codebook.nearest]]'s contract, `l2` picking squared-L2 argmin
+  * over cosine argmax. Both the interpreted and the generated path
+  * call the same kernel, so they cannot disagree; the generated code
+  * is the same few lines for every codebook. NativeExprSpec pins it
+  * bit for bit against the literal-fold formulation. */
+case class NearestCentroidExpr(left: Expression, right: Expression,
+                               codebook: Codebook, l2: Boolean)
+  extends BinaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(VecTypes.anyVec, LongType)
+  override def dataType: DataType = NearestCentroidExpr.ResultType
+  override def nullable: Boolean = true
+  override def prettyName: String = "nearest_centroid"
+
+  @transient private lazy val vFloat = VecTypes.isFloat(left.dataType)
+
+  override def eval(input: InternalRow): Any = {
+    val key = right.eval(input)
+    if (key == null) null
+    else codebook.nearest(left.eval(input).asInstanceOf[ArrayData], vFloat,
+      key.asInstanceOf[Long], l2)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cb = ctx.addReferenceObj("codebook", codebook)
+    val v = left.genCode(ctx)
+    val k = right.genCode(ctx)
+    ev.copy(code = code"""
+      ${v.code}
+      ${k.code}
+      InternalRow ${ev.value} = ${k.isNull} ? null :
+        $cb.nearest(${v.isNull} ? null : ${v.value}, $vFloat, ${k.value}, $l2);
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NearestCentroidExpr =
+    copy(left = newLeft, right = newRight)
+}
+
+object NearestCentroidExpr {
+  val ResultType: StructType = StructType(Seq(
+    StructField("score", DoubleType, nullable = true),
+    StructField("id", LongType, nullable = false)))
 }
 
 /** Per-document character-unigram entropy in ONE compiled pass:

@@ -316,8 +316,8 @@ object Pipeline extends QueryModule {
   /** DuckDB CTE block rebuilding ONE PQ subspace over the
     * normalized-vector CTE `en(vec_id, nv)`: hash-ordered seeds +
     * `iters` L2 Lloyd rounds (the lloydCentsSql discipline at subspace
-    * width; dist² in the same x·x − 2·x·c + c·c form Spark's distL2
-    * evaluates), ending in pq{s}_cb(cent_id, cv) and
+    * width; dist² in the same (x·x − 2·x·c) + c·c form Spark's
+    * NearestCentroidExpr evaluates), ending in pq{s}_cb(cent_id, cv) and
     * pq{s}_code(vec_id, cent_id). */
   private def pqSubSql(s: Int, iters: Int, ks: Int, sub: Int): String = {
     val a = s * sub + 1

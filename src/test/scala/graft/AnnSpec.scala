@@ -1,7 +1,9 @@
 package graft
 
 import graft.operators.SimilaritySearch
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GramianFunctions
 
 /** Recall contract for sign-LSH approximate similarity search. LSH
   * bucketing is a HIGH-similarity retrieval structure: recall is pinned
@@ -12,25 +14,33 @@ import org.apache.spark.sql.functions._
   * there, which the similarity-equality test also exercises. */
 class AnnSpec extends SparkSpecBase {
   import spark.implicits._
+  import AnnSpec.dim
 
-  private val dim = 64
+  private def clustered = AnnSpec.clusteredRows.toDF("vec_id", "embedding")
 
-  /** 3 clusters of 20 near-identical vectors + 140 random ones. */
-  private def clustered = {
-    val rnd = new scala.util.Random(7)
-    def unit(): Array[Double] = {
-      val v = Array.fill(dim)(rnd.nextGaussian())
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(_ / n)
+  /** The unfused L2 Lloyd ladder for ONE PQ subspace — hash seeds,
+    * literal-fold argmin assignment, vecSumAgg means rounded to 6 dp —
+    * the reference the fused [[SimilaritySearch.trainPq]] ladder is
+    * pinned against. Returns the codebook sorted by cent_id. */
+  private def lloydL2(corpus: DataFrame, idCol: String, vecCol: String,
+                      ks: Int, iters: Int): Seq[(Long, Seq[Double])] = {
+    val d = corpus.select(size(col(vecCol))).first().getInt(0)
+    var cents: Seq[(Long, Seq[Double])] =
+      SimilaritySearch.hashCentroids(corpus, idCol, vecCol, ks)
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    val vecs = corpus.select(col(idCol).as("_vid"),
+      expr(s"transform($vecCol, x -> cast(x as double))").as("_vv"))
+    for (_ <- 1 to iters) {
+      val sums = vecs
+        .select(NativeExprSpec.argminCentL2(col("_vv"), cents)("cid").as("_cent_id"), col("_vv"))
+        .groupBy(col("_cent_id"))
+        .agg(GramianFunctions.vecSumAgg(col("_vv"), d).as("_s"))
+        .select(col("_cent_id"),
+          expr(s"transform(slice(_s, 2, $d), x -> round(x / _s[0], 6))").as("_nv"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+      cents = cents.map { case (cid, prev) => (cid, sums.getOrElse(cid, prev)) }
     }
-    val centers = Seq.fill(3)(unit())
-    val rows = centers.zipWithIndex.flatMap { case (c, ci) =>
-      (0 until 20).map { i =>
-        val v = c.map(_ + rnd.nextGaussian() * 0.02)
-        (ci * 1000L + i, v.toSeq)
-      }
-    } ++ (0 until 140).map(i => (9000L + i, unit().toSeq))
-    rows.toDF("vec_id", "embedding")
+    cents.sortBy(_._1)
   }
 
   test("multi-table sign-LSH recall@10 >= 0.9 for high-similarity neighbors") {
@@ -187,8 +197,8 @@ class AnnSpec extends SparkSpecBase {
   }
 
   test("fused PQ subspace training == m independent lloydL2 ladders, bit for bit") {
-    // lloydL2Multi (round 17) replaces m sequential lloydL2 calls with
-    // one seed collect + one exploded moment aggregate per round. The
+    // trainPq replaces m sequential lloydL2 ladders with one seed
+    // collect + one exploded moment aggregate per round. The
     // fusion claims NUMERIC IDENTITY — same seeds, same per-group value
     // multisets, same 6-dp rounded means — which this pins on the
     // clustered fixture at buildPqIndex's exact working frame
@@ -204,9 +214,9 @@ class AnnSpec extends SparkSpecBase {
         .vecDot(col("_v0"), col("_v0"))))
       .select(col("_id0"),
         expr("transform(_v0, x -> round(x / _nrm, 6))").as("_nv"))
-    val fused = SimilaritySearch.lloydL2Multi(ncorp, "_id0", "_nv", m, sub, ks, iters)
+    val fused = SimilaritySearch.trainPq(ncorp, "_id0", "_nv", m, sub, ks, iters)
     val unfused = (0 until m).map { s =>
-      SimilaritySearch.lloydL2(ncorp.select(col("_id0"),
+      lloydL2(ncorp.select(col("_id0"),
         slice(col("_nv"), s * sub + 1, sub).as("_sv")), "_id0", "_sv", ks, iters)
     }
     assert(fused.size == m)
@@ -262,10 +272,10 @@ class AnnSpec extends SparkSpecBase {
   }
 
   test("wide-codebook assignment (nlist > 32) matches a brute-force argmax exactly") {
-    // nlist = 40 forces the exploded withBestCent path; the pin is an
-    // independent test-side recompute: for every vector, the max of
-    // (6-dp HALF_UP rounded cosine, -cent_id) over the trained
-    // centroids — the same contract the literal fold implements.
+    // nlist = 40 is past the 32 centroids the literal-fold assignment
+    // once ran; the pin is an independent test-side recompute: for
+    // every vector, the max of (6-dp HALF_UP rounded cosine, -cent_id)
+    // over the trained centroids — the nearest-centroid contract.
     val df = clustered.cache()
     val nlist = 40
     val cents = SimilaritySearch.lloydCentroids(df, "vec_id", "embedding", nlist, 2)
@@ -367,9 +377,7 @@ class AnnSpec extends SparkSpecBase {
     assert(deriveNlist(200000L) == 256)  // the 100x fixture: the measured
                                          // flat region of the SCALING.md table
     assert(deriveNlist(100L * TargetClusterSize * MaxAutoNlist) == MaxAutoNlist)
-    // every derivable value lands on a measured withBestCent regime
-    // (fold <= 32, exploded above) — never inside the JIT dead zone the
-    // fold had at 64 before the dispatch
+    // every derivable value is a power of two inside [16, 4096]
     Seq(1L, 50000L, 200000L, 10000000L).foreach { n =>
       val d = deriveNlist(n)
       assert((d & (d - 1)) == 0 && d >= 16 && d <= MaxAutoNlist, s"n=$n -> $d")
@@ -591,7 +599,7 @@ class AnnSpec extends SparkSpecBase {
 
   test("deriveTwoLevel: flat in the fold/budget regimes, covering factorization past either bound") {
     import SimilaritySearch.{deriveTwoLevel, deriveNlist, FlatAssignRowBudget,
-      ArgmaxFoldMaxCentroids, TargetClusterSize}
+      SmallFlatNlist, TargetClusterSize}
     // fold-regime and measured-good exploded sizes stay flat: the 100×
     // fixture (200k vectors, nlist=256, 5.1e7 candidate rows) is the
     // SCALING.md 19.8 s row and must keep its plan
@@ -619,7 +627,7 @@ class AnnSpec extends SparkSpecBase {
     }
     // never dispatched INTO the fold regime's replacement while the
     // fold itself is still the plan (nlist <= 32 materializes no rows)
-    assert(deriveNlist(32L * TargetClusterSize) <= ArgmaxFoldMaxCentroids &&
+    assert(deriveNlist(32L * TargetClusterSize) <= SmallFlatNlist &&
       deriveTwoLevel(32L * TargetClusterSize).isEmpty)
     // the 1B-row shape a 100 TB corpus would dispatch: ~1M leaves
     val Some((cBig, sBig)) = deriveTwoLevel(1000000000L)
@@ -631,15 +639,10 @@ class AnnSpec extends SparkSpecBase {
   test("explicit-nlist flat assignment REFUSES when the predicted sort mass exceeds scratch") {
     import graft.operators.Dedup
     val df = clustered.cache()
-    // ~200 vectors x nlist=64 x 24 B >> a mocked 1 KiB budget
+    // ~200 vectors x nlist=64 x 560 B >> a mocked 1 KiB budget
     Dedup.scratchBytesOverride = Some(1L << 10)
     try {
       Seq(
-        () => SimilaritySearch.assignClusters(df, "vec_id", "embedding", 64),
-        () => SimilaritySearch.semanticDedup(df, "vec_id", "embedding",
-          nlist = 64, threshold = 0.999),
-        () => { SimilaritySearch.buildSemanticIndex(df, "vec_id", "embedding",
-          nlist = 64, threshold = 0.999); df },
         () => SimilaritySearch.topKCosineIvf(
           df.limit(3).select(col("vec_id").as("probe_id"), col("embedding")),
           "probe_id", df, "vec_id", "embedding", k = 3, nlist = 64, nprobe = 4)
@@ -649,12 +652,12 @@ class AnnSpec extends SparkSpecBase {
         assert(e.getMessage.contains("TwoLevel"), // names the reroute
           e.getMessage)
       }
-      // the fold regime (nlist <= 32) materializes no candidate rows —
-      // never counts, never refuses
+      // the flat assignment materializes no candidate rows — it never
+      // counts, never refuses
       assert(SimilaritySearch.assignClusters(df, "vec_id", "embedding", 16)
         .count() == df.count())
       // and the AUTO front door keeps dispatching itself, never throws
-      // (small corpus -> fold-regime flat; large corpus -> two-level)
+      // (small corpus -> flat; large corpus -> two-level)
       assert(SimilaritySearch.semanticDedup(df, "vec_id", "embedding")
         .count() == df.count())
     } finally Dedup.scratchBytesOverride = None
@@ -951,5 +954,26 @@ class AnnSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(verdicts(back) == verdicts(idx))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+}
+
+object AnnSpec {
+  val dim = 64
+
+  /** 3 clusters of 20 near-identical vectors + 140 random ones. */
+  def clusteredRows: Seq[(Long, Seq[Double])] = {
+    val rnd = new scala.util.Random(7)
+    def unit(): Array[Double] = {
+      val v = Array.fill(dim)(rnd.nextGaussian())
+      val n = math.sqrt(v.map(x => x * x).sum)
+      v.map(_ / n)
+    }
+    val centers = Seq.fill(3)(unit())
+    centers.zipWithIndex.flatMap { case (c, ci) =>
+      (0 until 20).map { i =>
+        val v = c.map(_ + rnd.nextGaussian() * 0.02)
+        (ci * 1000L + i, v.toSeq)
+      }
+    } ++ (0 until 140).map(i => (9000L + i, unit().toSeq))
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
+import graft.operators.SimilaritySearch
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** A warm session reuses its generated code. Spark's codegen cache is
   * JVM-wide and LRU; at Spark's default capacity (100 classes) one
@@ -21,5 +24,23 @@ class CodegenCacheSpec extends SparkSpecBase {
     val warm = compiles - before
     assert(warm == 0, s"warm run compiled $warm classes")
     assert(second.toSeq == first.toSeq)
+  }
+
+  test("buildPqIndex on a second corpus of the same schema compiles no classes") {
+    // Codebooks travel as data (NearestCentroidExpr's reference
+    // objects), so a new corpus — new centroid values, new ids — runs
+    // the generated code the first corpus compiled. Literal-fold
+    // codebooks inlined ids and c·c as Java literals and recompiled.
+    import spark.implicits._
+    val emb = AnnSpec.clusteredRows.toDF("vec_id", "embedding")
+    val a = emb.localCheckpoint(true)
+    val b = emb.filter(col("vec_id") % 2 === 0).localCheckpoint(true)
+    def build(df: DataFrame): Array[_] =
+      SimilaritySearch.buildPqIndex(df, "vec_id", "embedding").coded.collect()
+    build(a)
+    val before = compiles
+    build(b)
+    val warm = compiles - before
+    assert(warm == 0, s"second corpus compiled $warm classes")
   }
 }

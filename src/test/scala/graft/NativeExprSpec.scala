@@ -3,6 +3,7 @@ package graft
 import graft.functions.TextFunctions
 import org.apache.spark.sql.graft.NativeExpressions
 import graft.functions.TextFunctions._
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 
 /** Pins the native codegen'd sketch expressions to the higher-order-
@@ -282,4 +283,129 @@ class NativeExprSpec extends SparkSpecBase {
     assert(got("s") == Seq("just three tokens"))
     assert(got("e") == Seq.empty)
   }
+
+  test("nearest centroid == the literal folds bit for bit, codegen and interpreted") {
+    import NativeExprSpec._
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.graft.{Codebook, NearestCentroidExpr}
+    import org.apache.spark.sql.types._
+    val dim = AnnSpec.dim
+    val fixture = AnnSpec.clusteredRows
+    def boxed(v: Seq[Double]): Seq[java.lang.Double] = v.map(Double.box)
+    // special vectors: null element, length mismatch, zero norm, NaN,
+    // whole-vector null; an exact copy of a centroid
+    val specials: Seq[(Long, Seq[java.lang.Double])] = Seq(
+      (50001L, boxed(fixture(3)._2).updated(5, null)),
+      (50002L, boxed(fixture(3)._2.take(dim - 1))),
+      (50003L, boxed(Seq.fill(dim)(0.0))),
+      (50004L, boxed(fixture(3)._2.updated(7, Double.NaN))),
+      (50005L, null),
+      (50006L, boxed(fixture(40)._2)))
+    val rows = fixture.map { case (id, v) => (id, boxed(v)) } ++ specials
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (id, v) => Row(id, v) }, 2),
+      StructType(Seq(StructField("id", LongType),
+        StructField("v", ArrayType(DoubleType, containsNull = true)))))
+    // 16 fixture centroids, a zero-norm centroid, and an exact duplicate
+    // of fixture(40) under a SMALLER id placed after it: every vector
+    // ties on that pair, and the smaller id must win
+    val base = fixture.indices.filter(_ % 13 == 1).take(16).map(fixture(_)) ++
+      Seq((77777L, Seq.fill(dim)(0.0)), (39L, fixture(40)._2))
+    assert(base.exists(_._1 == fixture(40)._1) && fixture(40)._1 > 39L)
+    val books = Seq(base, base :+ ((88888L, Seq.fill(dim)(0.5).updated(2, Double.NaN))))
+    val vType = ArrayType(DoubleType, containsNull = true)
+    val inputs = rows.map { case (id, v) =>
+      id -> InternalRow(if (v == null) null else new GenericArrayData(v.toArray[Any]))
+    }
+    def read(r: InternalRow): (Option[Long], Long) =
+      (if (r.isNullAt(0)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(0))),
+        r.getLong(1))
+    def bits(x: Any): Option[Long] =
+      Option(x).map(d => java.lang.Double.doubleToLongBits(d.asInstanceOf[Double]))
+    books.foreach { cents =>
+      val sorted = cents.sortBy(_._1)
+      val ref = df.select(col("id"), argmaxCent(col("v"), cents).as("cos"),
+          argminCentL2(col("v"), cents).as("l2"), argminCodeL2(col("v"), sorted).as("code"))
+        .collect().map(r => r.getLong(0) -> r).toMap
+      def nce(book: Codebook, l2: Boolean) = NearestCentroidExpr(
+        BoundReference(0, vType, nullable = true), Literal(0L), book, l2)
+      // (expression, expected (score bits, id) from the fold's row); the
+      // code fold returns only the position, so its score is not compared
+      val cases: Seq[(NearestCentroidExpr, Row => (Option[Long], Long), Boolean)] = Seq(
+        (nce(Codebook.flat(cents), l2 = false),
+          r => (bits(r.getStruct(1).get(0)), -r.getStruct(1).getLong(1)), true),
+        (nce(Codebook.flat(cents), l2 = true),
+          r => (bits(r.getStruct(2).get(0)), r.getStruct(2).getLong(1)), true),
+        (nce(Codebook(sorted.zipWithIndex.map { case ((_, v), i) => (0L, i + 1L, v) }),
+          l2 = true), r => (None, r.getInt(3).toLong), false))
+      cases.foreach { case (e, want, scored) =>
+        val compiled = GenerateUnsafeProjection.generate(Seq(e))
+        def view(x: (Option[Long], Long)) = if (scored) x else (None, x._2)
+        inputs.foreach { case (id, in) =>
+          val w = want(ref(id))
+          val gen = view(read(compiled(in).getStruct(0, 2)))
+          val interp = view(read(e.eval(in).asInstanceOf[InternalRow]))
+          assert(gen == w, s"codegen, vec $id: $gen != $w")
+          assert(interp == w, s"interpreted, vec $id: $interp != $w")
+        }
+      }
+      // the fixture reaches every corner it claims to (without the NaN
+      // centroid, which outranks every cosine)
+      if (cents eq base) {
+        val cosOf = (id: Long) => ref(id).getStruct(1)
+        assert(Seq(50001L, 50002L, 50003L, 50005L).forall(cosOf(_).isNullAt(0)))
+        assert(-cosOf(50003L).getLong(1) == sorted.head._1)
+        assert(cosOf(50004L).getDouble(0).isNaN)
+        assert(-cosOf(50006L).getLong(1) == 39L && cosOf(50006L).getDouble(0) == 1.0)
+        assert(ref(50002L).getStruct(2).isNullAt(0))
+      }
+    }
+    // float vectors (the parquet embeddings' type) through whole-stage codegen
+    val f = df.select(col("id"), expr("transform(v, x -> cast(x as float))").as("f"))
+    val cb = Codebook.flat(base)
+    f.select(NativeExpressions.nearestCentroid(col("f"), lit(0L), cb, l2 = false).as("n"),
+        argmaxCent(col("f"), base).as("r"),
+        NativeExpressions.nearestCentroid(col("f"), lit(0L), cb, l2 = true).as("nl"),
+        argminCentL2(col("f"), base).as("rl"))
+      .collect().foreach { r =>
+        val (n, o, nl, ol) = (r.getStruct(0), r.getStruct(1), r.getStruct(2), r.getStruct(3))
+        assert(bits(n.get(0)) == bits(o.get(0)) && n.getLong(1) == -o.getLong(1))
+        assert(bits(nl.get(0)) == bits(ol.get(0)) && nl.getLong(1) == ol.getLong(1))
+      }
+  }
+}
+
+object NativeExprSpec {
+  import graft.functions.VectorFunctions._
+
+  /** The literal-fold nearest-centroid formulations NearestCentroidExpr
+    * replaced, kept as its reference: cosine argmax as array_max over
+    * (6-dp rounded cosine, -id) structs, so ties go to the smallest id. */
+  def argmaxCent(vec: Column, cents: Seq[(Long, Seq[Double])]): Column =
+    array_max(array(cents.map { case (cid, v) =>
+      struct(round(cosine(vec, typedLit(v)), 6).as("c"), lit(-cid).as("negid"))
+    }: _*))
+
+  /** Squared L2 distance to a literal centroid, 6-dp rounded, as
+    * x·x − 2·x·c + c·c with c·c a driver-side left-to-right fold. */
+  private def distL2(vec: Column, v: Seq[Double]): Column = {
+    val cv = typedLit(v)
+    round(dotd(vec, vec) - lit(2.0) * dotd(vec, cv) +
+      lit(v.foldLeft(0.0)((a, x) => a + x * x)), 6)
+  }
+
+  /** Nearest centroid by squared L2: struct(d, cid), smallest cid on ties. */
+  def argminCentL2(vec: Column, cents: Seq[(Long, Seq[Double])]): Column =
+    array_min(array(cents.map { case (cid, v) =>
+      struct(distL2(vec, v).as("d"), lit(cid).as("cid"))
+    }: _*))
+
+  /** Nearest centroid POSITION (1-based) over a cent_id-sorted codebook. */
+  def argminCodeL2(vec: Column, sorted: Seq[(Long, Seq[Double])]): Column =
+    array_min(array(sorted.zipWithIndex.map { case ((_, v), i) =>
+      struct(distL2(vec, v).as("d"), lit(i + 1).as("pos"))
+    }: _*))("pos")
 }
