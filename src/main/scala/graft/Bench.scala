@@ -270,6 +270,6 @@ object Bench {
       full.getBytes("UTF-8"))
     catch { case e: Throwable => e.printStackTrace() }
     println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"n_single_iter":$nSingle,"queries":${jsonMap(slowest)},"probes":$probes,"probe_normalized":$probeNorm,"sf":"$sfDir"}""")
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

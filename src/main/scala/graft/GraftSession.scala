@@ -30,6 +30,25 @@ import org.apache.spark.sql.SparkSession
   *  - the graft SQL extension (native sketch expressions);
   *  - a codegen cache sized to the engine's working set
   *    ([[CodegenCacheEntries]]), so a warm session compiles nothing.
+  *
+  * LIFETIME RULE for materialized frames. Spark's `CacheManager`
+  * matches canonicalized plans, so a `persist` that a returned plan
+  * reads lets the NEXT invocation of the same query silently plan over
+  * this invocation's data: cross-run result caching, which the bench
+  * bans, and session state that outlives the call. Hence:
+  *  - a frame that a function returns never reads a `persist`/`cache`;
+  *  - reuse that must outlive the function is an eager
+  *    `localCheckpoint(true)` (invocation-scoped: every call recomputes
+  *    from its inputs), or `localCheckpoint(true, StorageLevel.DISK_ONLY)`
+  *    where the frame should not compete for executor memory;
+  *  - `persist` appears only where the same function unpersists it
+  *    before it returns.
+  * PlanAuditSpec's full-surface sweep enforces it: after constructing
+  * each registered query, `CacheManager` must be empty and no stream
+  * may be active.
+  *
+  * SHUTDOWN: every main ends through [[stop]], never a bare
+  * `spark.stop()`.
   */
 object GraftSession {
 
@@ -113,6 +132,44 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .config("spark.ui.enabled", "false")
   }
+
+  /** [[stop]]'s whole deadline (s), inside Hadoop's 60 s hook timeout. */
+  val StopDeadlineSeconds: Long = 45L
+
+  /** The part of it that stopping leftover streams may use (s). */
+  val StreamStopSeconds: Long = 30L
+
+  /** Quiesce-then-stop. A bare `SparkContext.stop()` while work is still
+    * in flight lets a stopped-but-zombie task's statusUpdate race the
+    * terminated TaskResultGetter pool inside stop(), and the run's tail
+    * ends with `RejectedExecutionException` ERROR lines (a lifecycle
+    * race, not a failure, but it buries the real tail). So: stop every
+    * leftover streaming query, cancel and DRAIN in-flight tasks (poll
+    * the status tracker until no executor reports a running task), then
+    * stop the context cleanly. Every step is best-effort and the whole
+    * call shares one [[StopDeadlineSeconds]] deadline; a session that is
+    * already stopped is left alone. */
+  def stop(s: SparkSession): Unit = try {
+    val sc = s.sparkContext
+    if (!sc.isStopped) {
+      val start = System.nanoTime()
+      val deadline = start + StopDeadlineSeconds * 1000 * 1000 * 1000
+      val streamsDeadline = start + StreamStopSeconds * 1000 * 1000 * 1000
+      def msLeft(until: Long): Long = math.max(1L, (until - System.nanoTime()) / 1000000)
+      s.streams.active.foreach { q =>
+        try { q.stop(); q.awaitTermination(msLeft(streamsDeadline)) }
+        catch { case _: Throwable => () }
+      }
+      sc.cancelAllJobs()
+      def busy(): Boolean =
+        sc.statusTracker.getActiveJobIds().nonEmpty ||
+          sc.statusTracker.getExecutorInfos.exists(_.numRunningTasks() > 0)
+      while (busy() && System.nanoTime() < deadline) Thread.sleep(50)
+      // grace for the last statusUpdate RPCs to land
+      Thread.sleep(250)
+      s.stop()
+    }
+  } catch { case _: Throwable => () }
 
   /** The engine's deliberately-unpartitioned windows (limit-100 rank
     * prefixes, decile cuts over group-level frames — each plan-audited

@@ -91,10 +91,17 @@ object Bucketize {
       .groupBy(col("_grp"), col("bucket"))
       .agg(count(lit(1)).cast("long").as("n"), first(col("_bnds")).as("_bnds"))
       .select(col("_grp").as(grpCol), col("bucket"), col("n"),
-        (round(when(col("bucket") > 1,
-          element_at(col("_bnds"), col("bucket") - 1)), 2) + lit(0.0)).as("lo"),
-        (round(when(col("bucket") < nBuckets,
-          element_at(col("_bnds"), col("bucket"))), 2) + lit(0.0)).as("hi"),
+        round2(when(col("bucket") > 1, element_at(col("_bnds"), col("bucket") - 1))).as("lo"),
+        round2(when(col("bucket") < nBuckets, element_at(col("_bnds"), col("bucket")))).as("hi"),
         lit(eff).as("method"))
   }
+
+  /** 2-dp rounding the way DuckDB's `round(x, 2)` does it,
+    * `std::round(x * 100) / 100`: round the PRODUCT half away from zero
+    * (Spark's scale-0 `round` on the same double), then divide. Spark's
+    * own `round(x, 2)` rounds x's decimal value instead, and the two
+    * disagree on a cut point such as 52724.244999999995, whose product
+    * is exactly 5272424.5 (.25 here, .24 under `round(x, 2)`). The
+    * `+ 0.0` collapses IEEE −0.0. */
+  private def round2(x: Column): Column = round(x * lit(100.0)) / lit(100.0) + lit(0.0)
 }

@@ -494,46 +494,19 @@ object Dedup {
     * Docs whose prefix length is <= 0 cannot reach the threshold
     * (c <= n_cold < t*|A| bounds jac below t) and drop out early.
     *
-    * Cache discipline: the corpus-sized `byDoc` intermediate (one row
-    * per doc carrying its full shingle array) is persisted for the
-    * three consumers inside ONE job, then released as soon as the
-    * (pair-sized, far smaller) result has materialized — so repeated
-    * calls in a long-lived session do not accumulate corpus-sized disk
-    * cache entries. The RETURNED frame is persisted (DISK_ONLY);
-    * callers that are fully done with it may `unpersist()` it, or use
-    * [[withPrefixPairs]] for scoped deterministic release (the
-    * PageRank.withRanks pattern). */
+    * Lifetime (GraftSession's rule): the corpus-sized `byDoc`
+    * intermediate (one row per doc carrying its full shingle array) is
+    * persisted for its three consumers inside the one job that
+    * materializes the (pair-sized, far smaller) result, and released
+    * before this returns. The RETURNED frame is an eager DISK_ONLY
+    * `localCheckpoint`: it reads no cache, so repeated calls in a
+    * long-lived session leave nothing registered and never read each
+    * other's results. */
   def nearDupPairsPrefix(df: DataFrame, idCol: String, textCol: String,
                          n: Int = 3, threshold: Double = 0.5,
                          maxDocFreq: Long = 0L,
                          autoGateDocs: Long = AutoCutoffMinDocs,
                          docCount: Long = -1L): DataFrame = {
-    val (res, pinned) = nearDupPairsPrefixPinned(df, idCol, textCol, n,
-      threshold, maxDocFreq, autoGateDocs, docCount)
-    // Materialize the small pair output once, then drop the corpus-
-    // sized byDoc cache; only the result frame stays pinned.
-    res.count()
-    pinned.foreach(_.unpersist(blocking = true))
-    res
-  }
-
-  /** Scoped variant: runs `action` over the prefix near-dup pairs and
-    * releases EVERY cache (including the result) before returning. */
-  def withPrefixPairs[T](df: DataFrame, idCol: String, textCol: String,
-                         n: Int = 3, threshold: Double = 0.5,
-                         maxDocFreq: Long = 0L)(action: DataFrame => T): T = {
-    val (res, pinned) = nearDupPairsPrefixPinned(df, idCol, textCol, n, threshold, maxDocFreq)
-    try action(res)
-    finally (res +: pinned).foreach(_.unpersist(blocking = true))
-  }
-
-  /** Core build: returns (persisted pair result, pinned intermediates).
-    * Callers own the release of both — see the two wrappers above. */
-  def nearDupPairsPrefixPinned(df: DataFrame, idCol: String, textCol: String,
-                               n: Int = 3, threshold: Double = 0.5,
-                               maxDocFreq: Long = 0L,
-                               autoGateDocs: Long = AutoCutoffMinDocs,
-                               docCount: Long = -1L): (DataFrame, Seq[DataFrame]) = {
     val nDocs = if (docCount >= 0) docCount else df.count()
     val d = shingleSets(df, idCol, textCol, n).transform(Spread.byKey(_, "doc_id"))
     val exploded = d.select(col("doc_id"), size(col("sh")).as("nsh"),
@@ -629,8 +602,8 @@ object Dedup {
       .withColumn("jac", col("c") / (col("na") + col("nb") - col("c")))
       .filter(col("jac") >= threshold)
       .select(col("i"), col("j"), round(col("jac"), 6).as("jac"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    (res, Seq(byDoc))
+    try res.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    finally byDoc.unpersist(blocking = true)
   }
 
   /** Content-defined chunking (the LBFS/rsync principle applied to

@@ -875,10 +875,7 @@ object SimilaritySearch {
     // semantic_dedup_twolevel plan). Materialize the slim (id,
     // cluster_id) frame ONCE — N 16-byte rows, linear and far smaller
     // than the pair-stage shuffle that follows. localCheckpoint, not
-    // persist: CacheManager matches canonicalized plans, so a persist
-    // leaking into the RETURNED plan would let a second invocation
-    // silently read the first's cache (the banned cross-run caching);
-    // the eager checkpoint is invocation-scoped.
+    // persist: see GraftSession's lifetime rule.
     val a = assigned.localCheckpoint(true)
     val dropped = pairsWithAssignment(corpus, idCol, vecCol, a, threshold)
       .select(col("j").as(idCol)).distinct()
@@ -1332,9 +1329,8 @@ object SimilaritySearch {
     // verdict join each re-ran the assignment over the increment union
     // (34 parquet scans in one semantic_dedup_store plan). Checkpoint
     // before the footprint collect so even that first job reads the
-    // materialized frame. localCheckpoint, not persist — see
-    // dedupWithAssignment's note on the CacheManager cross-invocation
-    // leak.
+    // materialized frame. localCheckpoint, not persist: see
+    // GraftSession's lifetime rule.
     val assigned = assignWithIndex(inc, idCol, vecCol, index).localCheckpoint(true)
     // one increment-sized pass: CLUSTER footprint (and the group
     // footprint it implies) and row count — the broadcast dispatch

@@ -22,8 +22,8 @@ object Analytics extends QueryModule {
     * both directions) the pagerank query runs over — exposed so the
     * plan guards can drive PageRank's distributed path on the same
     * input (the registered query takes the local endgame at fixture
-    * scale). Delegates to [[TradeGraph]], so the expensive pair
-    * extraction is shared (and persisted) across the graph family. */
+    * scale). Delegates to [[TradeGraph]], the one pair extraction the
+    * graph family shares as code; each query runs its own. */
   def pagerankEdges(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     TradeGraph.edges(s, dir)
 

@@ -605,8 +605,8 @@ object Curation extends QueryModule {
       // and point every aggregate at it: the expensive per-row work
       // runs exactly once, and what the aggregates scan afterwards is
       // ~30 bytes/row (guide §2.3: aggregate small rows, derive heavy
-      // columns once). localCheckpoint, not persist (cross-invocation
-      // cache leak).
+      // columns once). localCheckpoint, not persist: see GraftSession's
+      // lifetime rule.
       val docs = Tables(s, dir, "documents")
         .select(col("lang"), col("source"), col("n_chars"),
           size(tokens(col("text"))).as("ntoks"),
@@ -1120,17 +1120,17 @@ object Curation extends QueryModule {
     // Scale shape: the pair/CC machinery is the audited dedup_clusters
     // path; the split itself is one hash projection and the leakage
     // check two key-joins of the (sparse) pair list. The pair list is
-    // PERSISTED before reuse: it is tiny (near-dups are rare by
+    // MATERIALIZED before reuse: it is tiny (near-dups are rare by
     // construction) but its derivation is the whole candidate
     // pipeline, and both the CC pass and the crossing check consume
-    // it — un-persisted, Catalyst re-ran the full candidate pass for
+    // it — un-materialized, Catalyst re-ran the full candidate pass for
     // the leak check (measured 28.7x at the 30x fixture vs 3x data;
-    // with the persist the pass runs once).
+    // materialized, the pass runs once).
     "split_cluster_safe" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
       val pairs = Dedup.nearDupPairs(docs, "doc_id", "text",
         maxDocFreq = Dedup.HotShingleCutoff)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
       val labels = ConnectedComponents.connectedComponents(pairs, "i", "j")
       val keyed = docs.join(labels, col("doc_id") === col("node"), "left")
         .select(col("doc_id"), col("n_chars"),
@@ -1183,13 +1183,9 @@ object Curation extends QueryModule {
         // scans with ZERO exchange reuse
         // (plans/r16/curation_pipeline_v2_before.txt), because
         // self-join id dedup re-keys the duplicated subtrees past
-        // ReuseExchange. localCheckpoint, NOT persist(): CacheManager
-        // matches canonicalized plans, so a persist here would let a
-        // SECOND invocation of this query silently read the first
-        // invocation's cache — exactly the cross-run result caching the
-        // bench bans. The eager checkpoint is invocation-scoped: every
-        // call recomputes from parquet, then every downstream branch is
-        // an anti-join against the small materialized id set (guide §8:
+        // ReuseExchange. localCheckpoint, not persist: see
+        // GraftSession's lifetime rule. Every downstream branch is an
+        // anti-join against the small materialized id set (guide §8:
         // decide on small rows once, never re-derive).
         .select(col("j").as("doc_id")).distinct()
         .localCheckpoint(true)
@@ -1283,10 +1279,8 @@ object Curation extends QueryModule {
         // the WHOLE span-rewrite pipeline, so the 3 GD aggregates, the
         // zbar aggregate and the final plan re-executed rewriteDupSpans
         // five times per invocation (r16 plan audit: 35 jobs, all
-        // single-task). One materialization, four reads —
-        // localCheckpoint, not persist(), so a repeated invocation can
-        // never read a previous invocation's cache (the CacheManager
-        // canonical-plan match; see curation_pipeline_v2's dupJ note).
+        // single-task). One materialization, four reads;
+        // localCheckpoint, not persist: see GraftSession's lifetime rule.
         .localCheckpoint(true)
       val wts = LogisticRegression.fit(
         feat.select(col("x1"), col("x2"), col("y")), Seq("x1", "x2"), "y")
@@ -1460,7 +1454,7 @@ object Curation extends QueryModule {
       // (the broadcast rank-threshold side and the final join), so the
       // pre-change plan ran all of it twice (r16 plan audit: 16
       // exchanges / 7 scans). Materialize the 3 rows once;
-      // localCheckpoint, not persist (cross-invocation cache leak).
+      // localCheckpoint, not persist: see GraftSession's lifetime rule.
       val prof = sketches
         .join(broadcast(ndv("l_orderkey", "ndv_orders")), "l_returnflag")
         .join(broadcast(ndv("l_partkey", "ndv_parts")), "l_returnflag")

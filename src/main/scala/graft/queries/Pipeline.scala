@@ -479,7 +479,7 @@ object Pipeline extends QueryModule {
       // reference (r16 plan audit: 24 scans). Materialize the pair list
       // once; it is the eval's OUTPUT-SIDE mass (true pairs), bounded
       // far below the candidate stage that produces it.
-      // localCheckpoint, not persist (cross-invocation cache leak).
+      // localCheckpoint, not persist: see GraftSession's lifetime rule.
       val exact = Dedup.nearDupPairsExact(u, "doc_id", "text", n = 3, threshold = 0.05)
         .withColumn("bucket", floor(col("jac") * 10).cast("long"))
         .localCheckpoint(true)
@@ -918,7 +918,7 @@ object Pipeline extends QueryModule {
       // subtree runs once, and derive the pair source's and the verdict
       // joins' projections from it — the heavy text column never leaves
       // the derivation scan (guide §2.3/§8). localCheckpoint, not
-      // persist (cross-invocation cache leak).
+      // persist: see GraftSession's lifetime rule.
       val slim = corpus.select(col("vec_id"), col("embedding"),
           md5(col("text")).as("fp"))
         .localCheckpoint(true)

@@ -138,8 +138,8 @@ object Training extends QueryModule {
         // bnds side and perBucket), re-running that aggregate per
         // feature (r16 stage profile: 4 of the query's heaviest stages
         // were the two grp aggregates x2 references). Materialize the
-        // 3-row result once; localCheckpoint, not persist (CacheManager
-        // canonical-plan match = cross-invocation cache leak).
+        // 3-row result once; localCheckpoint, not persist: see
+        // GraftSession's lifetime rule.
         val grp = li.groupBy(col("l_returnflag")).agg(
           count(lit(1)).as("n"),
           KllFunctions.kllQuantiles(
@@ -276,7 +276,7 @@ object Training extends QueryModule {
     // ALL bin arithmetic runs in exact integer micro-units — bucket =
     // pe div 2e4, mean_p = sum(pe)/1e6/n, brier from (pe-ye)^2 — so no
     // summation-order flicker can reach the hash (the v2/v3 lesson).
-    // One corpus pass per GD round over the PERSISTED feature frame
+    // One corpus pass per GD round over the CHECKPOINTED feature frame
     // (20 rounds — measured as where the score spread fills the
     // diagram) plus one tiny bucket-keyed aggregation: the fit's only
     // driver crossing is the (k+1)-double gradient per round.
@@ -297,7 +297,7 @@ object Training extends QueryModule {
                lit(0.1) + lit(0.7) *
                  least(col("n_chars").cast("double") / lit(500.0), lit(1.0)),
             1.0).otherwise(0.0).as("y"))
-        .persist()
+        .localCheckpoint(true)
       val wts = graft.operators.LogisticRegression.fit(f, Seq("x1", "x2"), "y",
         iters = 20)
       val z = graft.operators.LogisticRegression.margin(wts, Seq("x1", "x2"))

@@ -63,6 +63,6 @@ object AbConfig {
       println(s"[ab] $name  A(knob=false) ${show(a.toSeq)}  " +
         s"B(knob=true) ${show(b.toSeq)}  => $verdict")
     }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -31,6 +31,6 @@ object AuditRun {
           case e: Throwable => println(s"[audit] $name ERROR: ${e.getMessage}")
         }
       }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

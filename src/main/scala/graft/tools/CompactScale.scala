@@ -131,7 +131,7 @@ object CompactScale {
 
     for (d <- Seq(tmp, idxDir, outDir))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
-    spark.stop()
+    GraftSession.stop(spark)
   }
 
   /** Phase 5, also runnable standalone against a surviving compacted
@@ -189,6 +189,6 @@ object CompactScale {
     val compacted = SimilaritySearch.readSemanticIndex(spark, outDir)
     val landed = spark.read.option("basePath", storeDir).parquet(storeDir)
     runRestartPhase(spark, compacted, landed, nTwins, dim = 64)
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

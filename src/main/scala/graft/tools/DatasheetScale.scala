@@ -59,6 +59,6 @@ object DatasheetScale {
       SparkEntry.queries("corpus_datasheet_sketch")(spark, args.head)
         .write.format("noop").mode("overwrite").save()
     }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

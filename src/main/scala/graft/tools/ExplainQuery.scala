@@ -22,5 +22,6 @@ object ExplainQuery {
       s"scans=${lines.count(_.contains("Scan parquet"))} " +
       s"codegenSpans=${"\\*\\((\\d+)\\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size}")
     if (args.length > 2 && args(2) == "full") println(plan)
+    graft.GraftSession.stop(s)
   }
 }

@@ -117,6 +117,6 @@ object FrontierScale {
     println(s"[frontier-scale] GC VERIFIED: $nAccepted -> $kept3 " +
       s"(${nAccepted - kept3} urls re-opened)")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -68,6 +68,6 @@ object JobProfile {
         }
       }
     }
-    spark.stop()
+    graft.GraftSession.stop(spark)
   }
 }

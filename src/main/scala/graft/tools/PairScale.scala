@@ -113,6 +113,6 @@ object PairScale {
         }
       }
     }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -43,6 +43,6 @@ object PlanSnap {
         (summary + "\n\n== Formatted (pre-execution) ==\n" + formatted +
           "\n== Executed (AQE final) ==\n" + fin).getBytes("UTF-8"))
     }
-    spark.stop()
+    graft.GraftSession.stop(spark)
   }
 }

@@ -33,6 +33,6 @@ object PrefixScale {
     if (mode == "exact" || mode == "both")
       timed("exact ")(Dedup.nearDupPairsExact(docs, "doc_id", "text",
         threshold = t, maxDocFreq = Dedup.HotShingleCutoff))
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -51,7 +51,7 @@ object ScaleFixture {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt, Some(src)).getOrCreate()
     try generate(spark, src, out, reps, fixedVocab)
-    finally spark.stop()
+    finally GraftSession.stop(spark)
   }
 
   /** Key stride between replicas — far above any key in the source. */

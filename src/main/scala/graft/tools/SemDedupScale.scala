@@ -50,6 +50,6 @@ object SemDedupScale {
         f"pairs=$pairMass%.3g top5=${sizes.take(5).mkString(",")} " +
         f"live=${sizes.length}")
     }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

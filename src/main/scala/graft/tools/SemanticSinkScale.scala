@@ -192,6 +192,6 @@ object SemanticSinkScale {
     }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp0))
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

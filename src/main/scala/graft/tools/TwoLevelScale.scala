@@ -101,6 +101,6 @@ object TwoLevelScale {
         }
       }
     }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -181,8 +181,8 @@ class DedupSpec extends SparkSpecBase {
         s"refusal must name the banded reroute: ${e.getMessage}")
       assert(e.getMessage.contains("REFUSED"))
       val ep = intercept[IllegalStateException] {
-        Dedup.nearDupPairsPrefixPinned(docs, "doc_id", "text",
-          threshold = 0.5, autoGateDocs = 1L)._1.collect()
+        Dedup.nearDupPairsPrefix(docs, "doc_id", "text",
+          threshold = 0.5, autoGateDocs = 1L).collect()
       }
       assert(ep.getMessage.contains("nearDupPairsMinhash"))
     } finally Dedup.scratchBytesOverride = None

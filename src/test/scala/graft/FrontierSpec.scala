@@ -14,41 +14,45 @@ class FrontierSpec extends SparkSpecBase {
 
   test("crawl_frontier: canonical urls are normalized, unique, and capped per domain") {
     val out = SparkEntry.queries("crawl_frontier")(spark, dir).cache()
-    val n = out.count()
-    assert(n > 0)
+    try {
+      val n = out.count()
+      assert(n > 0)
 
-    // stage-1 contract: every surviving url is canonical — lowercase
-    // https authority, no default port, no utm_ param, no fragment
-    val bad = out.filter(
-      !col("canonical_url").rlike("^https://site-[0-9]+\\.example\\.com/p/[0-9]+\\?x=1$"))
-      .count()
-    assert(bad == 0, s"$bad non-canonical survivors")
+      // stage-1 contract: every surviving url is canonical — lowercase
+      // https authority, no default port, no utm_ param, no fragment
+      val bad = out.filter(
+        !col("canonical_url").rlike("^https://site-[0-9]+\\.example\\.com/p/[0-9]+\\?x=1$"))
+        .count()
+      assert(bad == 0, s"$bad non-canonical survivors")
 
-    // stage-2 contract: canonical keys are unique among survivors
-    assert(out.select("canonical_url").distinct().count() == n)
+      // stage-2 contract: canonical keys are unique among survivors
+      assert(out.select("canonical_url").distinct().count() == n)
 
-    // stage-3 contract: at most 40 survivors per domain and every rank
-    // within the cap (gaps allowed: stage 4 removes AFTER the cap)
-    val overCap = out.groupBy(col("domain")).count().filter(col("count") > 40).count()
-    assert(overCap == 0)
-    assert(out.filter(col("rn") > 40 || col("rn") < 1).count() == 0)
+      // stage-3 contract: at most 40 survivors per domain and every rank
+      // within the cap (gaps allowed: stage 4 removes AFTER the cap)
+      val overCap = out.groupBy(col("domain")).count().filter(col("count") > 40).count()
+      assert(overCap == 0)
+      assert(out.filter(col("rn") > 40 || col("rn") < 1).count() == 0)
+    } finally out.unpersist()
   }
 
   test("crawl_frontier: content dedup removes recrawl mirrors the url stage cannot see") {
     val out = SparkEntry.queries("crawl_frontier")(spark, dir).cache()
-    // survivors' normalized fingerprints are unique — a mirror
-    // (doc_id>=10000) and its original never both survive
-    val fp = md5(lower(trim(regexp_replace(
-      // recover text by joining survivors back to the planted corpus
-      col("text"), "\\s+", " "))))
-    val base = Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
-    val mirror = base.filter(col("doc_id") < 100)
-      .select((col("doc_id") + 10000).as("doc_id"),
-        concat(lit("  "), upper(col("text")), lit("   ")).as("text"))
-    val joined = out.join(base.unionByName(mirror), Seq("doc_id"))
-    assert(joined.count() == out.count(), "every survivor maps back to a planted row")
-    val nFp = joined.select(fp.as("fp")).distinct().count()
-    assert(nFp == out.count(), "normalized fingerprints must be unique among survivors")
+    try {
+      // survivors' normalized fingerprints are unique — a mirror
+      // (doc_id>=10000) and its original never both survive
+      val fp = md5(lower(trim(regexp_replace(
+        // recover text by joining survivors back to the planted corpus
+        col("text"), "\\s+", " "))))
+      val base = Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
+      val mirror = base.filter(col("doc_id") < 100)
+        .select((col("doc_id") + 10000).as("doc_id"),
+          concat(lit("  "), upper(col("text")), lit("   ")).as("text"))
+      val joined = out.join(base.unionByName(mirror), Seq("doc_id"))
+      assert(joined.count() == out.count(), "every survivor maps back to a planted row")
+      val nFp = joined.select(fp.as("fp")).distinct().count()
+      assert(nFp == out.count(), "normalized fingerprints must be unique among survivors")
+    } finally out.unpersist()
   }
 
   test("crawl_frontier is deterministic") {

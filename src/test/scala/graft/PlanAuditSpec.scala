@@ -78,22 +78,6 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(cart.getString(1) == "ok" && cart.getLong(2) == 0L, cart.toString)
   }
 
-  test("the FULL query surface sweeps clean of cartesian products") {
-    // Every registered query: none may plan a genuine row-product join
-    // at sf0.001 (scalar/one-row cross joins are already excluded by
-    // the check itself; corpus x broadcast-set products surface as
-    // `warn`, not `fail`). This replaces the round-10 join-shaped
-    // subset — the manual claim "crossJoin only against broadcast
-    // one-row/probe/centroid frames" is now a machine check over the
-    // whole surface, like the window sweep below. (PlanSpec pins
-    // chosen shapes in detail; this is the breadth gate.)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val dirty = names.filterNot { n =>
-      PlanAudit.clean(SparkEntry.queries(n)(spark, dir))
-    }
-    assert(dirty.isEmpty, s"cartesian-product plans: $dirty")
-  }
-
   test("unpartitioned corpus-scale windows are flagged; bounded shapes are not") {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables(spark, dir, "documents")
@@ -119,21 +103,41 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(find(aggBad, "single_partition_windows").getLong(2) >= 1L)
   }
 
-  test("the full query surface is free of unproven single-partition windows") {
-    // Bounded in fact but not provable in the plan — each whitelisted
-    // window runs over an aggregate of a SMALL-DOMAIN key:
-    //  - vocab_growth: cumsum over 10 decile rows (floor(x*10/n) in 0..10)
-    //  - mix_temperature / curation_pipeline_v2: temperatureMix's
-    //    deterministic prefix-sum fold over the per-SOURCE frame (the
-    //    source column's domain is the handful of corpus sources; the
-    //    ordered fold is deliberate — float summation order pins rates)
+  test("full query surface: no cartesian products, unproven windows or leftover state") {
+    // One construction per registered query at sf0.001, three gates:
+    //  - cartesian: no genuine row-product join (scalar/one-row cross
+    //    joins are excluded by the check itself; corpus x broadcast-set
+    //    products surface as `warn`, not `fail`). PlanSpec pins chosen
+    //    shapes in detail; this is the breadth gate;
+    //  - windows: no single-partition window the plan cannot prove
+    //    bounded. Whitelisted windows are bounded in fact, each over an
+    //    aggregate of a SMALL-DOMAIN key: vocab_growth's cumsum over 10
+    //    decile rows (floor(x*10/n) in 0..10), and mix_temperature /
+    //    curation_pipeline_v2's temperatureMix prefix-sum fold over the
+    //    per-SOURCE frame (a handful of sources; the ordered fold is
+    //    deliberate — float summation order pins rates);
+    //  - state: GraftSession's lifetime rule. `persist` registers in
+    //    the CacheManager when it is called, so construction alone
+    //    shows a cache the returned plan would carry into the next run;
+    //    a stream left running is the same leak.
     val whitelist = Set("vocab_growth", "mix_temperature", "curation_pipeline_v2")
-    val dirty = SparkEntry.queries.keys.toSeq.sorted.flatMap { n =>
-      val r = find(SparkEntry.queries(n)(spark, dir), "single_partition_windows")
-      if (r.getLong(2) > 0 && !whitelist.contains(n)) Some(s"$n${r.getString(3)}")
-      else None
-    }
-    assert(dirty.isEmpty, s"unbounded single-partition windows: $dirty")
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val cartesian, windows, leaks = scala.collection.mutable.ArrayBuffer.empty[String]
+    try for (n <- SparkEntry.queries.keys.toSeq.sorted) {
+      spark.catalog.clearCache()
+      val df = SparkEntry.queries(n)(spark, dir)
+      val (cached, streams) = (!cacheManager.isEmpty, spark.streams.active.map(_.name))
+      if (cached || streams.nonEmpty)
+        leaks += s"$n(cached=$cached, streams=${streams.mkString(",")})"
+      val checks = PlanAudit.audit(df).collect()
+      if (checks.exists(_.getString(1) == "fail")) cartesian += n
+      val w = checks.find(_.getString(0) == "single_partition_windows").get
+      if (w.getLong(2) > 0 && !whitelist.contains(n)) windows += s"$n${w.getString(3)}"
+    } finally spark.catalog.clearCache()
+    assert(cartesian.isEmpty, s"cartesian-product plans: $cartesian")
+    assert(windows.isEmpty, s"unbounded single-partition windows: $windows")
+    assert(leaks.isEmpty, s"queries that leave state behind: $leaks")
   }
 
   test("shuffle and join counters reflect the plan shape") {

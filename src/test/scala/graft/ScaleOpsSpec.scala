@@ -312,6 +312,20 @@ class ScaleOpsSpec extends SparkSpecBase {
     }
   }
 
+  test("Bucketize.byQuantiles: 2-dp bounds round the scaled product, like DuckDB's round") {
+    import graft.operators.Bucketize
+    import spark.implicits._
+    // A constant group's every cut point is its value, so bucket 1's
+    // `hi` is that value rounded to 2 dp. 52724.244999999995 is the
+    // sf0.001 `l_extendedprice` median of the `R` flag: x * 100 is
+    // exactly 5272424.5, which DuckDB (std::round(x * 100) / 100)
+    // rounds to .25 where Spark's round(x, 2) gave .24.
+    val df = Seq.fill(4)(("g", 52724.244999999995)).toDF("grp", "v")
+    val hi = Bucketize.byQuantiles(df, "grp", "v", nBuckets = 4, method = "exact")
+      .collect().map(_.getDouble(4)).toSeq
+    assert(hi == Seq(52724.25), s"hi bounds: $hi")
+  }
+
   test("Bucketize.byQuantiles: NULL values get no bucket (both arms)") {
     import graft.operators.Bucketize
     import spark.implicits._
