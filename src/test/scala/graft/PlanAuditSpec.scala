@@ -103,40 +103,57 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(find(aggBad, "single_partition_windows").getLong(2) >= 1L)
   }
 
-  test("full query surface: no cartesian products, unproven windows or leftover state") {
-    // One construction per registered query at sf0.001, three gates:
-    //  - cartesian: no genuine row-product join (scalar/one-row cross
-    //    joins are excluded by the check itself; corpus x broadcast-set
-    //    products surface as `warn`, not `fail`). PlanSpec pins chosen
-    //    shapes in detail; this is the breadth gate;
-    //  - windows: no single-partition window the plan cannot prove
-    //    bounded. Whitelisted windows are bounded in fact, each over an
-    //    aggregate of a SMALL-DOMAIN key: vocab_growth's cumsum over 10
-    //    decile rows (floor(x*10/n) in 0..10), and mix_temperature /
-    //    curation_pipeline_v2's temperatureMix prefix-sum fold over the
-    //    per-SOURCE frame (a handful of sources; the ordered fold is
-    //    deliberate — float summation order pins rates);
-    //  - state: GraftSession's lifetime rule. `persist` registers in
-    //    the CacheManager when it is called, so construction alone
-    //    shows a cache the returned plan would carry into the next run;
-    //    a stream left running is the same leak.
-    val whitelist = Set("vocab_growth", "mix_temperature", "curation_pipeline_v2")
+  /** One construction per registered query at sf0.001, shared by the
+    * three full-surface gates below: each query's audit rows and
+    * whether building it left a cache or a stream behind. */
+  private case class Swept(name: String, checks: Array[org.apache.spark.sql.Row],
+                           cached: Boolean, streams: Seq[String])
+
+  private lazy val sweep: Seq[Swept] = {
     val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager
-    val cartesian, windows, leaks = scala.collection.mutable.ArrayBuffer.empty[String]
-    try for (n <- SparkEntry.queries.keys.toSeq.sorted) {
+    try SparkEntry.queries.keys.toSeq.sorted.map { n =>
       spark.catalog.clearCache()
       val df = SparkEntry.queries(n)(spark, dir)
-      val (cached, streams) = (!cacheManager.isEmpty, spark.streams.active.map(_.name))
-      if (cached || streams.nonEmpty)
-        leaks += s"$n(cached=$cached, streams=${streams.mkString(",")})"
-      val checks = PlanAudit.audit(df).collect()
-      if (checks.exists(_.getString(1) == "fail")) cartesian += n
-      val w = checks.find(_.getString(0) == "single_partition_windows").get
-      if (w.getLong(2) > 0 && !whitelist.contains(n)) windows += s"$n${w.getString(3)}"
+      val (cached, streams) = (!cacheManager.isEmpty, spark.streams.active.toSeq.map(_.name))
+      Swept(n, PlanAudit.audit(df).collect(), cached, streams)
     } finally spark.catalog.clearCache()
-    assert(cartesian.isEmpty, s"cartesian-product plans: $cartesian")
-    assert(windows.isEmpty, s"unbounded single-partition windows: $windows")
+  }
+
+  test("the FULL query surface sweeps clean of cartesian products") {
+    // Every registered query: none may plan a genuine row-product join
+    // at sf0.001 (scalar/one-row cross joins are already excluded by
+    // the check itself; corpus x broadcast-set products surface as
+    // `warn`, not `fail`). PlanSpec pins chosen shapes in detail; this
+    // is the breadth gate.
+    val dirty = sweep.filter(_.checks.exists(_.getString(1) == "fail")).map(_.name)
+    assert(dirty.isEmpty, s"cartesian-product plans: $dirty")
+  }
+
+  test("the full query surface is free of unproven single-partition windows") {
+    // Bounded in fact but not provable in the plan — each whitelisted
+    // window runs over an aggregate of a SMALL-DOMAIN key:
+    //  - vocab_growth: cumsum over 10 decile rows (floor(x*10/n) in 0..10)
+    //  - mix_temperature / curation_pipeline_v2: temperatureMix's
+    //    deterministic prefix-sum fold over the per-SOURCE frame (the
+    //    source column's domain is the handful of corpus sources; the
+    //    ordered fold is deliberate — float summation order pins rates)
+    val whitelist = Set("vocab_growth", "mix_temperature", "curation_pipeline_v2")
+    val dirty = sweep.flatMap { q =>
+      val w = q.checks.find(_.getString(0) == "single_partition_windows").get
+      if (w.getLong(2) > 0 && !whitelist.contains(q.name)) Some(s"${q.name}${w.getString(3)}")
+      else None
+    }
+    assert(dirty.isEmpty, s"unbounded single-partition windows: $dirty")
+  }
+
+  test("no registered query leaves a cache or a stream behind after construction") {
+    // GraftSession's lifetime rule. `persist` registers in the
+    // CacheManager when it is called, so construction alone shows a
+    // cache the returned plan would carry into the next run; a stream
+    // left running is the same leak.
+    val leaks = sweep.filter(q => q.cached || q.streams.nonEmpty)
+      .map(q => s"${q.name}(cached=${q.cached}, streams=${q.streams.mkString(",")})")
     assert(leaks.isEmpty, s"queries that leave state behind: $leaks")
   }
 
