@@ -119,11 +119,11 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initial)
       // Without this, persist()/cache() pins the UNCOALESCED
       // initialPartitionNum layout (AQE refuses to change cached-plan
-      // output partitioning by default) — measured: the TradeGraph
-      // edge cache at 512 micro-partitions tripled graph_kcore at
-      // sf0.1 (2.8 s -> 7.4 s) purely in per-round task scheduling.
-      // Letting AQE coalesce under caches restores data-sized layouts
-      // everywhere a lineage persist feeds an iterative operator.
+      // output partitioning by default), and every re-read schedules a
+      // task per micro-partition. It serves the lineage persists read
+      // once per round or ladder step: PageRank's distributed path,
+      // ConnectedComponents and the IVF tuner's persisted assignment
+      // (measured on a 512-partition cache since removed: 2.8 -> 7.4 s).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.files.maxPartitionBytes", "134217728")
       .config("spark.sql.session.timeZone", "UTC")

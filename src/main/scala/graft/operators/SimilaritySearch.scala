@@ -258,12 +258,13 @@ object SimilaritySearch {
     * A probe searches only its `nprobe` best lists, then exact-cosine
     * rerank + per-probe top-k.
     *
-    * Scale shape: centroids are tiny (nlist ~ sqrt(N)) -> broadcast to
-    * the corpus scan for assignment (one pass, no corpus shuffle); the
-    * probe side is small -> broadcast to the assigned corpus, so the
-    * search is again one corpus-side scan filtered to ~nprobe/nlist of
-    * the data. Nothing is ever all-pairs, and the corpus is never
-    * range/hash-shuffled on the low-cardinality list key.
+    * Scale shape: centroids are tiny (nlist ~ sqrt(N)) and ride in the
+    * corpus scan as data ([[nearest]]: one projection, no join, no
+    * corpus shuffle); each probe's `nprobe` best lists are one
+    * [[nearestN]] projection, and the small probe side is broadcast to
+    * the assigned corpus, so the search is one corpus-side scan
+    * filtered to ~nprobe/nlist of the data. Nothing is ever all-pairs,
+    * and the corpus is never shuffled on the low-cardinality list key.
     *
     * Ranking uses ROUNDED cosines (6 dp) with id tiebreaks everywhere
     * so list assignment and top-k are deterministic and engine-portable.
@@ -271,19 +272,17 @@ object SimilaritySearch {
   def topKCosineIvf(probes: DataFrame, probeIdCol: String,
                     corpus: DataFrame, idCol: String, vecCol: String,
                     k: Int, nlist: Int = 16, nprobe: Int = 4,
-                    centroids: Option[DataFrame] = None): DataFrame = {
+                    centroids: Option[Seq[(Long, Seq[Double])]] = None): DataFrame = {
     require(nprobe <= nlist, "topKCosineIvf: nprobe must be <= nlist")
-    guardFlatExplicit(corpus, vecCol, nlist, "topKCosineIvf")
     // training is deterministic, so a caller that also TUNES (the
     // ann_eval_tuned shape: autoNprobe + the tuned search) trains once
     // and passes the codebook to both — the round-15 ann_eval_twolevel
     // discipline at the flat tier
-    val cents = centroids.getOrElse(
-      lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters))
-    val assigned = bestLists(corpus, cents, idCol, vecCol, 1)
-      .select(col("_mid").as("_cid"), col("_mv").as("_cv"), col("_list"))
-    val probeLists = bestLists(probes, cents, probeIdCol, vecCol, nprobe)
-      .select(col("_mid").as("_pid"), col("_mv").as("_pv"), col("_list"))
+    val book = Codebook.flat(centroids.getOrElse(trainFlat(corpus, idCol, vecCol, nlist)))
+    val assigned = corpus.select(col(idCol).as("_cid"), col(vecCol).as("_cv"),
+      nearest(col(vecCol), book)("id").as("_list"))
+    val probeLists = withLists(
+      probes.select(col(probeIdCol).as("_pid"), col(vecCol).as("_pv")), "_pv", book, nprobe)
     assigned.join(broadcast(probeLists), "_list")
       .filter(col("_pid") =!= col("_cid"))
       .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
@@ -297,8 +296,8 @@ object SimilaritySearch {
     * [[LloydIters]] rounds, so a caller that tunes AND searches trains
     * once and passes the same codebook to both. */
   def trainIvf(corpus: DataFrame, idCol: String, vecCol: String,
-               nlist: Int = 16): DataFrame =
-    lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters)
+               nlist: Int = 16): Seq[(Long, Seq[Double])] =
+    trainFlat(corpus, idCol, vecCol, nlist)
 
   /** Recall-targeted nprobe autotuning — the accept/reject knob a
     * pipeline turns before trusting an IVF index: the smallest nprobe
@@ -316,16 +315,18 @@ object SimilaritySearch {
     * every list is searched and recall is 1.0, so the search always
     * terminates with the target met or the full scan reached.
     *
-    * Cost shape: centroids train once, the corpus assigns once (the
-    * assigned frame is persisted and the exact top-k collected, both
-    * reused by every ladder evaluation); each evaluation re-ranks only the
-    * candidate lists of a SAMPLE-sized probe set — production tunes on
-    * a held-out probe sample, never the query stream. */
+    * Cost shape: centroids train once, the corpus assigns once and every
+    * probe ranks all lists once (both frames persisted, and the exact
+    * top-k collected, all reused by every ladder evaluation); a ladder
+    * step searches a PREFIX of each probe's ranking — nprobe only grows
+    * along the ladder, so nothing is re-ranked — and re-ranks only the
+    * candidates of a SAMPLE-sized probe set — production tunes on a
+    * held-out probe sample, never the query stream. */
   def autoNprobe(probes: DataFrame, probeIdCol: String,
                  corpus: DataFrame, idCol: String, vecCol: String,
                  k: Int, nlist: Int = 16,
                  targetRecall: Double = 0.9,
-                 centroids: Option[DataFrame] = None): (Int, Double) = {
+                 centroids: Option[Seq[(Long, Seq[Double])]] = None): (Int, Double) = {
     val (np, rec, _) = autoNprobeStats(probes, probeIdCol, corpus, idCol,
       vecCol, k, nlist, targetRecall, centroids, collectStats = false)
     (np, rec)
@@ -343,37 +344,36 @@ object SimilaritySearch {
       corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, nlist: Int = 16,
       targetRecall: Double = 0.9,
-      centroids: Option[DataFrame] = None,
+      centroids: Option[Seq[(Long, Seq[Double])]] = None,
       collectStats: Boolean = true): (Int, Double, Seq[(Long, Long)]) = {
     import org.apache.spark.storage.StorageLevel
-    guardFlatExplicit(corpus, vecCol, nlist, "autoNprobe")
-    val cents = centroids.getOrElse(
-      lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters))
-    val assigned = bestLists(corpus, cents, idCol, vecCol, 1)
-      .select(col("_mid").as("_cid"), col("_mv").as("_cv"), col("_list"))
+    val book = Codebook.flat(centroids.getOrElse(trainFlat(corpus, idCol, vecCol, nlist)))
+    val assigned = corpus.select(col(idCol).as("_cid"), col(vecCol).as("_cv"),
+        nearest(col(vecCol), book)("id").as("_list"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val pb = probes.select(col(probeIdCol).as("_pid0"), col(vecCol).as("_pv0"))
-    val pids = pb.select(col("_pid0")).collect().map(_.getLong(0)).toSeq.sorted
+    // every probe's lists, best first, ranked once for the whole ladder
+    val ranked = probes.select(col(probeIdCol).as("_pid"), col(vecCol).as("_pv"),
+        nearestN(col(vecCol), book, lit(0L), nlist)("id").as("_lists"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val pids = ranked.select(col("_pid")).collect().map(_.getLong(0)).toSeq.sorted
     require(pids.nonEmpty, "autoNprobe: empty probe set")
     // exact arm: brute-force top-k per probe (the ann_eval exact arm —
     // one corpus scan against broadcast probes, never shuffled)
     val exact = pairSet(corpus.select(col(idCol).as("_cid"), col(vecCol).as("_ev"))
-      .crossJoin(broadcast(pb))
-      .filter(col("_cid") =!= col("_pid0"))
-      .select(col("_pid0").as("_pid"), col("_cid"),
-        round(cosine(col("_ev"), col("_pv0")), 6).as("_ecos"))
+      .crossJoin(broadcast(ranked.select(col("_pid"), col("_pv"))))
+      .filter(col("_cid") =!= col("_pid"))
+      .select(col("_pid"), col("_cid"),
+        round(cosine(col("_ev"), col("_pv")), 6).as("_ecos"))
       .transform(topN("_pid", "_ecos", "_cid", k, "_erk"))
       .select(col("_pid"), col("_cid")))
-    def ivfAt(p: Int): DataFrame = {
-      val probeLists = bestLists(pb, cents, "_pid0", "_pv0", p)
-        .select(col("_mid").as("_pid"), col("_mv").as("_pv"), col("_list"))
-      assigned.join(broadcast(probeLists), "_list")
+    def ivfAt(p: Int): DataFrame =
+      assigned.join(broadcast(ranked.select(col("_pid"), col("_pv"),
+          explode(slice(col("_lists"), 1, p)).as("_list"))), "_list")
         .filter(col("_pid") =!= col("_cid"))
         .select(col("_pid"), col("_cid"),
           round(cosine(col("_cv"), col("_pv")), 6).as("_icos"))
         .transform(topN("_pid", "_icos", "_cid", k, "_irk"))
         .select(col("_pid"), col("_cid"))
-    }
     val memo = scala.collection.mutable.Map.empty[Int, Map[Long, Long]]
     def hitsAt(p: Int) = memo.getOrElseUpdate(p, probeHits(exact, ivfAt(p)))
     val ladder = (Iterator.iterate(1)(_ * 2).takeWhile(_ < nlist).toVector :+ nlist)
@@ -387,7 +387,7 @@ object SimilaritySearch {
     val res = (ladder(lo), rec(lo))
     val stats = if (!collectStats) Seq.empty[(Long, Long)] else
       pids.map(pid => (pid, hitsAt(res._1).getOrElse(pid, 0L)))
-    assigned.unpersist()
+    assigned.unpersist(); ranked.unpersist()
     (res._1, res._2, stats)
   }
 
@@ -435,8 +435,8 @@ object SimilaritySearch {
     * ONE corpus pass for the WHOLE ladder (the round-14 walk re-ranked
     * leaves and re-joined the corpus per step — up to
     * log2(coarseK·subK)+1 corpus-keyed joins): every ladder step's leaf
-    * pick is derived from the probe×leaf frame (sample-sized — ranked
-    * once per step on the driver-safe small side), and the (probe,
+    * pick is the search's own probe routing ([[probeLeaves]] — a
+    * projection over the sample-sized probe side), and the (probe,
     * corpus) cosine frame is scored ONCE and PERSISTED (it is exactly
     * the exact arm's frame, tagged with each corpus row's leaf). The
     * walk still early-stops step by step — each step's recall is a
@@ -504,10 +504,6 @@ object SimilaritySearch {
     require(cb.coarse.size <= coarseK && cb.leaves.size <= coarseK * subK,
       "autoNprobeTwoLevel: codebook shape exceeds (coarseK, subK)")
     val ladder = twoLevelLadder(coarseK, subK)
-    // probe×leaf frame: sample-sized (nProbes × coarseK·subK), so
-    // ranking it once per ladder step costs nothing corpus-shaped
-    val probeLeafAll = probeLeafScores(probeD, cb).drop("_pv")
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // the ONE corpus-side pass: every (probe, corpus row) cosine —
     // exactly the exact arm's frame — tagged with the row's leaf
     val scored = assignLeaves(corpus, idCol, vecCol, cb)
@@ -519,10 +515,10 @@ object SimilaritySearch {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val exact = pairSet(scored.transform(topN("_pid", "_icos", "_cid", k, "_erk"))
       .select(col("_pid"), col("_cid")))
-    // the step's approximate top-k, from the persisted frames — the
+    // the step's approximate top-k, from the persisted frame — the
     // leaf pick is sample-sized, broadcast
     def ivfAt(cells: Int, leaves: Int): DataFrame =
-      scored.join(broadcast(pickLeaves(probeLeafAll, cells, leaves)
+      scored.join(broadcast(probeLeaves(probeD, cb, cells, leaves)
           .select(col("_pid"), col("_leaf"))), Seq("_pid", "_leaf"))
         .transform(topN("_pid", "_icos", "_cid", k, "_irk"))
         .select(col("_pid"), col("_cid"))
@@ -545,33 +541,20 @@ object SimilaritySearch {
     }
     val stats = if (!collectStats) Seq.empty[(Long, Long)] else
       pids.map(pid => (pid, hitsAt(out._1).getOrElse(pid, 0L)))
-    probeLeafAll.unpersist(); scored.unpersist()
+    scored.unpersist()
     (out._1, out._2, stats)
   }
 
-  /** Probe-side routing at the two-level tier: every (probe, leaf)
-    * pair's 6-dp cosine `_lcos`, tagged with the probe's rank `_crk` of
-    * the leaf's parent cell by (cosine desc, cell id). Probes ×
-    * coarseK·subK rows: (_pid, _pv, _crk, _leaf, _lcos). */
-  private def probeLeafScores(probeD: DataFrame, cb: TwoLevelCodebook): DataFrame = {
-    val spark = probeD.sparkSession
-    import spark.implicits._
-    probeD.crossJoin(broadcast(cb.coarse.toDF("_ccell", "_ccv")))
-      .select(col("_pid"), col("_pv"), col("_ccell"),
-        round(cosine(col("_pv"), col("_ccv")), 6).as("_ccos"))
-      .withColumn("_crk", row_number().over(
-        Window.partitionBy(col("_pid")).orderBy(col("_ccos").desc, col("_ccell"))))
-      .select(col("_pid"), col("_pv"), col("_ccell").as("_cell"), col("_crk"))
-      .join(broadcast(cb.leaves.toDF("_cell", "_leaf", "_lv")), Seq("_cell"))
-      .select(col("_pid"), col("_pv"), col("_crk"), col("_leaf"),
-        round(cosine(col("_pv"), col("_lv")), 6).as("_lcos"))
+  /** Probe-side routing at the two-level tier, (_pid, _pv, _leaf): a
+    * probe searching (cells, leaves) visits its `leaves` best leaves
+    * among its `cells` best cells — [[nearestN]] over the coarse book,
+    * then over the leaf book with those cells as the groups. */
+  private def probeLeaves(probeD: DataFrame, cb: TwoLevelCodebook,
+                          cells: Int, leaves: Int): DataFrame = {
+    val near = nearestN(col("_pv"), cb.coarseBook, lit(0L), cells)("id")
+    probeD.select(col("_pid"), col("_pv"),
+      explode(nearestN(col("_pv"), cb.leafBook, near, leaves)("id")).as("_leaf"))
   }
-
-  /** A probe searching (cells, leaves) visits, within its `cells` best
-    * cells, its `leaves` best leaves by (cosine desc, leaf id). */
-  private def pickLeaves(scores: DataFrame, cells: Int, leaves: Int): DataFrame =
-    scores.filter(col("_crk") <= cells)
-      .transform(topN("_pid", "_lcos", "_leaf", leaves, "_lrk"))
 
   /** Each `part` group's `n` best rows by (`score` desc, `id`), ranked
     * 1..n in column `rank` — the rounded-score, id-tiebreak top-n every
@@ -659,60 +642,16 @@ object SimilaritySearch {
     * less, and keeping it keeps every derived shape where it was. */
   val FlatAssignRowBudget: Long = 1000000000L
 
-  /** Codebook size up to which the flat tier needs no size check:
-    * [[deriveTwoLevel]] keeps every corpus whose derived nlist is at
-    * most this flat whatever [[FlatAssignRowBudget]] says, and
-    * [[guardFlatExplicit]] skips its corpus count (the registered
-    * queries' nlist=16 pays no extra scan). 32 was the largest codebook
-    * the old literal-fold assignment ran; it stays the threshold so no
-    * derived shape or refusal moves. */
+  /** Codebook size up to which [[deriveTwoLevel]] keeps every corpus
+    * flat whatever [[FlatAssignRowBudget]] says. 32 was the largest
+    * codebook the old literal-fold assignment ran; it stays the
+    * threshold so no derived shape moves. */
   private[graft] val SmallFlatNlist: Int = 32
 
-  /** Bytes one FAT candidate row costs through [[bestLists]]'s window
-    * sort, where the d-dim double vector rides the rank: ~8·d payload
-    * + ~48 B row overhead (d=64 → ~560 B, the regime the measured
-    * ~2 TB / 4.1e9-row death calibrates). */
+  /** Bytes one fat (id, d-dim vector) row costs in memory: ~8·d payload
+    * + ~48 B row overhead (d=64 → ~560 B) — the per-row estimate
+    * [[BroadcastIncByteBudget]] sizes the increment broadcast with. */
   def fatAssignBytesPerRow(d: Int): Long = 48L + 8L * d
-
-  /** Loud fail-fast for the EXPLICIT-nlist IVF paths — the
-    * Dedup.refuseForScratch pattern applied to the ANN family:
-    * [[bestLists]] materializes N·nlist fat candidate rows through its
-    * window sort, and when that mass cannot fit the scratch volume the
-    * JVM dies at ENOSPC mid-sort (the same death measured for the old
-    * exploded flat assignment at 1M×4096, TwoLevelScale's dead arm).
-    * Only counts past [[SmallFlatNlist]], so the registered small-nlist
-    * queries never pay the count or dimension scans. */
-  private def guardFlatExplicit(corpus: DataFrame, vecCol: String, nlist: Int,
-                                tag: String): Unit =
-    if (nlist > SmallFlatNlist) {
-      val n = corpus.count()
-      val bytesPerRow = fatAssignBytesPerRow(dimOf(corpus, vecCol))
-      refuseOverScratch(corpus.sparkSession, n.toDouble * nlist, bytesPerRow) {
-        (mass, predicted, budget) =>
-          f"[graft-ann] $tag REFUSED: explicit nlist=$nlist on $n vectors " +
-            f"materializes ~$mass%.3g candidate rows (~$predicted GiB at " +
-            s"$bytesPerRow B/row) against a ~$budget GiB " +
-            "scratch budget (half of free spark.local.dir). Running anyway " +
-            "would ENOSPC-die mid-sort and can take the executor JVM with " +
-            "it. Use the hierarchical tier — assignClustersTwoLevel / " +
-            "semanticDedupTwoLevel with coarseK·subK >= nlist leaves " +
-            "(assignment mass N·(coarseK+subK), flat at every measured " +
-            "decade) — or the AutoNlist front door, which dispatches " +
-            "itself past this cliff."
-      }
-    }
-
-  /** Throws `msg(rows, predicted GiB, budget GiB)` when `rows` ×
-    * `bytesPerRow` exceeds the scratch budget: half of free
-    * spark.local.dir, shared with the dedup family's guard (and its
-    * test override). */
-  private def refuseOverScratch(spark: org.apache.spark.sql.SparkSession,
-      rows: Double, bytesPerRow: Long)(msg: (Double, Long, Long) => String): Unit = {
-    val budget = Dedup.usableScratchBytes(spark) * Dedup.MaxScratchFraction
-    if (rows > 0 && rows * bytesPerRow > budget)
-      throw new IllegalStateException(msg(rows,
-        (rows * bytesPerRow / (1L << 30)).toLong, (budget / (1L << 30)).toLong))
-  }
 
   /** Bytes one row of [[autoNprobeTwoLevel]]'s persisted scored frame
     * costs on scratch: the frame is SLIM by construction — (pid, cid,
@@ -723,26 +662,29 @@ object SimilaritySearch {
   val TwoLevelScoredBytesPerRow: Long = 64L
 
   /** Loud fail-fast for [[autoNprobeTwoLevel]]'s probes × corpus
-    * ground-truth persist — the [[guardFlatExplicit]] contract
-    * with the remedy this surface actually has: fewer probes. At the
+    * ground-truth persist — the Dedup.refuseForScratch pattern, with
+    * the remedy this surface actually has: fewer probes. At the
     * registered queries' 5 probes the frame is probe-bounded and
     * trivial; at [[sampleProbes]]' documented n=64 on a 10⁹-row corpus
-    * it is a 6.4e10-row spill that every other path's guard would have
-    * refused. */
+    * it is a 6.4e10-row spill. */
   private[graft] def refuseForScoredScratch(
       spark: org.apache.spark.sql.SparkSession,
-      nProbes: Long, nCorpus: Long): Unit =
-    refuseOverScratch(spark, nProbes.toDouble * nCorpus, TwoLevelScoredBytesPerRow) {
-      (mass, predicted, budget) =>
+      nProbes: Long, nCorpus: Long): Unit = {
+    // the dedup family's budget (and its test override)
+    val budget = Dedup.usableScratchBytes(spark) * Dedup.MaxScratchFraction
+    val rows = nProbes.toDouble * nCorpus
+    val gib = (b: Double) => (b / (1L << 30)).toLong
+    if (rows > 0 && rows * TwoLevelScoredBytesPerRow > budget)
+      throw new IllegalStateException(
         f"[graft-ann] autoNprobeTwoLevel REFUSED: $nProbes probes × " +
-          f"$nCorpus corpus rows materialize a ~$mass%.3g-row exact-recall " +
-          f"frame (~$predicted GiB at $TwoLevelScoredBytesPerRow B/row) " +
-          s"against a ~$budget GiB scratch budget " +
+          f"$nCorpus corpus rows materialize a ~$rows%.3g-row exact-recall " +
+          f"frame (~${gib(rows * TwoLevelScoredBytesPerRow)} GiB at $TwoLevelScoredBytesPerRow B/row) " +
+          s"against a ~${gib(budget)} GiB scratch budget " +
           "(half of free spark.local.dir). Running anyway would ENOSPC-die " +
           "mid-persist. Tune on FEWER probes — sampleProbes(n) with a " +
           "smaller n (recall estimates converge fast in the probe count) — " +
-          "or free scratch space."
-    }
+          "or free scratch space.")
+  }
 
   /** The tier ABOVE the flat quantizer: dispatch to two-level and
     * return Some((coarseK, subK)) when EITHER (a) the corpus wants
@@ -1024,11 +966,9 @@ object SimilaritySearch {
     val assigned = assignLeaves(corpus, idCol, vecCol, cb)
       .select(col("_vid").as("_cid"), col("_vv").as("_cv"), col("_leaf"))
     val probeD = probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
-    val probeLeaves = pickLeaves(probeLeafScores(probeD, cb), nprobeCells, nprobeLeaves)
-      .select(col("_pid"), col("_pv"), col("_leaf"))
-    // candidates = those leaves' inverted lists (the assignment carries
-    // each vector, so no corpus re-join); exact rerank
-    assigned.join(broadcast(probeLeaves), Seq("_leaf"))
+    // candidates = the routed leaves' inverted lists (the assignment
+    // carries each vector, so no corpus re-join); exact rerank
+    assigned.join(broadcast(probeLeaves(probeD, cb, nprobeCells, nprobeLeaves)), Seq("_leaf"))
       .filter(col("_pid") =!= col("_cid"))
       .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
         round(cosine(col("_cv"), col("_pv")), 6).as("cos"))
@@ -1193,19 +1133,22 @@ object SimilaritySearch {
       if (metaDf.columns.contains("groups"))
         meta.getInt(meta.fieldIndex("groups"))
       else SemanticStoreGroups
-    def codebook(path: String): Seq[(Long, Seq[Double])] =
-      spark.read.parquet(path).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toVector: Seq[Double]))
-        .sortBy(_._1).toSeq
     val two = if (!isTwoLevel) None else Some(TwoLevelCodebook(
-      codebook(s"$dir/coarse"),
+      readCodebook(spark, s"$dir/coarse"),
       spark.read.parquet(s"$dir/leaves").collect()
         .map(r => (r.getLong(0), r.getLong(1),
           r.getSeq[Double](2).toVector: Seq[Double]))
         .sortBy(l => (l._1, l._2)).toSeq))
-    SemanticIndex(codebook(s"$dir/cents"),
+    SemanticIndex(readCodebook(spark, s"$dir/cents"),
       spark.read.parquet(s"$dir/kept"), builtN, two, groups = grps)
   }
+
+  /** A stored (id, vector) codebook table, sorted by id. */
+  private def readCodebook(spark: org.apache.spark.sql.SparkSession,
+                           path: String): Seq[(Long, Seq[Double])] =
+    spark.read.parquet(path).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toVector: Seq[Double]))
+      .sortBy(_._1).toSeq
 
   /** Cluster GROUPS the persisted kept store is bucketed into
     * ([[writeSemanticIndex]] partitions `kept` by
@@ -1445,15 +1388,6 @@ object SimilaritySearch {
       seeds, l2 = false, iters).map(e => (e._2, e._3))
   }
 
-  /** [[trainFlat]] as a (_cent_id, _cent_vec) frame — the broadcast
-    * side of [[bestLists]]. */
-  private[graft] def lloydCentroids(corpus: DataFrame, idCol: String,
-      vecCol: String, nlist: Int, iters: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    trainFlat(corpus, idCol, vecCol, nlist, iters).toDF("_cent_id", "_cent_vec")
-  }
-
   /** struct(score, id) of `vec`'s nearest centroid within its `group`
     * of `book` — [[NearestCentroidExpr]]: 6-dp rounded cosine argmax
     * (or squared-L2 argmin when `l2`), smallest id on ties. The
@@ -1462,6 +1396,17 @@ object SimilaritySearch {
   private def nearest(vec: Column, book: Codebook, group: Column = lit(0L),
                       l2: Boolean = false): Column =
     NativeExpressions.nearestCentroid(vec, group, book, l2)
+
+  /** array<struct(score, id)> of `vec`'s `n` nearest centroids over the
+    * union of `groups` (a long key or an array of keys), best first —
+    * [[nearest]]'s kernel and order. */
+  private def nearestN(vec: Column, book: Codebook, groups: Column, n: Int): Column =
+    NativeExpressions.nearestCentroids(vec, groups, book, n, l2 = false)
+
+  /** `df` once per each of its `n` nearest flat lists (`_list`), ranked
+    * by [[nearestN]] over its vector column `vec`. */
+  private def withLists(df: DataFrame, vec: String, book: Codebook, n: Int): DataFrame =
+    df.withColumn("_list", explode(nearestN(col(vec), book, lit(0L), n)("id")))
 
   /** An embedding column cast element-wise to double. */
   private def asDoubles(vecCol: String): Column =
@@ -1498,8 +1443,7 @@ object SimilaritySearch {
                           coarseK: Int = 12): DataFrame = {
     require(nprobe <= nlist, "topKCosineIvfRerank: nprobe must be <= nlist")
     require(coarseK >= k, "topKCosineIvfRerank: coarseK must be >= k")
-    guardFlatExplicit(corpus, vecCol, nlist, "topKCosineIvfRerank")
-    val cents = lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters)
+    val book = Codebook.flat(trainFlat(corpus, idCol, vecCol, nlist))
     // int8 reconstruction qv*qscale as a double array: the coarse store
     val recon = corpus.select(col(idCol).as("_mid"), asDoubles(vecCol).as("_fv"))
       .withColumn("_qscale",
@@ -1507,13 +1451,10 @@ object SimilaritySearch {
                 then 1.0 else round(array_max(transform(_fv, x -> abs(x))) / 127.0, 9) end"""))
       .withColumn("_mv",
         expr("transform(_fv, x -> cast(round(x / _qscale, 0) as double) * _qscale)"))
-    val assigned = bestLists(recon.select(col("_mid"), col("_mv")),
-        cents, "_mid", "_mv", 1)
-      .select(col("_mid").as("_cid"), col("_mv").as("_cqv"), col("_list"))
-    val probeLists = bestLists(probes.select(col(probeIdCol).as("_pid0"),
-        asDoubles(vecCol).as("_pv0")),
-        cents, "_pid0", "_pv0", nprobe)
-      .select(col("_mid").as("_pid"), col("_mv").as("_pv"), col("_list"))
+    val assigned = recon.select(col("_mid").as("_cid"), col("_mv").as("_cqv"),
+      nearest(col("_mv"), book)("id").as("_list"))
+    val probeLists = withLists(probes.select(col(probeIdCol).as("_pid"),
+      asDoubles(vecCol).as("_pv")), "_pv", book, nprobe)
     val coarse = assigned.join(broadcast(probeLists), "_list")
       .filter(col("_pid") =!= col("_cid"))
       .select(col("_pid"), col("_cid"),
@@ -1574,7 +1515,7 @@ object SimilaritySearch {
     * so stored codes tiebreak like the oracle's ORDER BY dist,
     * cent_id), and the coded corpus (one row per vector: coarse list +
     * m small code ints, NO floats — the hot store). */
-  case class PqIndex(cents: DataFrame,
+  case class PqIndex(cents: Seq[(Long, Seq[Double])],
                      codebooks: Seq[Seq[(Long, Seq[Double])]],
                      coded: DataFrame, m: Int, sub: Int)
 
@@ -1588,9 +1529,8 @@ object SimilaritySearch {
                    pqIters: Int = 1): PqIndex = {
     val d = dimOf(corpus, vecCol)
     require(d % m == 0, s"buildPqIndex: dim $d must split into $m subspaces")
-    guardFlatExplicit(corpus, vecCol, nlist, "buildPqIndex")
     val sub = d / m
-    val cents = lloydCentroids(corpus, idCol, vecCol, nlist, LloydIters)
+    val cents = trainFlat(corpus, idCol, vecCol, nlist)
     // unit-normalized, 6-dp re-anchored working vectors
     val ncorp = corpus.select(col(idCol).as("_id0"), asDoubles(vecCol).as("_v0"))
       .withColumn("_nrm", sqrt(dotd(col("_v0"), col("_v0"))))
@@ -1628,13 +1568,10 @@ object SimilaritySearch {
     encode(df, idCol, vecCol, index.cents, index.codebooks, index.sub)
 
   private def encode(df: DataFrame, idCol: String, vecCol: String,
-                     cents: DataFrame, cbs: Seq[Seq[(Long, Seq[Double])]],
+                     cents: Seq[(Long, Seq[Double])], cbs: Seq[Seq[(Long, Seq[Double])]],
                      sub: Int): DataFrame = {
-    // the coarse list is the in-scan nearest centroid: only codes follow
-    // the assignment here, the case [[bestLists]]' measurement favours
-    val coarse = Codebook.flat(cents.collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq)
     val assigned = df.select(col(idCol).as("_cid"), asDoubles(vecCol).as("_cfv"))
-      .withColumn("_list", nearest(col("_cfv"), coarse)("id"))
+      .withColumn("_list", nearest(col("_cfv"), Codebook.flat(cents))("id"))
       .withColumn("_nrm", sqrt(dotd(col("_cfv"), col("_cfv"))))
       .withColumn("_xnv", expr("transform(_cfv, x -> round(x / _nrm, 6))"))
     // a code is the 1-based POSITION in the cent_id-sorted codebook, so
@@ -1647,12 +1584,14 @@ object SimilaritySearch {
           .cast("int").as(s"_k$s")): _*)
   }
 
-  /** Persist a [[PqIndex]]: three parquet tables (cents, codebooks as
-    * (space, pos, cent_id, cv) rows, coded corpus). */
+  /** Persist a [[PqIndex]]: three parquet tables (cents as (_cent_id,
+    * _cent_vec) rows, codebooks as (space, pos, cent_id, cv) rows, coded
+    * corpus). */
   def writePqIndex(index: PqIndex, dir: String): Unit = {
-    val spark = index.cents.sparkSession
+    val spark = index.coded.sparkSession
     import spark.implicits._
-    index.cents.write.mode("overwrite").parquet(s"$dir/cents")
+    index.cents.toDF("_cent_id", "_cent_vec")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/cents")
     index.codebooks.zipWithIndex.flatMap { case (cb, s) =>
       cb.zipWithIndex.map { case ((cid, v), i) => (s, i + 1, cid, v) }
     }.toDF("space", "pos", "cent_id", "cv")
@@ -1673,7 +1612,7 @@ object SimilaritySearch {
       cbRows.filter(_._1 == s).sortBy(_._2).map(r => (r._3, r._4)).toSeq
     }
     val sub = cbs.head.head._2.size
-    PqIndex(spark.read.parquet(s"$dir/cents"),
+    PqIndex(readCodebook(spark, s"$dir/cents"),
       cbs, spark.read.parquet(s"$dir/coded"), m, sub)
   }
 
@@ -1689,11 +1628,10 @@ object SimilaritySearch {
     require(coarseK >= k, "searchPqIndex: coarseK must be >= k")
     val (m, sub) = (index.m, index.sub)
     val probeD = probes.select(col(probeIdCol).as("_pid0"), asDoubles(vecCol).as("_pv0"))
-    val probeLists = bestLists(probeD, index.cents, "_pid0", "_pv0", nprobe)
-      .select(col("_mid").as("_pid"), col("_mv").as("_pfv"), col("_list"))
-      .withColumn("_pnrm", sqrt(dotd(col("_pfv"), col("_pfv"))))
-      .withColumn("_qnv", expr("transform(_pfv, x -> round(x / _pnrm, 6))"))
-      .select(col("_pid"), col("_list"), col("_qnv"))
+    val probeLists = withLists(probeD, "_pv0", Codebook.flat(index.cents), nprobe)
+      .withColumn("_pnrm", sqrt(dotd(col("_pv0"), col("_pv0"))))
+      .select(col("_pid0").as("_pid"), col("_list"),
+        expr("transform(_pv0, x -> round(x / _pnrm, 6))").as("_qnv"))
     // ADC: fixed s = 0..m-1 summation order; the codebook lookup index
     // (_k<s>) is never NULL, so element_at's NULL-index codegen hazard
     // (see ann_eval) cannot fire here
@@ -1712,27 +1650,6 @@ object SimilaritySearch {
       .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
         round(cosine(col("_cfv"), col("_pv0")), 6).as("cos"))
       .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
-  }
-
-  /** Each row of `df` with its `n` highest-cosine centroids (rounded
-    * cosines, id tiebreaks — deterministic). Kept as the crossJoin +
-    * WindowGroupLimit formulation on BOTH sides, by measurement:
-    * folding the corpus-side argmax into the scan fuses the assignment
-    * with the probe join and per-pair rerank cosines into one
-    * scan-bound stage and measured 2.3x SLOWER at sf0.1 and 30x
-    * (ann_ivf_rerank 1.9s -> 4.5s) — the window's exchange is what
-    * re-spreads the pair-cosine work across cores, and WindowGroupLimit
-    * already prunes the 16x candidate rows before the final sort. The
-    * in-scan argmax wins only when nothing heavy follows the assignment
-    * (embed_clusters: 3x faster at 30x). */
-  private def bestLists(df: DataFrame, cents: DataFrame,
-                        id: String, vec: String, n: Int): DataFrame = {
-    df.select(col(id).as("_mid"), col(vec).as("_mv"))
-      .crossJoin(broadcast(cents))
-      .select(col("_mid"), col("_mv"), col("_cent_id"),
-        round(cosine(col("_mv"), col("_cent_vec")), 6).as("_mcos"))
-      .transform(topN("_mid", "_mcos", "_cent_id", n, "_rk"))
-      .select(col("_mid"), col("_mv"), col("_cent_id").as("_list"))
   }
 
   /** Embedding dimensionality, from the first row (driver-side, one

@@ -3,8 +3,8 @@ package org.apache.spark.sql.graft
 import graft.functions.TextFunctions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -74,6 +74,13 @@ object NativeExpressions {
   def nearestCentroid(v: Column, group: Column, codebook: Codebook, l2: Boolean): Column =
     ExpressionUtils.column(NearestCentroidExpr(
       ExpressionUtils.expression(v), ExpressionUtils.expression(group), codebook, l2))
+
+  /** array<struct(score, id)> of `v`'s `n` nearest centroids over the
+    * union of `groups` (a long key or an array of keys) of `codebook`. */
+  def nearestCentroids(v: Column, groups: Column, codebook: Codebook, n: Int,
+                       l2: Boolean): Column =
+    ExpressionUtils.column(NearestCentroidExpr(
+      ExpressionUtils.expression(v), ExpressionUtils.expression(groups), codebook, l2, Some(n)))
 
   def signLshBucket(v: Column, planes: Array[Array[Double]]): Column =
     ExpressionUtils.column(SignLshBucketExpr(
@@ -787,16 +794,39 @@ final class Codebook private (val dim: Int, vecs: Array[Double], ids: Array[Long
   }
   private val rootSq: Array[Double] = sq.map(java.lang.Math.sqrt)
 
+  /** Does group `key` hold a centroid? */
+  def hasGroup(key: Long): Boolean = java.util.Arrays.binarySearch(groupKeys, key) >= 0
+
   /** (6-dp rounded score, id) of `v`'s nearest centroid in group `key`,
-    * or null when the group has no centroid. Cosine takes the argmax,
-    * squared L2 — `(x·x − 2·x·c) + c·c` — the argmin; equal scores go
-    * to the smallest id. A null, length-mismatched or null-element
-    * vector, or a zero cosine denominator, scores null: a null loses
-    * the argmax and wins the argmin, and NaN ranks above every number
-    * (Spark's ordering of struct(score, id)). */
+    * or null when the group has no centroid: [[nearestN]] at n = 1. */
   def nearest(v: ArrayData, vFloat: Boolean, key: Long, l2: Boolean): InternalRow = {
-    val g = java.util.Arrays.binarySearch(groupKeys, key)
-    if (g < 0 || offsets(g) == offsets(g + 1)) return null
+    val t = top(v, vFloat, Array(key), 1, l2)
+    if (t.count == 0) null else t.entry(0)
+  }
+
+  /** The `n` best (6-dp rounded score, id) entries over the union of the
+    * groups `keys`, best first; keys with no centroid add nothing.
+    * Cosine ranks score descending, squared L2 — `(x·x − 2·x·c) + c·c` —
+    * ascending; equal scores go to the smaller id. A null,
+    * length-mismatched or null-element vector, or a zero cosine
+    * denominator, scores null. Nulls and NaNs rank as Spark orders
+    * doubles (null below every number, NaN above), so the entries and
+    * their order are exactly a `row_number` window's over
+    * (score desc nulls last, id) — for L2, (score asc nulls first, id). */
+  def nearestN(v: ArrayData, vFloat: Boolean, keys: ArrayData, n: Int, l2: Boolean): ArrayData = {
+    val ks = (0 until keys.numElements()).filterNot(keys.isNullAt).map(keys.getLong).distinct
+    val t = top(v, vFloat, ks.toArray, n, l2)
+    new GenericArrayData(Array.tabulate[Any](t.count)(t.entry))
+  }
+
+  /** [[nearestN]] over the one group `key`. */
+  def nearestN(v: ArrayData, vFloat: Boolean, key: Long, n: Int, l2: Boolean): ArrayData =
+    nearestN(v, vFloat, new GenericArrayData(Array[Any](key)), n, l2)
+
+  /** The one scoring loop: every centroid of the groups `keys` (distinct)
+    * offered to an n-slot ranking under [[Top]]'s comparator. */
+  private def top(v: ArrayData, vFloat: Boolean, keys: Array[Long], n: Int, l2: Boolean): Top = {
+    require(n >= 1, "Codebook: n must be >= 1")
     var x: Array[Double] = null
     if (v != null && v.numElements() == dim) {
       x = new Array[Double](dim)
@@ -809,35 +839,64 @@ final class Codebook private (val dim: Int, vecs: Array[Double], ids: Array[Long
     var xx = 0.0
     if (x != null) { var i = 0; while (i < dim) { xx += x(i) * x(i); i += 1 } }
     val rootXx = java.lang.Math.sqrt(xx)
-    var best = -1
-    var bestNull = true
-    var bestScore = 0.0
-    var j = offsets(g)
-    while (j < offsets(g + 1)) {
-      var isNull = x == null
-      var s = 0.0
-      if (!isNull) {
-        var xc = 0.0
-        var i = 0
-        val off = j * dim
-        while (i < dim) { xc += x(i) * vecs(off + i); i += 1 }
-        if (l2) s = Codebook.round6((xx - 2.0 * xc) + sq(j))
-        else {
-          val denom = rootXx * rootSq(j)
-          if (denom == 0.0) isNull = true else s = Codebook.round6(xc / denom)
+    val t = new Top(n, l2)
+    var k = 0
+    while (k < keys.length) {
+      val g = java.util.Arrays.binarySearch(groupKeys, keys(k))
+      var j = if (g < 0) 0 else offsets(g)
+      val end = if (g < 0) 0 else offsets(g + 1)
+      while (j < end) {
+        var isNull = x == null
+        var s = 0.0
+        if (!isNull) {
+          var xc = 0.0
+          var i = 0
+          val off = j * dim
+          while (i < dim) { xc += x(i) * vecs(off + i); i += 1 }
+          if (l2) s = Codebook.round6((xx - 2.0 * xc) + sq(j))
+          else {
+            val denom = rootXx * rootSq(j)
+            if (denom == 0.0) isNull = true else s = Codebook.round6(xc / denom)
+          }
         }
+        t.offer(j, isNull, s)
+        j += 1
       }
-      // null < every number; NaN > every number, NaN == NaN
-      val cmp =
-        if (isNull || bestNull) java.lang.Boolean.compare(!isNull, !bestNull)
-        else if (s == bestScore) 0
-        else java.lang.Double.compare(s, bestScore)
-      if (best < 0 || (if (l2) cmp < 0 else cmp > 0) || (cmp == 0 && ids(j) < ids(best))) {
-        best = j; bestNull = isNull; bestScore = s
-      }
-      j += 1
+      k += 1
     }
-    InternalRow(if (bestNull) null else bestScore, ids(best))
+    t
+  }
+
+  /** The best `n` centroid indices offered so far, kept sorted. */
+  private final class Top(n: Int, l2: Boolean) {
+    private val idx = new Array[Int](n)
+    private val nul = new Array[Boolean](n)
+    private val sc = new Array[Double](n)
+    var count = 0
+
+    /** The one comparator: does (aNull, a, ids(aj)) rank before
+      * (bNull, b, ids(bj))? Null < every number; NaN > every number and
+      * NaN == NaN; ties go to the smaller id. */
+    private def before(aNull: Boolean, a: Double, aj: Int,
+                       bNull: Boolean, b: Double, bj: Int): Boolean = {
+      val cmp =
+        if (aNull || bNull) java.lang.Boolean.compare(!aNull, !bNull)
+        else if (a == b) 0
+        else java.lang.Double.compare(a, b)
+      if (cmp != 0) (if (l2) cmp < 0 else cmp > 0) else ids(aj) < ids(bj)
+    }
+
+    def offer(j: Int, isNull: Boolean, s: Double): Unit =
+      if (count < n || before(isNull, s, j, nul(n - 1), sc(n - 1), idx(n - 1))) {
+        var p = if (count < n) { count += 1; count - 1 } else n - 1
+        while (p > 0 && before(isNull, s, j, nul(p - 1), sc(p - 1), idx(p - 1))) {
+          idx(p) = idx(p - 1); nul(p) = nul(p - 1); sc(p) = sc(p - 1)
+          p -= 1
+        }
+        idx(p) = j; nul(p) = isNull; sc(p) = s
+      }
+
+    def entry(i: Int): InternalRow = InternalRow(if (nul(i)) null else sc(i), ids(idx(i)))
   }
 }
 
@@ -864,40 +923,59 @@ object Codebook {
     else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 }
 
-/** Nearest centroid of `vec` within its group (`group`, a long key;
-  * null yields null) of a [[Codebook]]: struct(score, id) under
-  * [[Codebook.nearest]]'s contract, `l2` picking squared-L2 argmin
-  * over cosine argmax. Both the interpreted and the generated path
-  * call the same kernel, so they cannot disagree; the generated code
-  * is the same few lines for every codebook. NativeExprSpec pins it
-  * bit for bit against the literal-fold formulation. */
+/** Nearest centroid of `vec` within its group (a long key; null yields
+  * null) of a [[Codebook]]: struct(score, id) under [[Codebook.nearest]],
+  * or with `n` the n best as array<struct(score, id)> over the union of
+  * the groups (a key or an array of keys) under [[Codebook.nearestN]].
+  * `l2` picks squared-L2 argmin over cosine argmax. The interpreted and
+  * the generated path call the same kernel, so they cannot disagree; the
+  * generated code is the same few lines for every codebook and n.
+  * NativeExprSpec pins it against the literal folds and the window. */
 case class NearestCentroidExpr(left: Expression, right: Expression,
-                               codebook: Codebook, l2: Boolean)
+                               codebook: Codebook, l2: Boolean, n: Option[Int] = None)
   extends BinaryExpression with ExpectsInputTypes {
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(VecTypes.anyVec, LongType)
-  override def dataType: DataType = NearestCentroidExpr.ResultType
-  override def nullable: Boolean = true
+  require(n.forall(_ >= 1), s"nearest_centroid: n must be >= 1, got $n")
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(VecTypes.anyVec,
+    if (n.isEmpty) LongType else TypeCollection(LongType, ArrayType(LongType)))
+  override def dataType: DataType =
+    if (n.isEmpty) NearestCentroidExpr.ResultType
+    else ArrayType(NearestCentroidExpr.ResultType, containsNull = false)
+  // a literal key the codebook holds is never null, so a join on the id
+  // infers no isnotnull filter that re-evaluates the scan below it
+  override def nullable: Boolean = right match {
+    case Literal(k: Long, LongType) => n.isEmpty && !codebook.hasGroup(k)
+    case _ => right.nullable || n.isEmpty
+  }
   override def prettyName: String = "nearest_centroid"
 
   @transient private lazy val vFloat = VecTypes.isFloat(left.dataType)
 
   override def eval(input: InternalRow): Any = {
-    val key = right.eval(input)
-    if (key == null) null
-    else codebook.nearest(left.eval(input).asInstanceOf[ArrayData], vFloat,
-      key.asInstanceOf[Long], l2)
+    val v = left.eval(input).asInstanceOf[ArrayData]
+    (right.eval(input), n) match {
+      case (null, _) => null
+      case (k, None) => codebook.nearest(v, vFloat, k.asInstanceOf[Long], l2)
+      case (k: Long, Some(m)) => codebook.nearestN(v, vFloat, k, m, l2)
+      case (ks, Some(m)) => codebook.nearestN(v, vFloat, ks.asInstanceOf[ArrayData], m, l2)
+    }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cb = ctx.addReferenceObj("codebook", codebook)
     val v = left.genCode(ctx)
     val k = right.genCode(ctx)
+    val vec = s"${v.isNull} ? null : ${v.value}"
+    // n rides as data too, so every n shares one generated body
+    val call = n.fold(s"$cb.nearest($vec, $vFloat, ${k.value}, $l2)") { m =>
+      val nRef = ctx.addReferenceObj("n", Int.box(m), "java.lang.Integer")
+      s"$cb.nearestN($vec, $vFloat, ${k.value}, $nRef.intValue(), $l2)"
+    }
     ev.copy(code = code"""
       ${v.code}
       ${k.code}
-      InternalRow ${ev.value} = ${k.isNull} ? null :
-        $cb.nearest(${v.isNull} ? null : ${v.value}, $vFloat, ${k.value}, $l2);
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = ${k.isNull} ? null : $call;
       boolean ${ev.isNull} = ${ev.value} == null;""")
   }
 

@@ -1253,7 +1253,7 @@ object Curation extends QueryModule {
     // SELECTION: (1) C4-style span REWRITE (duplicated spans removed at
     // all but their first occurrence, documents kept); (2) a TRAINED
     // quality gate — logistic regression fit to the post-rewrite corpus
-    // (the lloydCentroids 6-dp discipline), keeping docs at or above
+    // (the trainIvf 6-dp discipline), keeping docs at or above
     // the corpus-average margin; (3) exact dedup of the rewritten texts
     // (keep-first per md5 fingerprint — rewriting collapses formerly
     // near-identical docs into byte-identical ones, so exact dedup now

@@ -215,7 +215,7 @@ object Pipeline extends QueryModule {
     (1 to 10).map(i => 1.0 / (math.log(i + 1.0) / math.log(2.0)))
   private val Idcg10: Double = NdcgDiscounts.sum
 
-  /** DuckDB CTE chain rebuilding SimilaritySearch.lloydCentroids over
+  /** DuckDB CTE chain rebuilding SimilaritySearch.trainIvf over
     * an existing `e(vec_id, v)` CTE: hash-seeded codebook + `iters`
     * unrolled Lloyd rounds (assignment by 6-dp rounded cosine with
     * cent_id tiebreaks; per-cluster per-dimension means rounded to the

@@ -237,7 +237,7 @@ object Training extends QueryModule {
     // scaled length and distinct-token ratio — via 3 full-batch GD
     // rounds, each ONE mergeable aggregate; weights re-anchored at 6 dp
     // per round so DuckDB replays the identical iterations as unrolled
-    // CTEs (the lloydCentroids discipline). The synthetic labels make
+    // CTEs (the trainIvf discipline). The synthetic labels make
     // the MODEL near-chance; what the oracle pins is the mechanism:
     // gradient aggregation, the update chain, and the final
     // literal-weight confusion matrix (prediction = margin >= 0 needs

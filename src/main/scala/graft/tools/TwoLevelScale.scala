@@ -86,19 +86,12 @@ object TwoLevelScale {
     }
 
     if (!skipFlat) {
-      // the dead arm of the round-13 measurement is now a REFUSED arm:
-      // the explicit-nlist scratch guard predicts the N·nlist sort mass
-      // and fails fast before the ENOSPC death it used to produce
+      // round 13's dead arm (ENOSPC mid-sort): the nearest-centroid scan
+      // materializes no (vector, centroid) rows, so it runs at N·4096
+      // cosines against the two-level arm's N·(coarseK + subK)
       time("flat assign (nlist = 4096)") {
-        try {
-          SimilaritySearch.assignClusters(corpus, "vec_id", "embedding", 4096)
-            .write.format("noop").mode("overwrite").save()
-          println("[twolevel-scale] flat arm COMPLETED (fits scratch budget)")
-        } catch {
-          case e: IllegalStateException =>
-            println(s"[twolevel-scale] flat arm REFUSED (by design, JVM " +
-              s"alive): ${e.getMessage}")
-        }
+        SimilaritySearch.assignClusters(corpus, "vec_id", "embedding", 4096)
+          .write.format("noop").mode("overwrite").save()
       }
     }
     GraftSession.stop(spark)

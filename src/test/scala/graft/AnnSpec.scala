@@ -131,8 +131,8 @@ class AnnSpec extends SparkSpecBase {
         .groupBy(col("vec_id")).agg(max(col("c")).as("best"))
         .agg(avg(col("best"))).head().getDouble(0)
     val seed = SimilaritySearch.hashCentroids(df, "vec_id", "embedding", 16)
-    val lloyd = SimilaritySearch.lloydCentroids(df, "vec_id", "embedding", 16,
-      SimilaritySearch.LloydIters)
+    val lloyd = SimilaritySearch.trainIvf(df, "vec_id", "embedding", 16)
+      .toDF("_cent_id", "_cent_vec")
     val (qSeed, qLloyd) = (meanBestCos(seed), meanBestCos(lloyd))
     assert(qLloyd > qSeed,
       f"Lloyd codebook no tighter than the seed: $qLloyd%.4f <= $qSeed%.4f")
@@ -278,8 +278,8 @@ class AnnSpec extends SparkSpecBase {
     // over the trained centroids — the nearest-centroid contract.
     val df = clustered.cache()
     val nlist = 40
-    val cents = SimilaritySearch.lloydCentroids(df, "vec_id", "embedding", nlist, 2)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val cents = SimilaritySearch.trainIvf(df, "vec_id", "embedding", nlist)
+      .map { case (cid, cv) => (cid, cv.toArray) }
     def round6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     def cos(a: Array[Double], b: Array[Double]): Double = {
@@ -636,22 +636,19 @@ class AnnSpec extends SparkSpecBase {
     assert(FlatAssignRowBudget == 1000000000L)
   }
 
-  test("explicit-nlist flat assignment REFUSES when the predicted sort mass exceeds scratch") {
+  test("explicit-nlist flat search completes under a tiny scratch budget") {
     import graft.operators.Dedup
     val df = clustered.cache()
-    // ~200 vectors x nlist=64 x 560 B >> a mocked 1 KiB budget
+    // ~200 vectors x nlist=64 x 560 B would exceed a mocked 1 KiB
+    // budget, but the search ranks lists in the scan and materializes
+    // no (vector, centroid) rows, so nothing refuses
     Dedup.scratchBytesOverride = Some(1L << 10)
     try {
-      Seq(
-        () => SimilaritySearch.topKCosineIvf(
+      val perProbe = SimilaritySearch.topKCosineIvf(
           df.limit(3).select(col("vec_id").as("probe_id"), col("embedding")),
           "probe_id", df, "vec_id", "embedding", k = 3, nlist = 64, nprobe = 4)
-      ).foreach { arm =>
-        val e = intercept[IllegalStateException](arm().collect())
-        assert(e.getMessage.contains("REFUSED"), e.getMessage)
-        assert(e.getMessage.contains("TwoLevel"), // names the reroute
-          e.getMessage)
-      }
+        .groupBy(col("probe_id")).count().collect().map(_.getLong(1))
+      assert(perProbe.toSeq == Seq(3L, 3L, 3L), s"rows per probe: ${perProbe.toSeq}")
       // the flat assignment materializes no candidate rows — it never
       // counts, never refuses
       assert(SimilaritySearch.assignClusters(df, "vec_id", "embedding", 16)

@@ -43,4 +43,28 @@ class CodegenCacheSpec extends SparkSpecBase {
     val warm = compiles - before
     assert(warm == 0, s"second corpus compiled $warm classes")
   }
+
+  test("IVF-PQ and two-level search on a second corpus of the same schema compile no classes") {
+    // Search ranks centroids through the same kernel as training: the
+    // probe side's top-n lists and two-level routing are
+    // NearestCentroidExpr projections, so a new codebook reuses the
+    // generated code of the first.
+    import spark.implicits._
+    val emb = AnnSpec.clusteredRows.toDF("vec_id", "embedding")
+    val a = emb.localCheckpoint(true)
+    val b = emb.filter(col("vec_id") % 2 === 0).localCheckpoint(true)
+    def search(df: DataFrame): Unit = {
+      val probes = df.filter(col("vec_id").isin(0L, 1000L, 2000L))
+        .select(col("vec_id").as("probe_id"), col("embedding"))
+      SimilaritySearch.topKCosineIvfPq(probes, "probe_id", df, "vec_id", "embedding",
+        k = 3, nlist = 16, nprobe = 4).collect()
+      SimilaritySearch.topKCosineIvfTwoLevel(probes, "probe_id", df, "vec_id", "embedding",
+        k = 3, coarseK = 4, subK = 4, nprobeCells = 2, nprobeLeaves = 4).collect()
+    }
+    search(a)
+    val before = compiles
+    search(b)
+    val warm = compiles - before
+    assert(warm == 0, s"second corpus compiled $warm classes")
+  }
 }

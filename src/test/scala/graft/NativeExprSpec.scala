@@ -376,6 +376,123 @@ class NativeExprSpec extends SparkSpecBase {
         assert(bits(nl.get(0)) == bits(ol.get(0)) && nl.getLong(1) == ol.getLong(1))
       }
   }
+
+  test("nearestN == the crossJoin + row_number window bit for bit, codegen and interpreted") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.graft.{Codebook, NearestCentroidExpr}
+    import org.apache.spark.sql.types._
+    val dim = AnnSpec.dim
+    val fixture = AnnSpec.clusteredRows
+    def boxed(v: Seq[Double]): Seq[java.lang.Double] = v.map(Double.box)
+    val vecs: Seq[(Long, Seq[java.lang.Double])] =
+      fixture.map { case (id, v) => (id, boxed(v)) } ++ Seq(
+        (50001L, boxed(fixture(3)._2).updated(5, null)),       // null element
+        (50002L, boxed(fixture(3)._2.take(dim - 1))),          // length mismatch
+        (50003L, boxed(Seq.fill(dim)(0.0))),                   // zero norm
+        (50004L, boxed(fixture(3)._2.updated(7, Double.NaN))), // NaN vector
+        (50005L, null),                                        // null vector
+        (50006L, boxed(fixture(40)._2)))                       // a centroid's copy
+    // 16 fixture centroids, a zero-norm centroid, an exact duplicate of
+    // fixture(40) under a smaller id (an exact score tie) and a NaN
+    // centroid, dealt round-robin into groups 0, 1 and 2
+    val cents = (fixture.indices.filter(_ % 13 == 1).take(16).map(fixture(_)) ++
+      Seq((77777L, Seq.fill(dim)(0.0)), (39L, fixture(40)._2),
+        (88888L, Seq.fill(dim)(0.5).updated(2, Double.NaN))))
+      .zipWithIndex.map { case ((id, v), i) => ((i % 3).toLong, id, v) }
+    assert(cents.exists(_._2 == fixture(40)._1) && fixture(40)._1 > 39L)
+    val book = Codebook(cents)
+    // group sets per vector: one key, several, a missing key among them,
+    // only a missing key, a repeated key
+    val groupSets = Seq(Seq(0L), Seq(1L, 2L), Seq(0L, 1L, 99L), Seq(99L), Seq(2L, 2L), Seq(0L, 1L, 2L))
+    val rows = vecs.zipWithIndex.map { case ((id, v), i) =>
+      (id, v, if (id > 50000L) Seq(0L, 1L, 2L) else groupSets(i % groupSets.size)) }
+    val vType = ArrayType(DoubleType, containsNull = true)
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (id, v, g) => Row(id, v, g) }, 2),
+      StructType(Seq(StructField("id", LongType), StructField("v", vType),
+        StructField("g", ArrayType(LongType, containsNull = false)))))
+    val centDf = cents.map { case (g, id, v) => (g, id, v) }.toDF("_grp", "_cent_id", "_cent_vec")
+    type Ranked = Seq[(Option[Long], Long)]
+    def bits(x: Any): Option[Long] =
+      Option(x).map(d => java.lang.Double.doubleToLongBits(d.asInstanceOf[Double]))
+    // the replaced formulation: every (vector, centroid of its groups)
+    // pair scored, then a row_number window keeps the n best per vector
+    def reference(n: Int, l2: Boolean): Map[Long, Ranked] = {
+      val score =
+        if (l2) round(graft.functions.VectorFunctions.dotd(col("v"), col("v")) -
+          lit(2.0) * graft.functions.VectorFunctions.dotd(col("v"), col("_cent_vec")) +
+          aggregate(col("_cent_vec"), lit(0.0), (a, x) => a + x * x), 6)
+        else round(graft.functions.VectorFunctions.cosine(col("v"), col("_cent_vec")), 6)
+      val order = if (l2) col("_s").asc else col("_s").desc
+      val got = df.select(col("id"), col("v"), explode(array_distinct(col("g"))).as("_grp"))
+        .join(broadcast(centDf), Seq("_grp"))
+        .select(col("id"), col("_cent_id"), score.as("_s"))
+        .withColumn("_rk", row_number().over(
+          Window.partitionBy(col("id")).orderBy(order, col("_cent_id"))))
+        .filter(col("_rk") <= n)
+        .collect().groupBy(_.getLong(0)).map { case (id, rs) =>
+          id -> rs.sortBy(_.getInt(3)).map(r => (bits(r.get(2)), r.getLong(1))).toSeq }
+      rows.map(r => r._1 -> got.getOrElse(r._1, Seq.empty)).toMap
+    }
+    def entry(e: InternalRow): (Option[Long], Long) =
+      (if (e.isNullAt(0)) None else bits(e.getDouble(0)), e.getLong(1))
+    def read(a: ArrayData): Ranked = (0 until a.numElements()).map(i => entry(a.getStruct(i, 2)))
+    val inputs = rows.map { case (id, v, g) =>
+      id -> InternalRow(if (v == null) null else new GenericArrayData(v.toArray[Any]),
+        new GenericArrayData(g.toArray[Any]))
+    }
+    for (l2 <- Seq(false, true); n <- Seq(1, 4, 40)) { // 40 > every group
+      val want = reference(n, l2)
+      val e = NearestCentroidExpr(BoundReference(0, vType, nullable = true),
+        BoundReference(1, ArrayType(LongType, containsNull = false), nullable = false), book, l2, Some(n))
+      val compiled = GenerateUnsafeProjection.generate(Seq(e))
+      inputs.foreach { case (id, in) =>
+        val gen = read(compiled(in).getArray(0))
+        val interp = read(e.eval(in).asInstanceOf[ArrayData])
+        assert(gen == want(id), s"codegen l2=$l2 n=$n, vec $id: $gen != ${want(id)}")
+        assert(interp == want(id), s"interpreted l2=$l2 n=$n, vec $id: $interp != ${want(id)}")
+      }
+      // and through a whole-stage-codegen plan
+      val planned = df.select(col("id"),
+          NativeExpressions.nearestCentroids(col("v"), col("g"), book, n, l2).as("r"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Row](1).map(e => (bits(e.get(0)), e.getLong(1)))).toMap
+      rows.foreach { case (id, _, _) => assert(planned(id) == want(id), s"plan l2=$l2 n=$n, vec $id") }
+      if (!l2 && n == 40) {
+        // the fixture reaches every corner it claims to: null scores
+        // (null vector, null element, length mismatch, zero norm — the
+        // NaN centroid still scores NaN against a zero vector), NaN
+        // scores, a group set with no centroid, and the exact tie
+        val isNaN = (e: (Option[Long], Long)) => e._1.exists(b => java.lang.Double.longBitsToDouble(b).isNaN)
+        assert(want(50005L).size == cents.size && want(50005L).forall(_._1.isEmpty))
+        assert(Seq(50001L, 50002L, 50003L).forall(id =>
+          want(id).size == cents.size && want(id).filter(_._2 != 88888L).forall(_._1.isEmpty)))
+        assert(want(50004L).forall(isNaN) && want(50006L).head._2 == 88888L && isNaN(want(50006L).head))
+        assert(rows.exists(r => r._3 == Seq(99L) && want(r._1).isEmpty))
+        val ranked = want(50006L)
+        val t = ranked.indexWhere(_._2 == 39L)
+        assert(t > 0 && ranked(t + 1)._2 == fixture(40)._1 && ranked(t)._1 == ranked(t + 1)._1 &&
+          ranked(t)._1 == bits(1.0), s"exact tie must rank the smaller id first: $ranked")
+      }
+    }
+    // nearest is nearestN's n = 1 case, group by group
+    for (l2 <- Seq(false, true); g <- Seq(0L, 1L, 2L, 99L)) {
+      val one = NearestCentroidExpr(BoundReference(0, vType, nullable = true), Literal(g), book, l2)
+      val top = NearestCentroidExpr(BoundReference(0, vType, nullable = true), Literal(g), book, l2, Some(1))
+      val (cOne, cTop) = (GenerateUnsafeProjection.generate(Seq(one)), GenerateUnsafeProjection.generate(Seq(top)))
+      inputs.foreach { case (id, in) =>
+        val single = Option(one.eval(in).asInstanceOf[InternalRow]).map(entry)
+        assert(read(top.eval(in).asInstanceOf[ArrayData]).headOption == single, s"eval g=$g l2=$l2 vec $id")
+        val genOne = cOne(in)
+        val genSingle = if (genOne.isNullAt(0)) None else Some(entry(genOne.getStruct(0, 2)))
+        assert(read(cTop(in).getArray(0)).headOption == genSingle, s"codegen g=$g l2=$l2 vec $id")
+        assert(genSingle == single, s"nearest codegen != eval, g=$g l2=$l2 vec $id")
+      }
+    }
+  }
 }
 
 object NativeExprSpec {
