@@ -122,7 +122,7 @@ object GraftSession {
       // output partitioning by default), and every re-read schedules a
       // task per micro-partition. It serves the lineage persists read
       // once per round or ladder step: PageRank's distributed path,
-      // ConnectedComponents and the IVF tuner's persisted assignment
+      // ConnectedComponents and the IVF tuner's persisted scored frame
       // (measured on a 512-partition cache since removed: 2.8 -> 7.4 s).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -93,7 +93,7 @@ object SimilaritySearch {
 
   /** [[nearDupPairsLsh]]'s contract at the HIERARCHICAL tier: candidate
     * pairs from the two-level quantizer's LEAVES (each vector meets
-    * only its leaf-mates — the semanticDedupTwoLevel pair shape), exact
+    * only its leaf-mates — [[semanticDedup]]'s pair shape), exact
     * cosine filter at `threshold`, emitted as (i, j, cos), i < j.
     *
     * Same recall argument as the dedup face: near-identical vectors
@@ -112,9 +112,9 @@ object SimilaritySearch {
     // materialized once for the same reason as dedupWithAssignment's
     // checkpoint: `av` references the assignment on BOTH sides of the
     // pair self-join, and the leaf assignment is the expensive subtree.
-    // withTwoLevelCells: the checkpoint derives from the TRAINING'S OWN
+    // withIvfCodebook: the checkpoint derives from the TRAINING'S OWN
     // cached cell assignment instead of re-running the coarse scan.
-    withTwoLevelCells(emb, idCol, vecCol, coarseK, subK) { (_, assigned) =>
+    withIvfCodebook(emb, idCol, vecCol, coarseK, subK) { (_, assigned) =>
       pairsWithAssignment(emb, idCol, vecCol, assigned.localCheckpoint(true),
         threshold)
     }
@@ -247,148 +247,45 @@ object SimilaritySearch {
 
   /** IVF (inverted-file) batch ANN — the other classic scale path next
     * to LSH (ref: the brief's "IVF or LSH-bucketed variant"; public
-    * design: Faiss IVFFlat). The coarse quantizer is a k-means
-    * codebook: `nlist` hash-ordered seed vectors (smallest md5(id))
-    * refined by [[LloydIters]] deterministic Lloyd rounds
-    * ([[lloyd]]) — every step 6-dp rounded with id tiebreaks,
-    * so the whole index is reproducible across engines and the DuckDB
-    * oracle rebuilds the identical iterations bit-for-bit.
-    * Spherical assignment: every vector joins its argmax-
-    * cosine centroid's inverted list (exactly one list per vector).
-    * A probe searches only its `nprobe` best lists, then exact-cosine
-    * rerank + per-probe top-k.
+    * design: Faiss IVFFlat, and its two-level / IMI family above it).
+    * The index is one [[TwoLevelCodebook]] of shape (coarseK, subK):
+    * corpus vectors live in LEAF inverted lists; a probe ranks the
+    * coarse cells, visits its `nprobeCells` best, ranks THOSE cells'
+    * leaves and searches its `nprobeLeaves` best lists, then
+    * exact-cosine rerank + per-probe top-k. A flat index with nlist
+    * lists is the shape (1, nlist) searched at (1, nprobe): one cell
+    * holds every leaf, so the leaf pick is the flat nprobe best lists.
     *
-    * Scale shape: centroids are tiny (nlist ~ sqrt(N)) and ride in the
-    * corpus scan as data ([[nearest]]: one projection, no join, no
-    * corpus shuffle); each probe's `nprobe` best lists are one
-    * [[nearestN]] projection, and the small probe side is broadcast to
-    * the assigned corpus, so the search is one corpus-side scan
-    * filtered to ~nprobe/nlist of the data. Nothing is ever all-pairs,
-    * and the corpus is never shuffled on the low-cardinality list key.
+    * Scale shape: the codebook is tiny and rides in the corpus scan as
+    * data ([[nearest]]: one projection, no join, no corpus shuffle);
+    * probe routing is [[nearestN]] projections costing coarseK +
+    * nprobeCells·subK cosines, and the small probe side is broadcast
+    * to the assigned corpus, so the search is one corpus-side scan
+    * filtered to the routed lists. Nothing is ever all-pairs.
     *
     * Ranking uses ROUNDED cosines (6 dp) with id tiebreaks everywhere
-    * so list assignment and top-k are deterministic and engine-portable.
-    */
+    * so list assignment and top-k are deterministic and engine-portable:
+    * the DuckDB oracle replays training and search end to end. */
   def topKCosineIvf(probes: DataFrame, probeIdCol: String,
                     corpus: DataFrame, idCol: String, vecCol: String,
-                    k: Int, nlist: Int = 16, nprobe: Int = 4,
-                    centroids: Option[Seq[(Long, Seq[Double])]] = None): DataFrame = {
-    require(nprobe <= nlist, "topKCosineIvf: nprobe must be <= nlist")
-    // training is deterministic, so a caller that also TUNES (the
-    // ann_eval_tuned shape: autoNprobe + the tuned search) trains once
-    // and passes the codebook to both — the round-15 ann_eval_twolevel
-    // discipline at the flat tier
-    val book = Codebook.flat(centroids.getOrElse(trainFlat(corpus, idCol, vecCol, nlist)))
-    val assigned = corpus.select(col(idCol).as("_cid"), col(vecCol).as("_cv"),
-      nearest(col(vecCol), book)("id").as("_list"))
-    val probeLists = withLists(
-      probes.select(col(probeIdCol).as("_pid"), col(vecCol).as("_pv")), "_pv", book, nprobe)
-    assigned.join(broadcast(probeLists), "_list")
+                    k: Int, coarseK: Int, subK: Int,
+                    nprobeCells: Int, nprobeLeaves: Int,
+                    codebook: Option[TwoLevelCodebook] = None): DataFrame = {
+    require(nprobeCells <= coarseK && nprobeLeaves <= coarseK * subK,
+      "topKCosineIvf: nprobeCells <= coarseK and nprobeLeaves <= coarseK·subK")
+    // deterministic training: a caller that already trained (the
+    // autotune + search pair) passes the codebook and skips the rerun
+    val cb = codebook.getOrElse(trainIvf(corpus, idCol, vecCol, coarseK, subK))
+    val assigned = assignLeaves(corpus, idCol, vecCol, cb)
+      .select(col("_vid").as("_cid"), col("_vv").as("_cv"), col("_leaf"))
+    val probeD = probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
+    // candidates = the routed leaves' inverted lists (the assignment
+    // carries each vector, so no corpus re-join); exact rerank
+    assigned.join(broadcast(probeLeaves(probeD, cb, nprobeCells, nprobeLeaves)), Seq("_leaf"))
       .filter(col("_pid") =!= col("_cid"))
       .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
         round(cosine(col("_cv"), col("_pv")), 6).as("cos"))
       .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
-  }
-
-  /** The flat IVF codebook on its own — the train-once face of
-    * [[topKCosineIvf]] / [[autoNprobe]] (the public [[trainTwoLevel]]
-    * contract at the flat tier): deterministic hash-seeded k-means,
-    * [[LloydIters]] rounds, so a caller that tunes AND searches trains
-    * once and passes the same codebook to both. */
-  def trainIvf(corpus: DataFrame, idCol: String, vecCol: String,
-               nlist: Int = 16): Seq[(Long, Seq[Double])] =
-    trainFlat(corpus, idCol, vecCol, nlist)
-
-  /** Recall-targeted nprobe autotuning — the accept/reject knob a
-    * pipeline turns before trusting an IVF index: the smallest nprobe
-    * on the doubling ladder 1, 2, 4, ..., nlist whose MEAN recall@k
-    * against the exact brute-force top-k reaches `targetRecall` on the
-    * probe set. Returns (nprobe, the mean recall it achieved).
-    *
-    * Binary search is sound because recall@k is monotone
-    * non-decreasing in nprobe: a larger nprobe searches a superset of
-    * lists, and in the candidate-superset top-k a true top-k member
-    * can only be displaced by something ranking ABOVE it in the
-    * (rounded cos, id) order — which would itself be a true top-k
-    * member. The ladder search therefore returns exactly the value a
-    * linear scan would, in ~log2(nlist) evaluations; at nprobe=nlist
-    * every list is searched and recall is 1.0, so the search always
-    * terminates with the target met or the full scan reached.
-    *
-    * Cost shape: centroids train once, the corpus assigns once and every
-    * probe ranks all lists once (both frames persisted, and the exact
-    * top-k collected, all reused by every ladder evaluation); a ladder
-    * step searches a PREFIX of each probe's ranking — nprobe only grows
-    * along the ladder, so nothing is re-ranked — and re-ranks only the
-    * candidates of a SAMPLE-sized probe set — production tunes on a
-    * held-out probe sample, never the query stream. */
-  def autoNprobe(probes: DataFrame, probeIdCol: String,
-                 corpus: DataFrame, idCol: String, vecCol: String,
-                 k: Int, nlist: Int = 16,
-                 targetRecall: Double = 0.9,
-                 centroids: Option[Seq[(Long, Seq[Double])]] = None): (Int, Double) = {
-    val (np, rec, _) = autoNprobeStats(probes, probeIdCol, corpus, idCol,
-      vecCol, k, nlist, targetRecall, centroids, collectStats = false)
-    (np, rec)
-  }
-
-  /** [[autoNprobe]] plus per-probe hit counts AT the tuned nprobe —
-    * the flat-tier twin of [[autoNprobeTwoLevelStats]]: the walk's own
-    * collected top-k at that nprobe (no extra job) replaces the eval
-    * query's full re-derivation of both arms (a
-    * second corpus-sized exact scan + a second IVF search per eval
-    * run). Zero-filled, one row per probe; empty when `collectStats`
-    * is false. */
-  private[graft] def autoNprobeStats(
-      probes: DataFrame, probeIdCol: String,
-      corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, nlist: Int = 16,
-      targetRecall: Double = 0.9,
-      centroids: Option[Seq[(Long, Seq[Double])]] = None,
-      collectStats: Boolean = true): (Int, Double, Seq[(Long, Long)]) = {
-    import org.apache.spark.storage.StorageLevel
-    val book = Codebook.flat(centroids.getOrElse(trainFlat(corpus, idCol, vecCol, nlist)))
-    val assigned = corpus.select(col(idCol).as("_cid"), col(vecCol).as("_cv"),
-        nearest(col(vecCol), book)("id").as("_list"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // every probe's lists, best first, ranked once for the whole ladder
-    val ranked = probes.select(col(probeIdCol).as("_pid"), col(vecCol).as("_pv"),
-        nearestN(col(vecCol), book, lit(0L), nlist)("id").as("_lists"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val pids = ranked.select(col("_pid")).collect().map(_.getLong(0)).toSeq.sorted
-    require(pids.nonEmpty, "autoNprobe: empty probe set")
-    // exact arm: brute-force top-k per probe (the ann_eval exact arm —
-    // one corpus scan against broadcast probes, never shuffled)
-    val exact = pairSet(corpus.select(col(idCol).as("_cid"), col(vecCol).as("_ev"))
-      .crossJoin(broadcast(ranked.select(col("_pid"), col("_pv"))))
-      .filter(col("_cid") =!= col("_pid"))
-      .select(col("_pid"), col("_cid"),
-        round(cosine(col("_ev"), col("_pv")), 6).as("_ecos"))
-      .transform(topN("_pid", "_ecos", "_cid", k, "_erk"))
-      .select(col("_pid"), col("_cid")))
-    def ivfAt(p: Int): DataFrame =
-      assigned.join(broadcast(ranked.select(col("_pid"), col("_pv"),
-          explode(slice(col("_lists"), 1, p)).as("_list"))), "_list")
-        .filter(col("_pid") =!= col("_cid"))
-        .select(col("_pid"), col("_cid"),
-          round(cosine(col("_cv"), col("_pv")), 6).as("_icos"))
-        .transform(topN("_pid", "_icos", "_cid", k, "_irk"))
-        .select(col("_pid"), col("_cid"))
-    val memo = scala.collection.mutable.Map.empty[Int, Map[Long, Long]]
-    def hitsAt(p: Int) = memo.getOrElseUpdate(p, probeHits(exact, ivfAt(p)))
-    val ladder = (Iterator.iterate(1)(_ * 2).takeWhile(_ < nlist).toVector :+ nlist)
-    def rec(i: Int): Double = hitsAt(ladder(i)).values.sum.toDouble / (k * pids.size.toLong)
-    // leftmost ladder value whose recall reaches the target
-    var (lo, hi) = (0, ladder.size - 1)
-    while (lo < hi) {
-      val mid = (lo + hi) / 2
-      if (rec(mid) >= targetRecall) hi = mid else lo = mid + 1
-    }
-    val res = (ladder(lo), rec(lo))
-    val stats = if (!collectStats) Seq.empty[(Long, Long)] else
-      pids.map(pid => (pid, hitsAt(res._1).getOrElse(pid, 0L)))
-    assigned.unpersist(); ranked.unpersist()
-    (res._1, res._2, stats)
   }
 
   /** The (_pid, _cid) pairs of a probes × k frame, on the driver. */
@@ -404,8 +301,8 @@ object SimilaritySearch {
   private def probeHits(exact: Set[(Long, Long)], approx: DataFrame): Map[Long, Long] =
     pairSet(approx).filter(exact.contains).groupBy(_._1).map { case (p, hs) => p -> hs.size.toLong }
 
-  /** The (nprobeCells, nprobeLeaves) doubling ladder the two-level
-    * autotuner walks: leaves double 1, 2, ..., coarseK·subK; the cell
+  /** The (nprobeCells, nprobeLeaves) doubling ladder [[autoNprobe]]
+    * walks: leaves double 1, 2, 4, ... below coarseK·subK; the cell
     * fan-out tracks them at cells = min(coarseK, ceilPow2(2·leaves /
     * subK)) — enough cells that the leaf pick always has ~2× slack,
     * snapped to powers of two like every knob in the family. The
@@ -416,65 +313,59 @@ object SimilaritySearch {
   def twoLevelLadder(coarseK: Int, subK: Int): Seq[(Int, Int)] = {
     require(coarseK >= 1 && subK >= 1, "twoLevelLadder: coarseK, subK >= 1")
     def ceilPow2(x: Int): Int = { var p = 1; while (p < x) p *= 2; p }
-    Iterator.iterate(1)(_ * 2).takeWhile(_ <= coarseK * subK).toVector
-      .map(lv => (math.min(coarseK, math.max(1, ceilPow2(2 * lv / subK))), lv))
+    Iterator.iterate(1)(_ * 2).takeWhile(_ < coarseK * subK).toVector
+      .map(lv => (math.min(coarseK, math.max(1, ceilPow2(2 * lv / subK))), lv)) :+
+      ((coarseK, coarseK * subK))
   }
 
-  /** Recall-targeted autotune for the TWO-LEVEL tier — [[autoNprobe]]'s
-    * contract above the flat codebook: the leftmost step of
+  /** Recall-targeted autotune — the accept/reject knob a pipeline turns
+    * before trusting an IVF index: the leftmost step of
     * [[twoLevelLadder]] whose MEAN recall@k against the exact
     * brute-force top-k reaches `targetRecall` on the probe set.
     * Returns ((nprobeCells, nprobeLeaves), the mean recall achieved).
+    * For a flat (1, nlist) index the ladder is nprobe = 1, 2, 4, ...,
+    * nlist; recall is monotone there (a larger nprobe searches a
+    * superset of lists), so the leftmost passing step is also the
+    * smallest passing nprobe.
     *
-    * LINEAR ladder pick, not binary search: recall is NOT guaranteed
-    * monotone across the joint ladder — widening the cell set can
-    * re-rank WHICH leaves the probe visits (the top-nprobeLeaves among
-    * more cells' leaves is not a superset of the pick among fewer), so
-    * the flat tier's monotonicity argument does not carry over.
+    * LINEAR ladder walk, not binary search: above one cell recall is
+    * NOT guaranteed monotone across the joint ladder — widening the
+    * cell set can re-rank WHICH leaves the probe visits (the
+    * top-nprobeLeaves among more cells' leaves is not a superset of
+    * the pick among fewer).
     *
-    * ONE corpus pass for the WHOLE ladder (the round-14 walk re-ranked
-    * leaves and re-joined the corpus per step — up to
-    * log2(coarseK·subK)+1 corpus-keyed joins): every ladder step's leaf
+    * ONE corpus pass for the WHOLE ladder: every ladder step's leaf
     * pick is the search's own probe routing ([[probeLeaves]] — a
     * projection over the sample-sized probe side), and the (probe,
     * corpus) cosine frame is scored ONCE and PERSISTED (it is exactly
     * the exact arm's frame, tagged with each corpus row's leaf). The
-    * walk still early-stops step by step — each step's recall is a
-    * broadcast leaf-pick join + top-k window over the PERSISTED frame
-    * (an in-memory scan, no corpus re-join, no cosine recompute), so a
-    * corpus that tunes at step 1 never pays the deep steps' ranking,
-    * and a corpus that walks deep pays cosines exactly once. Same
-    * answer as the round-14 walk by construction: each step's recall
-    * is computed from the same rounded cosines, ranks and tie-breaks.
+    * walk early-stops step by step — each step's recall is a broadcast
+    * leaf-pick join + top-k window over the PERSISTED frame (no corpus
+    * re-join, no cosine recompute), so a corpus that tunes at step 1
+    * never pays the deep steps' ranking. The terminal step searches
+    * every leaf, so its top-k IS the exact arm's and is never re-ranked.
     *
     * For probe choice at scale, [[sampleProbes]] is the documented
     * default: a deterministic md5-ordered sample, so a 100 TB user
     * never hand-picks probe ids. */
-  def autoNprobeTwoLevel(probes: DataFrame, probeIdCol: String,
-                         corpus: DataFrame, idCol: String, vecCol: String,
-                         k: Int, coarseK: Int, subK: Int,
-                         targetRecall: Double = 0.9,
-                         codebook: Option[TwoLevelCodebook] = None)
-      : ((Int, Int), Double) = {
-    val (knobs, rec, _) = autoNprobeTwoLevelStats(probes, probeIdCol,
-      corpus, idCol, vecCol, k, coarseK, subK, targetRecall, codebook,
-      collectStats = false)
+  def autoNprobe(probes: DataFrame, probeIdCol: String,
+                 corpus: DataFrame, idCol: String, vecCol: String,
+                 k: Int, coarseK: Int, subK: Int,
+                 targetRecall: Double = 0.9,
+                 codebook: Option[TwoLevelCodebook] = None): ((Int, Int), Double) = {
+    val (knobs, rec, _) = autoNprobeStats(probes, probeIdCol, corpus, idCol,
+      vecCol, k, coarseK, subK, targetRecall, codebook, collectStats = false)
     (knobs, rec)
   }
 
-  /** [[autoNprobeTwoLevel]] plus the per-probe hit counts AT the tuned
-    * step, taken from the top-k the walk collected there (no extra
-    * job). The
+  /** [[autoNprobe]] plus the per-probe hit counts AT the tuned step,
+    * taken from the top-k the walk collected there (no extra job). The
     * recall-eval queries build their probe-level report from this
-    * instead of re-deriving BOTH arms — the pre-r16 ann_eval_twolevel
-    * plan recomputed the probes × corpus exact arm and the tuned search
-    * from scratch after the tuner had just materialized the identical
-    * frames (rounded cosines, ranks, tie-breaks all pinned equal by the
-    * one-pass-ladder contract), which at production scale pays the
-    * corpus-sized exact scan twice per eval run. Third element: one
+    * instead of re-deriving BOTH arms (a second corpus-sized exact scan
+    * and a second IVF search per eval run). Third element: one
     * (probe id, hits) row per probe, zero-filled — empty when
     * `collectStats` is false (the plain tuning path skips the job). */
-  private[graft] def autoNprobeTwoLevelStats(
+  private[graft] def autoNprobeStats(
       probes: DataFrame, probeIdCol: String,
       corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, coarseK: Int, subK: Int,
@@ -487,7 +378,7 @@ object SimilaritySearch {
     val probeD = probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
     val pids = probeD.select(col("_pid")).collect().map(_.getLong(0)).toSeq.sorted
     val nProbes = pids.size.toLong
-    require(nProbes > 0, "autoNprobeTwoLevel: empty probe set")
+    require(nProbes > 0, "autoNprobe: empty probe set")
     // The one-pass ladder's ground truth is a probes × corpus cosine
     // frame persisted to MEMORY_AND_DISK — inherent to exact-recall
     // tuning, and the ONE corpus-sized materialization in the ANN
@@ -496,13 +387,9 @@ object SimilaritySearch {
     // expensive runs (nProbes × n), so the refusal also precedes the
     // training a fresh-codebook caller would otherwise pay for nothing.
     refuseForScoredScratch(spark, nProbes, corpus.count())
-    // training is deterministic, so a caller that also SEARCHES with
-    // the tuned knobs trains once and passes the codebook to both
-    // (the ann_eval_twolevel shape: tune + search share one training)
-    val cb = codebook.getOrElse(
-      trainTwoLevel(corpus, idCol, vecCol, coarseK, subK))
+    val cb = codebook.getOrElse(trainIvf(corpus, idCol, vecCol, coarseK, subK))
     require(cb.coarse.size <= coarseK && cb.leaves.size <= coarseK * subK,
-      "autoNprobeTwoLevel: codebook shape exceeds (coarseK, subK)")
+      "autoNprobe: codebook shape exceeds (coarseK, subK)")
     val ladder = twoLevelLadder(coarseK, subK)
     // the ONE corpus-side pass: every (probe, corpus row) cosine —
     // exactly the exact arm's frame — tagged with the row's leaf
@@ -523,32 +410,27 @@ object SimilaritySearch {
         .transform(topN("_pid", "_icos", "_cid", k, "_irk"))
         .select(col("_pid"), col("_cid"))
     val memo = scala.collection.mutable.Map.empty[(Int, Int), Map[Long, Long]]
-    def hitsAt(step: (Int, Int)) =
-      memo.getOrElseUpdate(step, probeHits(exact, ivfAt(step._1, step._2)))
-    def recallAt(cells: Int, leaves: Int): Double =
-      hitsAt((cells, leaves)).values.sum.toDouble / (k * nProbes)
-    var res: Option[((Int, Int), Double)] = None
-    for ((cells, leaves) <- ladder if res.isEmpty) {
+    def hitsAt(step: (Int, Int)) = memo.getOrElseUpdate(step,
+      if (step == ladder.last) exact.groupBy(_._1).map { case (p, hs) => p -> hs.size.toLong }
+      else probeHits(exact, ivfAt(step._1, step._2)))
+    def recallAt(step: (Int, Int)): Double = hitsAt(step).values.sum.toDouble / (k * nProbes)
+    val tuned = ladder.find { step =>
       val ts = System.nanoTime()
-      val r = recallAt(cells, leaves)
-      System.err.println(f"[graft-ann] autoNprobeTwoLevel: step " +
-        f"($cells,$leaves) recall@$k=$r%.3f in ${(System.nanoTime() - ts) / 1e9}%.1f s")
-      if (r >= targetRecall) res = Some(((cells, leaves), r))
-    }
-    val out = res.getOrElse {
-      val (c, l) = ladder.last
-      ((c, l), recallAt(c, l))
-    }
+      val r = recallAt(step)
+      System.err.println(f"[graft-ann] autoNprobe: step $step recall@$k=$r%.3f " +
+        f"in ${(System.nanoTime() - ts) / 1e9}%.1f s")
+      r >= targetRecall
+    }.getOrElse(ladder.last)
     val stats = if (!collectStats) Seq.empty[(Long, Long)] else
-      pids.map(pid => (pid, hitsAt(out._1).getOrElse(pid, 0L)))
+      pids.map(pid => (pid, hitsAt(tuned).getOrElse(pid, 0L)))
     scored.unpersist()
-    (out._1, out._2, stats)
+    (tuned, recallAt(tuned), stats)
   }
 
-  /** Probe-side routing at the two-level tier, (_pid, _pv, _leaf): a
-    * probe searching (cells, leaves) visits its `leaves` best leaves
-    * among its `cells` best cells — [[nearestN]] over the coarse book,
-    * then over the leaf book with those cells as the groups. */
+  /** Probe-side IVF routing, (_pid, _pv, _leaf): a probe searching
+    * (cells, leaves) visits its `leaves` best leaves among its `cells`
+    * best cells — [[nearestN]] over the coarse book, then over the leaf
+    * book with those cells as the groups. */
   private def probeLeaves(probeD: DataFrame, cb: TwoLevelCodebook,
                           cells: Int, leaves: Int): DataFrame = {
     val near = nearestN(col("_pv"), cb.coarseBook, lit(0L), cells)("id")
@@ -580,28 +462,23 @@ object SimilaritySearch {
       .limit(n)
   }
 
-  /** The deterministic IVF coarse quantizer on its own: every vector
-    * labeled with its nearest k-means centroid (hash-seeded codebook
-    * refined by [[LloydIters]] Lloyd rounds) — flat clustering for
-    * corpus structure analysis (per-cluster profiles, mixture
-    * balancing, shard assignment). The codebook rides in the scan as
-    * data; the corpus is scanned once per round and never shuffled.
-    * Returns (idCol, cluster_id, cent_cos). */
+  /** The deterministic IVF quantizer on its own: every vector labeled
+    * with its leaf cluster of a freshly trained (coarseK, subK)
+    * codebook ([[trainIvf]]; a flat k-means of nlist clusters is the
+    * shape (1, nlist)) — clustering for corpus structure analysis
+    * (per-cluster profiles, mixture balancing, shard assignment). The
+    * codebook rides in the scan as data; the corpus is scanned once
+    * per round and never shuffled on the cluster key. Returns (idCol,
+    * cluster_id, cent_cos). */
   def assignClusters(corpus: DataFrame, idCol: String, vecCol: String,
-                     nlist: Int = 16): DataFrame =
-    flatAssign(corpus, idCol, vecCol, trainFlat(corpus, idCol, vecCol, nlist))
+                     coarseK: Int, subK: Int): DataFrame =
+    assignLeaves(corpus, idCol, vecCol, trainIvf(corpus, idCol, vecCol, coarseK, subK))
+      .select(col("_vid").as(idCol), col("_leaf").as("cluster_id"),
+        col("_lcos").as("cent_cos"))
 
-  /** (idCol, cluster_id, cent_cos): every vector labeled with its
-    * nearest flat centroid — one projection over the codebook as data
-    * ([[nearest]]), the corpus never joined or shuffled. */
-  private def flatAssign(df: DataFrame, idCol: String, vecCol: String,
-                         cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    val best = nearest(col(vecCol), Codebook.flat(cents))
-    df.select(col(idCol), best("id").as("cluster_id"), best("score").as("cent_cos"))
-  }
-
-  /** Sentinel `nlist`: derive the knob from a corpus count
-    * ([[deriveNlist]]) instead of taking it on faith — the semantic
+  /** Sentinel shape knob: a front door called with coarseK and subK
+    * both at AutoNlist derives the shape from a corpus count
+    * ([[autoShape]]) instead of taking it on faith — the semantic
     * family's front-door dispatch, mirroring the text-dedup family's
     * count-only cutoff analysis (Dedup.nearDupPairs). */
   val AutoNlist: Int = 0
@@ -653,7 +530,7 @@ object SimilaritySearch {
     * [[BroadcastIncByteBudget]] sizes the increment broadcast with. */
   def fatAssignBytesPerRow(d: Int): Long = 48L + 8L * d
 
-  /** Bytes one row of [[autoNprobeTwoLevel]]'s persisted scored frame
+  /** Bytes one row of [[autoNprobe]]'s persisted scored frame
     * costs on scratch: the frame is SLIM by construction — (pid, cid,
     * leaf, 6-dp cosine) projected before the persist — so the cost is
     * ~32 B of payload + row overhead through the disk store and the
@@ -661,7 +538,7 @@ object SimilaritySearch {
     * same ~2× overestimate margin the dedup constants do. */
   val TwoLevelScoredBytesPerRow: Long = 64L
 
-  /** Loud fail-fast for [[autoNprobeTwoLevel]]'s probes × corpus
+  /** Loud fail-fast for [[autoNprobe]]'s probes × corpus
     * ground-truth persist — the Dedup.refuseForScratch pattern, with
     * the remedy this surface actually has: fewer probes. At the
     * registered queries' 5 probes the frame is probe-bounded and
@@ -676,7 +553,7 @@ object SimilaritySearch {
     val gib = (b: Double) => (b / (1L << 30)).toLong
     if (rows > 0 && rows * TwoLevelScoredBytesPerRow > budget)
       throw new IllegalStateException(
-        f"[graft-ann] autoNprobeTwoLevel REFUSED: $nProbes probes × " +
+        f"[graft-ann] autoNprobe REFUSED: $nProbes probes × " +
           f"$nCorpus corpus rows materialize a ~$rows%.3g-row exact-recall " +
           f"frame (~${gib(rows * TwoLevelScoredBytesPerRow)} GiB at $TwoLevelScoredBytesPerRow B/row) " +
           s"against a ~${gib(budget)} GiB scratch budget " +
@@ -730,68 +607,63 @@ object SimilaritySearch {
     (c.toInt, s.toInt)
   }
 
+  /** The shape a front door runs at: the caller's (coarseK, subK), or —
+    * both at [[AutoNlist]] — the one the corpus count `n` derives:
+    * [[deriveTwoLevel]]'s past the flat ceiling, else one cell of
+    * [[deriveNlist]] lists. `n` is by-name, so a forced shape never
+    * pays the count pass. */
+  private def autoShape(op: String, coarseK: Int, subK: Int, n: => Long): (Int, Int) =
+    if (coarseK != AutoNlist || subK != AutoNlist) (coarseK, subK) else {
+      val m = n
+      val (c, s) = deriveTwoLevel(m).getOrElse((1, deriveNlist(m)))
+      System.err.println(s"[graft-ann] $op: auto coarseK=$c subK=$s " +
+        s"(${c * s} lists) for $m vectors (~${m / (c.toLong * s)} per list)")
+      (c, s)
+    }
+
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
-    * arXiv:2303.09540): cluster with the IVF coarse quantizer
-    * ([[assignClusters]]), compare pairs ONLY within each cluster, and
-    * mark the higher id of every pair at cosine >= `threshold` as
+    * arXiv:2303.09540): cluster with the IVF quantizer
+    * ([[assignClusters]]), compare pairs ONLY within each leaf cluster,
+    * and mark the higher id of every pair at cosine >= `threshold` as
     * dropped. Returns one row per input vector:
     * (idCol, cluster_id, is_dropped).
     *
-    * `nlist` is THE scale knob: the pair stage costs ~N²/nlist cosine
-    * evaluations (each cluster is (N/nlist)-sized), so growing nlist
-    * with the corpus keeps per-cluster populations — and per-vector
-    * pair work — constant. The default is the [[AutoNlist]] front
-    * door: one count pass derives nlist ≈ N/[[TargetClusterSize]]
-    * ([[deriveNlist]]) so the knob turns itself — measured at the
-    * 100× fixture (200k vectors, SemDedupScale tool): the derived
-    * nlist=256 runs in the flat region where a fixed nlist=16 ground
-    * 184 s pair-bound (SCALING.md table). Callers that must pin the
-    * codebook (the oracle-replayed queries) pass nlist explicitly.
-    * Exact twins land in the same cluster at ANY nlist (identical
-    * direction ⇒ identical nearest centroid), so recall on true
-    * duplicates does not depend on the knob. */
+    * The shape is THE scale knob: the pair stage costs ~N²/(coarseK·subK)
+    * cosine evaluations while assignment stays N·(coarseK + subK), so
+    * growing the leaf count with the corpus keeps per-cluster
+    * populations — and per-vector pair work — constant. The default
+    * is the [[AutoNlist]] front door: one count pass derives the shape
+    * ([[autoShape]]) so the knob turns itself — one cell of
+    * N/[[TargetClusterSize]] lists below the flat ceiling, two levels
+    * above it — measured at the 100× fixture (200k vectors,
+    * SemDedupScale tool): the derived nlist=256 runs in the flat
+    * region where a fixed nlist=16 ground 184 s pair-bound (SCALING.md
+    * table). Callers that must pin the codebook (the oracle-replayed
+    * queries) pass the shape explicitly. Exact twins land in the same
+    * cell AND leaf at ANY shape (identical direction ⇒ identical
+    * argmax at both levels), so recall on true duplicates does not
+    * depend on the knob. */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
-                    nlist: Int = AutoNlist, threshold: Double = 0.99): DataFrame = {
-    val eff = if (nlist != AutoNlist) nlist else {
-      // one count pass drives BOTH tiers: flat below MaxAutoNlist,
-      // two-level above it (deriveTwoLevel) — the knob ladder turns
-      // itself all the way up.
-      val n = corpus.count()
-      deriveTwoLevel(n) match {
-        case Some((c, s)) =>
-          System.err.println(s"[graft-ann] semanticDedup: auto TWO-LEVEL " +
-            s"coarseK=$c subK=$s (${c * s} leaves) for $n vectors " +
-            s"(~${n / math.max(c.toLong * s, 1L)} per leaf)")
-          return semanticDedupTwoLevel(corpus, idCol, vecCol, c, s, threshold)
-        case None =>
-          val derived = deriveNlist(n)
-          System.err.println(s"[graft-ann] semanticDedup: auto nlist=$derived " +
-            s"for $n vectors (~${n / math.max(derived, 1)} per cluster)")
-          derived
-      }
+                    coarseK: Int = AutoNlist, subK: Int = AutoNlist,
+                    threshold: Double = 0.99): DataFrame = {
+    val (c, s) = autoShape("semanticDedup", coarseK, subK, corpus.count())
+    // dedupWithAssignment checkpoints the assignment eagerly, so inside
+    // the loan it reads the training's cached cells instead of re-running
+    // the coarse assignment scan
+    withIvfCodebook(corpus, idCol, vecCol, c, s) { (_, assigned) =>
+      dedupWithAssignment(corpus, idCol, vecCol, assigned, threshold)
     }
-    semanticDedupWithCents(corpus, idCol, vecCol,
-      trainFlat(corpus, idCol, vecCol, eff), threshold)
   }
 
-  /** [[semanticDedup]]'s core against a GIVEN (frozen or just-trained)
-    * codebook: assignment via [[flatAssign]], pairwise cosine within
-    * each cluster, drop the higher id at cos >= threshold. */
-  private def semanticDedupWithCents(corpus: DataFrame, idCol: String,
-      vecCol: String, cents: Seq[(Long, Seq[Double])],
-      threshold: Double): DataFrame =
-    dedupWithAssignment(corpus, idCol, vecCol,
-      flatAssign(corpus, idCol, vecCol, cents).select(col(idCol), col("cluster_id")),
-      threshold)
-
-  /** The cluster-bounded PAIR stage both tiers share: pairwise cosine
-    * WITHIN each assigned cluster, pairs at cos >= threshold emitted as
-    * (i, j, cos), i < j. `assigned` = (idCol, cluster_id). The pair
-    * rows are produced INSIDE the cluster-keyed join's output iterator
-    * and filtered immediately — the shuffle mass is N fat rows (linear
-    * in the corpus), never the pair mass, which is what lets this
-    * shape carry a pair stage the candidate-materializing LSH path
-    * cannot (see [[nearDupPairsAuto]]). */
+  /** The cluster-bounded PAIR stage dedup and the leaf pair source
+    * share: pairwise cosine WITHIN each assigned cluster, pairs at
+    * cos >= threshold emitted as (i, j, cos), i < j. `assigned` =
+    * (idCol, cluster_id). The pair rows are produced INSIDE the
+    * cluster-keyed join's output iterator and filtered immediately —
+    * the shuffle mass is N fat rows (linear in the corpus), never the
+    * pair mass, which is what lets this shape carry a pair stage the
+    * candidate-materializing LSH path cannot (see
+    * [[nearDupPairsAuto]]). */
   private def pairsWithAssignment(corpus: DataFrame, idCol: String,
       vecCol: String, assigned: DataFrame, threshold: Double): DataFrame = {
     val av = corpus.select(col(idCol), col(vecCol)).join(assigned, Seq(idCol))
@@ -805,14 +677,14 @@ object SimilaritySearch {
         round(col("_pcos"), 6).as("cos"))
   }
 
-  /** The dedup pair stage both tiers share: pairwise cosine WITHIN each
-    * assigned cluster, drop the higher id at cos >= threshold.
-    * `assigned` = (idCol, cluster_id). */
+  /** The dedup pair stage [[semanticDedup]] and [[buildSemanticIndex]]
+    * share: pairwise cosine WITHIN each assigned cluster, drop the
+    * higher id at cos >= threshold. `assigned` = (idCol, cluster_id). */
   private def dedupWithAssignment(corpus: DataFrame, idCol: String,
       vecCol: String, assigned: DataFrame, threshold: Double): DataFrame = {
     // The assignment is referenced THREE times below (both sides of the
-    // pair self-join via `av`, plus the verdict join) — and for the
-    // two-level tier each reference re-ran the whole leaf assignment
+    // pair self-join via `av`, plus the verdict join) — and above one
+    // cell each reference re-ran the whole leaf assignment
     // (the r16 plan audit counted it three times in one
     // semantic_dedup_twolevel plan). Materialize the slim (id,
     // cluster_id) frame ONCE — N 16-byte rows, linear and far smaller
@@ -827,12 +699,13 @@ object SimilaritySearch {
         coalesce(col("is_dropped"), lit(false)).as("is_dropped"))
   }
 
-  /** Two-level (hierarchical) coarse quantizer codebook: `coarse`
-    * top-level cells plus per-cell sub-centroid `leaves` — (cell_id,
-    * leaf_id, vec), leaf ids globally unique (they stay the seed
-    * vector ids, like the flat codebook's). The tier above
-    * [[MaxAutoNlist]] (public design: Faiss IVF's two-level / IMI
-    * family): assignment costs N·(coarseK + subK) cosines instead of
+  /** The IVF codebook: `coarse` top-level cells plus per-cell
+    * sub-centroid `leaves` — (cell_id, leaf_id, vec), leaf ids globally
+    * unique (they stay the seed vector ids). Its shape (coarseK, subK)
+    * spans both tiers (public design: Faiss IVF and its two-level /
+    * IMI family): a flat k-means of nlist lists is (1, nlist) — one
+    * cell holding every leaf — and above [[MaxAutoNlist]] the two
+    * levels cost N·(coarseK + subK) cosines per assignment instead of
     * the flat N·(coarseK·subK). */
   case class TwoLevelCodebook(coarse: Seq[(Long, Seq[Double])],
                               leaves: Seq[(Long, Long, Seq[Double])]) {
@@ -841,29 +714,41 @@ object SimilaritySearch {
     @transient private[graft] lazy val leafBook: Codebook = Codebook(leaves)
   }
 
-  /** Train the two-level codebook: coarse k-means ([[trainFlat]] — hash
-    * seeds, 6-dp re-anchoring, id tiebreaks), assign every vector to
-    * its coarse cell ONCE (persisted), then train subK sub-centroids
-    * INSIDE each cell — seeds are the subK smallest-md5 ids per cell
-    * (WindowGroupLimit prunes the seed scan in-shuffle, so only
-    * ~partitions·coarseK·subK rows ever cross the exchange), and the
-    * sub-rounds are the same [[lloyd]] ladder with the cell as each
-    * row's group (a vector meets only its own cell's leaves). Only the
-    * coarseK·subK × d model crosses the driver boundary between rounds.
-    *
-    * With coarseK = 1 this is EXACTLY the flat quantizer at nlist =
-    * subK — one cell holds everything, the per-cell seed order is the
-    * global md5 order, and the sub-Lloyd rounds are the flat Lloyd
-    * rounds (AnnSpec pins the equivalence). Exact/scaled twins land in
-    * the same cell AND the same leaf at any codebook (identical
-    * direction ⇒ identical argmax at both levels), so dedup recall on
-    * true duplicates does not depend on the tier. */
-  def trainTwoLevel(corpus: DataFrame, idCol: String, vecCol: String,
-                    coarseK: Int, subK: Int,
-                    iters: Int = LloydIters): TwoLevelCodebook =
-    withTwoLevelCells(corpus, idCol, vecCol, coarseK, subK, iters)((cb, _) => cb)
+  object TwoLevelCodebook {
+    /** A flat codebook as the one-cell shape: the cell is keyed by the
+      * first entry's id and stores its vector (at one cell routing never
+      * reads it — [[cellAssign]]); leaves sorted by id. */
+    def oneCell(flat: Seq[(Long, Seq[Double])]): TwoLevelCodebook =
+      TwoLevelCodebook(flat.take(1), flat.map(e => (flat.head._1, e._1, e._2)).sortBy(_._2))
+  }
 
-  /** Loan-pattern face of [[trainTwoLevel]] (round 17): training
+  /** Train the IVF codebook at shape (coarseK, subK): coarse k-means
+    * ([[trainFlat]] — hash seeds, 6-dp re-anchoring, id tiebreaks),
+    * assign every vector to its coarse cell ONCE (persisted), then
+    * train subK sub-centroids INSIDE each cell — seeds are the subK
+    * smallest-md5 ids per cell (WindowGroupLimit prunes the seed scan
+    * in-shuffle, so only ~partitions·coarseK·subK rows ever cross the
+    * exchange), and the sub-rounds are the same [[lloyd]] ladder with
+    * the cell as each row's group (a vector meets only its own cell's
+    * leaves). Only the coarseK·subK × d model crosses the driver
+    * boundary between rounds.
+    *
+    * At coarseK = 1 the leaves ARE the flat quantizer trainFlat(subK)
+    * and no coarse work runs: one cell holds everything, so the
+    * per-cell seed order is the global md5 order and the sub-Lloyd
+    * rounds are the flat Lloyd rounds (AnnSpec pins the results
+    * against the flat quantizer's). The cell keeps the first seed's
+    * id. Exact/scaled twins land in the same cell AND the same leaf at
+    * any codebook (identical direction ⇒ identical argmax at both
+    * levels), so dedup recall on true duplicates does not depend on
+    * the shape. Training is deterministic, so a caller that tunes AND
+    * searches trains once and passes the same codebook to both. */
+  def trainIvf(corpus: DataFrame, idCol: String, vecCol: String,
+               coarseK: Int, subK: Int,
+               iters: Int = LloydIters): TwoLevelCodebook =
+    withIvfCodebook(corpus, idCol, vecCol, coarseK, subK, iters)((cb, _) => cb)
+
+  /** Loan-pattern face of [[trainIvf]]: above one cell, training
     * materializes the coarse cell assignment (`cells`, persisted for
     * the sub-Lloyd rounds) and every dedup/pair caller immediately
     * needs the leaf assignment derived from it. `f` gets that
@@ -873,41 +758,52 @@ object SimilaritySearch {
     * the coarse scan; the unpersist stays in-call (invocation-scoped —
     * no cross-run cache leak). Plans that escape `f` lazily stay
     * CORRECT after the unpersist (the logical subtree just
-    * recomputes). */
-  private[graft] def withTwoLevelCells[T](corpus: DataFrame, idCol: String,
+    * recomputes). At one cell nothing is persisted: the assignment is
+    * the flat nearest-leaf projection. */
+  private[graft] def withIvfCodebook[T](corpus: DataFrame, idCol: String,
       vecCol: String, coarseK: Int, subK: Int, iters: Int = LloydIters)(
       f: (TwoLevelCodebook, DataFrame) => T): T = {
     import org.apache.spark.storage.StorageLevel
-    require(coarseK >= 1 && subK >= 1, "trainTwoLevel: coarseK and subK must be >= 1")
-    val coarse = trainFlat(corpus, idCol, vecCol, coarseK, iters)
-    val cells = cellAssign(corpus, idCol, vecCol, Codebook.flat(coarse))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // per-cell seeds: subK smallest md5(id) in each cell — the
-      // hashCentroids sample, partitioned. rk <= subK is pruned by
-      // WindowGroupLimit before the exchange.
-      val wSeed = Window.partitionBy(col("_cell"))
-        .orderBy(md5(col("_vid").cast("string")), col("_vid"))
-      val seeds = cells
-        .withColumn("_rk", row_number().over(wSeed))
-        .filter(col("_rk") <= subK)
-        .select(col("_cell"), col("_vid"), col("_vv"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toVector: Seq[Double])).toSeq
-        .sortBy(l => (l._1, l._2))
-      val cb = TwoLevelCodebook(coarse,
-        lloyd(cells, Seq(col("_cell") -> col("_vv")), seeds, l2 = false, iters))
-      f(cb, bestLeaf(cells, cb.leafBook)
-        .select(col("_vid").as(idCol), col("_leaf").as("cluster_id")))
-    } finally { cells.unpersist(); () }
+    require(coarseK >= 1 && subK >= 1, "trainIvf: coarseK and subK must be >= 1")
+    def leafAssignment(cells: DataFrame, cb: TwoLevelCodebook) =
+      bestLeaf(cells, cb.leafBook).select(col("_vid").as(idCol), col("_leaf").as("cluster_id"))
+    if (coarseK == 1) {
+      val cb = TwoLevelCodebook.oneCell(trainFlat(corpus, idCol, vecCol, subK, iters))
+      f(cb, leafAssignment(cellAssign(corpus, idCol, vecCol, cb), cb))
+    } else {
+      val coarse = trainFlat(corpus, idCol, vecCol, coarseK, iters)
+      val cells = cellAssign(corpus, idCol, vecCol, TwoLevelCodebook(coarse, Nil))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        // per-cell seeds: subK smallest md5(id) in each cell — the
+        // hashCentroids sample, partitioned. rk <= subK is pruned by
+        // WindowGroupLimit before the exchange.
+        val wSeed = Window.partitionBy(col("_cell"))
+          .orderBy(md5(col("_vid").cast("string")), col("_vid"))
+        val seeds = cells
+          .withColumn("_rk", row_number().over(wSeed))
+          .filter(col("_rk") <= subK)
+          .select(col("_cell"), col("_vid"), col("_vv"))
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toVector: Seq[Double])).toSeq
+          .sortBy(l => (l._1, l._2))
+        val cb = TwoLevelCodebook(coarse,
+          lloyd(cells, Seq(col("_cell") -> col("_vv")), seeds, l2 = false, iters))
+        f(cb, leafAssignment(cells, cb))
+      } finally { cells.unpersist(); () }
+    }
   }
 
   /** (idCol -> _vid, double vec -> _vv, coarse cell -> _cell): the
-    * one-pass coarse assignment both training and search share. */
+    * one-pass coarse assignment both training and search share. A
+    * one-cell codebook routes every vector to its cell without
+    * scoring it. */
   private def cellAssign(corpus: DataFrame, idCol: String, vecCol: String,
-                         coarse: Codebook): DataFrame =
+                         cb: TwoLevelCodebook): DataFrame =
     corpus.select(col(idCol).as("_vid"), asDoubles(vecCol).as("_vv"))
-      .withColumn("_cell", nearest(col("_vv"), coarse)("id"))
+      .withColumn("_cell",
+        if (cb.coarse.size == 1) lit(cb.coarse.head._1)
+        else nearest(col("_vv"), cb.coarseBook)("id"))
 
   /** Per-vector best leaf WITHIN its coarse cell — the cell is the
     * row's group in the leaf codebook, so a vector only meets its own
@@ -921,157 +817,54 @@ object SimilaritySearch {
       .select(col("_vid"), col("_vv"), col("_b.id").as("_leaf"),
         col("_b.score").as("_lcos"))
 
-  /** Flat-clustering face of the two-level quantizer (the
-    * [[assignClusters]] contract at the hierarchical tier): every
-    * vector labeled with its leaf cluster. Two broadcast-join scans —
-    * coarse cell then within-cell leaf — and the corpus is never
-    * shuffled on the cluster key. Returns (idCol, cluster_id,
-    * cent_cos). */
-  def assignClustersTwoLevel(corpus: DataFrame, idCol: String, vecCol: String,
-                             coarseK: Int, subK: Int): DataFrame = {
-    val cb = trainTwoLevel(corpus, idCol, vecCol, coarseK, subK)
-    assignLeaves(corpus, idCol, vecCol, cb)
-      .select(col("_vid").as(idCol), col("_leaf").as("cluster_id"),
-        col("_lcos").as("cent_cos"))
-  }
-
-  /** Assignment against a FROZEN two-level codebook (no retraining). */
+  /** Assignment against a FROZEN codebook (no retraining). */
   def assignLeaves(corpus: DataFrame, idCol: String, vecCol: String,
                    cb: TwoLevelCodebook): DataFrame =
-    bestLeaf(cellAssign(corpus, idCol, vecCol, cb.coarseBook), cb.leafBook)
+    bestLeaf(cellAssign(corpus, idCol, vecCol, cb), cb.leafBook)
 
-  /** IVF batch ANN at the hierarchical tier — the retrieval face of
-    * the two-level quantizer ([[topKCosineIvf]]'s contract above the
-    * flat codebook ceiling): corpus vectors live in LEAF inverted
-    * lists; a probe ranks the coarse cells (cost coarseK), visits its
-    * `nprobeCells` best, ranks THOSE cells' leaves (cost ≤
-    * nprobeCells·subK), and searches its `nprobeLeaves` best lists —
-    * so probe-side routing costs coarseK + nprobeCells·subK cosines
-    * instead of the flat quantizer's full-codebook scan, mirroring
-    * the corpus-side assignment win. Exact-cosine rerank + per-probe
-    * top-k, every rank on (6-dp rounded cos, id) as in the flat IVF,
-    * so the whole search is engine-portable and the DuckDB oracle
-    * replays it end to end. */
-  def topKCosineIvfTwoLevel(probes: DataFrame, probeIdCol: String,
-                            corpus: DataFrame, idCol: String, vecCol: String,
-                            k: Int, coarseK: Int = 4, subK: Int = 4,
-                            nprobeCells: Int = 2,
-                            nprobeLeaves: Int = 4,
-                            codebook: Option[TwoLevelCodebook] = None): DataFrame = {
-    require(nprobeCells <= coarseK, "topKCosineIvfTwoLevel: nprobeCells <= coarseK")
-    // deterministic training: a caller that already trained (the
-    // autotune + search pair) passes the codebook and skips the rerun
-    val cb = codebook.getOrElse(
-      trainTwoLevel(corpus, idCol, vecCol, coarseK, subK))
-    val assigned = assignLeaves(corpus, idCol, vecCol, cb)
-      .select(col("_vid").as("_cid"), col("_vv").as("_cv"), col("_leaf"))
-    val probeD = probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
-    // candidates = the routed leaves' inverted lists (the assignment
-    // carries each vector, so no corpus re-join); exact rerank
-    assigned.join(broadcast(probeLeaves(probeD, cb, nprobeCells, nprobeLeaves)), Seq("_leaf"))
-      .filter(col("_pid") =!= col("_cid"))
-      .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
-        round(cosine(col("_cv"), col("_pv")), 6).as("cos"))
-      .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
-  }
-
-  /** [[semanticDedup]] at the hierarchical tier: cluster with the
-    * two-level quantizer, compare pairs ONLY within each LEAF, drop
-    * the higher id at cos >= threshold. Pair work is leaf-bounded
-    * (~N²/(coarseK·subK) cosines) while assignment stays
-    * N·(coarseK + subK) — the shape that keeps BOTH stages flat as
-    * the corpus grows past the flat quantizer's 4M-vector ceiling.
-    * Same output contract as [[semanticDedup]]: (idCol, cluster_id,
-    * is_dropped); with coarseK = 1 the result is row-identical to the
-    * flat path at nlist = subK. */
-  def semanticDedupTwoLevel(corpus: DataFrame, idCol: String, vecCol: String,
-                            coarseK: Int, subK: Int,
-                            threshold: Double = 0.99): DataFrame = {
-    // dedupWithAssignment checkpoints the assignment eagerly, so inside
-    // the loan it reads the training's cached cells instead of re-running
-    // the coarse assignment scan (round 17)
-    withTwoLevelCells(corpus, idCol, vecCol, coarseK, subK) { (_, assigned) =>
-      dedupWithAssignment(corpus, idCol, vecCol, assigned, threshold)
-    }
-  }
-
-  /** Frozen semantic-dedup index: the trained centroid codebook plus
-    * the KEPT (deduplicated) corpus vectors labeled with their
-    * clusters — the signature-store contract for embeddings. Build
-    * once per corpus; increments then dedup against the store
+  /** Frozen semantic-dedup index: the trained codebook plus the KEPT
+    * (deduplicated) corpus vectors labeled with their leaf clusters —
+    * the signature-store contract for embeddings. Build once per
+    * corpus; increments then dedup against the store
     * ([[semanticDedupAgainstIndex]]) without retraining centroids or
     * rescanning anything but the matching clusters. */
-  case class SemanticIndex(cents: Seq[(Long, Seq[Double])], kept: DataFrame,
+  case class SemanticIndex(codebook: TwoLevelCodebook, kept: DataFrame,
                            builtN: Long = -1L,
-                           twoLevel: Option[TwoLevelCodebook] = None,
                            // the kept layout's OWN bucket count: read
                            // from the store meta, defaulted for
                            // in-memory indexes; every group filter on
                            // this index must use it, never the constant
                            groups: Int = SemanticStoreGroups)
 
-  /** Train centroids on the corpus, drop its internal near-dups, and
+  /** Train the codebook on the corpus, drop its internal near-dups, and
     * freeze (codebook, kept vectors) as the [[SemanticIndex]]. The
-    * default nlist is the [[AutoNlist]] front door, so a store frozen
+    * default shape is the [[AutoNlist]] front door, so a store frozen
     * from a 100× corpus gets a 100×-appropriate codebook without
     * anyone remembering to turn the knob — and past the flat
-    * quantizer's ceiling ([[deriveTwoLevel]]) the frozen codebook is
-    * the TWO-LEVEL one, so a billion-vector store never grinds its
-    * build on a flat 4096-leaf assignment; `builtN` records the corpus
-    * size the codebook was trained at, the staleness denominator
-    * downstream consumers (semanticDedupSink) check against. */
+    * quantizer's ceiling ([[deriveTwoLevel]]) the frozen codebook has
+    * two levels, so a billion-vector store never grinds its build on a
+    * flat 4096-leaf assignment; `builtN` records the corpus size the
+    * codebook was trained at, the staleness denominator downstream
+    * consumers (semanticDedupSink) check against. */
   def buildSemanticIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                         nlist: Int = AutoNlist, threshold: Double = 0.99): SemanticIndex = {
+                         coarseK: Int = AutoNlist, subK: Int = AutoNlist,
+                         threshold: Double = 0.99): SemanticIndex = {
     val n = corpus.count()
-    val eff = if (nlist != AutoNlist) nlist else deriveTwoLevel(n) match {
-      case Some((c, s)) =>
-        System.err.println(s"[graft-ann] buildSemanticIndex: auto TWO-LEVEL " +
-          s"coarseK=$c subK=$s (${c * s} leaves) for $n vectors")
-        return buildSemanticIndexTwoLevel(corpus, idCol, vecCol, c, s, threshold, n)
-      case None =>
-        val derived = deriveNlist(n)
-        System.err.println(s"[graft-ann] buildSemanticIndex: auto nlist=$derived " +
-          s"for $n vectors (~${n / math.max(derived, 1)} per cluster)")
-        derived
+    val (c, s) = autoShape("buildSemanticIndex", coarseK, subK, n)
+    withIvfCodebook(corpus, idCol, vecCol, c, s) { (cb, assigned) =>
+      SemanticIndex(cb, dedupWithAssignment(corpus, idCol, vecCol, assigned, threshold)
+        .filter(!col("is_dropped"))
+        .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
+        .select(col(idCol), col("cluster_id"), col(vecCol)), builtN = n)
     }
-    val cents = trainFlat(corpus, idCol, vecCol, eff)
-    val kept = semanticDedupWithCents(corpus, idCol, vecCol, cents, threshold)
-      .filter(!col("is_dropped"))
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol), col("cluster_id"), col(vecCol))
-    SemanticIndex(cents, kept, builtN = n)
-  }
-
-  /** The frozen store at the hierarchical tier (forced shape —
-    * [[buildSemanticIndex]]'s AutoNlist dispatches here past the flat
-    * ceiling): `cents` holds the LEAVES (leaf_id, vec) so consumers
-    * reading the codebook see the same contract, and `twoLevel`
-    * carries the full structure increments are assigned with. At
-    * coarseK = 1 the frozen store is row-identical to the flat one at
-    * nlist = subK (AnnSpec pins it). */
-  def buildSemanticIndexTwoLevel(corpus: DataFrame, idCol: String, vecCol: String,
-                                 coarseK: Int, subK: Int,
-                                 threshold: Double = 0.99,
-                                 knownN: Long = -1L): SemanticIndex = {
-    val n = if (knownN >= 0) knownN else corpus.count()
-    val (cb, kept) = withTwoLevelCells(corpus, idCol, vecCol, coarseK, subK) {
-      (cb, assigned) =>
-        (cb, dedupWithAssignment(corpus, idCol, vecCol, assigned, threshold)
-          .filter(!col("is_dropped"))
-          .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-          .select(col(idCol), col("cluster_id"), col(vecCol)))
-    }
-    SemanticIndex(cb.leaves.map(l => (l._2, l._3)), kept, builtN = n,
-      twoLevel = Some(cb))
   }
 
   /** Persist a [[SemanticIndex]] (the writePqIndex discipline): kept
     * vectors PARTITIONED BY cluster group ([[clusterGroup]] — the
     * layout that lets an increment-driven comparison read
     * partition-prune the store to the clusters it can possibly match),
-    * the codebook as (cent_id, cv) rows, the two-level structure —
-    * when present — as its own (cell, leaf_id, cv) table, and a
-    * one-row meta table carrying builtN. This is what makes the
+    * the codebook as its coarse (cent_id, cv) and leaf (cell, leaf_id,
+    * cv) tables, and a one-row meta table carrying builtN. This is what makes the
     * streaming [[graft.streaming.StreamOps.semanticDedupSink]]
     * RESTARTABLE without retraining: a restarted driver reads the
     * frozen store instead of re-running Lloyd on the corpus (whose
@@ -1083,7 +876,7 @@ object SimilaritySearch {
     // bounds the kept count from above and is already known — no
     // re-execution of the kept computation to count it); recorded in
     // the meta table so readers prune with the layout's own count
-    val d = index.cents.headOption.map(_._2.size).getOrElse(0)
+    val d = index.codebook.leaves.headOption.map(_._3.size).getOrElse(0)
     val grps = deriveStoreGroups(index.builtN, d)
     index.kept
       .withColumn("cluster_grp", clusterGroup(col("cluster_id"), grps))
@@ -1098,16 +891,11 @@ object SimilaritySearch {
       .sortWithinPartitions(col("cluster_grp"), col("cluster_id"))
       .write.partitionBy("cluster_grp")
       .mode("overwrite").parquet(s"$dir/kept")
-    index.cents.toDF("cent_id", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/cents")
-    index.twoLevel.foreach { cb =>
-      cb.coarse.toDF("cent_id", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
-      cb.leaves.toDF("cell", "leaf_id", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/leaves")
-    }
-    Seq((index.builtN, index.twoLevel.nonEmpty, grps))
-      .toDF("built_n", "two_level", "groups")
+    index.codebook.coarse.toDF("cent_id", "cv")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
+    index.codebook.leaves.toDF("cell", "leaf_id", "cv")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/leaves")
+    Seq((index.builtN, grps)).toDF("built_n", "groups")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
@@ -1120,12 +908,13 @@ object SimilaritySearch {
     * partition-prune the scan; consumers that join the store select
     * their columns explicitly, so the extra column is inert. Stores
     * written before the partitioned layout read fine — the pruner
-    * falls back to computing the group. */
+    * falls back to computing the group — and so do flat stores written
+    * before the one-codebook layout (a `cents` table and a false
+    * `two_level` meta flag, no leaves table): read as one cell. */
   def readSemanticIndex(spark: org.apache.spark.sql.SparkSession,
                         dir: String): SemanticIndex = {
     val metaDf = spark.read.parquet(s"$dir/meta")
     val meta = metaDf.collect().head
-    val (builtN, isTwoLevel) = (meta.getLong(0), meta.getBoolean(1))
     // stores written before the size-derived layout carry no `groups`
     // column; they were all bucketed at the 64 constant, so that IS
     // their layout's count
@@ -1133,14 +922,15 @@ object SimilaritySearch {
       if (metaDf.columns.contains("groups"))
         meta.getInt(meta.fieldIndex("groups"))
       else SemanticStoreGroups
-    val two = if (!isTwoLevel) None else Some(TwoLevelCodebook(
-      readCodebook(spark, s"$dir/coarse"),
-      spark.read.parquet(s"$dir/leaves").collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          r.getSeq[Double](2).toVector: Seq[Double]))
-        .sortBy(l => (l._1, l._2)).toSeq))
-    SemanticIndex(readCodebook(spark, s"$dir/cents"),
-      spark.read.parquet(s"$dir/kept"), builtN, two, groups = grps)
+    val cb =
+      if (metaDf.columns.contains("two_level") && !meta.getAs[Boolean]("two_level"))
+        TwoLevelCodebook.oneCell(readCodebook(spark, s"$dir/cents"))
+      else TwoLevelCodebook(readCodebook(spark, s"$dir/coarse"),
+        spark.read.parquet(s"$dir/leaves").collect()
+          .map(r => (r.getLong(0), r.getLong(1),
+            r.getSeq[Double](2).toVector: Seq[Double]))
+          .sortBy(l => (l._1, l._2)).toSeq)
+    SemanticIndex(cb, spark.read.parquet(s"$dir/kept"), meta.getLong(0), grps)
   }
 
   /** A stored (id, vector) codebook table, sorted by id. */
@@ -1234,17 +1024,13 @@ object SimilaritySearch {
 
   /** The frozen-codebook assignment [[semanticDedupAgainstIndex]] keys
     * its joins with, exposed so callers (the streaming sink, store
-    * tools) can reuse the exact rule: two-level stores route the
-    * increment through coarse cell + leaf, flat stores through the
-    * flat argmax — never retrained. Returns (idCol, cluster_id). */
+    * tools) can reuse the exact rule: the increment routes through
+    * coarse cell + leaf of the stored codebook — never retrained.
+    * Returns (idCol, cluster_id). */
   def assignWithIndex(inc: DataFrame, idCol: String, vecCol: String,
-                      index: SemanticIndex): DataFrame = index.twoLevel match {
-    case Some(cb) =>
-      assignLeaves(inc, idCol, vecCol, cb)
-        .select(col("_vid").as(idCol), col("_leaf").as("cluster_id"))
-    case None =>
-      flatAssign(inc, idCol, vecCol, index.cents).select(col(idCol), col("cluster_id"))
-  }
+                      index: SemanticIndex): DataFrame =
+    assignLeaves(inc, idCol, vecCol, index.codebook)
+      .select(col("_vid").as(idCol), col("_leaf").as("cluster_id"))
 
   /** Incremental semantic dedup against a FROZEN index: assign each
     * increment vector with the stored centroids (never retrained — the
@@ -1279,7 +1065,7 @@ object SimilaritySearch {
     // footprint it implies) and row count — the broadcast dispatch
     // measures, never guesses. Collect is driver-safe by construction:
     // distinct clusters ≤ the codebook size, and the codebook
-    // (index.cents) is already a driver-resident Seq.
+    // (index.codebook) is already driver-resident.
     val gc = assigned.groupBy(col("cluster_id"),
         clusterGroup(col("cluster_id"), index.groups).as("_g"))
       .count().collect()

@@ -215,8 +215,8 @@ object Pipeline extends QueryModule {
     (1 to 10).map(i => 1.0 / (math.log(i + 1.0) / math.log(2.0)))
   private val Idcg10: Double = NdcgDiscounts.sum
 
-  /** DuckDB CTE chain rebuilding SimilaritySearch.trainIvf over
-    * an existing `e(vec_id, v)` CTE: hash-seeded codebook + `iters`
+  /** DuckDB CTE chain rebuilding the flat quantizer (SimilaritySearch.trainIvf
+    * at one cell, or its coarse level) over an existing `e(vec_id, v)` CTE: hash-seeded codebook + `iters`
     * unrolled Lloyd rounds (assignment by 6-dp rounded cosine with
     * cent_id tiebreaks; per-cluster per-dimension means rounded to the
     * same 6-dp grid Spark rounds on — the per-round rounding is what
@@ -252,7 +252,7 @@ object Pipeline extends QueryModule {
   }
 
   /** DuckDB CTE chain rebuilding the HIERARCHICAL tier
-    * (SimilaritySearch.trainTwoLevel + assignLeaves) on top of
+    * (SimilaritySearch.trainIvf above one cell + assignLeaves) on top of
     * `e(vec_id, v)` and the coarse `cents(cent_id, cv)` CTE from
     * [[lloydCentsSql]]: one coarse assignment, per-cell sub-seeds (the
     * subK smallest md5 ids within each cell), `iters` unrolled
@@ -619,7 +619,8 @@ object Pipeline extends QueryModule {
       val probes = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding"))
       SimilaritySearch.topKCosineIvf(probes, "probe_id",
-          emb, "vec_id", "embedding", k = 3, nlist = 16, nprobe = 4)
+          emb, "vec_id", "embedding", k = 3, coarseK = 1, subK = 16,
+          nprobeCells = 1, nprobeLeaves = 4)
         .orderBy(col("probe_id"), col("rk"))
     }),
 
@@ -634,7 +635,7 @@ object Pipeline extends QueryModule {
       val emb = Tables(s, dir, "embeddings")
       val probes = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding"))
-      SimilaritySearch.topKCosineIvfTwoLevel(probes, "probe_id",
+      SimilaritySearch.topKCosineIvf(probes, "probe_id",
           emb, "vec_id", "embedding", k = 3, coarseK = 4, subK = 4,
           nprobeCells = 2, nprobeLeaves = 4)
         .orderBy(col("probe_id"), col("rk"))
@@ -683,7 +684,8 @@ object Pipeline extends QueryModule {
       val probes = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding"))
       val ivf = SimilaritySearch.topKCosineIvf(probes, "probe_id",
-          emb, "vec_id", "embedding", k = 10, nlist = 16, nprobe = 4)
+          emb, "vec_id", "embedding", k = 10, coarseK = 1, subK = 16,
+          nprobeCells = 1, nprobeLeaves = 4)
         .select(col("probe_id"), col("vec_id"), col("rk").as("ark"))
       val pb = probes.select(col("probe_id"), col("embedding").as("pvec"))
       val w = Window.partitionBy(col("probe_id"))
@@ -715,9 +717,9 @@ object Pipeline extends QueryModule {
 
     // Recall-TARGETED retrieval eval: ann_eval reports what the index
     // does at a fixed nprobe; this query closes the loop — autoNprobe
-    // binary-searches the doubling ladder 1,2,4,8,16 for the smallest
-    // nprobe whose MEAN recall@10 against the exact top-10 reaches 0.9
-    // (monotone in nprobe, so the ladder search equals a linear scan),
+    // walks the doubling ladder 1,2,4,8,16 of the flat (1, 16) index to
+    // the first nprobe whose MEAN recall@10 against the exact top-10
+    // reaches 0.9 (monotone in nprobe, so that is the smallest one),
     // then reports the per-probe recall AT the tuned setting plus the
     // tuned knob itself and a target_met bound-boolean. The DuckDB
     // oracle replays the whole tuning: recall at EVERY ladder value,
@@ -726,8 +728,7 @@ object Pipeline extends QueryModule {
       val emb = Tables(s, dir, "embeddings")
       val probes = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding"))
-      // train ONCE (the r15 ann_eval_twolevel discipline at the flat
-      // tier), and report from the TUNER'S OWN frames: the pre-r16
+      // train ONCE (the r15 ann_eval_twolevel discipline), and report from the TUNER'S OWN frames: the pre-r16
       // plan re-derived the probes × corpus exact arm AND the tuned
       // IVF search from scratch after autoNprobe had just materialized
       // the identical frames (same rounded cosines, ranks, tie-breaks
@@ -737,10 +738,10 @@ object Pipeline extends QueryModule {
       // counts at the tuned nprobe; the report below is those numbers
       // verbatim (hash-identical output, checked against the unchanged
       // DuckDB oracle).
-      val cents = SimilaritySearch.trainIvf(emb, "vec_id", "embedding", nlist = 16)
-      val (np, rec, probeHits) = SimilaritySearch.autoNprobeStats(
+      val cb = SimilaritySearch.trainIvf(emb, "vec_id", "embedding", 1, 16)
+      val ((_, np), rec, probeHits) = SimilaritySearch.autoNprobeStats(
         probes, "probe_id", emb, "vec_id", "embedding",
-        k = 10, nlist = 16, targetRecall = 0.9, centroids = Some(cents))
+        k = 10, coarseK = 1, subK = 16, targetRecall = 0.9, codebook = Some(cb))
       import s.implicits._
       probeHits.toDF("probe_id", "n_hits")
         .select(col("probe_id"), col("n_hits"),
@@ -752,7 +753,7 @@ object Pipeline extends QueryModule {
     }),
 
     // Recall-targeted autotune at the HIERARCHICAL tier — ann_eval_tuned
-    // for the two-level quantizer: autoNprobeTwoLevel walks the
+    // for the two-level quantizer: autoNprobe walks the
     // (nprobeCells, nprobeLeaves) doubling ladder (LINEAR scan — the
     // joint ladder is not provably monotone, see the operator doc) to
     // the leftmost step whose mean recall@10 vs the exact top-10
@@ -772,9 +773,9 @@ object Pipeline extends QueryModule {
       // recompute; at production scale the old plan paid the
       // corpus-sized exact scan twice per eval run). Hash-identical
       // output against the unchanged DuckDB oracle.
-      val cb = SimilaritySearch.trainTwoLevel(emb, "vec_id", "embedding", 4, 4)
+      val cb = SimilaritySearch.trainIvf(emb, "vec_id", "embedding", 4, 4)
       val ((cells, leaves), rec, probeHits) =
-        SimilaritySearch.autoNprobeTwoLevelStats(
+        SimilaritySearch.autoNprobeStats(
           probes, "probe_id", emb, "vec_id", "embedding",
           k = 10, coarseK = 4, subK = 4, targetRecall = 0.9,
           codebook = Some(cb))
@@ -825,7 +826,7 @@ object Pipeline extends QueryModule {
           transform(col("embedding"),
             x => (x.cast("double") * lit(1.01)).cast("float")).as("embedding"))
       SimilaritySearch.semanticDedup(emb.unionByName(pert),
-          "vec_id", "embedding", nlist = 16, threshold = 0.99)
+          "vec_id", "embedding", coarseK = 1, subK = 16, threshold = 0.99)
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)).cast("long").as("n_vecs"),
           sum(when(col("is_dropped"), 1L).otherwise(0L)).cast("long").as("n_dropped"),
@@ -849,7 +850,7 @@ object Pipeline extends QueryModule {
     "semantic_dedup_store" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val index = SimilaritySearch.buildSemanticIndex(emb, "vec_id", "embedding",
-        nlist = 16, threshold = 0.99)
+        coarseK = 1, subK = 16, threshold = 0.99)
       def scaled(src: org.apache.spark.sql.DataFrame, offset: Long, f: Double) =
         src.select((col("vec_id") + offset).as("vec_id"),
           transform(col("embedding"),
@@ -949,7 +950,7 @@ object Pipeline extends QueryModule {
         .select((col("vec_id") + 10000).as("vec_id"),
           transform(col("embedding"),
             x => (x.cast("double") * lit(1.01)).cast("float")).as("embedding"))
-      SimilaritySearch.semanticDedupTwoLevel(emb.unionByName(pert),
+      SimilaritySearch.semanticDedup(emb.unionByName(pert),
           "vec_id", "embedding", coarseK = 4, subK = 4, threshold = 0.99)
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)).cast("long").as("n_vecs"),
@@ -990,7 +991,7 @@ object Pipeline extends QueryModule {
     // decisions. The DuckDB oracle rebuilds the identical iterations.
     "embed_clusters" -> ((s, dir) =>
       SimilaritySearch.assignClusters(
-          Tables(s, dir, "embeddings"), "vec_id", "embedding", nlist = 16)
+          Tables(s, dir, "embeddings"), "vec_id", "embedding", coarseK = 1, subK = 16)
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("n_vecs"),
           round(avg(col("cent_cos")), 6).as("avg_cos"),

@@ -707,8 +707,8 @@ object StreamOps {
     * lands as a batchId-keyed parquet shard, idempotently (a replayed
     * batch overwrites its own shard). foreachBatch for the
     * [[nearDupSink]] reason: the search needs batch-only operators and
-    * per-batch semantics ARE the meaning. The IVF index is rebuilt per
-    * batch here; a production deployment freezes the codebook and coded
+    * per-batch semantics ARE the meaning. The IVF index — the flat
+    * (1, 16) shape searched at nprobe 4 — is rebuilt per batch here; a production deployment freezes the codebook and coded
     * corpus once (the ann_ivf_pq store shape) and only the probe side
     * streams. StreamingSpec pins shard parity with the batch operator
     * run on the same probes. */
@@ -828,7 +828,8 @@ object StreamOps {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.operators.SimilaritySearch
-          .topKCosineIvf(batch, probeIdCol, corpus, idCol, vecCol, k)
+          .topKCosineIvf(batch, probeIdCol, corpus, idCol, vecCol, k,
+            coarseK = 1, subK = 16, nprobeCells = 1, nprobeLeaves = 4)
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
       .start()

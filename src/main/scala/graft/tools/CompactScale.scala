@@ -62,11 +62,11 @@ object CompactScale {
     val built = SimilaritySearch.buildSemanticIndex(corpus, "vec_id", "embedding")
     SimilaritySearch.writeSemanticIndex(built, idxDir)
     val buildSecs = (System.nanoTime() - t0) / 1e9
-    require(built.twoLevel.nonEmpty,
+    require(built.codebook.coarse.size > 1,
       s"AutoNlist did not dispatch two-level at $nCorpus vectors")
     val index = SimilaritySearch.readSemanticIndex(spark, idxDir)
     println(f"[compact-scale] index built+frozen in $buildSecs%.1f s " +
-      s"(builtN=${built.builtN}, leaves=${built.cents.size}, " +
+      s"(builtN=${built.builtN}, leaves=${built.codebook.leafCount}, " +
       s"groups=${index.groups})")
 
     // land increments: id%4==0 -> scaled twin of corpus row (drop vs

@@ -5,7 +5,10 @@ package graft.tools
   * writes `<outDir>/<name>_<suffix>.txt` with the FORMATTED plan of
   * each named query (plus the executed AQE plan's exchange/scan/codegen
   * summary line), so before/after plan claims in OPTIMIZATION_r*.md are
-  * checkable without running Spark. */
+  * checkable without running Spark. The `[plan]` line it prints per
+  * query is the one plan-shape summary: exchanges (not reused), reused
+  * (ReusedExchange and AQE-reused stages), parquet scans and codegen
+  * spans of the AQE final plan. */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)

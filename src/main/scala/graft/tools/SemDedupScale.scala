@@ -8,7 +8,7 @@ import graft.operators.SimilaritySearch
   * cosines, so the same corpus at a larger nlist should drop
   * near-proportionally in wall time while the drop verdicts for true
   * twins stay identical (identical direction ⇒ same cluster at any
-  * nlist). Usage: runMain graft.tools.SemDedupScale <sfDir> <nlist>...
+  * nlist). Each nlist runs as the flat shape (1, nlist). Usage: runMain graft.tools.SemDedupScale <sfDir> <nlist>...
   * where an nlist of `auto` exercises the AutoNlist front door
   * (deriveNlist from the corpus count).
   */
@@ -28,12 +28,12 @@ object SemDedupScale {
       import org.apache.spark.sql.functions.{col, desc}
       // stage A: centroid training + assignment alone
       val ta = System.nanoTime()
-      SimilaritySearch.assignClusters(emb, "vec_id", "embedding", nlist)
+      SimilaritySearch.assignClusters(emb, "vec_id", "embedding", 1, nlist)
         .write.format("noop").mode("overwrite").save()
       val assignSecs = (System.nanoTime() - ta) / 1e9
       println(f"[semdedup-scale] nlist=$nlist assign-only $assignSecs%.1f s")
       val t0 = System.nanoTime()
-      val out = SimilaritySearch.semanticDedup(emb, "vec_id", "embedding", nlist)
+      val out = SimilaritySearch.semanticDedup(emb, "vec_id", "embedding", 1, nlist)
         .filter(col("is_dropped"))
       val dropped = out.count()
       val secs = (System.nanoTime() - t0) / 1e9
@@ -42,7 +42,7 @@ object SemDedupScale {
           out.queryExecution.executedPlan.toString
             .replaceAll("""\[[-0-9.,]{60,}\]""", "[...]").take(20000))
       // pair cost is sum(size^2)/2, not n^2/nlist — show the skew
-      val sizes = SimilaritySearch.assignClusters(emb, "vec_id", "embedding", nlist)
+      val sizes = SimilaritySearch.assignClusters(emb, "vec_id", "embedding", 1, nlist)
         .groupBy(col("cluster_id")).count()
         .collect().map(_.getLong(1)).sortBy(-_)
       val pairMass = sizes.map(s => s.toDouble * (s - 1) / 2).sum

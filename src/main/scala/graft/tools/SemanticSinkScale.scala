@@ -73,9 +73,9 @@ object SemanticSinkScale {
     val t0 = System.nanoTime()
     val built = SimilaritySearch.buildSemanticIndex(corpus, "vec_id", "embedding")
     println(f"[semsink-scale] index built in ${(System.nanoTime() - t0) / 1e9}%.1f s " +
-      s"(two-level=${built.twoLevel.nonEmpty}, builtN=${built.builtN}, " +
-      s"leaves=${built.cents.size})")
-    require(built.twoLevel.nonEmpty,
+      s"(cells=${built.codebook.coarse.size}, builtN=${built.builtN}, " +
+      s"leaves=${built.codebook.leafCount})")
+    require(built.codebook.coarse.size > 1,
       s"AutoNlist did not dispatch two-level at $nCorpus vectors — " +
         "raise nCorpus past the FlatAssignRowBudget threshold (~1M)")
     // the PRODUCTION store shape: freeze to parquet and drive the sink

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * tool needs no fixture on disk and scales to any N.
   *
   * Usage: runMain graft.tools.TwoLevelScale <nVecs> [skip-flat|flat-only] [auto]
-  *   - times assignClustersTwoLevel(64, 64) (4096 leaves)
-  *   - times flat assignClusters(4096) unless `skip-flat`
+  *   - times assignClusters at shape (64, 64) (4096 leaves)
+  *   - times the flat shape (1, 4096) unless `skip-flat`
   *     (`flat-only` runs JUST that arm — it grinds for ~an hour at
   *     1M vectors, which is the point being measured)
   *   - with `auto`, also runs the AutoNlist front door end to end
@@ -58,7 +58,7 @@ object TwoLevelScale {
     if (!flatOnly) {
     val two = time("two-level assign (64x64 = 4096 leaves)") {
       val df = SimilaritySearch
-        .assignClustersTwoLevel(corpus, "vec_id", "embedding", 64, 64)
+        .assignClusters(corpus, "vec_id", "embedding", 64, 64)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.write.format("noop").mode("overwrite").save()
       df
@@ -90,7 +90,7 @@ object TwoLevelScale {
       // materializes no (vector, centroid) rows, so it runs at N·4096
       // cosines against the two-level arm's N·(coarseK + subK)
       time("flat assign (nlist = 4096)") {
-        SimilaritySearch.assignClusters(corpus, "vec_id", "embedding", 4096)
+        SimilaritySearch.assignClusters(corpus, "vec_id", "embedding", 1, 4096)
           .write.format("noop").mode("overwrite").save()
       }
     }

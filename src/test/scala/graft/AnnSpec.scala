@@ -18,6 +18,29 @@ class AnnSpec extends SparkSpecBase {
 
   private def clustered = AnnSpec.clusteredRows.toDF("vec_id", "embedding")
 
+  /** md5 over a result's rows, each rendered to a string, sorted. */
+  private def fingerprint(rows: Iterable[String]): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(rows.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+
+  /** [[fingerprint]]s of the flat quantizer's results on the clustered
+    * fixture, recorded from the flat code path (stable over three
+    * captures) before that path became the one-cell shape (1, nlist):
+    * the coarseK = 1 equivalence tests compare against these. */
+  private object FlatFingerprints {
+    /** trainIvf at nlist = 16 on the fixture ∪ its twins: "id:v1,...,vd" rows. */
+    val codebook = "bdbd2888d5c1243d2248038594e03e5f"
+    /** semanticDedup at nlist = 16, threshold 0.999, same corpus: "id,cluster,dropped". */
+    val dedupRows = "193da2cade94d0838a77ddfe0ce1720b"
+    /** buildSemanticIndex at nlist = 16 on the fixture: kept "id,cluster". */
+    val keptSet = "d65b364fbb1f1d71b53ba373a47b72b2"
+    /** That index's verdicts on the twin + reversed increment: "id,cluster,dropped". */
+    val incVerdicts = "60449495e39f923cd8ec7a4d5354b4de"
+    /** topKCosineIvf at nlist = 16, nprobe = 4, k = 5: "probe,vec,cos,rk". */
+    val topKRows = "cda1d0c5e2c72f0999b0fbc016e3c74b"
+  }
+
   /** The unfused L2 Lloyd ladder for ONE PQ subspace — hash seeds,
     * literal-fold argmin assignment, vecSumAgg means rounded to 6 dp —
     * the reference the fused [[SimilaritySearch.trainPq]] ladder is
@@ -97,7 +120,7 @@ class AnnSpec extends SparkSpecBase {
     val corpus = df.unionByName(twins)
     val got = SimilaritySearch
       .topKCosineIvf(twins, "vec_id", corpus, "vec_id", "embedding",
-        k = 1, nlist = 16, nprobe = 1)
+        k = 1, coarseK = 1, subK = 16, nprobeCells = 1, nprobeLeaves = 1)
       .collect().map(r => r.getAs[Long]("probe_id") -> r.getAs[Long]("vec_id")).toMap
     assert(got.size == twins.count(), "every twin probe retrieves something")
     assert(got.forall { case (p, id) => id == p - 50000 },
@@ -110,7 +133,7 @@ class AnnSpec extends SparkSpecBase {
       .select(col("vec_id").as("probe_id"), col("embedding"))
     val ivf = SimilaritySearch
       .topKCosineIvf(probes, "probe_id", df, "vec_id", "embedding",
-        k = 10, nlist = 8, nprobe = 8)
+        k = 10, coarseK = 1, subK = 8, nprobeCells = 1, nprobeLeaves = 8)
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("cos")))
     val exact = SimilaritySearch.topKCosine(df, "vec_id", "embedding", 1000L, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -131,8 +154,8 @@ class AnnSpec extends SparkSpecBase {
         .groupBy(col("vec_id")).agg(max(col("c")).as("best"))
         .agg(avg(col("best"))).head().getDouble(0)
     val seed = SimilaritySearch.hashCentroids(df, "vec_id", "embedding", 16)
-    val lloyd = SimilaritySearch.trainIvf(df, "vec_id", "embedding", 16)
-      .toDF("_cent_id", "_cent_vec")
+    val lloyd = SimilaritySearch.trainIvf(df, "vec_id", "embedding", 1, 16)
+      .leaves.map(l => (l._2, l._3)).toDF("_cent_id", "_cent_vec")
     val (qSeed, qLloyd) = (meanBestCos(seed), meanBestCos(lloyd))
     assert(qLloyd > qSeed,
       f"Lloyd codebook no tighter than the seed: $qLloyd%.4f <= $qSeed%.4f")
@@ -152,7 +175,7 @@ class AnnSpec extends SparkSpecBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val got = SimilaritySearch
       .topKCosineIvf(probes, "probe_id", df, "vec_id", "embedding",
-        k = 1, nlist = 16, nprobe = 2)
+        k = 1, coarseK = 1, subK = 16, nprobeCells = 1, nprobeLeaves = 2)
       .collect().map(r => r.getAs[Long]("probe_id") -> r.getAs[Long]("vec_id")).toMap
     val recall = truth.count { case (p, t) => got.get(p).contains(t) }.toDouble / truth.size
     assert(recall >= 0.9, f"Lloyd-IVF recall@1 $recall%.2f below contract")
@@ -278,8 +301,8 @@ class AnnSpec extends SparkSpecBase {
     // over the trained centroids — the nearest-centroid contract.
     val df = clustered.cache()
     val nlist = 40
-    val cents = SimilaritySearch.trainIvf(df, "vec_id", "embedding", nlist)
-      .map { case (cid, cv) => (cid, cv.toArray) }
+    val cents = SimilaritySearch.trainIvf(df, "vec_id", "embedding", 1, nlist)
+      .leaves.map { case (_, cid, cv) => (cid, cv.toArray) }
     def round6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     def cos(a: Array[Double], b: Array[Double]): Double = {
@@ -293,7 +316,7 @@ class AnnSpec extends SparkSpecBase {
       val best = cents.map { case (cid, cv) => (round6(cos(v, cv)), -cid) }.max
       vid -> ((-best._2, best._1))
     }.toMap
-    val got = SimilaritySearch.assignClusters(df, "vec_id", "embedding", nlist)
+    val got = SimilaritySearch.assignClusters(df, "vec_id", "embedding", 1, nlist)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(got.size == expected.size)
     expected.foreach { case (vid, e) =>
@@ -306,8 +329,8 @@ class AnnSpec extends SparkSpecBase {
       .select(col("vec_id"), col("embedding"))
     val probes = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("embedding"))
-    val (np, rec) = SimilaritySearch.autoNprobe(probes, "probe_id",
-      emb, "vec_id", "embedding", k = 10, nlist = 16, targetRecall = 0.9)
+    val ((_, np), rec) = SimilaritySearch.autoNprobe(probes, "probe_id",
+      emb, "vec_id", "embedding", k = 10, coarseK = 1, subK = 16, targetRecall = 0.9)
     val ladder = Seq(1, 2, 4, 8, 16)
     assert(ladder.contains(np), s"nprobe=$np off the ladder")
     assert(rec >= 0.9, s"tuned recall $rec below target")
@@ -315,7 +338,8 @@ class AnnSpec extends SparkSpecBase {
     // (computed through the registered IVF plan, the search's arm)
     def recallAt(p: Int): Double = {
       val ivf = SimilaritySearch.topKCosineIvf(probes, "probe_id",
-          emb, "vec_id", "embedding", k = 10, nlist = 16, nprobe = p)
+          emb, "vec_id", "embedding", k = 10, coarseK = 1, subK = 16,
+          nprobeCells = 1, nprobeLeaves = p)
         .select(col("probe_id"), col("vec_id"))
       val pb = probes.select(col("probe_id"), col("embedding").as("pvec"))
       val w = org.apache.spark.sql.expressions.Window
@@ -344,8 +368,8 @@ class AnnSpec extends SparkSpecBase {
     val cdf = clustered.cache()
     val cprobes = cdf.filter(col("vec_id").isin(0L, 1000L, 2000L))
       .select(col("vec_id").as("probe_id"), col("embedding"))
-    val (cnp, crec) = SimilaritySearch.autoNprobe(cprobes, "probe_id",
-      cdf, "vec_id", "embedding", k = 10, nlist = 16, targetRecall = 0.9)
+    val ((_, cnp), crec) = SimilaritySearch.autoNprobe(cprobes, "probe_id",
+      cdf, "vec_id", "embedding", k = 10, coarseK = 1, subK = 16, targetRecall = 0.9)
     assert(crec >= 0.9)
     assert(cnp < 16, s"tuner escalated to a full scan on a clustered corpus (nprobe=$cnp)")
   }
@@ -358,7 +382,7 @@ class AnnSpec extends SparkSpecBase {
     val expected = twins.collect().map(_.getLong(0)).toSet
     Seq(2, 8, 32).foreach { nlist =>
       val dropped = SimilaritySearch
-        .semanticDedup(corpus, "vec_id", "embedding", nlist, threshold = 0.999)
+        .semanticDedup(corpus, "vec_id", "embedding", 1, nlist, threshold = 0.999)
         .filter(col("is_dropped"))
         .collect().map(_.getLong(0)).toSet
       // every exact twin drops (same direction => same cluster at any
@@ -390,17 +414,17 @@ class AnnSpec extends SparkSpecBase {
       .select((col("vec_id") + 90000).as("vec_id"), col("embedding"))
     val corpus = df.unionByName(twins)
     val derived = SimilaritySearch.deriveNlist(corpus.count())
-    def rows(nlist: Int) = SimilaritySearch
-      .semanticDedup(corpus, "vec_id", "embedding", nlist, threshold = 0.999)
+    def rows(coarseK: Int, subK: Int) = SimilaritySearch
+      .semanticDedup(corpus, "vec_id", "embedding", coarseK, subK, threshold = 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(rows(SimilaritySearch.AutoNlist) == rows(derived))
+    assert(rows(SimilaritySearch.AutoNlist, SimilaritySearch.AutoNlist) == rows(1, derived))
     // and the index builder freezes the same derivation plus the
     // corpus size it trained at (the staleness denominator)
     val idx = SimilaritySearch.buildSemanticIndex(corpus, "vec_id", "embedding",
       threshold = 0.999)
     val idxExplicit = SimilaritySearch.buildSemanticIndex(corpus, "vec_id",
-      "embedding", nlist = derived, threshold = 0.999)
-    assert(idx.cents == idxExplicit.cents)
+      "embedding", coarseK = 1, subK = derived, threshold = 0.999)
+    assert(idx.codebook == idxExplicit.codebook)
     assert(idx.builtN == corpus.count())
   }
 
@@ -436,19 +460,20 @@ class AnnSpec extends SparkSpecBase {
     val twins = df.filter(col("vec_id") < 1100)
       .select((col("vec_id") + 90000).as("vec_id"), col("embedding"))
     val corpus = df.unionByName(twins)
-    val cb = SimilaritySearch.trainTwoLevel(corpus, "vec_id", "embedding",
+    val cb = SimilaritySearch.trainIvf(corpus, "vec_id", "embedding",
       coarseK = 1, subK = 16)
     val flatCents = SimilaritySearch
-      .assignClusters(corpus, "vec_id", "embedding", nlist = 16) // trains flat 16
+      .assignClusters(corpus, "vec_id", "embedding", 1, 16)
     val twoRows = SimilaritySearch
-      .semanticDedupTwoLevel(corpus, "vec_id", "embedding", 1, 16, threshold = 0.999)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val flatRows = SimilaritySearch
-      .semanticDedup(corpus, "vec_id", "embedding", nlist = 16, threshold = 0.999)
+      .semanticDedup(corpus, "vec_id", "embedding", 1, 16, threshold = 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(cb.leafCount == 16)
     assert(cb.leaves.forall(_._1 == cb.coarse.head._1)) // one cell holds every leaf
-    assert(twoRows == flatRows)
+    // the flat quantizer's codebook and dedup rows (FlatFingerprints)
+    assert(fingerprint(cb.leaves.map { case (_, id, v) => s"$id:${v.mkString(",")}" }) ==
+      FlatFingerprints.codebook)
+    assert(fingerprint(twoRows.map { case (i, c, d) => s"$i,$c,$d" }) ==
+      FlatFingerprints.dedupRows)
     // and the flat assignment's cluster-id set equals the leaf-id set
     val leafIds = cb.leaves.map(_._2).toSet
     val flatIds = flatCents.select("cluster_id").distinct()
@@ -466,7 +491,7 @@ class AnnSpec extends SparkSpecBase {
     val corpus = df.unionByName(twins)
     val expected = twins.collect().map(_.getLong(0)).toSet
     val dropped = SimilaritySearch
-      .semanticDedupTwoLevel(corpus, "vec_id", "embedding",
+      .semanticDedup(corpus, "vec_id", "embedding",
         coarseK = 4, subK = 4, threshold = 0.999)
       .filter(col("is_dropped"))
       .collect().map(_.getLong(0)).toSet
@@ -475,8 +500,8 @@ class AnnSpec extends SparkSpecBase {
 
   test("trainTwoLevel is deterministic (identical codebook across runs)") {
     val df = clustered.cache()
-    val a = SimilaritySearch.trainTwoLevel(df, "vec_id", "embedding", 4, 4)
-    val b = SimilaritySearch.trainTwoLevel(df, "vec_id", "embedding", 4, 4)
+    val a = SimilaritySearch.trainIvf(df, "vec_id", "embedding", 4, 4)
+    val b = SimilaritySearch.trainIvf(df, "vec_id", "embedding", 4, 4)
     assert(a.coarse == b.coarse)
     assert(a.leaves == b.leaves)
     // every leaf's cell is a real coarse cell, and no leaf id repeats
@@ -487,15 +512,14 @@ class AnnSpec extends SparkSpecBase {
 
   test("two-level frozen index at coarseK=1 == flat index: kept set and increment verdicts") {
     val df = clustered.cache()
-    val flat = SimilaritySearch.buildSemanticIndex(df, "vec_id", "embedding",
-      nlist = 16, threshold = 0.999)
-    val two = SimilaritySearch.buildSemanticIndexTwoLevel(df, "vec_id", "embedding",
+    val two = SimilaritySearch.buildSemanticIndex(df, "vec_id", "embedding",
       coarseK = 1, subK = 16, threshold = 0.999)
-    assert(two.twoLevel.nonEmpty && two.builtN == flat.builtN)
-    assert(two.cents.toSet == flat.cents.toSet)
+    assert(two.builtN == df.count())
+    assert(two.codebook == SimilaritySearch.trainIvf(df, "vec_id", "embedding", 1, 16))
     def keptSet(i: SimilaritySearch.SemanticIndex) = i.kept
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(keptSet(two) == keptSet(flat))
+    // the flat index's kept set and increment verdicts (FlatFingerprints)
+    assert(fingerprint(keptSet(two).map { case (i, c) => s"$i,$c" }) == FlatFingerprints.keptSet)
     // an increment of twins (dups vs store) + reversed vectors (novel)
     // must get identical verdicts through either assignment path
     val inc = df.filter(col("vec_id") < 1010)
@@ -506,7 +530,8 @@ class AnnSpec extends SparkSpecBase {
     def verdicts(i: SimilaritySearch.SemanticIndex) = SimilaritySearch
       .semanticDedupAgainstIndex(inc, "vec_id", "embedding", i, threshold = 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(verdicts(two) == verdicts(flat))
+    assert(fingerprint(verdicts(two).map { case (i, c, d) => s"$i,$c,$d" }) ==
+      FlatFingerprints.incVerdicts)
   }
 
   test("paraphrase_dedup separates verbatim copies from paraphrases exactly") {
@@ -541,16 +566,16 @@ class AnnSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     Seq(
       SimilaritySearch.buildSemanticIndex(df, "vec_id", "embedding",
-        nlist = 8, threshold = 0.999),
-      SimilaritySearch.buildSemanticIndexTwoLevel(df, "vec_id", "embedding",
+        coarseK = 1, subK = 8, threshold = 0.999),
+      SimilaritySearch.buildSemanticIndex(df, "vec_id", "embedding",
         coarseK = 2, subK = 4, threshold = 0.999)
     ).foreach { idx =>
       val dir = java.nio.file.Files.createTempDirectory("graft_semidx").toString
       SimilaritySearch.writeSemanticIndex(idx, dir)
       val back = SimilaritySearch.readSemanticIndex(spark, dir)
       assert(back.builtN == idx.builtN)
-      assert(back.cents.toSet == idx.cents.toSet)
-      assert(back.twoLevel.map(_.leaves.toSet) == idx.twoLevel.map(_.leaves.toSet))
+      assert(back.codebook.leaves.toSet == idx.codebook.leaves.toSet)
+      assert(back.codebook.coarse.toSet == idx.codebook.coarse.toSet)
       assert(verdicts(back) == verdicts(idx))
       // the persisted kept store is bucketed by cluster group (the
       // partition-prunable layout), the bucketing matches clusterGroup,
@@ -578,21 +603,22 @@ class AnnSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     // one coarse cell holding all 16 leaves routes exactly like the
     // flat 16-list codebook at nprobe=4
-    val flat = rows(SimilaritySearch.topKCosineIvf(probes, "probe_id",
-      df, "vec_id", "embedding", k = 5, nlist = 16, nprobe = 4))
-    val two = rows(SimilaritySearch.topKCosineIvfTwoLevel(probes, "probe_id",
+    val two = rows(SimilaritySearch.topKCosineIvf(probes, "probe_id",
       df, "vec_id", "embedding", k = 5, coarseK = 1, subK = 16,
       nprobeCells = 1, nprobeLeaves = 4))
-    assert(two == flat)
+    // the flat IVF's top-k rows (FlatFingerprints)
+    assert(fingerprint(two.map { case (p, v, c, r) => s"$p,$v,$c,$r" }) ==
+      FlatFingerprints.topKRows)
     // an exact duplicate shares both routing levels with its twin, so
     // it is always found at rk=1 at ANY codebook shape
     val twin = df.filter(col("vec_id") === 1000L)
       .select((col("vec_id") + 90000).as("vec_id"), col("embedding"))
     val corpus = df.unionByName(twin)
-    val hit = SimilaritySearch.topKCosineIvfTwoLevel(
+    val hit = SimilaritySearch.topKCosineIvf(
         corpus.filter(col("vec_id") === 91000L)
           .select(col("vec_id").as("probe_id"), col("embedding")), "probe_id",
-        corpus, "vec_id", "embedding", k = 3, coarseK = 4, subK = 4)
+        corpus, "vec_id", "embedding", k = 3, coarseK = 4, subK = 4,
+        nprobeCells = 2, nprobeLeaves = 4)
       .filter(col("rk") === 1).collect().head
     assert(hit.getLong(1) == 1000L && hit.getDouble(2) == 1.0)
   }
@@ -646,12 +672,13 @@ class AnnSpec extends SparkSpecBase {
     try {
       val perProbe = SimilaritySearch.topKCosineIvf(
           df.limit(3).select(col("vec_id").as("probe_id"), col("embedding")),
-          "probe_id", df, "vec_id", "embedding", k = 3, nlist = 64, nprobe = 4)
+          "probe_id", df, "vec_id", "embedding", k = 3, coarseK = 1, subK = 64,
+          nprobeCells = 1, nprobeLeaves = 4)
         .groupBy(col("probe_id")).count().collect().map(_.getLong(1))
       assert(perProbe.toSeq == Seq(3L, 3L, 3L), s"rows per probe: ${perProbe.toSeq}")
       // the flat assignment materializes no candidate rows — it never
       // counts, never refuses
-      assert(SimilaritySearch.assignClusters(df, "vec_id", "embedding", 16)
+      assert(SimilaritySearch.assignClusters(df, "vec_id", "embedding", 1, 16)
         .count() == df.count())
       // and the AUTO front door keeps dispatching itself, never throws
       // (small corpus -> flat; large corpus -> two-level)
@@ -755,13 +782,23 @@ class AnnSpec extends SparkSpecBase {
   test("twoLevelLadder: doubling leaves, tracking cells, terminal is the full scan") {
     import SimilaritySearch.twoLevelLadder
     assert(twoLevelLadder(4, 4) == Seq((1, 1), (1, 2), (2, 4), (4, 8), (4, 16)))
-    Seq((4, 4), (16, 16), (64, 128), (2, 8)).foreach { case (c, s) =>
+    // a leaf count that is not a power of two still ends on the full scan
+    assert(twoLevelLadder(1, 12) == Seq((1, 1), (1, 2), (1, 4), (1, 8), (1, 12)))
+    assert(twoLevelLadder(3, 4) == Seq((1, 1), (1, 2), (2, 4), (3, 8), (3, 12)))
+    Seq((4, 4), (16, 16), (64, 128), (2, 8), (1, 12), (3, 4)).foreach { case (c, s) =>
       val l = twoLevelLadder(c, s)
       assert(l.last == (c, c * s), s"($c,$s) terminal ${l.last}")
-      assert(l.map(_._2) == l.indices.map(1 << _), s"($c,$s) leaves not doubling")
+      // leaves double before the terminal, which is at most one doubling on
+      val doubling = l.init
+      assert(doubling.map(_._2) == doubling.indices.map(1 << _), s"($c,$s) leaves not doubling")
+      assert(doubling.forall(_._2 < c * s) && 2 * l.takeRight(2).head._2 >= c * s,
+        s"($c,$s) doubling steps overshoot or stop short")
       l.foreach { case (cc, lv) =>
         assert(cc >= 1 && cc <= c, s"($c,$s) cells $cc off range")
-        assert((cc & (cc - 1)) == 0, s"($c,$s) cells $cc not a power of two")
+      }
+      // the doubling steps' cells are powers of two, or capped at coarseK
+      doubling.foreach { case (cc, _) =>
+        assert((cc & (cc - 1)) == 0 || cc == c, s"($c,$s) cells $cc not a power of two")
       }
       // cells are monotone non-decreasing along the ladder
       assert(l.map(_._1) == l.map(_._1).sorted)
@@ -773,7 +810,7 @@ class AnnSpec extends SparkSpecBase {
       .select(col("vec_id"), col("embedding"))
     val probes = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("embedding"))
-    val ((cells, leaves), rec) = SimilaritySearch.autoNprobeTwoLevel(
+    val ((cells, leaves), rec) = SimilaritySearch.autoNprobe(
       probes, "probe_id", emb, "vec_id", "embedding",
       k = 10, coarseK = 4, subK = 4, targetRecall = 0.9)
     val ladder = SimilaritySearch.twoLevelLadder(4, 4)
@@ -783,7 +820,7 @@ class AnnSpec extends SparkSpecBase {
     // reported recall must equal the registered search plan's recall at
     // the tuned knobs (the oracle replays exactly this)
     def recallAt(c: Int, l: Int): Double = {
-      val ivf = SimilaritySearch.topKCosineIvfTwoLevel(probes, "probe_id",
+      val ivf = SimilaritySearch.topKCosineIvf(probes, "probe_id",
           emb, "vec_id", "embedding", k = 10, coarseK = 4, subK = 4,
           nprobeCells = c, nprobeLeaves = l)
         .select(col("probe_id"), col("vec_id"))
@@ -827,7 +864,7 @@ class AnnSpec extends SparkSpecBase {
     // ladder to the target without anyone hand-picking probe ids
     val probes = SimilaritySearch.sampleProbes(emb, "vec_id", "embedding", n = 8)
       .select(col("vec_id").as("probe_id"), col("embedding"))
-    val ((cells, leaves), rec) = SimilaritySearch.autoNprobeTwoLevel(
+    val ((cells, leaves), rec) = SimilaritySearch.autoNprobe(
       probes, "probe_id", emb, "vec_id", "embedding",
       k = 10, coarseK = 4, subK = 4, targetRecall = 0.9)
     assert(SimilaritySearch.twoLevelLadder(4, 4).contains((cells, leaves)))
@@ -839,7 +876,7 @@ class AnnSpec extends SparkSpecBase {
     // batch is empty and used to crash in dimOf's .first()
     val df = clustered.cache()
     val idx = SimilaritySearch.buildSemanticIndex(df, "vec_id", "embedding",
-      nlist = 8, threshold = 0.999)
+      coarseK = 1, subK = 8, threshold = 0.999)
     val empty = df.filter(col("vec_id") < 0)
       .select(col("vec_id"), col("embedding"))
     val out = SimilaritySearch.semanticDedupAgainstIndex(
@@ -857,13 +894,13 @@ class AnnSpec extends SparkSpecBase {
     Dedup.scratchBytesOverride = Some(1L << 10)
     try {
       val e = intercept[IllegalStateException](
-        SimilaritySearch.autoNprobeTwoLevel(probes, "probe_id",
+        SimilaritySearch.autoNprobe(probes, "probe_id",
           df, "vec_id", "embedding", k = 5, coarseK = 2, subK = 4))
-      assert(e.getMessage.contains("autoNprobeTwoLevel REFUSED"), e.getMessage)
+      assert(e.getMessage.contains("autoNprobe REFUSED"), e.getMessage)
       assert(e.getMessage.contains("FEWER probes"), e.getMessage) // names the remedy
     } finally Dedup.scratchBytesOverride = None
     // and with a real budget the same call tunes normally
-    val ((c, l), rec) = SimilaritySearch.autoNprobeTwoLevel(probes, "probe_id",
+    val ((c, l), rec) = SimilaritySearch.autoNprobe(probes, "probe_id",
       df, "vec_id", "embedding", k = 5, coarseK = 2, subK = 4)
     assert(SimilaritySearch.twoLevelLadder(2, 4).contains((c, l)) && rec > 0)
   }
@@ -900,7 +937,7 @@ class AnnSpec extends SparkSpecBase {
       .semanticDedupAgainstIndex(inc, "vec_id", "embedding", i, threshold = 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     val idx = SimilaritySearch.buildSemanticIndex(df, "vec_id", "embedding",
-      nlist = 8, threshold = 0.999)
+      coarseK = 1, subK = 8, threshold = 0.999)
     // force the size-derived regime: a builtN past the 64-group band
     // derives 256 groups at d=64 (the kept rows are the same tiny set —
     // the layout knob is what's under test)
@@ -930,7 +967,7 @@ class AnnSpec extends SparkSpecBase {
     import spark.implicits._
     val df = clustered.cache()
     val idx = SimilaritySearch.buildSemanticIndex(df, "vec_id", "embedding",
-      nlist = 8, threshold = 0.999)
+      coarseK = 1, subK = 8, threshold = 0.999)
     // land the store EXACTLY as the r15 writer did: kept partitioned at
     // the 64 constant, meta = (built_n, two_level) only
     val dir = java.nio.file.Files.createTempDirectory("graft_semidx_old").toString
@@ -938,7 +975,7 @@ class AnnSpec extends SparkSpecBase {
       .withColumn("cluster_grp", SimilaritySearch.clusterGroup(col("cluster_id")))
       .repartition(SimilaritySearch.SemanticStoreGroups, col("cluster_grp"))
       .write.partitionBy("cluster_grp").mode("overwrite").parquet(s"$dir/kept")
-    idx.cents.toDF("cent_id", "cv")
+    idx.codebook.leaves.map(l => (l._2, l._3)).toDF("cent_id", "cv")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/cents")
     Seq((idx.builtN, false)).toDF("built_n", "two_level")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")

@@ -58,7 +58,7 @@ class CodegenCacheSpec extends SparkSpecBase {
         .select(col("vec_id").as("probe_id"), col("embedding"))
       SimilaritySearch.topKCosineIvfPq(probes, "probe_id", df, "vec_id", "embedding",
         k = 3, nlist = 16, nprobe = 4).collect()
-      SimilaritySearch.topKCosineIvfTwoLevel(probes, "probe_id", df, "vec_id", "embedding",
+      SimilaritySearch.topKCosineIvf(probes, "probe_id", df, "vec_id", "embedding",
         k = 3, coarseK = 4, subK = 4, nprobeCells = 2, nprobeLeaves = 4).collect()
     }
     search(a)

@@ -788,7 +788,8 @@ class StreamingSpec extends SparkSpecBase {
       val got = asSet(spark.read.parquet(s"$out/batch=0"))
       val want = asSet(graft.operators.SimilaritySearch.topKCosineIvf(
         probes.toDF("probe_id", "embedding"), "probe_id",
-        corpus, "vec_id", "embedding", k = 3))
+        corpus, "vec_id", "embedding", k = 3,
+        coarseK = 1, subK = 16, nprobeCells = 1, nprobeLeaves = 4))
       assert(got == want, s"stream/batch mismatch:\n got=$got\nwant=$want")
       assert(got.size == 9, s"3 probes x k=3 expected, got ${got.size}")
     } finally q.stop()
@@ -800,7 +801,7 @@ class StreamingSpec extends SparkSpecBase {
     def vec() = Seq.fill(8)(rnd.nextGaussian())
     val corpus = (0L until 64L).map(i => (i, vec())).toDF("vec_id", "embedding")
     val index = graft.operators.SimilaritySearch
-      .buildSemanticIndex(corpus, "vec_id", "embedding", nlist = 4)
+      .buildSemanticIndex(corpus, "vec_id", "embedding", coarseK = 1, subK = 4)
     val ms = MemoryStream[(Long, Seq[Double])]
     val out = java.nio.file.Files.createTempDirectory("semd-out").toString
     val ck = java.nio.file.Files.createTempDirectory("semd-ck").toString
@@ -840,19 +841,17 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("semanticDedupSink drives a TWO-LEVEL index identically to the flat one at the overlap point") {
-    // A frozen two-level store (coarseK=1, subK=4) must verdict every
-    // arriving batch exactly like the flat nlist=4 store it equals —
-    // the sink's assignment path dispatches on index.twoLevel, and
-    // this pins that the streaming face of the hierarchical tier
-    // changes nothing at the equivalence point.
+    // A frozen store of shape (1, 4) — the flat nlist=4 index — must
+    // verdict every arriving batch through the sink exactly like the
+    // batch operator does on the same shape.
     implicit val ctx = spark.sqlContext
     val rnd = new scala.util.Random(23)
     def vec() = Seq.fill(8)(rnd.nextGaussian())
     val corpus = (0L until 64L).map(i => (i, vec())).toDF("vec_id", "embedding")
     val flat = graft.operators.SimilaritySearch
-      .buildSemanticIndex(corpus, "vec_id", "embedding", nlist = 4)
+      .buildSemanticIndex(corpus, "vec_id", "embedding", coarseK = 1, subK = 4)
     val two = graft.operators.SimilaritySearch
-      .buildSemanticIndexTwoLevel(corpus, "vec_id", "embedding",
+      .buildSemanticIndex(corpus, "vec_id", "embedding",
         coarseK = 1, subK = 4)
     val ms = MemoryStream[(Long, Seq[Double])]
     val out = java.nio.file.Files.createTempDirectory("semd2-out").toString
@@ -888,7 +887,7 @@ class StreamingSpec extends SparkSpecBase {
     def vec() = Seq.fill(8)(rnd.nextGaussian())
     val corpus = (0L until 32L).map(i => (i, vec())).toDF("vec_id", "embedding")
     val index = graft.operators.SimilaritySearch
-      .buildSemanticIndex(corpus, "vec_id", "embedding", nlist = 4)
+      .buildSemanticIndex(corpus, "vec_id", "embedding", coarseK = 1, subK = 4)
     val ms = MemoryStream[(Long, Seq[Double])]
     val out = java.nio.file.Files.createTempDirectory("semx-out").toString
     val ck = java.nio.file.Files.createTempDirectory("semx-ck").toString
@@ -929,7 +928,7 @@ class StreamingSpec extends SparkSpecBase {
     def vec() = Seq.fill(8)(rnd.nextGaussian())
     val corpus = (0L until 32L).map(i => (i, vec())).toDF("vec_id", "embedding")
     val index = graft.operators.SimilaritySearch
-      .buildSemanticIndex(corpus, "vec_id", "embedding", nlist = 4)
+      .buildSemanticIndex(corpus, "vec_id", "embedding", coarseK = 1, subK = 4)
     val c0 = corpus.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val ms = MemoryStream[(Long, Seq[Double])]
     val out = java.nio.file.Files.createTempDirectory("semempty-out").toString
@@ -971,7 +970,7 @@ class StreamingSpec extends SparkSpecBase {
     def vec() = Seq.fill(8)(rnd.nextGaussian())
     val corpus = (0L until 32L).map(i => (i, vec())).toDF("vec_id", "embedding")
     val index = SimilaritySearch
-      .buildSemanticIndex(corpus, "vec_id", "embedding", nlist = 4)
+      .buildSemanticIndex(corpus, "vec_id", "embedding", coarseK = 1, subK = 4)
     val out = java.nio.file.Files.createTempDirectory("semold-out").toString
     val ck = java.nio.file.Files.createTempDirectory("semold-ck").toString
     // land batch=7 exactly as the r14 sink did: flat files, no
@@ -1022,7 +1021,7 @@ class StreamingSpec extends SparkSpecBase {
     def vec() = Seq.fill(8)(rnd.nextGaussian())
     val corpus = (0L until 4L).map(i => (i, vec())).toDF("vec_id", "embedding")
     val index = graft.operators.SimilaritySearch
-      .buildSemanticIndex(corpus, "vec_id", "embedding", nlist = 2)
+      .buildSemanticIndex(corpus, "vec_id", "embedding", coarseK = 1, subK = 2)
     assert(index.builtN == 4L)
     val ms = MemoryStream[(Long, Seq[Double])]
     val out = java.nio.file.Files.createTempDirectory("semw-out").toString
@@ -1062,7 +1061,7 @@ class StreamingSpec extends SparkSpecBase {
     val corpus = (0L until 48L).map(i => (i, vec())).toDF("vec_id", "embedding")
     val idxDir = java.nio.file.Files.createTempDirectory("semc-idx").toString
     SimilaritySearch.writeSemanticIndex(
-      SimilaritySearch.buildSemanticIndex(corpus, "vec_id", "embedding", nlist = 4),
+      SimilaritySearch.buildSemanticIndex(corpus, "vec_id", "embedding", coarseK = 1, subK = 4),
       idxDir)
     val index = SimilaritySearch.readSemanticIndex(spark, idxDir)
     val ms = MemoryStream[(Long, Seq[Double])]
@@ -1089,7 +1088,7 @@ class StreamingSpec extends SparkSpecBase {
         .select(col("vec_id"), col("embedding")))
     val fresh = SimilaritySearch.buildSemanticIndex(union, "vec_id", "embedding")
     assert(compacted.builtN == fresh.builtN)
-    assert(compacted.cents.toSet == fresh.cents.toSet)
+    assert(compacted.codebook.leaves.toSet == fresh.codebook.leaves.toSet)
     def keptSet(i: SimilaritySearch.SemanticIndex) = i.kept
       .select(col("vec_id"), col("cluster_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
