@@ -269,13 +269,10 @@ object SimilaritySearch {
   def topKCosineIvf(probes: DataFrame, probeIdCol: String,
                     corpus: DataFrame, idCol: String, vecCol: String,
                     k: Int, coarseK: Int, subK: Int,
-                    nprobeCells: Int, nprobeLeaves: Int,
-                    codebook: Option[TwoLevelCodebook] = None): DataFrame = {
+                    nprobeCells: Int, nprobeLeaves: Int): DataFrame = {
     require(nprobeCells <= coarseK && nprobeLeaves <= coarseK * subK,
       "topKCosineIvf: nprobeCells <= coarseK and nprobeLeaves <= coarseK·subK")
-    // deterministic training: a caller that already trained (the
-    // autotune + search pair) passes the codebook and skips the rerun
-    val cb = codebook.getOrElse(trainIvf(corpus, idCol, vecCol, coarseK, subK))
+    val cb = trainIvf(corpus, idCol, vecCol, coarseK, subK)
     val assigned = assignLeaves(corpus, idCol, vecCol, cb)
       .select(col("_vid").as("_cid"), col("_vv").as("_cv"), col("_leaf"))
     val probeD = probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
@@ -287,19 +284,6 @@ object SimilaritySearch {
         round(cosine(col("_cv"), col("_pv")), 6).as("cos"))
       .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
   }
-
-  /** The (_pid, _cid) pairs of a probes × k frame, on the driver. */
-  private def pairSet(df: DataFrame): Set[(Long, Long)] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-  /** Per-probe count of the `exact` top-k pairs an approximate
-    * (_pid, _cid) top-k frame recovers. Both sides are probes × k rows,
-    * so the tuners match them on the driver: a ladder step is one
-    * chained job, with no join of two shuffled sides whose completion
-    * order would reorder AQE's stages (and so its generated classes)
-    * from run to run. */
-  private def probeHits(exact: Set[(Long, Long)], approx: DataFrame): Map[Long, Long] =
-    pairSet(approx).filter(exact.contains).groupBy(_._1).map { case (p, hs) => p -> hs.size.toLong }
 
   /** The (nprobeCells, nprobeLeaves) doubling ladder [[autoNprobe]]
     * walks: leaves double 1, 2, 4, ... below coarseK·subK; the cell
@@ -322,11 +306,12 @@ object SimilaritySearch {
     * before trusting an IVF index: the leftmost step of
     * [[twoLevelLadder]] whose MEAN recall@k against the exact
     * brute-force top-k reaches `targetRecall` on the probe set.
-    * Returns ((nprobeCells, nprobeLeaves), the mean recall achieved).
-    * For a flat (1, nlist) index the ladder is nprobe = 1, 2, 4, ...,
-    * nlist; recall is monotone there (a larger nprobe searches a
-    * superset of lists), so the leftmost passing step is also the
-    * smallest passing nprobe.
+    * Returns ((nprobeCells, nprobeLeaves), the mean recall achieved,
+    * one (probe id, hits) row per probe at that step, zero-filled, in
+    * probe-id order). For a flat (1, nlist) index the ladder is nprobe
+    * = 1, 2, 4, ..., nlist; recall is monotone there (a larger nprobe
+    * searches a superset of lists), so the leftmost passing step is
+    * also the smallest passing nprobe.
     *
     * LINEAR ladder walk, not binary search: above one cell recall is
     * NOT guaranteed monotone across the joint ladder — widening the
@@ -334,109 +319,88 @@ object SimilaritySearch {
     * top-nprobeLeaves among more cells' leaves is not a superset of
     * the pick among fewer).
     *
-    * ONE corpus pass for the WHOLE ladder: every ladder step's leaf
-    * pick is the search's own probe routing ([[probeLeaves]] — a
-    * projection over the sample-sized probe side), and the (probe,
-    * corpus) cosine frame is scored ONCE and PERSISTED (it is exactly
-    * the exact arm's frame, tagged with each corpus row's leaf). The
-    * walk early-stops step by step — each step's recall is a broadcast
-    * leaf-pick join + top-k window over the PERSISTED frame (no corpus
-    * re-join, no cosine recompute), so a corpus that tunes at step 1
-    * never pays the deep steps' ranking. The terminal step searches
-    * every leaf, so its top-k IS the exact arm's and is never re-ranked.
-    *
-    * For probe choice at scale, [[sampleProbes]] is the documented
-    * default: a deterministic md5-ordered sample, so a 100 TB user
-    * never hand-picks probe ids. */
+    * The walk is driver arithmetic over [[ladderHits]]: no ladder step
+    * runs a Spark job. For probe choice at scale, [[sampleProbes]] is
+    * the documented default: a deterministic md5-ordered sample, so a
+    * 100 TB user never hand-picks probe ids. */
   def autoNprobe(probes: DataFrame, probeIdCol: String,
                  corpus: DataFrame, idCol: String, vecCol: String,
                  k: Int, coarseK: Int, subK: Int,
-                 targetRecall: Double = 0.9,
-                 codebook: Option[TwoLevelCodebook] = None): ((Int, Int), Double) = {
-    val (knobs, rec, _) = autoNprobeStats(probes, probeIdCol, corpus, idCol,
-      vecCol, k, coarseK, subK, targetRecall, codebook, collectStats = false)
-    (knobs, rec)
+                 targetRecall: Double = 0.9): ((Int, Int), Double, Seq[(Long, Long)]) = {
+    val steps = ladderHits(probes, probeIdCol, corpus, idCol, vecCol, k, coarseK, subK)
+    val recalls = steps.map { case (_, hits) => hits.map(_._2).sum.toDouble / (k.toLong * hits.size) }
+    System.err.println(s"[graft-ann] autoNprobe: recall@$k by step " + steps.zip(recalls)
+      .map { case ((step, _), r) => f"$step=$r%.3f" }.mkString(" "))
+    val i = recalls.indexWhere(_ >= targetRecall) match { case -1 => steps.size - 1; case j => j }
+    (steps(i)._1, recalls(i), steps(i)._2)
   }
 
-  /** [[autoNprobe]] plus the per-probe hit counts AT the tuned step,
-    * taken from the top-k the walk collected there (no extra job). The
-    * recall-eval queries build their probe-level report from this
-    * instead of re-deriving BOTH arms (a second corpus-sized exact scan
-    * and a second IVF search per eval run). Third element: one
-    * (probe id, hits) row per probe, zero-filled — empty when
-    * `collectStats` is false (the plain tuning path skips the job). */
-  private[graft] def autoNprobeStats(
-      probes: DataFrame, probeIdCol: String,
+  /** Every [[twoLevelLadder]] step of a freshly trained (coarseK, subK)
+    * index with its per-probe hits — (probe id, how many exact top-k
+    * members the step's [[topKCosineIvf]] top-k recovers), zero-filled,
+    * in probe-id order — from two collects and no per-step job.
+    *
+    * Exact by structure: the search ranks its candidates by (6-dp
+    * cosine desc, id), the same total order the exact top-k ranks the
+    * whole corpus by. An exact member among a step's candidates is
+    * outranked there only by other exact members, so it is in the
+    * step's top-k; and the step's top-k holds only candidates. So the
+    * hits are the exact members whose leaf the probe visits at that
+    * step: every step's routing ([[routeCells]], then [[routeLeaves]])
+    * is one pass over the probe side, and the exact arm is probes × k
+    * rows, each member carrying its leaf. The terminal step visits
+    * every leaf, so its hits are every exact member. */
+  private[graft] def ladderHits(probes: DataFrame, probeIdCol: String,
       corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int, coarseK: Int, subK: Int,
-      targetRecall: Double = 0.9,
-      codebook: Option[TwoLevelCodebook] = None,
-      collectStats: Boolean = true)
-      : ((Int, Int), Double, Seq[(Long, Long)]) = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = corpus.sparkSession
-    val probeD = probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
-    val pids = probeD.select(col("_pid")).collect().map(_.getLong(0)).toSeq.sorted
-    val nProbes = pids.size.toLong
-    require(nProbes > 0, "autoNprobe: empty probe set")
-    // The one-pass ladder's ground truth is a probes × corpus cosine
-    // frame persisted to MEMORY_AND_DISK — inherent to exact-recall
-    // tuning, and the ONE corpus-sized materialization in the ANN
-    // family, so it gets the same loud scratch refusal every other
-    // corpus-sized spill surface has. Rows are known BEFORE anything
-    // expensive runs (nProbes × n), so the refusal also precedes the
-    // training a fresh-codebook caller would otherwise pay for nothing.
-    refuseForScoredScratch(spark, nProbes, corpus.count())
-    val cb = codebook.getOrElse(trainIvf(corpus, idCol, vecCol, coarseK, subK))
-    require(cb.coarse.size <= coarseK && cb.leaves.size <= coarseK * subK,
-      "autoNprobe: codebook shape exceeds (coarseK, subK)")
+      k: Int, coarseK: Int, subK: Int): Seq[((Int, Int), Seq[(Long, Long)])] = {
+    val cb = trainIvf(corpus, idCol, vecCol, coarseK, subK)
     val ladder = twoLevelLadder(coarseK, subK)
-    // the ONE corpus-side pass: every (probe, corpus row) cosine —
-    // exactly the exact arm's frame — tagged with the row's leaf
-    val scored = assignLeaves(corpus, idCol, vecCol, cb)
-      .select(col("_vid").as("_cid"), col("_vv").as("_cv"), col("_leaf"))
+    val probeD = probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
+    // each distinct cell pick is one column the leaf picks read: a cell
+    // pick repeated inside one projection is a common subexpression,
+    // and Spark orders those by hash — the codebook's identity hash —
+    // so the generated code would differ from run to run
+    val cellPicks = ladder.map(_._1).distinct.map(c => routeCells(col("_pv"), cb, c).as(s"_c$c"))
+    val routes = probeD.select(col("_pid") +: col("_pv") +: cellPicks: _*)
+      .select(col("_pid") +: ladder.map { case (c, l) => routeLeaves(col("_pv"), cb, col(s"_c$c"), l) }: _*)
+      .collect().map(r => r.getLong(0) -> ladder.indices.map(i => r.getSeq[Long](i + 1).toSet))
+      .sortBy(_._1)
+    require(routes.nonEmpty, "autoNprobe: empty probe set")
+    // the exact top-k: a WindowGroupLimit, so at most k rows per probe
+    // per partition reach the shuffle
+    val exact = assignLeaves(corpus, idCol, vecCol, cb)
       .crossJoin(broadcast(probeD))
-      .filter(col("_cid") =!= col("_pid"))
-      .select(col("_pid"), col("_cid"), col("_leaf"),
-        round(cosine(col("_cv"), col("_pv")), 6).as("_icos"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val exact = pairSet(scored.transform(topN("_pid", "_icos", "_cid", k, "_erk"))
-      .select(col("_pid"), col("_cid")))
-    // the step's approximate top-k, from the persisted frame — the
-    // leaf pick is sample-sized, broadcast
-    def ivfAt(cells: Int, leaves: Int): DataFrame =
-      scored.join(broadcast(probeLeaves(probeD, cb, cells, leaves)
-          .select(col("_pid"), col("_leaf"))), Seq("_pid", "_leaf"))
-        .transform(topN("_pid", "_icos", "_cid", k, "_irk"))
-        .select(col("_pid"), col("_cid"))
-    val memo = scala.collection.mutable.Map.empty[(Int, Int), Map[Long, Long]]
-    def hitsAt(step: (Int, Int)) = memo.getOrElseUpdate(step,
-      if (step == ladder.last) exact.groupBy(_._1).map { case (p, hs) => p -> hs.size.toLong }
-      else probeHits(exact, ivfAt(step._1, step._2)))
-    def recallAt(step: (Int, Int)): Double = hitsAt(step).values.sum.toDouble / (k * nProbes)
-    val tuned = ladder.find { step =>
-      val ts = System.nanoTime()
-      val r = recallAt(step)
-      System.err.println(f"[graft-ann] autoNprobe: step $step recall@$k=$r%.3f " +
-        f"in ${(System.nanoTime() - ts) / 1e9}%.1f s")
-      r >= targetRecall
-    }.getOrElse(ladder.last)
-    val stats = if (!collectStats) Seq.empty[(Long, Long)] else
-      pids.map(pid => (pid, hitsAt(tuned).getOrElse(pid, 0L)))
-    scored.unpersist()
-    (tuned, recallAt(tuned), stats)
+      .filter(col("_vid") =!= col("_pid"))
+      .select(col("_pid"), col("_vid"), col("_leaf"),
+        round(cosine(col("_vv"), col("_pv")), 6).as("_cos"))
+      .transform(topN("_pid", "_cos", "_vid", k, "_rk"))
+      .select(col("_pid"), col("_leaf"))
+      .collect().groupBy(_.getLong(0)).map { case (p, rs) => p -> rs.map(_.getLong(1)) }
+    ladder.zipWithIndex.map { case (step, i) =>
+      step -> routes.toSeq.map { case (pid, visits) =>
+        pid -> exact.getOrElse(pid, Array.empty[Long]).count(visits(i)).toLong
+      }
+    }
   }
 
-  /** Probe-side IVF routing, (_pid, _pv, _leaf): a probe searching
-    * (cells, leaves) visits its `leaves` best leaves among its `cells`
-    * best cells — [[nearestN]] over the coarse book, then over the leaf
-    * book with those cells as the groups. */
+  /** The cell ids (array) a probe vector `pv` searches with `cells`
+    * cells: [[nearestN]] over the coarse book. */
+  private def routeCells(pv: Column, cb: TwoLevelCodebook, cells: Int): Column =
+    nearestN(pv, cb.coarseBook, lit(0L), cells)("id")
+
+  /** The leaf ids (array) `pv` visits among the cells `cellIds`: its
+    * `leaves` best leaves of those cells — [[nearestN]] over the leaf
+    * book with the cells as the groups. */
+  private def routeLeaves(pv: Column, cb: TwoLevelCodebook, cellIds: Column, leaves: Int): Column =
+    nearestN(pv, cb.leafBook, cellIds, leaves)("id")
+
+  /** Probe-side IVF routing as rows, (_pid, _pv, _leaf): a probe
+    * searching (cells, leaves) visits its `leaves` best leaves among
+    * its `cells` best cells, one row per leaf. */
   private def probeLeaves(probeD: DataFrame, cb: TwoLevelCodebook,
-                          cells: Int, leaves: Int): DataFrame = {
-    val near = nearestN(col("_pv"), cb.coarseBook, lit(0L), cells)("id")
+                          cells: Int, leaves: Int): DataFrame =
     probeD.select(col("_pid"), col("_pv"),
-      explode(nearestN(col("_pv"), cb.leafBook, near, leaves)("id")).as("_leaf"))
-  }
+      explode(routeLeaves(col("_pv"), cb, routeCells(col("_pv"), cb, cells), leaves)).as("_leaf"))
 
   /** Each `part` group's `n` best rows by (`score` desc, `id`), ranked
     * 1..n in column `rank` — the rounded-score, id-tiebreak top-n every
@@ -529,39 +493,6 @@ object SimilaritySearch {
     * + ~48 B row overhead (d=64 → ~560 B) — the per-row estimate
     * [[BroadcastIncByteBudget]] sizes the increment broadcast with. */
   def fatAssignBytesPerRow(d: Int): Long = 48L + 8L * d
-
-  /** Bytes one row of [[autoNprobe]]'s persisted scored frame
-    * costs on scratch: the frame is SLIM by construction — (pid, cid,
-    * leaf, 6-dp cosine) projected before the persist — so the cost is
-    * ~32 B of payload + row overhead through the disk store and the
-    * exact arm's window sort over the same frame. 64 B carries the
-    * same ~2× overestimate margin the dedup constants do. */
-  val TwoLevelScoredBytesPerRow: Long = 64L
-
-  /** Loud fail-fast for [[autoNprobe]]'s probes × corpus
-    * ground-truth persist — the Dedup.refuseForScratch pattern, with
-    * the remedy this surface actually has: fewer probes. At the
-    * registered queries' 5 probes the frame is probe-bounded and
-    * trivial; at [[sampleProbes]]' documented n=64 on a 10⁹-row corpus
-    * it is a 6.4e10-row spill. */
-  private[graft] def refuseForScoredScratch(
-      spark: org.apache.spark.sql.SparkSession,
-      nProbes: Long, nCorpus: Long): Unit = {
-    // the dedup family's budget (and its test override)
-    val budget = Dedup.usableScratchBytes(spark) * Dedup.MaxScratchFraction
-    val rows = nProbes.toDouble * nCorpus
-    val gib = (b: Double) => (b / (1L << 30)).toLong
-    if (rows > 0 && rows * TwoLevelScoredBytesPerRow > budget)
-      throw new IllegalStateException(
-        f"[graft-ann] autoNprobe REFUSED: $nProbes probes × " +
-          f"$nCorpus corpus rows materialize a ~$rows%.3g-row exact-recall " +
-          f"frame (~${gib(rows * TwoLevelScoredBytesPerRow)} GiB at $TwoLevelScoredBytesPerRow B/row) " +
-          s"against a ~${gib(budget)} GiB scratch budget " +
-          "(half of free spark.local.dir). Running anyway would ENOSPC-die " +
-          "mid-persist. Tune on FEWER probes — sampleProbes(n) with a " +
-          "smaller n (recall estimates converge fast in the probe count) — " +
-          "or free scratch space.")
-  }
 
   /** The tier ABOVE the flat quantizer: dispatch to two-level and
     * return Some((coarseK, subK)) when EITHER (a) the corpus wants
@@ -741,8 +672,8 @@ object SimilaritySearch {
     * id. Exact/scaled twins land in the same cell AND the same leaf at
     * any codebook (identical direction ⇒ identical argmax at both
     * levels), so dedup recall on true duplicates does not depend on
-    * the shape. Training is deterministic, so a caller that tunes AND
-    * searches trains once and passes the same codebook to both. */
+    * the shape. Training is deterministic, so the tuner and the search
+    * train the same codebook from the same corpus. */
   def trainIvf(corpus: DataFrame, idCol: String, vecCol: String,
                coarseK: Int, subK: Int,
                iters: Int = LloydIters): TwoLevelCodebook =

@@ -728,20 +728,10 @@ object Pipeline extends QueryModule {
       val emb = Tables(s, dir, "embeddings")
       val probes = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding"))
-      // train ONCE (the r15 ann_eval_twolevel discipline), and report from the TUNER'S OWN frames: the pre-r16
-      // plan re-derived the probes × corpus exact arm AND the tuned
-      // IVF search from scratch after autoNprobe had just materialized
-      // the identical frames (same rounded cosines, ranks, tie-breaks
-      // — the recall it reports IS computed from them), so every eval
-      // run paid the corpus-sized exact scan twice and the Lloyd
-      // training twice. autoNprobeStats hands back the per-probe hit
-      // counts at the tuned nprobe; the report below is those numbers
-      // verbatim (hash-identical output, checked against the unchanged
-      // DuckDB oracle).
-      val cb = SimilaritySearch.trainIvf(emb, "vec_id", "embedding", 1, 16)
-      val ((_, np), rec, probeHits) = SimilaritySearch.autoNprobeStats(
+      // the report is the tuner's own per-probe hits at the tuned nprobe
+      val ((_, np), rec, probeHits) = SimilaritySearch.autoNprobe(
         probes, "probe_id", emb, "vec_id", "embedding",
-        k = 10, coarseK = 1, subK = 16, targetRecall = 0.9, codebook = Some(cb))
+        k = 10, coarseK = 1, subK = 16, targetRecall = 0.9)
       import s.implicits._
       probeHits.toDF("probe_id", "n_hits")
         .select(col("probe_id"), col("n_hits"),
@@ -765,20 +755,10 @@ object Pipeline extends QueryModule {
       val emb = Tables(s, dir, "embeddings")
       val probes = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("probe_id"), col("embedding"))
-      // train ONCE, and — like ann_eval_tuned since r16 — report from
-      // the tuner's OWN persisted frames instead of re-deriving the
-      // probes × corpus exact arm and the tuned search from scratch
-      // (the one-pass-ladder contract pins the tuner's frames to the
-      // same rounded cosines, ranks and tie-breaks the search would
-      // recompute; at production scale the old plan paid the
-      // corpus-sized exact scan twice per eval run). Hash-identical
-      // output against the unchanged DuckDB oracle.
-      val cb = SimilaritySearch.trainIvf(emb, "vec_id", "embedding", 4, 4)
-      val ((cells, leaves), rec, probeHits) =
-        SimilaritySearch.autoNprobeStats(
-          probes, "probe_id", emb, "vec_id", "embedding",
-          k = 10, coarseK = 4, subK = 4, targetRecall = 0.9,
-          codebook = Some(cb))
+      // the report is the tuner's own per-probe hits at the tuned knobs
+      val ((cells, leaves), rec, probeHits) = SimilaritySearch.autoNprobe(
+        probes, "probe_id", emb, "vec_id", "embedding",
+        k = 10, coarseK = 4, subK = 4, targetRecall = 0.9)
       import s.implicits._
       probeHits.toDF("probe_id", "n_hits")
         .select(col("probe_id"), col("n_hits"),

@@ -329,7 +329,7 @@ class AnnSpec extends SparkSpecBase {
       .select(col("vec_id"), col("embedding"))
     val probes = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("embedding"))
-    val ((_, np), rec) = SimilaritySearch.autoNprobe(probes, "probe_id",
+    val ((_, np), rec, _) = SimilaritySearch.autoNprobe(probes, "probe_id",
       emb, "vec_id", "embedding", k = 10, coarseK = 1, subK = 16, targetRecall = 0.9)
     val ladder = Seq(1, 2, 4, 8, 16)
     assert(ladder.contains(np), s"nprobe=$np off the ladder")
@@ -368,7 +368,7 @@ class AnnSpec extends SparkSpecBase {
     val cdf = clustered.cache()
     val cprobes = cdf.filter(col("vec_id").isin(0L, 1000L, 2000L))
       .select(col("vec_id").as("probe_id"), col("embedding"))
-    val ((_, cnp), crec) = SimilaritySearch.autoNprobe(cprobes, "probe_id",
+    val ((_, cnp), crec, _) = SimilaritySearch.autoNprobe(cprobes, "probe_id",
       cdf, "vec_id", "embedding", k = 10, coarseK = 1, subK = 16, targetRecall = 0.9)
     assert(crec >= 0.9)
     assert(cnp < 16, s"tuner escalated to a full scan on a clustered corpus (nprobe=$cnp)")
@@ -810,7 +810,7 @@ class AnnSpec extends SparkSpecBase {
       .select(col("vec_id"), col("embedding"))
     val probes = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("embedding"))
-    val ((cells, leaves), rec) = SimilaritySearch.autoNprobe(
+    val ((cells, leaves), rec, _) = SimilaritySearch.autoNprobe(
       probes, "probe_id", emb, "vec_id", "embedding",
       k = 10, coarseK = 4, subK = 4, targetRecall = 0.9)
     val ladder = SimilaritySearch.twoLevelLadder(4, 4)
@@ -845,6 +845,49 @@ class AnnSpec extends SparkSpecBase {
     assert(recallAt(4, 16) == 1.0)
   }
 
+  test("ladderHits: every ladder step's per-probe hits are those of topKCosineIvf's top-k") {
+    // exact copies under new ids have equal rounded cosines, so id
+    // tie-breaks decide which of a pair sits on the top-k boundary
+    val dups = clustered.filter(col("vec_id") < 10 || col("vec_id").between(1000, 1004))
+      .select((col("vec_id") + 50000).as("vec_id"), col("embedding"))
+    val corpus = clustered.unionByName(dups).cache()
+    val probes = corpus.filter(col("vec_id").isin(0L, 15L, 1000L, 2000L, 9000L, 50001L))
+      .select(col("vec_id").as("probe_id"), col("embedding"))
+    val k = 5
+    val pb = probes.select(col("probe_id"), col("embedding").as("pvec"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))
+    val ranked = corpus.crossJoin(broadcast(pb))
+      .filter(col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id"),
+        round(graft.functions.VectorFunctions.cosine(
+          col("embedding"), col("pvec")), 6).as("cos"))
+      .withColumn("erk", row_number().over(w))
+    val ties = ranked.filter(col("erk").isin(k, k + 1))
+      .groupBy(col("probe_id")).agg(countDistinct(col("cos")).as("n"))
+      .filter(col("n") === 1).count()
+    assert(ties > 0, "no probe has a tie across its top-k boundary")
+    val exact = ranked.filter(col("erk") <= k).select(col("probe_id"), col("vec_id"))
+    val pids = probes.select(col("probe_id")).collect().map(_.getLong(0)).toSeq.sorted
+    for ((c, s) <- Seq((1, 8), (2, 4))) {
+      val steps = SimilaritySearch.ladderHits(probes, "probe_id",
+        corpus, "vec_id", "embedding", k, c, s)
+      assert(steps.map(_._1) == SimilaritySearch.twoLevelLadder(c, s))
+      assert(steps.map(_._2).distinct.size > 1, s"($c,$s): every step has the same hits")
+      steps.foreach { case ((cells, leaves), hits) =>
+        val ivf = SimilaritySearch.topKCosineIvf(probes, "probe_id",
+            corpus, "vec_id", "embedding", k = k, coarseK = c, subK = s,
+            nprobeCells = cells, nprobeLeaves = leaves)
+          .select(col("probe_id"), col("vec_id"))
+        val counted = exact.join(ivf, Seq("probe_id", "vec_id"), "left_semi")
+          .groupBy(col("probe_id")).count()
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(hits == pids.map(p => p -> counted.getOrElse(p, 0L)),
+          s"($c,$s) step ($cells,$leaves): $hits vs $counted")
+      }
+    }
+  }
+
   test("sampleProbes: deterministic md5 pick, drives the autotune to target") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -864,7 +907,7 @@ class AnnSpec extends SparkSpecBase {
     // ladder to the target without anyone hand-picking probe ids
     val probes = SimilaritySearch.sampleProbes(emb, "vec_id", "embedding", n = 8)
       .select(col("vec_id").as("probe_id"), col("embedding"))
-    val ((cells, leaves), rec) = SimilaritySearch.autoNprobe(
+    val ((cells, leaves), rec, _) = SimilaritySearch.autoNprobe(
       probes, "probe_id", emb, "vec_id", "embedding",
       k = 10, coarseK = 4, subK = 4, targetRecall = 0.9)
     assert(SimilaritySearch.twoLevelLadder(4, 4).contains((cells, leaves)))
@@ -883,26 +926,6 @@ class AnnSpec extends SparkSpecBase {
       empty, "vec_id", "embedding", idx, threshold = 0.999)
     assert(out.columns.toSeq == Seq("vec_id", "cluster_id", "is_dropped"))
     assert(out.count() == 0L)
-  }
-
-  test("autoNprobeTwoLevel REFUSES when the probes × corpus ground-truth frame exceeds scratch") {
-    import graft.operators.Dedup
-    val df = clustered.cache()
-    val probes = df.filter(col("vec_id") < 1005)
-      .select(col("vec_id").as("probe_id"), col("embedding"))
-    // ~5 probes × 200 corpus rows × 64 B >> a mocked 1 KiB budget
-    Dedup.scratchBytesOverride = Some(1L << 10)
-    try {
-      val e = intercept[IllegalStateException](
-        SimilaritySearch.autoNprobe(probes, "probe_id",
-          df, "vec_id", "embedding", k = 5, coarseK = 2, subK = 4))
-      assert(e.getMessage.contains("autoNprobe REFUSED"), e.getMessage)
-      assert(e.getMessage.contains("FEWER probes"), e.getMessage) // names the remedy
-    } finally Dedup.scratchBytesOverride = None
-    // and with a real budget the same call tunes normally
-    val ((c, l), rec) = SimilaritySearch.autoNprobe(probes, "probe_id",
-      df, "vec_id", "embedding", k = 5, coarseK = 2, subK = 4)
-    assert(SimilaritySearch.twoLevelLadder(2, 4).contains((c, l)) && rec > 0)
   }
 
   test("deriveStoreGroups: 64 floor at fixture scale, size-derived power of two past it, capped") {

@@ -5,11 +5,16 @@ Mimics the driver's t2 gate: for each query output parquet under OUT_DIR,
 run the matching SQL from oracle_sql.json in DuckDB over the same
 sf-directory tables, sort columns by name, and compare values.
 
+Each ✓/✗ line ends with the seconds that query's check took (reading
+the output plus running its oracle SQL).
+
 Usage: oracle_check.py SF_DIR OUT_DIR
 """
 import json
 import math
+import os
 import sys
+import time
 
 import duckdb
 
@@ -25,29 +30,30 @@ def main(sf_dir: str, out_dir: str) -> int:
         oracle = json.load(f)
 
     failures = 0
-    import os
     produced = sorted(d for d in os.listdir(out_dir)
                       if os.path.isdir(os.path.join(out_dir, d)))
     for name in produced:
         if name not in oracle:
             print(f"  [rows-only] {name}: no oracle SQL (weaker check)")
             continue
+        t0 = time.monotonic()
         try:
             got = con.execute(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'").fetchdf()
             want = con.execute(oracle[name]).fetchdf()
         except Exception as e:
-            print(f"✗ {name}: oracle error: {e}")
+            print(f"✗ {name}: oracle error: {e} ({time.monotonic() - t0:.1f} s)")
             failures += 1
             continue
+        secs = f"({time.monotonic() - t0:.1f} s)"
         got = got.reindex(sorted(got.columns), axis=1)
         want = want.reindex(sorted(want.columns), axis=1)
         if list(got.columns) != list(want.columns):
-            print(f"✗ {name}: columns {list(got.columns)} != {list(want.columns)}")
+            print(f"✗ {name}: columns {list(got.columns)} != {list(want.columns)} {secs}")
             failures += 1
             continue
         if len(got) != len(want):
-            print(f"✗ {name}: rows {len(got)} != {len(want)}")
+            print(f"✗ {name}: rows {len(got)} != {len(want)} {secs}")
             failures += 1
             continue
         bad = None
@@ -71,10 +77,10 @@ def main(sf_dir: str, out_dir: str) -> int:
                 break
         if bad:
             c, i, a, b = bad
-            print(f"✗ {name}: col {c} row {i}: got {a!r} want {b!r}")
+            print(f"✗ {name}: col {c} row {i}: got {a!r} want {b!r} {secs}")
             failures += 1
         else:
-            print(f"✓ {name}: {len(got)} rows match")
+            print(f"✓ {name}: {len(got)} rows match {secs}")
     missing = set(oracle) - set(produced)
     for name in sorted(missing):
         print(f"✗ {name}: oracle SQL declared but no parquet output")
