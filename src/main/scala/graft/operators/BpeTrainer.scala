@@ -178,7 +178,10 @@ object BpeTrainer {
     * single space is a safe separator). Tie-breaks replay the
     * learner's (count desc, pair lexicographic) exactly; an early
     * vocabulary exhaustion yields an empty `b{r}` whose UNION ALL arm
-    * contributes no row, matching `learnMerges` stopping short. */
+    * contributes no row, matching `learnMerges` stopping short. Each
+    * round reads `v{r-1}` directly and again through `ix{r}`/`p{r}`/`b{r}`,
+    * so `v{r}` and `b{r}` are `AS MATERIALIZED`: DuckDB's default
+    * inlining would double the work per round. */
   def learnSql(docsTable: String, textCol: String, numMerges: Int): String = {
     val head =
       s"""WITH tok AS (SELECT unnest(string_split_regex(lower($textCol), '[^a-z]+')) AS word
@@ -192,7 +195,7 @@ object BpeTrainer {
         if (r == numMerges) "" // the final vocabulary is never read
         else
           s""",
-         v$r AS (SELECT word, freq,
+         v$r AS MATERIALIZED (SELECT word, freq,
                   string_split(list_reduce(toks, (acc, s) -> CASE
                     WHEN regexp_extract(acc, '[a-z]+$$') = b$r.a AND s = b$r.b
                     THEN left(acc, length(acc) - length(b$r.a)) || b$r.a || b$r.b
@@ -203,7 +206,7 @@ object BpeTrainer {
                   FROM v${r - 1}),
          p$r AS (SELECT toks[i] AS a, toks[i + 1] AS b, CAST(sum(freq) AS BIGINT) AS c
                  FROM ix$r GROUP BY 1, 2),
-         b$r AS (SELECT a, b, c FROM p$r ORDER BY c DESC, a, b LIMIT 1)$apply"""
+         b$r AS MATERIALIZED (SELECT a, b, c FROM p$r ORDER BY c DESC, a, b LIMIT 1)$apply"""
     }
     val sel = (1 to numMerges)
       .map(r => s"SELECT $r AS rank, a AS sym_a, b AS sym_b, c AS pair_count FROM b$r")

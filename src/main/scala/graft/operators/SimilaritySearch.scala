@@ -40,9 +40,9 @@ object SimilaritySearch {
   def topKCosineLsh(emb: DataFrame, idCol: String, vecCol: String,
                     probeId: Long, k: Int,
                     bits: Int = 8, radius: Int = 2, tables: Int = 2): DataFrame = {
-    val bucketCols: Seq[(String, Column)] = (0 until tables).map { t =>
-      s"_bk$t" -> signLshBucket(col(vecCol), signLshPlanes(bits, dimOf(emb, vecCol), seed = 42L + t))
-    }
+    val dim = dimOf(emb, vecCol)
+    val bucketCols: Seq[(String, Column)] =
+      (0 until tables).map(t => s"_bk$t" -> lshBucket(col(vecCol), bits, dim, t))
     val withB = bucketCols.foldLeft(emb) { case (d, (name, c)) => d.withColumn(name, c) }
     val probe = withB.filter(col(idCol) === probeId)
       .select((col(vecCol).as("_probe") +: bucketCols.map { case (n, _) => col(n).as(s"_p$n") }): _*)
@@ -70,26 +70,36 @@ object SimilaritySearch {
     * of quadratic in the corpus. */
   def nearDupPairsLsh(emb: DataFrame, idCol: String, vecCol: String,
                       threshold: Double = 0.99,
-                      bits: Int = 16, tables: Int = 2): DataFrame = {
-    val dim = dimOf(emb, vecCol)
-    val bucketed = (0 until tables).map { t =>
-      emb.select(col(idCol).as("doc"),
-        lit(t).as("tbl"),
-        signLshBucket(col(vecCol), signLshPlanes(bits, dim, seed = 42L + t)).as("bk"))
-    }.reduce(_ unionByName _)
-    val cand = bucketed.as("a")
-      .join(bucketed.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bk") === col("b.bk") &&
-          col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("i"), col("b.doc").as("j"))
+                      bits: Int = 16, tables: Int = 2): DataFrame =
+    lshPairs(emb, idCol, vecCol,
+      lshBuckets(emb, idCol, vecCol, bits, tables, dimOf(emb, vecCol)), threshold)
+
+  /** [[nearDupPairsLsh]] over an already built [[lshBuckets]] frame. */
+  private def lshPairs(emb: DataFrame, idCol: String, vecCol: String,
+                       buckets: DataFrame, threshold: Double): DataFrame =
+    buckets.as("a")
+      .join(buckets.as("b"),
+        col("a._tbl") === col("b._tbl") && col("a._bk") === col("b._bk") &&
+          col("a._id") < col("b._id"))
+      .select(col("a._id").as("i"), col("b._id").as("j"))
       .distinct()
-    cand
       .join(emb.select(col(idCol).as("i"), col(vecCol).as("va")), "i")
       .join(emb.select(col(idCol).as("j"), col(vecCol).as("vb")), "j")
       .withColumn("cos", cosine(col("va"), col("vb")))
       .filter(col("cos") >= threshold)
       .select(col("i"), col("j"), round(col("cos"), 6).as("cos"))
-  }
+
+  /** Table `t`'s sign-LSH bucket of `vec` (`bits` planes, seed 42 + t). */
+  private def lshBucket(vec: Column, bits: Int, dim: Int, t: Int): Column =
+    signLshBucket(vec, signLshPlanes(bits, dim, seed = 42L + t))
+
+  /** One (_id, _tbl, _bk) row per (vector, sign-LSH table): the frame the
+    * pair self-join, the mass histogram and the batch corpus side read. */
+  private[graft] def lshBuckets(emb: DataFrame, idCol: String, vecCol: String,
+                                bits: Int, tables: Int, dim: Int): DataFrame =
+    (0 until tables).map { t =>
+      emb.select(col(idCol).as("_id"), lit(t).as("_tbl"), lshBucket(col(vecCol), bits, dim, t).as("_bk"))
+    }.reduce(_ unionByName _)
 
   /** [[nearDupPairsLsh]]'s contract at the HIERARCHICAL tier: candidate
     * pairs from the two-level quantizer's LEAVES (each vector meets
@@ -124,23 +134,18 @@ object SimilaritySearch {
     * cnt·(cnt−1)/2 — precisely the pair rows the bucket self-join in
     * [[nearDupPairsLsh]] would materialize (before the i<j distinct,
     * which halves nothing across tables). One corpus scan + one tiny
-    * aggregate (≤ tables·2^bits groups), so measuring the plan costs a
-    * scan, not the plan. Returns (mass, n): the corpus count rides the
+    * aggregate (≤ tables·2^bits groups) over the route's own
+    * [[lshBuckets]] frame, so measuring the plan costs a scan, not the
+    * plan. Returns (mass, n): the corpus count rides the
     * SAME histogram (Σ cnt over table 0), so routing — which needs n
     * only on the two-level branch, for [[twoLevelShape]] — costs
     * exactly one scan, never a second `count()` pass. */
-  private[graft] def lshCandidateMass(emb: DataFrame, idCol: String,
-      vecCol: String, bits: Int = 16, tables: Int = 2): (Long, Long) = {
-    val dim = dimOf(emb, vecCol)
-    val r = (0 until tables).map { t =>
-      emb.select(lit(t).as("tbl"),
-        signLshBucket(col(vecCol), signLshPlanes(bits, dim, seed = 42L + t)).as("bk"))
-    }.reduce(_ unionByName _)
-      .groupBy(col("tbl"), col("bk")).count()
+  private[graft] def lshCandidateMass(buckets: DataFrame): (Long, Long) = {
+    val r = buckets.groupBy(col("_tbl"), col("_bk")).count()
       // integral end to end (Column `/` would go double); the doubled
       // sum cnt·(cnt−1) is even, so the driver-side halving is exact
       .agg(coalesce(sum(col("count") * (col("count") - 1)), lit(0L)),
-        coalesce(sum(when(col("tbl") === 0, col("count"))), lit(0L)))
+        coalesce(sum(when(col("_tbl") === 0, col("count"))), lit(0L)))
       .first()
     (r.getLong(0) / 2, r.getLong(1))
   }
@@ -190,9 +195,10 @@ object SimilaritySearch {
                        threshold: Double = 0.99,
                        candidateBudget: Long = LshCandidateRowBudget,
                        bits: Int = 16, tables: Int = 2): DataFrame = {
-    // bits/tables thread to BOTH the measurement and the lsh route, so
+    // one bucket frame feeds BOTH the measurement and the lsh route, so
     // the measured plan is the executed plan by construction
-    val (mass, n) = lshCandidateMass(emb, idCol, vecCol, bits, tables)
+    val buckets = lshBuckets(emb, idCol, vecCol, bits, tables, dimOf(emb, vecCol))
+    val (mass, n) = lshCandidateMass(buckets)
     pairSourceRoute(mass, candidateBudget) match {
       case "two-level" =>
         val (c, s) = twoLevelShape(n)
@@ -203,7 +209,7 @@ object SimilaritySearch {
       case _ =>
         System.err.println(s"[graft-ann] nearDupPairsAuto: sign-LSH pair " +
           s"source (measured candidate mass $mass within budget $candidateBudget)")
-        nearDupPairsLsh(emb, idCol, vecCol, threshold, bits, tables)
+        lshPairs(emb, idCol, vecCol, buckets, threshold)
     }
   }
 
@@ -223,16 +229,13 @@ object SimilaritySearch {
                          k: Int, bits: Int = 8, tables: Int = 2): DataFrame = {
     require(bits > 0 && bits <= 62, "topKCosineLshBatch: bits in [1, 62]")
     val dim = dimOf(corpus, vecCol)
-    def planes(t: Int) = signLshPlanes(bits, dim, seed = 42L + t)
-    val corpusB = (0 until tables).map { t =>
-      corpus.select(col(idCol).as("_cid"), lit(t).as("_tbl"),
-        signLshBucket(col(vecCol), planes(t)).as("_bk"))
-    }.reduce(_ unionByName _)
+    val corpusB = lshBuckets(corpus, idCol, vecCol, bits, tables, dim)
+      .select(col("_id").as("_cid"), col("_tbl"), col("_bk"))
     // probe side: own bucket + all `bits` one-bit flips (multiprobe)
     val flips = (c: Column) => array((lit(0L) +: (0 until bits).map(b => lit(1L << b))).map(m => c.bitwiseXOR(m)): _*)
     val probesB = (0 until tables).map { t =>
       probes.select(col(probeIdCol).as("_pid"), lit(t).as("_tbl"),
-        explode(flips(signLshBucket(col(vecCol), planes(t)))).as("_bk"))
+        explode(flips(lshBucket(col(vecCol), bits, dim, t))).as("_bk"))
     }.reduce(_ unionByName _)
     val cand = probesB.join(corpusB, Seq("_tbl", "_bk"))
       .filter(col("_pid") =!= col("_cid"))
@@ -274,12 +277,9 @@ object SimilaritySearch {
       "topKCosineIvf: nprobeCells <= coarseK and nprobeLeaves <= coarseK·subK")
     val cb = trainIvf(corpus, idCol, vecCol, coarseK, subK)
     val assigned = assignLeaves(corpus, idCol, vecCol, cb)
-      .select(col("_vid").as("_cid"), col("_vv").as("_cv"), col("_leaf"))
-    val probeD = probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
-    // candidates = the routed leaves' inverted lists (the assignment
-    // carries each vector, so no corpus re-join); exact rerank
-    assigned.join(broadcast(probeLeaves(probeD, cb, nprobeCells, nprobeLeaves)), Seq("_leaf"))
-      .filter(col("_pid") =!= col("_cid"))
+      .select(col("_vid").as("_cid"), col("_vv").as("_cv"), col("_leaf").as("_list"))
+    // the assignment carries each vector, so no corpus re-join
+    ivfCandidates(assigned, probeVecs(probes, probeIdCol, vecCol), cb, nprobeCells, nprobeLeaves)
       .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
         round(cosine(col("_cv"), col("_pv")), 6).as("cos"))
       .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
@@ -355,7 +355,7 @@ object SimilaritySearch {
       k: Int, coarseK: Int, subK: Int): Seq[((Int, Int), Seq[(Long, Long)])] = {
     val cb = trainIvf(corpus, idCol, vecCol, coarseK, subK)
     val ladder = twoLevelLadder(coarseK, subK)
-    val probeD = probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
+    val probeD = probeVecs(probes, probeIdCol, vecCol)
     // each distinct cell pick is one column the leaf picks read: a cell
     // pick repeated inside one projection is a common subexpression,
     // and Spark orders those by hash — the codebook's identity hash —
@@ -394,13 +394,31 @@ object SimilaritySearch {
   private def routeLeaves(pv: Column, cb: TwoLevelCodebook, cellIds: Column, leaves: Int): Column =
     nearestN(pv, cb.leafBook, cellIds, leaves)("id")
 
-  /** Probe-side IVF routing as rows, (_pid, _pv, _leaf): a probe
-    * searching (cells, leaves) visits its `leaves` best leaves among
-    * its `cells` best cells, one row per leaf. */
-  private def probeLeaves(probeD: DataFrame, cb: TwoLevelCodebook,
-                          cells: Int, leaves: Int): DataFrame =
-    probeD.select(col("_pid"), col("_pv"),
-      explode(routeLeaves(col("_pv"), cb, routeCells(col("_pv"), cb, cells), leaves)).as("_leaf"))
+  /** (_pid, _pv): the probes with their vectors cast to double. */
+  private def probeVecs(probes: DataFrame, probeIdCol: String, vecCol: String): DataFrame =
+    probes.select(col(probeIdCol).as("_pid"), asDoubles(vecCol).as("_pv"))
+
+  /** Every IVF search's candidates: the `assigned` (_cid, _list, ...)
+    * rows in the lists each broadcast probe of `probeD` (_pid, _pv, ...)
+    * visits at (cells, leaves), a probe never its own candidate. */
+  private def ivfCandidates(assigned: DataFrame, probeD: DataFrame,
+                            cb: TwoLevelCodebook, cells: Int, leaves: Int): DataFrame =
+    assigned.join(broadcast(probeD.withColumn("_list", explode(
+        routeLeaves(col("_pv"), cb, routeCells(col("_pv"), cb, cells), leaves)))), Seq("_list"))
+      .filter(col("_pid") =!= col("_cid"))
+
+  /** The int8 and PQ tail: each probe's top-`coarseK` rows by `_approx`,
+    * their exact 6-dp cosines against `probeD` ([[probeVecs]]; the corpus
+    * joined by id, so only those rows read full precision), top `k` as
+    * (probe_id, vec_id, cos, rk). */
+  private def rerank(scored: DataFrame, probeD: DataFrame, corpus: DataFrame,
+                     idCol: String, vecCol: String, k: Int, coarseK: Int): DataFrame =
+    scored.transform(topN("_pid", "_approx", "_cid", coarseK, "_crk"))
+      .join(corpus.select(col(idCol).as("_cid"), asDoubles(vecCol).as("_cfv")), "_cid")
+      .join(broadcast(probeD), "_pid")
+      .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
+        round(cosine(col("_cfv"), col("_pv")), 6).as("cos"))
+      .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
 
   /** Each `part` group's `n` best rows by (`score` desc, `id`), ranked
     * 1..n in column `rank` — the rounded-score, id-tiebreak top-n every
@@ -646,11 +664,12 @@ object SimilaritySearch {
   }
 
   object TwoLevelCodebook {
-    /** A flat codebook as the one-cell shape: the cell is keyed by the
-      * first entry's id and stores its vector (at one cell routing never
-      * reads it — [[cellAssign]]); leaves sorted by id. */
+    /** A flat codebook as the one-cell shape, leaves sorted by id: cell 0
+      * stores the first entry's vector (routing never reads it —
+      * [[cellAssign]]). A constant key, because generated code inlines
+      * the cell literal: a per-codebook key recompiles per corpus. */
     def oneCell(flat: Seq[(Long, Seq[Double])]): TwoLevelCodebook =
-      TwoLevelCodebook(flat.take(1), flat.map(e => (flat.head._1, e._1, e._2)).sortBy(_._2))
+      TwoLevelCodebook(flat.take(1).map(e => (0L, e._2)), flat.map(e => (0L, e._1, e._2)).sortBy(_._2))
   }
 
   /** Train the IVF codebook at shape (coarseK, subK): coarse k-means
@@ -668,11 +687,11 @@ object SimilaritySearch {
     * and no coarse work runs: one cell holds everything, so the
     * per-cell seed order is the global md5 order and the sub-Lloyd
     * rounds are the flat Lloyd rounds (AnnSpec pins the results
-    * against the flat quantizer's). The cell keeps the first seed's
-    * id. Exact/scaled twins land in the same cell AND the same leaf at
-    * any codebook (identical direction ⇒ identical argmax at both
-    * levels), so dedup recall on true duplicates does not depend on
-    * the shape. Training is deterministic, so the tuner and the search
+    * against the flat quantizer's); the cell is keyed 0
+    * ([[TwoLevelCodebook.oneCell]]). Exact/scaled twins land in the
+    * same cell AND the same leaf at any codebook (identical direction ⇒
+    * identical argmax at both levels), so dedup recall on true
+    * duplicates does not depend on the shape. Training is deterministic, so the tuner and the search
     * train the same codebook from the same corpus. */
   def trainIvf(corpus: DataFrame, idCol: String, vecCol: String,
                coarseK: Int, subK: Int,
@@ -794,9 +813,9 @@ object SimilaritySearch {
     * vectors PARTITIONED BY cluster group ([[clusterGroup]] — the
     * layout that lets an increment-driven comparison read
     * partition-prune the store to the clusters it can possibly match),
-    * the codebook as its coarse (cent_id, cv) and leaf (cell, leaf_id,
-    * cv) tables, and a one-row meta table carrying builtN. This is what makes the
-    * streaming [[graft.streaming.StreamOps.semanticDedupSink]]
+    * the codebook ([[writeIvfCodebook]]), and a one-row meta table
+    * carrying builtN. This is what makes the streaming
+    * [[graft.streaming.StreamOps.semanticDedupSink]]
     * RESTARTABLE without retraining: a restarted driver reads the
     * frozen store instead of re-running Lloyd on the corpus (whose
     * verdicts a retrain could silently change). */
@@ -822,26 +841,20 @@ object SimilaritySearch {
       .sortWithinPartitions(col("cluster_grp"), col("cluster_id"))
       .write.partitionBy("cluster_grp")
       .mode("overwrite").parquet(s"$dir/kept")
-    index.codebook.coarse.toDF("cent_id", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
-    index.codebook.leaves.toDF("cell", "leaf_id", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/leaves")
+    writeIvfCodebook(spark, index.codebook, dir)
     Seq((index.builtN, grps)).toDF("built_n", "groups")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  /** Load a persisted [[SemanticIndex]]. Codebooks come back sorted by
-    * id (argmax ties break on the id itself, so Seq order never
-    * affects verdicts); `kept` stays a lazy parquet read — at
-    * production scale the kept store is corpus-sized and must never
-    * transit the driver. The `cluster_grp` partition column rides
+  /** Load a persisted [[SemanticIndex]]. `kept` stays a lazy parquet
+    * read — at production scale the kept store is corpus-sized and must
+    * never transit the driver. The `cluster_grp` partition column rides
     * along so downstream group filters ([[pruneKeptToGroups]])
     * partition-prune the scan; consumers that join the store select
     * their columns explicitly, so the extra column is inert. Stores
     * written before the partitioned layout read fine — the pruner
     * falls back to computing the group — and so do flat stores written
-    * before the one-codebook layout (a `cents` table and a false
-    * `two_level` meta flag, no leaves table): read as one cell. */
+    * before the one-codebook layout ([[readIvfCodebook]]). */
   def readSemanticIndex(spark: org.apache.spark.sql.SparkSession,
                         dir: String): SemanticIndex = {
     val metaDf = spark.read.parquet(s"$dir/meta")
@@ -853,23 +866,35 @@ object SimilaritySearch {
       if (metaDf.columns.contains("groups"))
         meta.getInt(meta.fieldIndex("groups"))
       else SemanticStoreGroups
-    val cb =
-      if (metaDf.columns.contains("two_level") && !meta.getAs[Boolean]("two_level"))
-        TwoLevelCodebook.oneCell(readCodebook(spark, s"$dir/cents"))
-      else TwoLevelCodebook(readCodebook(spark, s"$dir/coarse"),
-        spark.read.parquet(s"$dir/leaves").collect()
-          .map(r => (r.getLong(0), r.getLong(1),
-            r.getSeq[Double](2).toVector: Seq[Double]))
-          .sortBy(l => (l._1, l._2)).toSeq)
-    SemanticIndex(cb, spark.read.parquet(s"$dir/kept"), meta.getLong(0), grps)
+    SemanticIndex(readIvfCodebook(spark, dir), spark.read.parquet(s"$dir/kept"),
+      meta.getLong(0), grps)
   }
 
-  /** A stored (id, vector) codebook table, sorted by id. */
-  private def readCodebook(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Seq[(Long, Seq[Double])] =
-    spark.read.parquet(path).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toVector: Seq[Double]))
-      .sortBy(_._1).toSeq
+  /** The one codebook store of both indexes: the IVF codebook's coarse
+    * cells as a (cent_id, cv) table and its leaves as a (cell, leaf_id,
+    * cv) table under `dir`. */
+  private def writeIvfCodebook(spark: org.apache.spark.sql.SparkSession,
+                               cb: TwoLevelCodebook, dir: String): Unit = {
+    import spark.implicits._
+    cb.coarse.toDF("cent_id", "cv").coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
+    cb.leaves.toDF("cell", "leaf_id", "cv").coalesce(1).write.mode("overwrite").parquet(s"$dir/leaves")
+  }
+
+  /** [[writeIvfCodebook]]'s codebook, sorted by ids (ties break on ids,
+    * so order never affects results). A directory with no `leaves` table
+    * is an older flat store: its (id, vector) `cents` table is one cell. */
+  private def readIvfCodebook(spark: org.apache.spark.sql.SparkSession,
+                              dir: String): TwoLevelCodebook = {
+    def rows(table: String) = spark.read.parquet(s"$dir/$table").collect()
+    def flat(table: String) = rows(table)
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toVector: Seq[Double])).sortBy(_._1).toSeq
+    val leaves = new org.apache.hadoop.fs.Path(s"$dir/leaves")
+    if (!leaves.getFileSystem(spark.sessionState.newHadoopConf()).exists(leaves))
+      TwoLevelCodebook.oneCell(flat("cents"))
+    else TwoLevelCodebook(flat("coarse"), rows("leaves")
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toVector: Seq[Double]))
+      .sortBy(l => (l._1, l._2)).toSeq)
+  }
 
   /** Cluster GROUPS the persisted kept store is bucketed into
     * ([[writeSemanticIndex]] partitions `kept` by
@@ -1120,11 +1145,6 @@ object SimilaritySearch {
   private def nearestN(vec: Column, book: Codebook, groups: Column, n: Int): Column =
     NativeExpressions.nearestCentroids(vec, groups, book, n, l2 = false)
 
-  /** `df` once per each of its `n` nearest flat lists (`_list`), ranked
-    * by [[nearestN]] over its vector column `vec`. */
-  private def withLists(df: DataFrame, vec: String, book: Codebook, n: Int): DataFrame =
-    df.withColumn("_list", explode(nearestN(col(vec), book, lit(0L), n)("id")))
-
   /** An embedding column cast element-wise to double. */
   private def asDoubles(vecCol: String): Column =
     expr(s"transform($vecCol, x -> cast(x as double))")
@@ -1146,8 +1166,10 @@ object SimilaritySearch {
     * scored against INT8-QUANTIZED vectors (what a 100 TB deployment
     * keeps in RAM — 4x smaller than float32), then an exact float
     * re-rank of only the top `coarseK` candidates per probe (the only
-    * rows that ever touch full-precision storage). Same deterministic
-    * codebook and tie-breaks as [[topKCosineIvf]]; quantization is the
+    * rows that ever touch full-precision storage). The index is
+    * [[topKCosineIvf]]'s at the flat shape (1, nlist) searched at
+    * (1, nprobe): the same codebook, routing and tie-breaks, with the
+    * int8 reconstruction as each list entry's vector; quantization is the
     * symmetric per-vector absmax/127 scheme the `embed_quantize` oracle
     * pins cross-engine, and every cosine is rounded before ranking so
     * the candidate ordering is engine-portable.
@@ -1160,7 +1182,7 @@ object SimilaritySearch {
                           coarseK: Int = 12): DataFrame = {
     require(nprobe <= nlist, "topKCosineIvfRerank: nprobe must be <= nlist")
     require(coarseK >= k, "topKCosineIvfRerank: coarseK must be >= k")
-    val book = Codebook.flat(trainFlat(corpus, idCol, vecCol, nlist))
+    val cb = trainIvf(corpus, idCol, vecCol, 1, nlist)
     // int8 reconstruction qv*qscale as a double array: the coarse store
     val recon = corpus.select(col(idCol).as("_mid"), asDoubles(vecCol).as("_fv"))
       .withColumn("_qscale",
@@ -1168,23 +1190,12 @@ object SimilaritySearch {
                 then 1.0 else round(array_max(transform(_fv, x -> abs(x))) / 127.0, 9) end"""))
       .withColumn("_mv",
         expr("transform(_fv, x -> cast(round(x / _qscale, 0) as double) * _qscale)"))
-    val assigned = recon.select(col("_mid").as("_cid"), col("_mv").as("_cqv"),
-      nearest(col("_mv"), book)("id").as("_list"))
-    val probeLists = withLists(probes.select(col(probeIdCol).as("_pid"),
-      asDoubles(vecCol).as("_pv")), "_pv", book, nprobe)
-    val coarse = assigned.join(broadcast(probeLists), "_list")
-      .filter(col("_pid") =!= col("_cid"))
-      .select(col("_pid"), col("_cid"),
-        round(cosine(col("_cqv"), col("_pv")), 6).as("_ccos"))
-      .transform(topN("_pid", "_ccos", "_cid", coarseK, "_crk"))
-    // exact re-rank: only coarseK x probes rows read full precision
-    coarse
-      .join(corpus.select(col(idCol).as("_cid"), asDoubles(vecCol).as("_cfv")), "_cid")
-      .join(broadcast(probes.select(col(probeIdCol).as("_pid"),
-        asDoubles(vecCol).as("_pfv"))), "_pid")
-      .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
-        round(cosine(col("_cfv"), col("_pfv")), 6).as("cos"))
-      .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
+    val assigned = assignLeaves(recon, "_mid", "_mv", cb)
+      .select(col("_vid").as("_cid"), col("_vv").as("_cqv"), col("_leaf").as("_list"))
+    val probeD = probeVecs(probes, probeIdCol, vecCol)
+    rerank(ivfCandidates(assigned, probeD, cb, 1, nprobe)
+        .select(col("_pid"), col("_cid"), round(cosine(col("_cqv"), col("_pv")), 6).as("_approx")),
+      probeD, corpus, idCol, vecCol, k, coarseK)
   }
 
   /** IVF-PQ batch ANN — the memory-COMPRESSED production path next to
@@ -1204,14 +1215,12 @@ object SimilaritySearch {
     * decompression — and only the ADC top-`coarseK` rows are
     * exact-cosine reranked against full precision.
     *
-    * Scale shape: one corpus scan computes assignment AND codes (pure
-    * projection over broadcast centroids/codebooks — the corpus is
-    * never shuffled); probes broadcast; the ADC stage reads only the
-    * code columns, which is the point — at 100 TB the m code bytes are
-    * what stays hot while float vectors live cold until the rerank. At
-    * production scale the coded frame is materialized once and reused
-    * across probe batches (here it is recomputed per call, like the
-    * ann_ivf index).
+    * Scale shape: one corpus scan computes lists AND codes (projections
+    * over the codebooks as data — the corpus is never shuffled); probes
+    * broadcast; the ADC stage reads only the code columns — at 100 TB
+    * the m code bytes stay hot while float vectors live cold until the
+    * rerank. A store ([[writePqIndex]]) reuses the coded frame across
+    * probe batches; here it is recomputed per call.
     *
     * Deterministic end to end (rounded distances/dots, position
     * tiebreaks), so the DuckDB oracle rebuilds codebooks, codes, ADC
@@ -1227,33 +1236,34 @@ object SimilaritySearch {
 
   /** The frozen IVF-PQ index — everything the search path needs except
     * the full-precision vectors (those stay with the corpus table and
-    * are read only by the rerank): coarse centroids, per-subspace
-    * codebooks (sorted by cent_id — POSITION order == cent_id order,
-    * so stored codes tiebreak like the oracle's ORDER BY dist,
-    * cent_id), and the coded corpus (one row per vector: coarse list +
-    * m small code ints, NO floats — the hot store). */
-  case class PqIndex(cents: Seq[(Long, Seq[Double])],
+    * are read only by the rerank): the IVF codebook at the flat shape
+    * (1, nlist), the per-subspace codebooks (sorted by cent_id —
+    * POSITION order == cent_id order, so stored codes tiebreak like the
+    * oracle's ORDER BY dist, cent_id), and the coded corpus (one row per
+    * vector: its list + m small code ints, NO floats — the hot store). */
+  case class PqIndex(codebook: TwoLevelCodebook,
                      codebooks: Seq[Seq[(Long, Seq[Double])]],
-                     coded: DataFrame, m: Int, sub: Int)
+                     coded: DataFrame)
 
-  /** Train the coarse quantizer + per-subspace PQ codebooks and encode
-    * the corpus in ONE scan (assignment and all m codes are projections
-    * over broadcast centroids/codebooks — the corpus is never
-    * shuffled). Persist with [[writePqIndex]]; at 100 TB this runs once
-    * per corpus snapshot and every probe batch reuses the store. */
+  /** Train the IVF codebook at (1, nlist) + per-subspace PQ codebooks and
+    * encode the corpus in ONE scan (assignment and all m codes are
+    * projections over the codebooks as data — the corpus is never
+    * shuffled). The dimension is the trained codebook's. Persist with
+    * [[writePqIndex]]; at 100 TB this runs once per corpus snapshot and
+    * every probe batch reuses the store. */
   def buildPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                    nlist: Int = 16, m: Int = 4, ks: Int = 8,
                    pqIters: Int = 1): PqIndex = {
-    val d = dimOf(corpus, vecCol)
+    val cb = trainIvf(corpus, idCol, vecCol, 1, nlist)
+    require(cb.leaves.nonEmpty, "buildPqIndex: empty corpus")
+    val d = cb.leaves.head._3.size
     require(d % m == 0, s"buildPqIndex: dim $d must split into $m subspaces")
-    val sub = d / m
-    val cents = trainFlat(corpus, idCol, vecCol, nlist)
     // unit-normalized, 6-dp re-anchored working vectors
     val ncorp = corpus.select(col(idCol).as("_id0"), asDoubles(vecCol).as("_v0"))
       .withColumn("_nrm", sqrt(dotd(col("_v0"), col("_v0"))))
       .select(col("_id0"), expr("transform(_v0, x -> round(x / _nrm, 6))").as("_nv"))
-    val cbs = trainPq(ncorp, "_id0", "_nv", m, sub, ks, pqIters)
-    PqIndex(cents, cbs, encode(corpus, idCol, vecCol, cents, cbs, sub), m, sub)
+    val cbs = trainPq(ncorp, "_id0", "_nv", m, d / m, ks, pqIters)
+    PqIndex(cb, cbs, encode(corpus, idCol, vecCol, cb, cbs))
   }
 
   /** The m PQ subspace codebooks, each sorted by cent_id, in ONE
@@ -1274,41 +1284,40 @@ object SimilaritySearch {
     (0 until m).map(s => book.filter(_._1 == s).map(e => (e._2, e._3)).sortBy(_._1))
   }
 
-  /** Encode vectors against FROZEN coarse centroids + codebooks (no
-    * retraining): coarse list + m codes in one projection scan — the
-    * incremental form. New corpus shards append their coded rows to
-    * the store while the codebooks stay fixed, exactly like the
-    * minhash signature store; identical vectors get identical codes by
-    * construction, so increments are searchable the moment they land. */
+  /** Encode vectors against a FROZEN index (no retraining): list + m
+    * codes in one projection scan — the incremental form. New corpus
+    * shards append their coded rows to the store while the codebooks
+    * stay fixed, exactly like the minhash signature store; identical
+    * vectors get identical codes by construction, so increments are
+    * searchable the moment they land. */
   def encodePq(df: DataFrame, idCol: String, vecCol: String,
                index: PqIndex): DataFrame =
-    encode(df, idCol, vecCol, index.cents, index.codebooks, index.sub)
+    encode(df, idCol, vecCol, index.codebook, index.codebooks)
 
+  /** (_cid, _list, _k0 .. _k(m-1)): each vector's IVF list
+    * ([[assignLeaves]]) and its m subspace codes. */
   private def encode(df: DataFrame, idCol: String, vecCol: String,
-                     cents: Seq[(Long, Seq[Double])], cbs: Seq[Seq[(Long, Seq[Double])]],
-                     sub: Int): DataFrame = {
-    val assigned = df.select(col(idCol).as("_cid"), asDoubles(vecCol).as("_cfv"))
-      .withColumn("_list", nearest(col("_cfv"), Codebook.flat(cents))("id"))
-      .withColumn("_nrm", sqrt(dotd(col("_cfv"), col("_cfv"))))
-      .withColumn("_xnv", expr("transform(_cfv, x -> round(x / _nrm, 6))"))
+                     cb: TwoLevelCodebook, cbs: Seq[Seq[(Long, Seq[Double])]]): DataFrame = {
+    val sub = cbs.head.head._2.size
     // a code is the 1-based POSITION in the cent_id-sorted codebook, so
     // position ids tie-break exactly as cent_ids do
-    val codes = Codebook(cbs.zipWithIndex.flatMap { case (cb, s) =>
-      cb.zipWithIndex.map { case ((_, v), i) => (s.toLong, i + 1L, v) } })
-    assigned.select(
-      Seq(col("_cid"), col("_list")) ++ cbs.indices.map(s =>
+    val codes = Codebook(cbs.zipWithIndex.flatMap { case (book, s) =>
+      book.zipWithIndex.map { case ((_, v), i) => (s.toLong, i + 1L, v) } })
+    assignLeaves(df, idCol, vecCol, cb)
+      .withColumn("_nrm", sqrt(dotd(col("_vv"), col("_vv"))))
+      .withColumn("_xnv", expr("transform(_vv, x -> round(x / _nrm, 6))"))
+      .select(Seq(col("_vid").as("_cid"), col("_leaf").as("_list")) ++ cbs.indices.map(s =>
         nearest(slice(col("_xnv"), s * sub + 1, sub), codes, lit(s.toLong), l2 = true)("id")
           .cast("int").as(s"_k$s")): _*)
   }
 
-  /** Persist a [[PqIndex]]: three parquet tables (cents as (_cent_id,
-    * _cent_vec) rows, codebooks as (space, pos, cent_id, cv) rows, coded
-    * corpus). */
+  /** Persist a [[PqIndex]]: the IVF codebook ([[writeIvfCodebook]]),
+    * the codebooks as (space, pos, cent_id, cv) rows and the coded
+    * corpus. */
   def writePqIndex(index: PqIndex, dir: String): Unit = {
     val spark = index.coded.sparkSession
     import spark.implicits._
-    index.cents.toDF("_cent_id", "_cent_vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/cents")
+    writeIvfCodebook(spark, index.codebook, dir)
     index.codebooks.zipWithIndex.flatMap { case (cb, s) =>
       cb.zipWithIndex.map { case ((cid, v), i) => (s, i + 1, cid, v) }
     }.toDF("space", "pos", "cent_id", "cv")
@@ -1319,54 +1328,39 @@ object SimilaritySearch {
   /** Load a persisted [[PqIndex]] (codebooks re-sorted to position
     * order — byte-stable with what writePqIndex stored). */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String): PqIndex = {
-    val cbRows = spark.read.parquet(s"$dir/codebooks")
+    val cbs = spark.read.parquet(s"$dir/codebooks")
       .collect().map(r => (r.getAs[Int]("space"), r.getAs[Int]("pos"),
         // toVector: parquet hands back a mutable ArraySeq, which
         // typedLit's nested-array encoder refuses downstream
-        r.getAs[Long]("cent_id"), r.getAs[Seq[Double]]("cv").toVector))
-    val m = cbRows.map(_._1).max + 1
-    val cbs = (0 until m).map { s =>
-      cbRows.filter(_._1 == s).sortBy(_._2).map(r => (r._3, r._4)).toSeq
-    }
-    val sub = cbs.head.head._2.size
-    PqIndex(readCodebook(spark, s"$dir/cents"),
-      cbs, spark.read.parquet(s"$dir/coded"), m, sub)
+        r.getAs[Long]("cent_id"), r.getAs[Seq[Double]]("cv").toVector: Seq[Double]))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_._2).map(r => (r._3, r._4)).toSeq)
+    PqIndex(readIvfCodebook(spark, dir), cbs, spark.read.parquet(s"$dir/coded"))
   }
 
   /** ADC search against a (possibly loaded) [[PqIndex]]: candidates
-    * from the stored coarse lists, scored by per-subspace
-    * literal-codebook lookups, exact rerank of the ADC top-`coarseK`
-    * only — the rerank joins the corpus BY ID, so only those rows ever
-    * read full-precision storage. */
+    * from the stored lists ([[ivfCandidates]] at (1, nprobe)), scored by
+    * per-subspace literal-codebook lookups, exact [[rerank]] of the ADC
+    * top-`coarseK` only. */
   def searchPqIndex(probes: DataFrame, probeIdCol: String,
                     corpus: DataFrame, idCol: String, vecCol: String,
                     index: PqIndex, k: Int, nprobe: Int = 4,
                     coarseK: Int = 12): DataFrame = {
     require(coarseK >= k, "searchPqIndex: coarseK must be >= k")
-    val (m, sub) = (index.m, index.sub)
-    val probeD = probes.select(col(probeIdCol).as("_pid0"), asDoubles(vecCol).as("_pv0"))
-    val probeLists = withLists(probeD, "_pv0", Codebook.flat(index.cents), nprobe)
-      .withColumn("_pnrm", sqrt(dotd(col("_pv0"), col("_pv0"))))
-      .select(col("_pid0").as("_pid"), col("_list"),
-        expr("transform(_pv0, x -> round(x / _pnrm, 6))").as("_qnv"))
+    val sub = index.codebooks.head.head._2.size
+    val probeD = probeVecs(probes, probeIdCol, vecCol)
+    val routed = probeD.withColumn("_pnrm", sqrt(dotd(col("_pv"), col("_pv"))))
+      .select(col("_pid"), col("_pv"), expr("transform(_pv, x -> round(x / _pnrm, 6))").as("_qnv"))
     // ADC: fixed s = 0..m-1 summation order; the codebook lookup index
     // (_k<s>) is never NULL, so element_at's NULL-index codegen hazard
     // (see ann_eval) cannot fire here
-    val adc = (0 until m).map { s =>
+    val adc = index.codebooks.indices.map { s =>
       round(dotd(slice(col("_qnv"), s * sub + 1, sub),
         element_at(typedLit(index.codebooks(s).map(_._2)), col(s"_k$s"))), 6)
     }.reduce(_ + _)
-    val coarse = index.coded.join(broadcast(probeLists), "_list")
-      .filter(col("_pid") =!= col("_cid"))
-      .select(col("_pid"), col("_cid"), round(adc, 6).as("_adc"))
-      .transform(topN("_pid", "_adc", "_cid", coarseK, "_crk"))
-    // exact re-rank: only coarseK x probes rows touch full precision
-    coarse
-      .join(corpus.select(col(idCol).as("_cid"), asDoubles(vecCol).as("_cfv")), "_cid")
-      .join(broadcast(probeD), col("_pid") === col("_pid0"))
-      .select(col("_pid").as("probe_id"), col("_cid").as("vec_id"),
-        round(cosine(col("_cfv"), col("_pv0")), 6).as("cos"))
-      .transform(topN("probe_id", "cos", "vec_id", k, "rk"))
+    rerank(ivfCandidates(index.coded, routed, index.codebook, 1, nprobe)
+        .select(col("_pid"), col("_cid"), round(adc, 6).as("_approx")),
+      probeD, corpus, idCol, vecCol, k, coarseK)
   }
 
   /** Embedding dimensionality, from the first row (driver-side, one

@@ -859,12 +859,12 @@ object Pipeline extends QueryModule {
     // scaled-embedding copies whose text is deterministically
     // token-shuffled (sorted by md5(token) — an oracle-replayable
     // "paraphrase"). Candidate pairs from the MEASURED-dispatch front
-    // door (nearDupPairsAuto): one routing scan computes the exact
-    // sign-LSH candidate mass (and the corpus count, off the same
-    // histogram); this corpus measures far under LshCandidateRowBudget,
-    // so the banded sign-LSH path runs (identical directions collide in
-    // every table — deterministic for the cos~1 regime this query
-    // targets). Past the budget — ~800k vectors in the random-bucket
+    // door (nearDupPairsAuto): one sign-LSH bucket frame is measured
+    // (one histogram scan: the exact candidate mass and the corpus
+    // count) and, under LshCandidateRowBudget — this corpus is far
+    // under — self-joined as the pair source, so the route runs the
+    // frame it measured (identical directions collide in every table —
+    // deterministic for the cos~1 regime this query targets). Past the budget — ~800k vectors in the random-bucket
     // regime, much earlier on clustered corpora, where fixed 16-bit
     // buckets collapse — the pair source becomes the leaf-bounded
     // two-level join, whose candidate mass stays linear (AnnSpec pins

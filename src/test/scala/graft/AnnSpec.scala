@@ -39,6 +39,14 @@ class AnnSpec extends SparkSpecBase {
     val incVerdicts = "60449495e39f923cd8ec7a4d5354b4de"
     /** topKCosineIvf at nlist = 16, nprobe = 4, k = 5: "probe,vec,cos,rk". */
     val topKRows = "cda1d0c5e2c72f0999b0fbc016e3c74b"
+    /** topKCosineIvfRerank at nlist = 16, nprobe = 4, coarseK = 12, k = 5,
+      * probes 0, 1000, 2000, 9000: "probe,vec,cos,rk". */
+    val rerankRows = "2acc4598a79be7b77688046fa0ac0d57"
+    /** topKCosineIvfPq at the defaults (nlist = 16, nprobe = 4, m = 4,
+      * ks = 8, coarseK = 12), k = 5, same probes: "probe,vec,cos,rk". */
+    val pqRows = "d5bdf27c185fa6de7ddc718dd858d50f"
+    /** buildPqIndex's coded rows at the defaults: "id,list,k0,k1,k2,k3". */
+    val pqCoded = "92666918c4991f2849075c7ea5bb33fe"
   }
 
   /** The unfused L2 Lloyd ladder for ONE PQ subspace — hash seeds,
@@ -268,6 +276,50 @@ class AnnSpec extends SparkSpecBase {
     val fromStore = asSet(SimilaritySearch.searchPqIndex(
       probes, "probe_id", df, "vec_id", "embedding", loaded, k = 3))
     assert(fromStore == direct, s"store path diverged:\n$fromStore\nvs\n$direct")
+  }
+
+  test("int8 and PQ searches and the PQ codes match the flat path's fingerprints") {
+    val df = clustered.cache()
+    val probes = df.filter(col("vec_id").isin(0L, 1000L, 2000L, 9000L))
+      .select(col("vec_id").as("probe_id"), col("embedding"))
+    def rows(d: DataFrame) = fingerprint(d.collect().map(r =>
+      s"${r.getLong(0)},${r.getLong(1)},${r.getDouble(2)},${r.getInt(3)}"))
+    val rerank = rows(SimilaritySearch.topKCosineIvfRerank(probes, "probe_id",
+      df, "vec_id", "embedding", k = 5, nlist = 16, nprobe = 4, coarseK = 12))
+    val pq = rows(SimilaritySearch.topKCosineIvfPq(probes, "probe_id",
+      df, "vec_id", "embedding", k = 5))
+    val coded = fingerprint(SimilaritySearch.buildPqIndex(df, "vec_id", "embedding")
+      .coded.collect().map(_.toSeq.mkString(",")))
+    assert(rerank == FlatFingerprints.rerankRows, s"int8 rerank rows moved: $rerank")
+    assert(pq == FlatFingerprints.pqRows, s"PQ rows moved: $pq")
+    assert(coded == FlatFingerprints.pqCoded, s"PQ codes moved: $coded")
+  }
+
+  test("a PQ store in the flat layout (cents table, no leaves) loads and searches like the direct index") {
+    import spark.implicits._
+    val df = clustered.cache()
+    val probes = df.filter(col("vec_id").isin(0L, 1000L, 2000L))
+      .select(col("vec_id").as("probe_id"), col("embedding"))
+    def asSet(r: DataFrame) =
+      r.collect().map(x => (x.getAs[Long]("probe_id"), x.getAs[Long]("vec_id"),
+        x.getAs[Double]("cos"), x.getAs[Int]("rk"))).toSet
+    val index = SimilaritySearch.buildPqIndex(df, "vec_id", "embedding")
+    // the flat writer's layout: coarse lists as (_cent_id, _cent_vec)
+    // rows, codebooks as (space, pos, cent_id, cv) rows, coded corpus
+    val dir = java.nio.file.Files.createTempDirectory("pq-store-flat").toString
+    index.codebook.leaves.map(l => (l._2, l._3)).toDF("_cent_id", "_cent_vec")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/cents")
+    index.codebooks.zipWithIndex.flatMap { case (cb, s) =>
+      cb.zipWithIndex.map { case ((cid, v), i) => (s, i + 1, cid, v) }
+    }.toDF("space", "pos", "cent_id", "cv")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
+    index.coded.write.mode("overwrite").parquet(s"$dir/coded")
+    val fromStore = asSet(SimilaritySearch.searchPqIndex(probes, "probe_id",
+      df, "vec_id", "embedding", SimilaritySearch.readPqIndex(spark, dir), k = 3))
+    val direct = asSet(SimilaritySearch.searchPqIndex(probes, "probe_id",
+      df, "vec_id", "embedding", index, k = 3))
+    assert(fromStore == direct, s"flat-layout store diverged:\n$fromStore\nvs\n$direct")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("encodePq increments are searchable against the frozen index") {
@@ -720,7 +772,7 @@ class AnnSpec extends SparkSpecBase {
   }
 
   test("pair-source dispatch: exact candidate mass, spec-pinned route rule") {
-    import SimilaritySearch.{lshCandidateMass, pairSourceRoute, twoLevelShape,
+    import SimilaritySearch.{lshBuckets, lshCandidateMass, pairSourceRoute, twoLevelShape,
       LshCandidateRowBudget}
     // 8 identical vectors share every bucket in both tables: mass is
     // exactly 2 * C(8,2); growing the group to 10 raises it to 2 * C(10,2).
@@ -729,8 +781,9 @@ class AnnSpec extends SparkSpecBase {
     val v = (0 until dim).map(i => math.sin(i + 1.0))
     def identical(n: Int) =
       (0 until n).map(i => (i.toLong, v)).toDF("vec_id", "embedding")
-    assert(lshCandidateMass(identical(8), "vec_id", "embedding") == ((56L, 8L)))
-    assert(lshCandidateMass(identical(10), "vec_id", "embedding") == ((90L, 10L)))
+    def mass(n: Int) = lshCandidateMass(lshBuckets(identical(n), "vec_id", "embedding", 16, 2, dim))
+    assert(mass(8) == ((56L, 8L)))
+    assert(mass(10) == ((90L, 10L)))
     // the route rule is leftmost-cheap: lsh within budget, two-level past
     assert(pairSourceRoute(0L) == "lsh")
     assert(pairSourceRoute(LshCandidateRowBudget) == "lsh")

@@ -6,7 +6,8 @@ run the matching SQL from oracle_sql.json in DuckDB over the same
 sf-directory tables, sort columns by name, and compare values.
 
 Each ✓/✗ line ends with the seconds that query's check took (reading
-the output plus running its oracle SQL).
+the output plus running its oracle SQL). The last line sums up: the
+check's total seconds and its three slowest queries.
 
 Usage: oracle_check.py SF_DIR OUT_DIR
 """
@@ -20,6 +21,8 @@ import duckdb
 
 
 def main(sf_dir: str, out_dir: str) -> int:
+    start = time.monotonic()
+    secs_by_name = {}
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
@@ -42,10 +45,12 @@ def main(sf_dir: str, out_dir: str) -> int:
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'").fetchdf()
             want = con.execute(oracle[name]).fetchdf()
         except Exception as e:
-            print(f"✗ {name}: oracle error: {e} ({time.monotonic() - t0:.1f} s)")
+            secs_by_name[name] = time.monotonic() - t0
+            print(f"✗ {name}: oracle error: {e} ({secs_by_name[name]:.1f} s)")
             failures += 1
             continue
-        secs = f"({time.monotonic() - t0:.1f} s)"
+        secs_by_name[name] = time.monotonic() - t0
+        secs = f"({secs_by_name[name]:.1f} s)"
         got = got.reindex(sorted(got.columns), axis=1)
         want = want.reindex(sorted(want.columns), axis=1)
         if list(got.columns) != list(want.columns):
@@ -85,6 +90,10 @@ def main(sf_dir: str, out_dir: str) -> int:
     for name in sorted(missing):
         print(f"✗ {name}: oracle SQL declared but no parquet output")
         failures += 1
+    slowest = sorted(secs_by_name.items(), key=lambda kv: -kv[1])[:3]
+    print(f"summary: {len(secs_by_name)} checked, {failures} failed, "
+          f"{time.monotonic() - start:.1f} s total; slowest: "
+          + ", ".join(f"{n} {t:.1f} s" for n, t in slowest))
     return failures
 
 
